@@ -180,24 +180,3 @@ def bpe_token_count_udf(merges: list[Pair]):
     return _count
 
 
-def bpe_tokens_udf(merges: list[Pair]):
-    """Full token sequences (array<string>) — the inspection/debug variant."""
-    ranks = ranks_of(merges)
-
-    @pandas_udf("array<string>")
-    def _tokens(texts: pd.Series) -> pd.Series:
-        cache: dict[str, tuple[str, ...]] = {}
-
-        def enc(s: str) -> list[str]:
-            out: list[str] = []
-            for w in s.split(" "):
-                toks = cache.get(w)
-                if toks is None:
-                    toks = encode_word(w, ranks)
-                    cache[w] = toks
-                out.extend(toks)
-            return out
-
-        return texts.map(lambda s: enc(s) if s else [])
-
-    return _tokens

@@ -12,9 +12,13 @@ The engine instead derives randomness from ``md5`` of (seed, key): the same
 "sample-stability discipline" SURVEY §4 calls for, strengthened from
 "cache before reuse" to "stateless recompute-stable".
 
-    u = conv(substr(md5(concat(seed,':',key)), 1, 15), 16, 10) / 2^60  ∈ [0,1)
+``hash60`` (Spark) and ``hash60_sql`` (DuckDB oracle) are the only
+definition of that integer; every salted hash, shard, sample and sketch in
+the engine and its oracles calls one of them:
 
-DuckDB-oracle equivalent:  ('0x' || substr(md5(seed||':'||key),1,15))::BIGINT / 2^60
+    hash60(key)      = conv(substr(md5(key), 1, 15), 16, 10)   ∈ [0, 2^60)
+    hash60_sql(key)  = ('0x' || substr(md5(key), 1, 15))::BIGINT
+    det_rand(seed, key...) = hash60(concat_ws(':', seed, key...)) / 2^60  ∈ [0,1)
 
 Exact money arithmetic: summing doubles is order-dependent, and Spark's
 partial-aggregation order differs from any single-node engine — at 60k rows a
@@ -28,18 +32,35 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-TWO_60 = float(1 << 60)
+# 2^60, the hash range, in the three literal forms the plans and oracles use
+TWO_60_INT = 1 << 60
+TWO_60 = float(TWO_60_INT)
+TWO_60_SQL = f"{TWO_60_INT}.0"  # exactly representable as a double
 
 
-def det_rand(seed: int | str, *key_cols: Column | str) -> Column:
+def hash60(key: Column) -> Column:
+    """The cross-engine 60-bit hash of an already-built string key, as a
+    bigint in [0, 2^60).  Works on lambda variables of higher-order
+    functions too (``F.transform``)."""
+    return F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
+
+
+def hash60_sql(expr: str) -> str:
+    """DuckDB twin of ``hash60`` over the SQL expression ``expr``."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
+
+
+def det_rand(seed: int | str | Column, *key_cols: Column | str) -> Column:
     """Deterministic uniform [0,1) derived from md5(seed, key...).
 
     Unlike ``F.rand(seed)`` this is a pure function of the row key: stable
     across partitioning, task retries, and engines (see module docstring for
-    the DuckDB-oracle equivalent).
+    the DuckDB-oracle equivalent).  ``seed`` is a literal or a column (the
+    oracle's ``seed || ':' || ...`` layout over a seed dimension).
     """
-    key = F.concat_ws(":", F.lit(str(seed)), *[F.col(c) if isinstance(c, str) else c for c in key_cols])
-    return (F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint") / F.lit(TWO_60)).cast("double")
+    seed_col = seed if isinstance(seed, Column) else F.lit(str(seed))
+    key = F.concat_ws(":", seed_col, *[F.col(c) if isinstance(c, str) else c for c in key_cols])
+    return (hash60(key) / F.lit(TWO_60)).cast("double")
 
 
 def det_shuffle_key(seed: int | str, *key_cols: Column | str) -> Column:

@@ -36,16 +36,3 @@ def option_letter(idx: Column | str) -> Column:
     return F.char(c + F.lit(65))
 
 
-def title_case(col: Column | str) -> Column:
-    """Title-case normalization of entity names (F7, ``DataLoader.py:323-324``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.initcap(c)
-
-
-def strip_pair_tokens(col: Column | str) -> Column:
-    """Strip ``<``/``>`` wrappers and ``table.`` prefixes from predicted
-    attribute tokens (F5, ``eval/eval_utils.py:238-244``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.regexp_replace(c, r"[<>]", "")
-    c = F.regexp_replace(c, r"^[A-Za-z0-9_]+\.", "")
-    return F.trim(c)

@@ -100,27 +100,6 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     return F.size(bpe_ish_tokens(text))
 
 
-def hf_token_count(model_name: str = "gpt2"):
-    """U4 real path: a pandas UDF counting tokens with a HuggingFace
-    tokenizer broadcast per executor (``PromptICLTemplate.py:24-25``).
-    Gated behind an import-try — this container has no ``transformers``;
-    callers fall back to ``token_count`` (the whitespace proxy)."""
-    try:
-        from transformers import AutoTokenizer  # noqa: F401
-    except ImportError:
-        return None
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def _count(texts: pd.Series) -> pd.Series:
-        tok = AutoTokenizer.from_pretrained(model_name)
-        return texts.map(lambda s: len(tok.encode(s)))
-
-    return _count
-
-
 def fingerprint(text: Column | str, prefix_len: int = 16) -> Column:
     """Document fingerprint: md5 of the whitespace-normalized text (first
     ``prefix_len`` hex chars) — the rolling-hash stand-in, identical in any

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..functions.determinism import hash60
 from ..functions.text import ngram_strings
 
 
@@ -201,12 +202,6 @@ def containment_pairs(
     )
 
 
-def _hash60(*cols: Column) -> Column:
-    """60-bit integer hash of the concatenated key — the cross-engine hash
-    primitive (functions/determinism.py)."""
-    return F.conv(F.substring(F.md5(F.concat_ws(":", *cols)), 1, 15), 16, 10).cast("bigint")
-
-
 def minhash_signatures(
     shingles: DataFrame, n_perm: int = 12, n_bands: int = 4
 ) -> DataFrame:
@@ -226,7 +221,7 @@ def minhash_signatures(
     # n_perm=12; identical minima, same oracle).
     mins = shingles.groupBy("doc").agg(
         *[
-            F.min(_hash60(F.lit(p), F.col("shingle"))).alias(f"m{p}")
+            F.min(hash60(F.concat_ws(":", F.lit(p), F.col("shingle")))).alias(f"m{p}")
             for p in range(n_perm)
         ]
     )
@@ -313,7 +308,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     ships ``bits`` longs per doc, not tokens."""
     tokens = df.select(
         F.col(id_col).alias("doc"), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).withColumn("h", _hash60(F.col("tok")))
+    ).withColumn("h", hash60(F.concat_ws(":", F.col("tok"))))  # one-part key: md5(tok)
     bit_sums = tokens.groupBy("doc").agg(
         *[
             F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{b}")

@@ -157,15 +157,6 @@ def extract_frame_features_int(media: DataFrame, frames_per_item: int = 2) -> Da
     return media.mapInPandas(batches, FRAME_FEATURES_SCHEMA)
 
 
-def size_partitioned(media: DataFrame, target_bytes_per_partition: int = 128 << 20) -> DataFrame:
-    """Repartition by cumulative payload size, not row count — media rows
-    are wildly skewed in byte size."""
-    with_size = media.withColumn("__sz", F.length("content").cast("bigint"))
-    total = with_size.agg(F.sum("__sz")).collect()[0][0] or 1
-    n_parts = max(1, int(total / target_bytes_per_partition))
-    return with_size.repartition(n_parts).drop("__sz")
-
-
 def synthesize_png_media(df: DataFrame, id_col: str) -> DataFrame:
     """Emit one real PNG payload per id (media_codec.synth_png: dimensions
     and pixels are closed-form in the id, so downstream decodes are

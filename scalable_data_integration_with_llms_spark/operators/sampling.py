@@ -63,14 +63,6 @@ def weighted_sample(df: DataFrame, n: int, seed: int, weight: Column,
     )
 
 
-def seeded_shuffle(df: DataFrame, seed: int, key_cols: list[str],
-                   partition_by: list[str] | None = None) -> DataFrame:
-    """Deterministic full shuffle (S1 seeded column shuffle,
-    ``utils/data_builder.py:21-24``): a stable permutation index per group."""
-    win = W.partitionBy(*(partition_by or [])).orderBy(det_shuffle_key(seed, *key_cols))
-    return df.withColumn("shuffle_pos", F.row_number().over(win))
-
-
 def unique_value_sample(df: DataFrame, value_col: str, n: int, seed: int,
                         partition_by: list[str] | None = None) -> DataFrame:
     """Column-wise `random_unique` sampler (``InstanceDataHandler.py:455-470``,

@@ -472,65 +472,6 @@ def pq_adc_topk(
     )
 
 
-def cosine_topk_self(
-    df: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k over the corpus against ITSELF — same contract as
-    ``cosine_topk(df, df, k)`` but each unordered pair's cosine is computed
-    once and mirrored row-locally (multiplication and the fold are
-    symmetric, so the mirrored score is bit-identical).  Halves the
-    dominant O(N²·dim) fold of all-query harnesses like q_ann_recall."""
-    from pyspark.sql import Window as W
-
-    withn = scoped_persist(
-        df.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("vec"),
-            norm(F.col(vec_col)).alias("vnorm"),
-        )
-    )
-    a = withn.select(
-        F.col("vid").alias("query_id"), F.col("vec").alias("q_vec"),
-        F.col("vnorm").alias("q_norm"),
-    )
-    b = withn.select(
-        F.col("vid").alias("neighbor_id"), F.col("vec").alias("c_vec"),
-        F.col("vnorm").alias("c_norm"),
-    )
-    pairs = (
-        F.broadcast(a)
-        .crossJoin(_spread(b))
-        .filter(F.col("query_id") < F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("cos_sim"),
-        )
-    )
-    scored = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("query_id"), F.col("neighbor_id")),
-                F.struct(
-                    F.col("neighbor_id").alias("query_id"),
-                    F.col("query_id").alias("neighbor_id"),
-                ),
-            )
-        ).alias("p"),
-        "cos_sim",
-    ).select("p.query_id", "p.neighbor_id", "cos_sim")
-    win = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(win))
-        .filter(F.col("sim_rank") <= k)
-    )
-
-
 def rrf_fuse(rankings: list[DataFrame], id_col: str, k: int = 60) -> DataFrame:
     """Reciprocal-rank fusion of N ranked lists (Cormack/Clarke/Buettcher,
     SIGIR 2009 — the standard hybrid-retrieval combiner; beyond-reference:

@@ -2,7 +2,7 @@
 over unbounded key domains (the sketch a 100 TB pipeline keeps when the
 exact groupBy's distinct-key state would not fit).
 
-Hashes derive from md5(j ':' key) (functions/determinism.py discipline), so
+Hashes are hash60(j ':' key) (functions/determinism.py:hash60), so
 every cell — and therefore every estimate — is bit-identical in any engine:
 the sketch itself is DuckDB-oracle-checkable, no tolerance needed.
 
@@ -17,16 +17,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.determinism import TWO_60_INT, hash60
+
 
 def _cms_col(j, key, width: int):
     """Column index of `key` in sketch row `j`: md5-derived 60-bit hash mod
     width (non-negative)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(":", j.cast("string"), key.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
-    return h % width
+    return hash60(F.concat_ws(":", j.cast("string"), key.cast("string"))) % width
 
 
 def count_min_cells(
@@ -52,6 +49,15 @@ def _pow2_literal():
     )
 
 
+def _check_bloom_shape(m: int, n_hashes: int) -> None:
+    """The bitmap holds m/64 whole words: an m that is not a positive
+    multiple of 64 would drop the positions past the last word."""
+    if m < 64 or m % 64 != 0:
+        raise ValueError(f"bloom filter size m={m} must be a positive multiple of 64")
+    if n_hashes < 1:
+        raise ValueError(f"bloom filter needs n_hashes >= 1, got {n_hashes}")
+
+
 def bloom_bitmap(build: DataFrame, key_col: str, n_hashes: int = 3, m: int = 4096) -> DataFrame:
     """The Bloom filter itself, as ONE row holding ``words``: an array of
     m/64 bigint words with the build keys' md5-derived positions set.
@@ -63,6 +69,7 @@ def bloom_bitmap(build: DataFrame, key_col: str, n_hashes: int = 3, m: int = 409
     (word, bits) rows fold into a dense array in a single final row.  The
     row is m/64·8 bytes regardless of corpus size — broadcast it.
     """
+    _check_bloom_shape(m, n_hashes)
     pow2 = _pow2_literal()
     pos = _cms_col(F.col("j"), F.col("key"), m)
     word_rows = (
@@ -93,6 +100,7 @@ def bloom_bits_predicate(key, n_hashes: int = 3, m: int = 4096):
     iff all ``n_hashes`` md5-derived positions are set.  Pure column
     expression — ``element_at`` + bitwise AND per hash inside whole-stage
     codegen, no explode, no join, no re-aggregation."""
+    _check_bloom_shape(m, n_hashes)
     key_col = F.col(key) if isinstance(key, str) else key
     pow2 = _pow2_literal()
     pred = None
@@ -170,8 +178,13 @@ def cms_estimates(
 # int64 arithmetic (DIV) — no float anywhere in the result.
 
 KMV_K = 8
-KMV_TWO_60 = 1 << 60
 KMV_SAFETY = 8  # tau-prune keeps ~SAFETY*k hashes per group
+
+
+def kmv_hash(key: Column, salt: str = "kmv") -> Column:
+    """The sketch's salted 60-bit hash of one key; map-only, so the
+    streaming KMV gate hashes its rows with the same expression."""
+    return hash60(F.concat_ws(":", F.lit(salt), key.cast("string")))
 
 
 def kmv_k_mins(
@@ -208,23 +221,13 @@ def kmv_k_mins(
         *group_cols,
         "_kmv_key",
         *carry,
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(salt), F.col("_kmv_key").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h"),
+        kmv_hash(F.col("_kmv_key"), salt).alias("h"),
     )
     cnt = hashed.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("exact_distinct")
     )
     # the numerator exceeds int64, so it rides in as a decimal literal
-    tau_num = F.expr(f"CAST('{KMV_SAFETY * k * KMV_TWO_60}' AS DECIMAL(38,0))")
+    tau_num = F.expr(f"CAST('{KMV_SAFETY * k * TWO_60_INT}' AS DECIMAL(38,0))")
     pruned = hashed.join(cnt, group_cols).filter(
         (F.col("exact_distinct") <= F.lit(KMV_SAFETY * k))
         | (F.col("h").cast("decimal(38,0)") * F.col("exact_distinct") < tau_num)
@@ -241,5 +244,5 @@ def kmv_estimate_col(k: int = KMV_K) -> Column:
     """Integer-exact KMV estimate from (exact_distinct, h_k): exact when the
     sketch holds every hash (n < k), else (k-1)*2^60 DIV h_(k)."""
     return F.when(F.col("exact_distinct") < k, F.col("exact_distinct")).otherwise(
-        F.expr(f"CAST({(k - 1) * KMV_TWO_60} AS BIGINT) DIV h_k")
+        F.expr(f"CAST({(k - 1) * TWO_60_INT} AS BIGINT) DIV h_k")
     )

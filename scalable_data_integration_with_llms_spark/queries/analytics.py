@@ -13,14 +13,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
-from ..functions.determinism import cents
+from ..functions.determinism import TWO_60_SQL, cents, hash60_sql
 from ..functions.normalize import normalize_colname, option_letter, truncate_values
 from ..operators.sampling import most_frequent, random_sample, weighted_sample
 from ..operators.surrogate import map_pk_dim
 from ..sources.readers import load_table
 from .registry import query
 
-TWO_60_SQL = "1152921504606846976.0"  # 2^60, exactly representable
 
 # -- A1: frequency count ------------------------------------------------------
 
@@ -108,7 +107,7 @@ _WEIGHTED_SAMPLE_ORACLE = f"""
 SELECT p_partkey, sample_rank FROM (
   SELECT p_partkey,
          ROW_NUMBER() OVER (
-           ORDER BY pow(('0x' || substr(md5('7:' || p_partkey), 1, 15))::BIGINT / {TWO_60_SQL},
+           ORDER BY pow({hash60_sql("'7:' || p_partkey")} / {TWO_60_SQL},
                         1.0 / p_retailprice) DESC,
                     p_partkey ASC) AS sample_rank
   FROM part
@@ -447,11 +446,11 @@ def q_range_join_purchase_context(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # -- count-min sketch over the fact key --------------------------------------
 
-_CMS_ORACLE = """
+_CMS_ORACLE = f"""
 WITH keyc AS (SELECT l_suppkey AS key, COUNT(*) AS cnt FROM lineitem GROUP BY 1),
 probes AS (
   SELECT key, cnt, j,
-         ('0x' || substr(md5(j || ':' || key), 1, 15))::BIGINT % 256 AS col
+         {hash60_sql("j || ':' || key")} % 256 AS col
   FROM keyc CROSS JOIN (SELECT unnest(range(0, 4)) AS j)
 ),
 cells AS (SELECT j, col, CAST(SUM(cnt) AS BIGINT) AS cell FROM probes GROUP BY j, col)
@@ -520,7 +519,7 @@ def q_events_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STRATIFIED_ORACLE = f"""
 SELECT o_orderkey, o_orderstatus FROM orders
-WHERE ('0x' || substr(md5('13:' || o_orderkey), 1, 15))::BIGINT / {TWO_60_SQL}
+WHERE {hash60_sql("'13:' || o_orderkey")} / {TWO_60_SQL}
       < CASE o_orderstatus WHEN 'F' THEN 0.02 WHEN 'O' THEN 0.1 ELSE 0.0 END
 """
 

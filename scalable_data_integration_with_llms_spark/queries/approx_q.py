@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.determinism import TWO_60_INT, hash60_sql
 from ..sources.readers import load_table
 from .registry import query
 
@@ -146,13 +147,12 @@ def q_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sketches = k smallest of the combined mins) is what q_kmv_set_ops uses.
 
 _KMV_K = 8
-_KMV_TWO60 = 1 << 60
 
 _KMV_DISTINCT_ORACLE = f"""
 WITH d AS (SELECT DISTINCT event_type, user_id FROM events),
 h AS (
   SELECT event_type, user_id,
-         ('0x' || substr(md5('kmv:' || user_id), 1, 15))::BIGINT AS h
+         {hash60_sql("'kmv:' || user_id")} AS h
   FROM d
 ),
 r AS (
@@ -164,7 +164,7 @@ r AS (
 SELECT event_type,
        MAX(n) AS exact_users,
        CASE WHEN MAX(n) < {_KMV_K} THEN MAX(n)
-            ELSE {(_KMV_K - 1) * _KMV_TWO60} // MAX(CASE WHEN rn = {_KMV_K} THEN h END)
+            ELSE {(_KMV_K - 1) * TWO_60_INT} // MAX(CASE WHEN rn = {_KMV_K} THEN h END)
        END AS kmv_users
 FROM r GROUP BY event_type
 """
@@ -208,7 +208,7 @@ WITH u AS (
 ),
 f AS (
   SELECT user_id, in_a, in_b,
-         ('0x' || substr(md5('kmv:' || user_id), 1, 15))::BIGINT AS h
+         {hash60_sql("'kmv:' || user_id")} AS h
   FROM u WHERE in_a = 1 OR in_b = 1
 ),
 r AS (
@@ -220,7 +220,7 @@ s AS (
   SELECT MAX(n) AS exact_union,
          (SELECT CAST(SUM(in_a * in_b) AS BIGINT) FROM f) AS exact_intersection,
          CASE WHEN MAX(n) < {_KMV_K} THEN MAX(n)
-              ELSE {(_KMV_K - 1) * _KMV_TWO60} // MAX(CASE WHEN rn = {_KMV_K} THEN h END)
+              ELSE {(_KMV_K - 1) * TWO_60_INT} // MAX(CASE WHEN rn = {_KMV_K} THEN h END)
          END AS kmv_union,
          CAST(SUM(CASE WHEN rn <= {_KMV_K} THEN in_a * in_b ELSE 0 END) AS BIGINT) AS k_both,
          LEAST({_KMV_K}, MAX(n)) AS k_eff

@@ -26,6 +26,7 @@ from ..operators.dedup import (
 # fan-out at O(max_df · n_shingles) instead of O(df²) on viral boilerplate.
 MAX_DF = 64
 from ..caching import scoped_persist
+from ..functions.determinism import hash60_sql
 from ..sources.readers import load_table
 from .registry import query
 
@@ -82,9 +83,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- MinHash-LSH band signatures ----------------------------------------------
 
-_MINHASH_ORACLE = _SHINGLE_CTE + """,
+_MINHASH_ORACLE = _SHINGLE_CTE + f""",
 perms AS (SELECT unnest(range(0, 12)) AS p),
-hashed AS (SELECT doc, p, ('0x' || substr(md5(p || ':' || shingle), 1, 15))::BIGINT AS h
+hashed AS (SELECT doc, p, {hash60_sql("p || ':' || shingle")} AS h
            FROM s CROSS JOIN perms),
 minh AS (SELECT doc, p, MIN(h) AS minh FROM hashed GROUP BY doc, p),
 banded AS (SELECT doc, CAST(p // 3 AS INT) AS band, p, minh FROM minh)
@@ -104,9 +105,9 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SIMHASH_BITS = 16
 _SIMHASH_ORACLE = (
-    """
+    f"""
 WITH toks AS (SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS tok FROM documents),
-h AS (SELECT doc, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
+h AS (SELECT doc, {hash60_sql("tok")} AS h FROM toks),
 sums AS (SELECT doc, """
     + ", ".join(
         f"SUM(((h >> {b}) & 1) * 2 - 1) AS b{b}" for b in range(_SIMHASH_BITS)
@@ -140,9 +141,9 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SIMHASH_PAIR_BITS = 32
 
 _SIMHASH_PAIRS_ORACLE = (
-    """
+    f"""
 WITH toks AS (SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS tok FROM documents),
-h AS (SELECT doc, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
+h AS (SELECT doc, {hash60_sql("tok")} AS h FROM toks),
 sums AS (SELECT doc, """
     + ", ".join(
         f"SUM(((h >> {b}) & 1) * 2 - 1) AS b{b}" for b in range(_SIMHASH_PAIR_BITS)
@@ -287,9 +288,9 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- the production dedup flow: LSH candidates -> exact-Jaccard verify --------
 
-_LSH_VERIFIED_ORACLE = _SHINGLE_CTE + """,
+_LSH_VERIFIED_ORACLE = _SHINGLE_CTE + f""",
 perms AS (SELECT unnest(range(0, 12)) AS p),
-hashed AS (SELECT doc, p, ('0x' || substr(md5(p || ':' || shingle), 1, 15))::BIGINT AS h
+hashed AS (SELECT doc, p, {hash60_sql("p || ':' || shingle")} AS h
            FROM s CROSS JOIN perms),
 minh AS (SELECT doc, p, MIN(h) AS minh FROM hashed GROUP BY doc, p),
 banded AS (SELECT doc, CAST(p // 3 AS INT) AS band, p, minh FROM minh),
@@ -483,7 +484,7 @@ def q_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- MinHash quality: estimated vs exact Jaccard on near-dup pairs ------------
 
-_MINHASH_EST_ORACLE = _SHINGLE_CTE + _DF_FILTER_CTE + """,
+_MINHASH_EST_ORACLE = _SHINGLE_CTE + _DF_FILTER_CTE + f""",
 sz AS (SELECT doc, COUNT(*) AS sz FROM s2 GROUP BY doc),
 i AS (SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS inter
       FROM s2 a JOIN s2 b ON a.shingle = b.shingle AND a.doc < b.doc
@@ -494,7 +495,7 @@ pairs AS MATERIALIZED (
   WHERE inter * 1.0 / (x.sz + y.sz - inter) >= 0.5
 ),
 perms AS (SELECT unnest(range(0, 12)) AS p),
-hashed AS (SELECT doc, p, ('0x' || substr(md5(p || ':' || shingle), 1, 15))::BIGINT AS h
+hashed AS (SELECT doc, p, {hash60_sql("p || ':' || shingle")} AS h
            FROM s CROSS JOIN perms),
 minh AS MATERIALIZED (SELECT doc, p, MIN(h) AS minh FROM hashed GROUP BY doc, p)
 SELECT pr.doc_a, pr.doc_b, pr.true_jaccard,
@@ -515,7 +516,8 @@ def q_minhash_est_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_perm choice (the dedup analog of q_ann_recall's n_planes tuning).
     Exact integer minhashes in both engines make the estimate itself
     oracle-checked."""
-    from ..operators.dedup import _hash60, jaccard_pairs, word_shingles
+    from ..functions.determinism import hash60
+    from ..operators.dedup import jaccard_pairs, word_shingles
 
     d = load_table(spark, sf_dir, "documents")
     sh = scoped_persist(word_shingles(d, "doc_id", "text", n=3), eager=True)
@@ -538,7 +540,7 @@ def q_minhash_est_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     mins = scoped_persist(
         sh.groupBy("doc").agg(
             *[
-                F.min(_hash60(F.lit(p), F.col("shingle"))).alias(f"m{p}")
+                F.min(hash60(F.concat_ws(":", F.lit(p), F.col("shingle")))).alias(f"m{p}")
                 for p in range(12)
             ]
         ),

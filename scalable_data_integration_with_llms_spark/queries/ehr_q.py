@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import SessionMemo
+from ..functions.determinism import TWO_60_SQL, hash60_sql
 from ..llm.boundary import mock_score_candidates
 from ..operators.candidates import generate_candidates, rank_preferences
 from ..operators.metrics import confusion_counts, prf1_columns
@@ -475,8 +476,8 @@ scored AS (
 seeds AS (SELECT * FROM (VALUES {seeds_sql}) AS s(seed)),
 perturbed AS (
   SELECT seed, scored.*, {score_expr} AS score_milli FROM scored CROSS JOIN seeds
-  WHERE ('0x' || substr(md5(seed || ':' || case_id || ':' || query_attr || ':' || candidate_attr), 1, 15))::BIGINT
-        / 1152921504606846976.0 >= 0.15
+  WHERE {hash60_sql("seed || ':' || case_id || ':' || query_attr || ':' || candidate_attr")}
+        / {TWO_60_SQL} >= 0.15
 ),
 runs AS (
   SELECT seed, case_id, candidate_attr AS src, query_attr AS tgt FROM (
@@ -510,9 +511,10 @@ def q_ehr_ensemble_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-seed md5-dropout runs, majority vote (ties kept), per-case PRF1 vs
     gold.  The oracle re-derives every stage in SQL from the independently
     parsed catalog — no pinned golden anywhere in this check."""
+    from ..functions.determinism import det_rand
     from ..operators.candidates import NO_MATCH
     from ..operators.ensembles import ensemble_majority
-    from .matching import ENSEMBLE_SEEDS, det_rand_str
+    from .matching import ENSEMBLE_SEEDS
 
     prefs = _preferences(spark, "ehr").filter(
         (F.col("side") == "n_to_one") & (F.col("candidate_attr") != NO_MATCH)
@@ -521,7 +523,7 @@ def q_ehr_ensemble_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     perturbed = prefs.crossJoin(F.broadcast(seeds)).filter(
-        det_rand_str("seed", "case_id", "query_attr", "candidate_attr") >= 0.15
+        det_rand(F.col("seed"), "case_id", "query_attr", "candidate_attr") >= 0.15
     )
     win = W.partitionBy("seed", "case_id", "query_attr").orderBy(
         F.desc("score_milli"), F.asc("candidate_attr")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..caching import SessionMemo
 from ..catalog.cases import case_catalog_df, cases_values_sql, gold_values_sql
+from ..functions.determinism import TWO_60_SQL, det_rand, hash60_sql
 from ..llm.boundary import mock_score_candidates
 from ..operators.candidates import (
     NO_MATCH,
@@ -200,8 +201,8 @@ seeds AS (SELECT * FROM (VALUES {_SEEDS_SQL}) AS s(seed)),
 perturbed AS (
   SELECT seed, scored.* FROM scored CROSS JOIN seeds
   WHERE side = 'n_to_one' AND candidate_attr <> 'none of the options'
-    AND ('0x' || substr(md5(seed || ':' || case_id || ':' || query_attr || ':' || candidate_attr), 1, 15))::BIGINT
-        / 1152921504606846976.0 >= 0.15
+    AND {hash60_sql("seed || ':' || case_id || ':' || query_attr || ':' || candidate_attr")}
+        / {TWO_60_SQL} >= 0.15
 ),
 runs AS (
   SELECT seed, case_id, candidate_attr AS src, query_attr AS tgt FROM (
@@ -227,7 +228,7 @@ def _spark_runs(spark: SparkSession) -> DataFrame:
             )
             .crossJoin(F.broadcast(seeds))
             .filter(
-                det_rand_str("seed", "case_id", "query_attr", "candidate_attr") >= 0.15
+                det_rand(F.col("seed"), "case_id", "query_attr", "candidate_attr") >= 0.15
             )
         )
         win = W.partitionBy("seed", "case_id", "query_attr").orderBy(
@@ -246,16 +247,6 @@ def _spark_runs(spark: SparkSession) -> DataFrame:
         )
 
     return _RUNS_MEMO.get_or_build(spark, build)
-
-
-def det_rand_str(seed_col: str, *key_cols: str):
-    """det_rand variant where the seed is a column, matching the oracle's
-    ``seed || ':' || ...`` key layout."""
-    key = F.concat_ws(":", F.col(seed_col), *[F.col(c) for c in key_cols])
-    return (
-        F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
-        / F.lit(1152921504606846976.0)
-    ).cast("double")
 
 
 _UNION_ORACLE = _runs_cte() + "SELECT DISTINCT case_id, src, tgt FROM runs"

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.determinism import hash60, hash60_sql
 from ..sources.readers import load_table
 from .registry import query
 
@@ -175,8 +176,8 @@ def q_doc_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- deterministic output sharding --------------------------------------------
 # Training corpora are written as N fixed shards, shuffled but reproducible:
-# shard(doc) = md5(seed, doc_id) mod N — stable under retries, partitioning,
-# and engines (functions/determinism.py discipline), unlike hash-partitioning
+# shard(doc) = hash60(seed, doc_id) mod N — stable under retries, partitioning,
+# and engines (functions/determinism.py:hash60), unlike hash-partitioning
 # whose murmur seed is engine-private.  The query audits shard balance (doc
 # and token counts per shard); the write path is
 # ``df.repartition(N, shard_col).write`` with the same column.
@@ -184,7 +185,7 @@ def q_doc_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_SHARDS = 64
 
 _SHARD_ORACLE = f"""
-SELECT ('0x' || substr(md5('shard42:' || doc_id), 1, 15))::BIGINT % {_N_SHARDS} AS shard,
+SELECT {hash60_sql("'shard42:' || doc_id")} % {_N_SHARDS} AS shard,
        COUNT(*) AS n_docs,
        CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
        MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
@@ -195,11 +196,7 @@ FROM documents GROUP BY 1
 @query("q_shard_assignment", _SHARD_ORACLE)
 def q_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("shard42:"), F.col("doc_id"))), 1, 15), 16, 10)
-        .cast("bigint")
-        % _N_SHARDS
-    )
+    shard = hash60(F.concat(F.lit("shard42:"), F.col("doc_id"))) % _N_SHARDS
     return (
         d.select(shard.alias("shard"), "doc_id", F.size(F.split("text", " ", -1)).alias("tok"))
         .groupBy("shard")
@@ -250,7 +247,7 @@ toks AS (
   GROUP BY k.doc_id, k.predicted
 )
 SELECT predicted AS lang,
-       ('0x' || substr(md5('shard42:' || doc_id), 1, 15))::BIGINT % {_E2E_N_SHARDS} AS shard,
+       {hash60_sql("'shard42:' || doc_id")} % {_E2E_N_SHARDS} AS shard,
        COUNT(*) AS n_docs,
        CAST(SUM(bpe_tokens) AS BIGINT) AS sum_tokens
 FROM toks
@@ -290,11 +287,7 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("first_id")
     )
     with_tokens = keepers.withColumn("bpe_tokens", bpe_token_count_udf(MERGES)("text"))
-    shard = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("shard42:"), F.col("doc_id"))), 1, 15), 16, 10)
-        .cast("bigint")
-        % _E2E_N_SHARDS
-    )
+    shard = hash60(F.concat(F.lit("shard42:"), F.col("doc_id"))) % _E2E_N_SHARDS
     return (
         with_tokens.select(
             F.col("predicted").alias("lang"), shard.alias("shard"), "bpe_tokens"

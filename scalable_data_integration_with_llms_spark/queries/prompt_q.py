@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..catalog.cases import MATCHING_CASES, case_catalog_df, cases_values_sql
 from ..functions import prompt_repr as PR
 from ..functions.chat import chat_prompt
+from ..functions.determinism import TWO_60_SQL, hash60_sql
 from ..functions.text import token_count
 from ..operators.candidates import NO_MATCH
 from .matching import _base_cte, _spark_preferences
@@ -791,8 +792,8 @@ _RANDOM_SEL_ORACLE = f"""
 WITH ids AS (SELECT DISTINCT case_id FROM {cases_values_sql()}),
 pairs AS (
   SELECT t.case_id, d.case_id AS demo_case_id,
-         ('0x' || substr(md5('{_SELECTOR_SEED}:' || t.case_id || ':' || d.case_id), 1, 15))::BIGINT
-           / 1152921504606846976.0 AS rnd
+         {hash60_sql(f"'{_SELECTOR_SEED}:' || t.case_id || ':' || d.case_id")}
+           / {TWO_60_SQL} AS rnd
   FROM ids t JOIN ids d ON d.case_id <> t.case_id
 )
 SELECT case_id, demo_case_id, CAST(pick_rank AS INT) AS pick_rank
@@ -1212,8 +1213,8 @@ FROM (
   SELECT CASE WHEN length(v) > {_STR_LIMIT} THEN substr(v, 1, {_STR_LIMIT}) || '...' ELSE v END AS v,
          ROW_NUMBER() OVER (ORDER BY es_key DESC, v ASC) AS rnk
   FROM (
-    SELECT v, pow(('0x' || substr(md5('{_SAMPLE_HINT_SEED}:' || v), 1, 15))::BIGINT
-                  / 1152921504606846976.0, 1.0 / cnt) AS es_key
+    SELECT v, pow({hash60_sql(f"'{_SAMPLE_HINT_SEED}:' || v")}
+                  / {TWO_60_SQL}, 1.0 / cnt) AS es_key
     FROM (SELECT {attr} AS v, COUNT(*) AS cnt FROM {tbl}
           WHERE {attr} IS NOT NULL GROUP BY {attr})
   )

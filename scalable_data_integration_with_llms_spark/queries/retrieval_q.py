@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..functions.determinism import hash60, hash60_sql
 from ..functions.text import ngram_structs
 from ..sources.readers import load_table, spread_scan
 from .registry import query
@@ -360,7 +361,7 @@ WITH arrs AS (
 ),
 bg AS (
   SELECT doc_id, lang,
-         ('0x' || substr(md5(arr[i] || ' ' || arr[i + 1]), 1, 15))::BIGINT
+         {hash60_sql("arr[i] || ' ' || arr[i + 1]")}
            % {_AFF_BUCKETS} AS bucket
   FROM arrs,
        LATERAL (SELECT unnest(generate_series(1, len(arr) - 1)) AS i) t(i)
@@ -411,10 +412,7 @@ def q_domain_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     words = F.split("text", " ", -1)
     d = d.select("doc_id", "lang", words.alias("w")).filter(F.size("w") >= 2)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("bg")), 1, 15), 16, 10).cast("bigint")
-        % _AFF_BUCKETS
-    )
+    bucket = hash60(F.col("bg")) % _AFF_BUCKETS
     # zipped-slice bigrams (functions/text.ngram_structs): explode the
     # structs and concat row-level so the scan→explode→md5-bucket pipeline
     # stays in whole-stage codegen (no interpreted HOF per doc)
@@ -674,7 +672,7 @@ _SPLIT_VAL_PM = 900
 _SPLIT_ORACLE = f"""
 WITH assigned AS (
   SELECT lang, n_chars, doc_id,
-         ('0x' || substr(md5('{_SPLIT_SEED}' || doc_id), 1, 15))::BIGINT
+         {hash60_sql(f"'{_SPLIT_SEED}' || doc_id")}
            % 1000 AS pm
   FROM documents
 )
@@ -696,16 +694,7 @@ def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     only shuffle is the audit rollup itself — the assignment fuses into any
     downstream writer at zero cost."""
     d = load_table(spark, sf_dir, "documents")
-    pm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(_SPLIT_SEED), F.col("doc_id"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000
-    )
+    pm = hash60(F.concat(F.lit(_SPLIT_SEED), F.col("doc_id"))) % 1000
     split = (
         F.when(pm < _SPLIT_TRAIN_PM, "train")
         .when(pm < _SPLIT_VAL_PM, "val")

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..functions.determinism import hash60, hash60_sql
 from ..operators.similarity import cosine_topk, ivf_topk
 from ..sources.readers import load_table
 from .registry import query
@@ -957,7 +958,7 @@ nb AS (
 ),
 sub AS (
   SELECT a.vec_id, a.cluster, a.d2,
-         ('0x' || substr(md5('sd12:' || a.vec_id), 1, 15))::BIGINT % nb.nb AS sub
+         {hash60_sql("'sd12:' || a.vec_id")} % nb.nb AS sub
   FROM assigned a JOIN nb USING (cluster)
 ),
 pairs AS (
@@ -1007,16 +1008,7 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nb"
         ),
     )
-    sub_col = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sd12:"), F.col("vec_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % F.col("nb")
-    )
+    sub_col = hash60(F.concat(F.lit("sd12:"), F.col("vec_id").cast("string"))) % F.col("nb")
     withv = scoped_persist(
         assigned.join(F.broadcast(nb), "cluster")
         .withColumn("sub", sub_col)

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..functions.determinism import TWO_60_INT, hash60_sql
 from ..sources.readers import load_table
 from ..streaming.events import (
     hourly_rollup,
@@ -629,12 +630,12 @@ def q_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle is the batch SQL over the same signatures: a doc's dup-band count
 # is how many of its buckets contain a smaller doc.
 
-_NEAR_DUP_GATE_ORACLE = """
+_NEAR_DUP_GATE_ORACLE = f"""
 WITH w AS (SELECT doc_id AS doc, string_split(text, ' ') AS ws FROM documents),
 s AS (SELECT DISTINCT doc, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
       FROM w, unnest(range(1, len(ws) - 1)) AS t(i)),
 perms AS (SELECT unnest(range(0, 12)) AS p),
-hashed AS (SELECT doc, p, ('0x' || substr(md5(p || ':' || shingle), 1, 15))::BIGINT AS h
+hashed AS (SELECT doc, p, {hash60_sql("p || ':' || shingle")} AS h
            FROM s CROSS JOIN perms),
 minh AS (SELECT doc, p, MIN(h) AS minh FROM hashed GROUP BY doc, p),
 banded AS (SELECT doc, CAST(p // 3 AS INT) AS band, p, minh FROM minh),
@@ -692,12 +693,11 @@ def q_stream_near_dup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANY micro-batch arrival order.  See streaming/kmv_gate.py.
 
 _STREAM_KMV_K = 8
-_STREAM_KMV_TWO60 = 1 << 60
 
 _STREAM_KMV_ORACLE = f"""
 WITH h AS (
   SELECT DISTINCT event_type,
-         ('0x' || substr(md5('kmv:' || user_id), 1, 15))::BIGINT AS h
+         {hash60_sql("'kmv:' || user_id")} AS h
   FROM events
 ),
 r AS (
@@ -708,7 +708,7 @@ r AS (
 )
 SELECT event_type,
        CASE WHEN MAX(n) < {_STREAM_KMV_K} THEN MAX(n)
-            ELSE {(_STREAM_KMV_K - 1) * _STREAM_KMV_TWO60}
+            ELSE {(_STREAM_KMV_K - 1) * TWO_60_INT}
                  // MAX(CASE WHEN rn = {_STREAM_KMV_K} THEN h END)
        END AS kmv_users
 FROM r GROUP BY event_type
@@ -729,14 +729,11 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     users); the batch q_kmv_distinct keys by user instead — both sides of
     each oracle pair use one convention consistently."""
     from ..streaming.events import read_event_stream, run_to_memory
-    from ..streaming.kmv_gate import (
-        N_KMV_SHARDS,
-        kmv_distinct_gate,
-        kmv_stream_hash,
-    )
+    from ..operators.sketch import kmv_hash
+    from ..streaming.kmv_gate import N_KMV_SHARDS, kmv_distinct_gate
 
     stream = read_event_stream(spark, sf_dir).select(
-        "event_type", kmv_stream_hash("user_id").alias("h")
+        "event_type", kmv_hash(F.col("user_id")).alias("h")
     )
     hashed = stream.withColumn(
         "shard", (F.col("h") % N_KMV_SHARDS).cast("int")
@@ -769,7 +766,7 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("n_kept") < _STREAM_KMV_K, F.col("n_kept"))
             .otherwise(
                 F.expr(
-                    f"CAST({(_STREAM_KMV_K - 1) * _STREAM_KMV_TWO60} AS BIGINT)"
+                    f"CAST({(_STREAM_KMV_K - 1) * TWO_60_INT} AS BIGINT)"
                     " DIV h_k"
                 )
             )

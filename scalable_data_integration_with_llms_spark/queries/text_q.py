@@ -18,6 +18,7 @@ from ..functions.text import (
     token_count,
 )
 from ..caching import scoped_persist
+from ..functions.determinism import hash60_sql
 from ..operators.metrics import mean_ci95
 from ..sources.readers import load_table, spread_scan
 from .registry import query
@@ -490,13 +491,13 @@ WITH shingled AS (
 ),
 bench AS (SELECT DISTINCT shingle FROM shingled WHERE doc_id % 100 = 0),
 bits AS (
-  SELECT DISTINCT ('0x' || substr(md5(j || ':' || shingle), 1, 15))::BIGINT % {_BLOOM_M} AS pos
+  SELECT DISTINCT {hash60_sql("j || ':' || shingle")} % {_BLOOM_M} AS pos
   FROM bench CROSS JOIN (SELECT unnest(range(0, {_BLOOM_K})) AS j)
 ),
 corpus AS (SELECT doc_id, shingle FROM shingled WHERE doc_id % 100 <> 0),
 member AS (
   SELECT shingle, COUNT(*) AS n_set FROM (
-    SELECT p.shingle, ('0x' || substr(md5(j || ':' || p.shingle), 1, 15))::BIGINT % {_BLOOM_M} AS pos
+    SELECT p.shingle, {hash60_sql("j || ':' || p.shingle")} % {_BLOOM_M} AS pos
     FROM (SELECT DISTINCT shingle FROM corpus) p
     CROSS JOIN (SELECT unnest(range(0, {_BLOOM_K})) AS j)
   ) q JOIN bits USING (pos)

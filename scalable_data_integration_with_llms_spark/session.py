@@ -80,6 +80,10 @@ def get_spark(app_name: str = "sdi-spark", shuffle_partitions: int | None = None
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", session_tz)
+        # events.ts has shipped as parquet TIMESTAMP(NANOS): read it as long
+        # (sources/readers.py converts) instead of failing the scan.  Set
+        # here once so no read changes session config mid-query.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SDI_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

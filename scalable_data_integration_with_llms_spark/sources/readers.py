@@ -88,14 +88,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.ts`` has shipped in two physical layouts across testdata
     generations: parquet TIMESTAMP(NANOS) (unreadable natively — read nanos
-    as long and truncate to micros, matching DuckDB/Arrow readers) and plain
+    as long, which ``session.get_spark`` enables with
+    ``spark.sql.legacy.parquet.nanosAsLong``, and truncate to micros,
+    matching DuckDB/Arrow readers) and plain
     TIMESTAMP(MICROS) (reads as TIMESTAMP_NTZ — cast to the session-zone
     timestamp type so downstream window/filter exprs see one type either
     way; session tz is pinned UTC so values are identical).
     """
     flaky = os.environ.get("SDI_FLAKY_SOURCES") == "1"
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         from pyspark.sql import types as T
 
@@ -122,7 +123,6 @@ def load_events_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's ``epoch(naive)`` (found by the r9 CORRECTNESS_TZ sweep on
     q_user_value_trend).  Such queries must read the wall time NTZ and do
     calendar math (``timestampdiff``), which no session TZ can shift."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     from pyspark.sql import types as T
 

@@ -24,9 +24,9 @@ from pyspark.sql import types as T
 from ..functions.determinism import cents
 
 # events parquet has shipped with ts as TIMESTAMP(NANOS) (read as long via
-# nanosAsLong, then converted) and as TIMESTAMP(MICROS); probe the footer
-# with a batch read and declare the matching stream schema, mirroring
-# sources/readers.load_table.
+# nanosAsLong, set in session.get_spark, then converted) and as
+# TIMESTAMP(MICROS); probe the footer with a batch read and declare the
+# matching stream schema, mirroring sources/readers.load_table.
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -46,7 +46,6 @@ _TS_IS_NANOS: dict[str, bool] = {}
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if sf_dir not in _TS_IS_NANOS:
         _TS_IS_NANOS[sf_dir] = isinstance(
             spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType,

@@ -7,8 +7,8 @@ seen); the KMV sketch (operators/sketch.py) needs only the k smallest
 60-bit md5 hashes, and k-mins MERGE associatively — min-k of a union is
 min-k of the per-part min-k's — so the state is a <=k-element bigint array
 no matter how many rows flow through.  Because the hashes are md5-derived
-(functions/determinism.py), the drained estimate is bit-identical to the
-batch twin's, giving a STATEFUL STREAMING sketch a full DuckDB value
+(functions/determinism.py:hash60), the drained estimate is bit-identical to
+the batch twin's, giving a STATEFUL STREAMING sketch a full DuckDB value
 oracle — the HLL-shaped thing production streams run, here exactly
 checkable.
 
@@ -44,8 +44,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.sketch import KMV_K
@@ -95,14 +94,3 @@ def kmv_distinct_gate(hashed: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def kmv_stream_hash(col: str) -> Column:
-    """The batch sketch's exact hash bytes (operators/sketch.py:kmv_k_mins,
-    salt 'kmv') as a streaming-safe map-only expression."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit("kmv"), F.col(col).cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.determinism import hash60
 from ..functions.text import ngram_strings
 
 N_PERM = 12
@@ -66,14 +67,6 @@ N_BANDS = 4
 
 GATE_OUT_SCHEMA = "doc bigint, band int, is_dup boolean"
 _GATE_STATE_SCHEMA = "min_doc bigint"
-
-
-def _hash60(p: int, s):
-    """The cross-engine 60-bit hash (operators/dedup.py:_hash60) as an
-    expression usable inside a higher-order-function lambda."""
-    return F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.lit(p), s)), 1, 15), 16, 10
-    ).cast("bigint")
 
 
 def stream_minhash_bands(
@@ -91,7 +84,9 @@ def stream_minhash_bands(
     ws = F.split("text", " ", -1)
 
     def perm_min(p: int):
-        return F.array_min(F.transform(F.col("grams"), lambda s: _hash60(p, s)))
+        return F.array_min(
+            F.transform(F.col("grams"), lambda s: hash60(F.concat_ws(":", F.lit(p), s)))
+        )
 
     # Build the gram array ONCE in its own projection: inlining it into the
     # n_perm hash expressions re-ran the gram construction once per

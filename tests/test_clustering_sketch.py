@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import assert_oracle_match
@@ -24,6 +25,32 @@ def test_bloom_no_false_negatives(spark):
     assert all(got[f"key{i}"] for i in range(50))  # Bloom guarantee
     assert len(got) == 100
 
+
+
+def test_bloom_rejects_partial_word_sizes(spark):
+    """m must be a positive multiple of 64 (the bitmap holds m/64 whole
+    words) and n_hashes >= 1 — checked when the plan is built, before any
+    job runs."""
+    from scalable_data_integration_with_llms_spark.operators.sketch import (
+        bloom_bitmap,
+        bloom_bits_predicate,
+        bloom_membership,
+    )
+
+    build = spark.createDataFrame([("a",)], "k string")
+    group = "bloom-contract"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        for kw in ({"m": 100}, {"m": 0}, {"m": 32}, {"n_hashes": 0}):
+            with pytest.raises(ValueError):
+                bloom_bitmap(build, "k", **kw)
+            with pytest.raises(ValueError):
+                bloom_bits_predicate("k", **kw)
+            with pytest.raises(ValueError):
+                bloom_membership(build, build, "k", **kw)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup(group) == []
 
 def test_bloom_contamination_accounting(spark):
     from scalable_data_integration_with_llms_spark.queries import QUERIES

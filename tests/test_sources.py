@@ -267,3 +267,26 @@ def test_xlsx_roundtrip_hostile_values(spark, tmp_path):
     path = str(tmp_path / "hostile.xlsx")
     report_xlsx(df.orderBy(df.n_orders), path)
     assert _xlsx_rows(path) == rows
+
+
+def test_event_reads_leave_session_conf_unchanged(spark):
+    """The nanos-as-long parquet setting belongs to the session factory: no
+    events reader may change session-wide config while a query runs."""
+    from scalable_data_integration_with_llms_spark.session import get_spark
+    from scalable_data_integration_with_llms_spark.sources.readers import (
+        load_events_ntz,
+        load_table,
+    )
+    from scalable_data_integration_with_llms_spark.streaming.events import read_event_stream
+    from conftest import SF_DIR as sf_dir
+
+    # re-apply the factory's confs to the shared session, so a value an
+    # earlier test left behind cannot mask a reader that sets its own
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    spark = get_spark("sdi-tests")
+    before = spark.conf.getAll
+    assert before["spark.sql.legacy.parquet.nanosAsLong"] == "true"
+    assert load_table(spark, sf_dir, "events").limit(1).count() == 1
+    assert load_events_ntz(spark, sf_dir).limit(1).count() == 1
+    assert read_event_stream(spark, sf_dir).isStreaming
+    assert spark.conf.getAll == before

@@ -4,12 +4,25 @@ with the scale rationale for each — the '.explain and iterate' audit trail
 (SURVEY §4, SCALE.md).  Run from the repo root:
 
     python tools/dump_plans.py > PLANS.md
+
+Round mode dumps ``.explain("formatted")`` per query as before/after
+evidence for an optimization round:
+
+    python tools/dump_plans.py --round 16 before q_pmi_collocations q_er_entities ...
+    python tools/dump_plans.py --round 16 after  q_pmi_collocations ...
+
+It writes plans/r<N>/<query>_<tag>.txt, reading tables from
+``SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data).  Queries that drain a
+stream through a memory sink have no single batch plan; for those the
+batch-side plan of the returned frame is dumped.
 """
 
 from __future__ import annotations
 
+import io
 import os
 import sys
+from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -320,7 +333,45 @@ def _watermark_col(splan: str) -> str:
     return "ts (LTZ)" if "ts#" in tail else "ts_wall"
 
 
+def dump_round(rnd: int, tag: str, names: list[str]) -> None:
+    """Write each query's formatted plan to plans/r<rnd>/<query>_<tag>.txt."""
+    if tag not in ("before", "after"):
+        raise SystemExit(f"tag must be 'before' or 'after', got {tag!r}")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+    from scalable_data_integration_with_llms_spark.caching import (
+        clear_all_memos,
+        release_scoped,
+    )
+    from scalable_data_integration_with_llms_spark.queries import QUERIES
+    from scalable_data_integration_with_llms_spark.session import get_spark
+
+    spark = get_spark("sdi-plan-dump")
+    spark.sparkContext.setLogLevel("ERROR")
+    out_dir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", f"r{rnd}"
+    )
+    os.makedirs(out_dir, exist_ok=True)
+
+    for name in names:
+        df = QUERIES[name](spark, sf_dir)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"== {name} ({tag}, sf_dir={sf_dir}) ==\n")
+            fh.write(buf.getvalue())
+        release_scoped()
+        print(f"wrote {path}")
+    clear_all_memos()
+    spark.stop()
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--round"]:
+        dump_round(int(sys.argv[2]), sys.argv[3], sys.argv[4:])
+        return
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from scalable_data_integration_with_llms_spark.queries import QUERIES
     from scalable_data_integration_with_llms_spark.session import get_spark

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F  # noqa: E402
 def bucket_stats(spark, sf_dir: str, target: int) -> dict:
     """Exact bucket-size histograms for both variants from the engine's own
     assignment operators (no timing here — pure combinatorics)."""
+    from scalable_data_integration_with_llms_spark.functions.determinism import hash60
     from scalable_data_integration_with_llms_spark.operators.clustering import (
         kmeans_assign,
         label_centroid_arrays,
@@ -56,14 +57,7 @@ def bucket_stats(spark, sf_dir: str, target: int) -> dict:
     )
     sub = assigned.join(F.broadcast(nb), "cluster").withColumn(
         "sub",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sd12:"), F.col("vec_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % F.col("nb"),
+        hash60(F.concat(F.lit("sd12:"), F.col("vec_id").cast("string"))) % F.col("nb"),
     )
     sub_sizes = sub.groupBy("cluster", "sub").agg(F.count(F.lit(1)).alias("s"))
     pairs_expr = F.sum(F.expr("s * (s - 1) DIV 2")).alias("pairs")
