@@ -224,34 +224,35 @@ SF1_BATTERY = [
     "q_er_sorted_neighborhood",
 ]
 assert not set(SF1_BATTERY) - set(HEADLINE), "sf1 battery must be a HEADLINE subset"
-def _infer_round() -> int:
+def _infer_round(root: str | None = None) -> int:
     """SPARK_GRAFT_ROUND if set, else one past the newest GIT-COMMITTED
-    BENCH_r{N}.json — the driver commits that file at each round's end, so
-    the rotation self-advances without anyone remembering to bump a
-    constant.  Committed state only (VERDICT r14 item 3): the driver writes
-    its own BENCH_r{N}.json to the working dir BEFORE the low-core scaling
-    re-run, so counting on-disk files made the two same-round invocations
-    disagree on the round and print disjoint subsets — r14's scaling block
-    came back empty.  Falls back to the on-disk listing when git is
-    unavailable (e.g. an exported tree)."""
+    BENCH_r{N}.json in ``root`` (default: this file's directory) — the
+    driver commits that file at each round's end, so the rotation
+    self-advances without anyone remembering to bump a constant.
+    Committed state only (VERDICT r14 item 3): the driver writes its own
+    BENCH_r{N}.json to the working dir BEFORE the low-core scaling re-run,
+    so counting on-disk files made the two same-round invocations disagree
+    on the round and print disjoint subsets — r14's scaling block came back
+    empty.  The files come from ``git ls-tree HEAD`` (a staged but
+    uncommitted file is not in it, unlike ``ls-files``, which reads the
+    index); a committed tree with no BENCH file is round 1.  Falls back to
+    the on-disk listing only when git itself fails (no git, or not a
+    repository, e.g. an exported tree)."""
     env = os.environ.get("SPARK_GRAFT_ROUND")
     if env:
         return int(env)
-    here = os.path.dirname(os.path.abspath(__file__))
-    names: list[str] = []
+    here = root or os.path.dirname(os.path.abspath(__file__))
     try:
         proc = subprocess.run(
-            ["git", "-C", here, "ls-files", "BENCH_r*.json"],
+            ["git", "-C", here, "ls-tree", "-r", "--name-only", "HEAD"],
             capture_output=True,
             text=True,
             timeout=10,
         )
-        if proc.returncode == 0 and proc.stdout.strip():
-            names = proc.stdout.split()
+        ok = proc.returncode == 0
     except Exception:
-        names = []
-    if not names:
-        names = os.listdir(here)
+        ok = False
+    names = proc.stdout.splitlines() if ok else os.listdir(here)
     rounds = [
         int(m.group(1))
         for f in names

@@ -33,71 +33,71 @@ from . import ehr_q  # noqa: F401, E402
 from . import sinks_q  # noqa: F401, E402
 from . import llm_q  # noqa: F401, E402
 
-# Verification-window priority (r15 rotation, regenerated by
-# ``tools/rotate_window.py`` AFTER the round's changes landed): (a) the 13
-# queries whose physical plan or execution structure changed this round —
-# the bloom bitmap rewrite (q_bloom_contamination), the LSH two-stage pair
-# expansion (q_lsh_verified_pairs), the connected-components lazy-
-# checkpoint fold and its consumers (q_dedup_clusters, q_dedup_keepers,
-# q_er_entities, q_embedding_dup_clusters), the thread-pooled sink applies
-# (q_exactly_once_sink, q_sink_compaction), the spread_stream feeds
-# (q_stream_topk_types, q_stream_near_dup_gate), and the three measured
-# keep-decisions whose docstrings changed (q_minhash_est_jaccard,
-# q_stream_stream_join, q_pmi_collocations); (b) the stalest rows —
-# r9-latest then the r10-latest block.  Oldest standing driver
-# verification after this round: r10.
+# Verification-window priority (r16 rotation, regenerated by
+# ``tools/rotate_window.py`` AFTER the round's changes landed): (a) the 10
+# queries whose source path changed this round — every
+# ``read_event_stream`` consumer now takes the events ``ts`` layout from
+# the per-session parquet schema memo (sources/readers._read_parquet)
+# instead of a process-global footer probe — led by the two
+# transformWithStateInPandas twins, one of which (q_stream_near_dup_gate_tws)
+# also missed the r15 window after its spread_stream change; (b) the
+# stalest rows — the r10-latest then the r11-latest block.  Oldest standing
+# driver verification after this round: r11.  The ``*_tws`` twins register
+# only where their runtime exists (streaming_q._has_tws_runtime); elsewhere
+# they drop out of the window and the next registered rows move up.
 _VERIFY_FIRST = [
-    "q_bloom_contamination",  # changed/new
-    "q_lsh_verified_pairs",  # changed/new
-    "q_dedup_clusters",  # changed/new
-    "q_dedup_keepers",  # changed/new
-    "q_er_entities",  # changed/new
-    "q_embedding_dup_clusters",  # changed/new
-    "q_exactly_once_sink",  # changed/new
-    "q_sink_compaction",  # changed/new
-    "q_stream_topk_types",  # changed/new
-    "q_stream_near_dup_gate",  # changed/new
-    "q_minhash_est_jaccard",  # changed/new
+    "q_stream_near_dup_gate_tws",  # changed/new
+    "q_sessionization_tws",  # changed/new
+    "q_stream_hourly",  # changed/new
+    "q_sessionization_stream",  # changed/new
+    "q_stream_enriched",  # changed/new
+    "q_stream_dedup",  # changed/new
     "q_stream_stream_join",  # changed/new
-    "q_pmi_collocations",  # changed/new
-    "q_value_outliers",  # r9-latest
-    "q_zorder_locality",  # r9-latest
-    "q10_returned_revenue",  # r10-latest
-    "q11_important_types",  # r10-latest
-    "q13_order_distribution",  # r10-latest
-    "q14_promo_share",  # r10-latest
-    "q15_top_supplier",  # r10-latest
-    "q16_supplier_part_counts",  # r10-latest
-    "q17_small_quantity_revenue",  # r10-latest
-    "q18_large_orders",  # r10-latest
-    "q19_disjunctive_filter",  # r10-latest
-    "q1_pricing_summary",  # r10-latest
-    "q20_heavy_shippers",  # r10-latest
-    "q21_sole_failing_supplier",  # r10-latest
-    "q22_idle_rich_customers",  # r10-latest
-    "q2_min_cost_part",  # r10-latest
-    "q3_shipping_priority",  # r10-latest
-    "q4_priority_exists",  # r10-latest
-    "q5_region_revenue",  # r10-latest
-    "q6_forecast_revenue",  # r10-latest
-    "q7_volume_shipping",  # r10-latest
-    "q8_market_share",  # r10-latest
-    "q9_profit",  # r10-latest
-    "q_above_avg_orders",  # r10-latest
-    "q_asof_latest_order",  # r10-latest
-    "q_asof_next_order",  # r10-latest
-    "q_big_spenders",  # r10-latest
-    "q_concat_chunk_bins",  # r10-latest
-    "q_confidence_eval",  # r10-latest
-    "q_confidence_summary",  # r10-latest
-    "q_cross_source_dup_matrix",  # r10-latest
-    "q_customers_without_orders",  # r10-latest
-    "q_example_selector_coverage",  # r10-latest
-    "q_example_selector_random",  # r10-latest
-    "q_generate_questions_record",  # r10-latest
-    "q_icl_prompt_render",  # r10-latest
-    "q_image_dhash_dedup",  # r10-latest
+    "q_stream_cdc_apply",  # changed/new
+    "q_stream_topk_types",  # changed/new
+    "q_stream_kmv_distinct",  # changed/new
+    "q_kmv_distinct",  # r10-latest
+    "q_kmv_set_ops",  # r10-latest
+    "q_llm_boundary_http",  # r10-latest
+    "q_mapping_prompt_render",  # r10-latest
+    "q_mapping_sample_data_hint",  # r10-latest
+    "q_mm_prompts",  # r10-latest
+    "q_ntile_deciles",  # r10-latest
+    "q_packing_efficiency",  # r10-latest
+    "q_quality_threshold_sweep",  # r10-latest
+    "q_repr_n2one_prompts",  # r10-latest
+    "q_repr_prompt_tokens",  # r10-latest
+    "q_rrf_fusion",  # r10-latest
+    "q12_priority_by_status",  # r11-latest
+    "q_alignment_prf1",  # r11-latest
+    "q_ann_ivf",  # r11-latest
+    "q_ann_lsh",  # r11-latest
+    "q_bidirectional_scores",  # r11-latest
+    "q_bpe_train",  # r11-latest
+    "q_chat_prompt",  # r11-latest
+    "q_cms_supplier_counts",  # r11-latest
+    "q_constraint_audit",  # r11-latest
+    "q_corr_qty_price",  # r11-latest
+    "q_coverage",  # r11-latest
+    "q_dedup_exact",  # r11-latest
+    "q_dedup_ngram_jaccard",  # r11-latest
+    "q_ehr_gold_parity",  # r11-latest
+    "q_ehr_matching_f1",  # r11-latest
+    "q_ehr_round1_matches",  # r11-latest
+    "q_events_hourly",  # r11-latest
+    "q_events_rollup_multires",  # r11-latest
+    "q_example_selection",  # r11-latest
+    "q_example_selection_scalable",  # r11-latest
+    "q_filtered_preferences",  # r11-latest
+    "q_majority_vote",  # r11-latest
+    "q_match_candidates",  # r11-latest
+    "q_mixture_schedule",  # r11-latest
+    "q_normalize_chain",  # r11-latest
+    "q_orders_cube",  # r11-latest
+    "q_orders_per_status",  # r11-latest
+    "q_price_histogram",  # r11-latest
 ]
+_VERIFY_FIRST = [n for n in _VERIFY_FIRST if n in QUERIES or not n.endswith("_tws")]
 
 
 def _reorder() -> None:

@@ -7,7 +7,9 @@ Both paths are provided:
 
 * ``load_table``/``load_tables`` — parquet scans of the test tables.  Filters
   and projections applied downstream push into these scans (Catalyst handles
-  PushedFilters/ReadSchema; verified in tests/test_plans.py).
+  PushedFilters/ReadSchema; verified in tests/test_plans.py).  A file's
+  schema is inferred once per session and then declared (metadata only;
+  the contract is in ``load_table``).
 * ``read_instance_csv`` — the reference's untyped-CSV semantics: all-string
   read, rename drift columns, drop surrogate ``row_id``, add missing schema
   columns as NULL, realign to schema order (S3).
@@ -19,10 +21,15 @@ Both paths are provided:
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Iterable, Mapping
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..caching import _is_stopped
 
 TABLES = (
     "region",
@@ -82,9 +89,72 @@ def spread_scan(df: DataFrame) -> DataFrame:
     return df
 
 
+def _file_identity(spark: SparkSession, path: str) -> tuple[int, int] | None:
+    """``(modification time, length)`` of ``path`` from its Hadoop
+    ``FileStatus`` — the same lookup on local and cluster storage — or
+    ``None`` when the path is a directory or cannot be stat'ed (missing,
+    unreadable): the caller then reads without the memo, and Spark's own
+    read reports the error."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        status = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(jpath)
+    except Py4JJavaError:
+        return None
+    if status.isDirectory():
+        return None
+    return status.getModificationTime(), status.getLen()
+
+
+# confs whose values change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# session -> {(path, mtime, length, *conf values): inferred schema}.  Keyed
+# by the session object itself, like caching.SessionMemo; stopped sessions
+# are evicted on a miss.  Metadata only: no data, nothing persisted, so it
+# is not one of caching.clear_all_memos's memos.
+_SCHEMAS: dict[SparkSession, dict[tuple, T.StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once per
+    session: later reads declare the memoized schema, so they build a fresh
+    relation (own file listing, same pushdown and pruning) without the
+    footer-inference job.  Directories and missing paths bypass the memo."""
+    ident = _file_identity(spark, path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = (path, *ident, *(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(spark, {}).get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    with _SCHEMAS_LOCK:
+        for sess in [s for s in _SCHEMAS if _is_stopped(s)]:
+            del _SCHEMAS[sess]
+        _SCHEMAS.setdefault(spark, {})[key] = schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of one test table. Column pruning + predicate pushdown
     happen at this scan when the caller selects/filters downstream.
+
+    Relation metadata is memoized per session (never data): the first read
+    of a file infers its schema with one Spark job, and every later read in
+    the same session declares that schema instead, skipping the job.  The
+    memo key is the live ``SparkSession``, the file's path, modification
+    time and length (Hadoop ``FileStatus``), and the values of the confs
+    that change inference (``_INFERENCE_CONFS``), so a rewritten file or a
+    toggled conf re-infers.  A directory or a missing path bypasses the
+    memo and reads with plain ``spark.read.parquet`` (a missing path still
+    raises Spark's ``PATH_NOT_FOUND``).
 
     ``events.ts`` has shipped in two physical layouts across testdata
     generations: parquet TIMESTAMP(NANOS) (unreadable natively — read nanos
@@ -95,19 +165,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     timestamp type so downstream window/filter exprs see one type either
     way; session tz is pinned UTC so values are identical).
     """
-    flaky = os.environ.get("SDI_FLAKY_SOURCES") == "1"
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        from pyspark.sql import types as T
-
         if isinstance(df.schema["ts"].dataType, T.LongType):
             # integer div — double division would lose precision above 2^53 ns
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         else:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return _flaky_retry_wrap(df) if flaky else df
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _flaky_retry_wrap(df) if flaky else df
+    return _flaky_retry_wrap(df) if os.environ.get("SDI_FLAKY_SOURCES") == "1" else df
 
 
 def load_events_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,9 +188,7 @@ def load_events_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's ``epoch(naive)`` (found by the r9 CORRECTNESS_TZ sweep on
     q_user_value_trend).  Such queries must read the wall time NTZ and do
     calendar math (``timestampdiff``), which no session TZ can shift."""
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from pyspark.sql import types as T
-
+    df = _read_parquet(spark, f"{sf_dir}/events.parquet")
     if isinstance(df.schema["ts"].dataType, T.LongType):
         # nanos layout: epoch nanos -> calendar add onto the NTZ epoch
         df = df.withColumn(

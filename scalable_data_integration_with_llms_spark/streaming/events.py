@@ -22,11 +22,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.determinism import cents
+from ..sources.readers import _read_parquet
 
 # events parquet has shipped with ts as TIMESTAMP(NANOS) (read as long via
 # nanosAsLong, set in session.get_spark, then converted) and as
-# TIMESTAMP(MICROS); probe the footer with a batch read and declare the
-# matching stream schema, mirroring sources/readers.load_table.
+# TIMESTAMP(MICROS); take the footer's ts type from the readers' per-session
+# schema memo (keyed by file identity, so a rewritten file re-probes) and
+# declare the matching stream schema, mirroring sources/readers.load_table.
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -40,18 +42,9 @@ def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-# footer-probe result per sf_dir: stream construction shouldn't pay a batch
-# file-listing + footer read more than once per directory
-_TS_IS_NANOS: dict[str, bool] = {}
-
-
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if sf_dir not in _TS_IS_NANOS:
-        _TS_IS_NANOS[sf_dir] = isinstance(
-            spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType,
-            T.LongType,
-        )
-    nanos = _TS_IS_NANOS[sf_dir]
+    footer = _read_parquet(spark, f"{sf_dir}/events.parquet").schema
+    nanos = isinstance(footer["ts"].dataType, T.LongType)
     if nanos:
         # Legacy nanos layout: epoch nanos -> LTZ instant directly, with no
         # wall-time interpretation step — agrees with the batch reader's

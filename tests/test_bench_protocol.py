@@ -194,6 +194,48 @@ def test_infer_round_ignores_uncommitted_bench_files(tmp_path):
     assert out.stdout.strip() == "9", out  # listdir sees r08
 
 
+def test_infer_round_reads_committed_tree_not_index(tmp_path, monkeypatch):
+    """Round inference reads the COMMITTED tree (``git ls-tree HEAD``): a
+    staged but uncommitted BENCH file is not a round yet, and a committed
+    tree without BENCH files is round 1 rather than a cue to list the
+    directory.  The on-disk listing is used only when git itself fails."""
+    import subprocess
+
+    import bench
+
+    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+    repo = tmp_path / "repo"
+    repo.mkdir()
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.email=t@t", "-c", "user.name=t", *args],
+            cwd=repo,
+            check=True,
+            capture_output=True,
+        )
+
+    git("init", "-q")
+    (repo / "README").write_text("x")
+    git("add", "README")
+    git("commit", "-qm", "no bench files yet")
+    (repo / "BENCH_r5.json").write_text("{}")  # on disk, never added
+    assert bench._infer_round(str(repo)) == 1
+
+    (repo / "BENCH_r7.json").write_text("{}")
+    git("add", "BENCH_r7.json")
+    git("commit", "-qm", "round 7")
+    (repo / "BENCH_r9.json").write_text("{}")
+    git("add", "BENCH_r9.json")  # staged, not committed
+    assert bench._infer_round(str(repo)) == 8
+
+    # git fails (not a repository any more): fall back to the listing
+    import shutil
+
+    shutil.rmtree(repo / ".git")
+    assert bench._infer_round(str(repo)) == 10
+
+
 def test_line_core_rides_both_parities():
     """Consecutive rounds must always share per-query timings on the driver
     line: every LINE_CORE row is reported in BOTH parity subsets."""

@@ -290,3 +290,183 @@ def test_event_reads_leave_session_conf_unchanged(spark):
     assert load_events_ntz(spark, sf_dir).limit(1).count() == 1
     assert read_event_stream(spark, sf_dir).isStreaming
     assert spark.conf.getAll == before
+
+
+# -- per-session parquet schema memo (sources/readers._read_parquet) --------
+
+
+def _jobs_launched(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (its result, the ids of
+    the Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _copy_table(tmp_path, name="region"):
+    import shutil
+
+    from conftest import SF_DIR
+
+    shutil.copyfile(f"{SF_DIR}/{name}.parquet", tmp_path / f"{name}.parquet")
+    return str(tmp_path)
+
+
+def test_schema_memo_hit_launches_no_job(spark, tmp_path):
+    """The first read of a file infers its schema (one job); every later
+    read in the session declares the memoized schema and launches none."""
+    from scalable_data_integration_with_llms_spark.sources.readers import load_table
+
+    d = _copy_table(tmp_path)
+    miss, miss_jobs = _jobs_launched(spark, "memo-miss", lambda: load_table(spark, d, "region"))
+    hit, hit_jobs = _jobs_launched(spark, "memo-hit", lambda: load_table(spark, d, "region"))
+    assert len(miss_jobs) >= 1
+    assert hit_jobs == []
+    assert hit.schema == miss.schema
+    assert sorted(hit.collect()) == sorted(miss.collect())
+
+
+def test_schema_memo_invalidated_by_rewrite(spark, tmp_path):
+    """Overwriting the file (new modification time and length) re-infers:
+    the next read shows the added column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from scalable_data_integration_with_llms_spark.sources.readers import load_table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_schema_memo_keyed_on_inference_confs(spark, tmp_path):
+    """A conf that changes what inference returns is part of the key:
+    toggling binaryAsString re-infers instead of serving the old schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from scalable_data_integration_with_llms_spark.sources.readers import load_table
+
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), tmp_path / "bin.parquet")
+    d = str(tmp_path)
+    assert load_table(spark, d, "bin").schema["b"].dataType.simpleString() == "binary"
+    key = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(key, "true")
+    try:
+        df, jobs = _jobs_launched(spark, "memo-conf", lambda: load_table(spark, d, "bin"))
+    finally:
+        spark.conf.unset(key)
+    assert len(jobs) >= 1
+    assert df.schema["b"].dataType.simpleString() == "string"
+    assert load_table(spark, d, "bin").schema["b"].dataType.simpleString() == "binary"
+
+
+def test_schema_memo_missing_path_keeps_spark_error(spark, tmp_path):
+    """A missing path bypasses the memo, so Spark's own PATH_NOT_FOUND is
+    raised — also after the directory's other tables are memoized."""
+    from pyspark.errors import AnalysisException
+
+    from scalable_data_integration_with_llms_spark.sources.readers import load_table
+
+    d = _copy_table(tmp_path)
+    for _ in range(2):
+        with pytest.raises(AnalysisException) as exc:
+            load_table(spark, d, "nope")
+        assert exc.value.getCondition() == "PATH_NOT_FOUND"
+        load_table(spark, d, "region")
+        load_table(spark, d, "region")
+
+
+def test_schema_memo_concurrent_reads(spark, tmp_path):
+    """Eight driver threads reading the same cold path, with a shortened
+    switch interval, all get the same schema and raise nothing; the path is
+    memoized afterwards."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from scalable_data_integration_with_llms_spark.sources.readers import load_table
+
+    d = _copy_table(tmp_path, "nation")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(lambda: load_table(spark, d, "nation").schema) for _ in range(8)]
+            schemas = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(s == schemas[0] for s in schemas)
+    _, jobs = _jobs_launched(spark, "memo-threads", lambda: load_table(spark, d, "nation"))
+    assert jobs == []
+
+
+def test_schema_memo_plans_unchanged(spark, tmp_path):
+    """A read with the memoized schema plans exactly like the inferring
+    read: same optimized plan, same pushed filters and read schema."""
+    import re
+
+    from scalable_data_integration_with_llms_spark.sources.readers import load_table
+
+    d = _copy_table(tmp_path)
+
+    def plans():
+        df = load_table(spark, d, "region").where("r_regionkey > 1").select("r_name")
+        qe = df._jdf.queryExecution()
+        return [re.sub(r"#\d+", "#", p.toString()) for p in (qe.optimizedPlan(), qe.executedPlan())]
+
+    miss, hit = plans(), plans()
+    assert hit == miss
+    assert "PushedFilters: [IsNotNull(r_regionkey), GreaterThan(r_regionkey,1)]" in hit[1]
+
+
+def test_event_stream_follows_rewritten_ts_layout(spark, tmp_path):
+    """The stream's ts layout comes from the file as it is now: rewriting
+    events.parquet from TIMESTAMP(MICROS) to TIMESTAMP(NANOS) in the same
+    session switches the stream to the nanos branch, and both drains read
+    the same instants."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from scalable_data_integration_with_llms_spark.streaming.events import (
+        read_event_stream,
+        run_to_memory,
+    )
+
+    ts = [dt.datetime(2024, 1, 1, 0, 0, 0, 123456), dt.datetime(2024, 1, 2, 12, 30)]
+
+    def write(unit):
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([1, 2], pa.int64()),
+                    "ts": pa.array(ts, pa.timestamp(unit)),
+                    "user_id": pa.array([7, 8], pa.int64()),
+                    "event_type": ["view", "buy"],
+                    "value": [1.5, 2.5],
+                    "props": ["{}", "{}"],
+                }
+            ),
+            tmp_path / "events.parquet",
+            coerce_timestamps=None,
+        )
+
+    def drain(name):
+        stream = read_event_stream(spark, str(tmp_path)).select("event_id", "ts")
+        rows = run_to_memory(spark, stream, name, mode="append").collect()
+        return sorted((r.event_id, r.ts) for r in rows)
+
+    write("us")
+    micros = drain("sdi_ts_layout_micros")
+    write("ns")
+    assert drain("sdi_ts_layout_nanos") == micros
+    assert [e for e, _ in micros] == [1, 2]
