@@ -19,7 +19,6 @@ import os
 import re
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -295,59 +294,39 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+    from harness import end_sweep, session, timed, warm_up
     from scalable_data_integration_with_llms_spark.queries import QUERIES
-    from scalable_data_integration_with_llms_spark.session import get_spark
 
-    spark = get_spark("sdi-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # JVM/codegen + Python-worker-daemon warm-up on the smallest SF (not
-    # timed): q1 exercises scan+agg codegen, q3/q5 the broadcast/shuffle
-    # join + window shapes (JIT on the join paths dominates early timings
-    # otherwise), q_dedup_clusters the iterative join + localCheckpoint
-    # shapes of connected components, and the mock-scores query spins up
-    # the Arrow/pandas worker pool — so per-query timings measure the
-    # operators, not one-time process startup.
-    for warm in (
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_region_revenue",
-        "q_dedup_clusters",
-    ):
-        QUERIES[warm](spark, "/root/testdata/sf0.001").collect()
-    spark.createDataFrame([(1,)], "x int").mapInPandas(
-        lambda it: (pdf for pdf in it), "x int"
-    ).collect()
+    spark = session("sdi-bench")
+    warm_up(spark)
 
     battery = HEADLINE
     bench_set = os.environ.get("SPARK_GRAFT_BENCH_SET", "")
     if bench_set == "sf1":
         battery = SF1_BATTERY
 
-    # Drift anchor (VERDICT r10 task #7): a fixed, data- and code-churn-
-    # independent JVM spin — 450M modular mults on ONE core through
-    # whole-stage codegen, no shuffle, no I/O, no Python — timed like a
-    # query (median of 3 after one warm run).  The 450_000_000 constant is
-    # LOAD-BEARING: every committed battery's calibration assumes this
-    # exact work, so changing it invalidates every cross-round drift
-    # ratio — never touch it without re-baselining BENCH_FULL.json.
-    # Its round-over-round ratio
-    # measures the HOST, so bench_compare can report drift-normalized
-    # ratios instead of re-running a quiet-machine battery by hand every
-    # time the shared VM slows uniformly (r9 watch-list postmortem).
-    def _calibrate() -> dict:
-        def spin() -> float:
-            t0 = time.perf_counter()
-            spark.range(0, 450_000_000, 1, 1).selectExpr(
-                "sum(id * 2654435761 % 1000003) AS s"
-            ).collect()
-            return time.perf_counter() - t0
+    # Drift anchors, timed like a query: one warm run (JIT on this exact
+    # plan), then the median of 3.  Their round-over-round ratio measures
+    # the HOST, so bench_compare can report drift-normalized ratios instead
+    # of re-running a quiet-machine battery by hand every time the shared
+    # VM slows uniformly (r9 watch-list postmortem).
+    def _calibrate(spin, work: str) -> dict:
+        runs = sorted(round(t, 4) for t in timed(spin, 4)[1:])
+        return {"sec": runs[1], "runs": runs, "work": work}
 
-        spin()  # warm (JIT on this exact plan)
-        runs = sorted(round(spin(), 4) for _ in range(3))
-        return {"sec": runs[1], "runs": runs, "work": "range(450e6,slices=1) sum(id*2654435761%1000003)"}
-
-    calibration = _calibrate()
+    # Single-core anchor (VERDICT r10 task #7): a fixed, data- and code-
+    # churn-independent JVM spin — 450M modular mults on ONE core through
+    # whole-stage codegen, no shuffle, no I/O, no Python.  The 450_000_000
+    # constant is LOAD-BEARING: every committed battery's calibration
+    # assumes this exact work, so changing it invalidates every cross-round
+    # drift ratio — never touch it without re-baselining BENCH_FULL.json.
+    calibration = _calibrate(
+        lambda: spark.range(0, 450_000_000, 1, 1).selectExpr(
+            "sum(id * 2654435761 % 1000003) AS s"
+        ).collect(),
+        "range(450e6,slices=1) sum(id*2654435761%1000003)",
+    )
 
     # Multi-core drift anchor (round 13): the single-slice anchor tracks
     # ONE core's speed, but the battery's queries saturate all of them —
@@ -359,23 +338,12 @@ def main() -> None:
     # load-bearing as the single-core one; bench_compare prefers this
     # anchor when both batteries carry it and falls back to the
     # single-core row otherwise.
-    def _calibrate_mt() -> dict:
-        def spin() -> float:
-            t0 = time.perf_counter()
-            spark.range(0, 450_000_000 * 32, 1, 32).selectExpr(
-                "sum(id % 450000000 * 2654435761 % 1000003) AS s"
-            ).collect()
-            return time.perf_counter() - t0
-
-        spin()  # warm (JIT on this exact plan)
-        runs = sorted(round(spin(), 4) for _ in range(3))
-        return {
-            "sec": runs[1],
-            "runs": runs,
-            "work": "range(32x450e6,slices=32) sum(id%450e6*2654435761%1000003)",
-        }
-
-    calibration_mt = _calibrate_mt()
+    calibration_mt = _calibrate(
+        lambda: spark.range(0, 450_000_000 * 32, 1, 32).selectExpr(
+            "sum(id % 450000000 * 2654435761 % 1000003) AS s"
+        ).collect(),
+        "range(32x450e6,slices=32) sum(id%450e6*2654435761%1000003)",
+    )
 
     # Two timed runs per query; BOTH columns are reported so round-over-
     # round comparisons stay apples-to-apples:
@@ -386,36 +354,18 @@ def main() -> None:
     # shared across the sweep — the matching block reuses the mock-scorer
     # output the way a real pipeline reuses a materialized stage, so a
     # "cold" number is first-invocation wall time within the sweep, not
-    # cleared-world time.  The cache is dropped once at sweep end.
-    from scalable_data_integration_with_llms_spark.caching import (
-        clear_all_memos,
-        release_scoped,
-    )
-
+    # cleared-world time.  Query-scoped persists are released after both
+    # runs of a query (harness.timed); the session memos and the cache are
+    # dropped once at sweep end.
     def sweep() -> tuple[dict[str, float], dict[str, float]]:
         timings: dict[str, float] = {}
         timings_cold: dict[str, float] = {}
         for name in battery:
             fn = QUERIES[name]
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).collect()
-                runs.append(time.perf_counter() - t0)
+            runs = timed(lambda: fn(spark, sf_dir).collect(), 2)
             timings_cold[name] = round(runs[0], 4)
             timings[name] = round(min(runs), 4)
-            # release query-scoped persists AFTER both runs: run 2 still
-            # reuses run 1's cache (plan-equality hit), but nothing leaks
-            # across queries.  Session memos (shared matching frames) keep
-            # their deliberate sweep lifetime, dropped with clearCache.
-            release_scoped()
-        spark.catalog.clearCache()
-        # clearCache unpersists the SessionMemo frames but the memos would
-        # still hand back the (now uncached) DataFrames — batteries 2..N
-        # would re-run the mapInPandas scorer per plan branch and time the
-        # cache artifact, not the host.  Drop the memos so every battery
-        # rebuilds and re-persists identically (round-7 review finding).
-        clear_all_memos()
+        end_sweep(spark)
         return timings, timings_cold
 
     # Battery protocol (mechanized in round 7 — VERDICT r6 item 2): run the

@@ -33,13 +33,9 @@ def match_batch(catalog_batch: DataFrame, top_k: int = 3) -> DataFrame:
     ``coalesce(1)`` here — fine for the few-hundred-row static case set —
     would serialize the whole batch through one task at scale)."""
     cands = generate_candidates(catalog_batch).repartition("case_id")
-    prefs = rank_preferences(mock_score_candidates(cands)).persist()
-    try:
-        return stable_match(prefs, top_k=top_k)
-    finally:
-        # materialized by stable_match's action inside foreachBatch writers;
-        # unpersist is deferred to batch completion by the caller
-        pass
+    # no persist: stable_match reads the preferences once (one
+    # groupBy-applyInPandas), and nothing would unpersist them per batch
+    return stable_match(rank_preferences(mock_score_candidates(cands)), top_k=top_k)
 
 
 def run_incremental_matching(

@@ -32,3 +32,15 @@ def test_incremental_matching_matches_batch(spark, tmp_path):
     }
     assert stream_rows == batch_rows
     assert streamed.select("batch_id").distinct().count() >= 1
+
+
+def test_match_batch_leaves_no_cached_frame(spark):
+    from scalable_data_integration_with_llms_spark.caching import clear_all_memos, release_scoped
+    from scalable_data_integration_with_llms_spark.catalog.cases import case_catalog_df
+    from scalable_data_integration_with_llms_spark.streaming.incremental import match_batch
+
+    spark.catalog.clearCache()
+    clear_all_memos()
+    release_scoped()
+    assert match_batch(case_catalog_df(spark), top_k=3).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -10,6 +10,10 @@ Prints ONE JSON line ``{"query": ..., "runs": [...], "best": ..., "median":
 ...}`` per query argument.  bench_compare.py uses this (one subprocess per
 query) to auto-recheck flagged rows before printing a regression — the
 process boundary, not spark.stop(), is the isolation mechanism.
+
+Warm-up, timing and cache release are tools/harness.py's, the same calls
+bench.py makes, so a fresh-process number is measured the way the battery
+measures it: runs 2..N may reuse run 1's query-scoped frames.
 """
 
 from __future__ import annotations
@@ -18,7 +22,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,29 +33,14 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
 
-    from scalable_data_integration_with_llms_spark.caching import clear_all_memos, release_scoped
+    from harness import end_sweep, session, timed, warm_up
     from scalable_data_integration_with_llms_spark.queries import QUERIES
-    from scalable_data_integration_with_llms_spark.session import get_spark
 
-    spark = get_spark("sdi-bench-one")
-    spark.sparkContext.setLogLevel("ERROR")
-    # same warm-up battery as bench.py so a fresh-process number is
-    # comparable to a battery number: JIT the scan/agg/join shapes and spin
-    # up the Arrow/pandas worker pool before the timed runs
-    for warm in ("q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue", "q_dedup_clusters"):
-        QUERIES[warm](spark, "/root/testdata/sf0.001").collect()
-    spark.createDataFrame([(1,)], "x int").mapInPandas(
-        lambda it: (pdf for pdf in it), "x int"
-    ).collect()
-
+    spark = session("sdi-bench-one")
+    warm_up(spark)
     for name in args.queries:
         fn = QUERIES[name]
-        runs = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).collect()
-            runs.append(round(time.perf_counter() - t0, 4))
-            release_scoped()
+        runs = [round(t, 4) for t in timed(lambda: fn(spark, args.sf_dir).collect(), args.runs)]
         srt = sorted(runs)
         print(json.dumps({
             "query": name,
@@ -61,8 +49,7 @@ def main() -> int:
             "median": srt[len(srt) // 2],
             "sf_dir": args.sf_dir,
         }), flush=True)
-        spark.catalog.clearCache()
-        clear_all_memos()
+        end_sweep(spark)
     spark.stop()
     return 0
 

@@ -13,7 +13,6 @@ import argparse
 import json
 import os
 import sys
-import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -34,19 +33,14 @@ def main() -> int:
         os.environ.get("SDI_EXTRA_CONF", "")
         + ";spark.ui.enabled=true;spark.ui.port=4097"
     )
-    from scalable_data_integration_with_llms_spark.caching import release_scoped
+    from harness import session, timed
     from scalable_data_integration_with_llms_spark.queries import QUERIES
-    from scalable_data_integration_with_llms_spark.session import get_spark
 
-    spark = get_spark("sdi-profile")
-    spark.sparkContext.setLogLevel("ERROR")
-
+    # no warm_up: the REST job/stage listing below would count its jobs
+    spark = session("sdi-profile")
     fn = QUERIES[args.query]
-    for i in range(args.runs):
-        t0 = time.perf_counter()
-        fn(spark, args.sf_dir).collect()
-        print(f"run {i}: {time.perf_counter() - t0:.3f}s", flush=True)
-        release_scoped()
+    for i, sec in enumerate(timed(lambda: fn(spark, args.sf_dir).collect(), args.runs)):
+        print(f"run {i}: {sec:.3f}s", flush=True)
 
     app_id = spark.sparkContext.applicationId
     base = f"http://localhost:4097/api/v1/applications/{app_id}"

@@ -30,7 +30,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -275,10 +274,9 @@ def force(df: DataFrame) -> None:
 
 
 def main() -> None:
-    from scalable_data_integration_with_llms_spark.session import get_spark
+    from harness import session, timed
 
-    spark = get_spark("sdi-prompt-scale")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("sdi-prompt-scale")
     c1 = catalog(spark, 1).persist()
     c10 = catalog(spark, 10).persist()
     c100 = catalog(spark, 100).persist()
@@ -290,12 +288,7 @@ def main() -> None:
     for name, fn in STAGES.items():
         row = {}
         for label, cat in (("x1", c1), ("x10", c10), ("x100", c100)):
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                force(fn(spark, cat))
-                runs.append(time.perf_counter() - t0)
-            row[label] = round(min(runs), 3)
+            row[label] = round(min(timed(lambda: force(fn(spark, cat)), 2)), 3)
         row["ratio"] = round(row["x10"] / row["x1"], 2)
         row["ratio100"] = round(row["x100"] / row["x1"], 2)
         # 100x data with linear scaling + scheduling slack -> <=120

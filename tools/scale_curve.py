@@ -31,7 +31,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -143,32 +142,24 @@ def main() -> None:
     print("building sf1 derivative ...")
     build_sf1()
 
-    from scalable_data_integration_with_llms_spark.caching import release_scoped
+    from harness import end_sweep, session, timed, warm_up
     from scalable_data_integration_with_llms_spark.queries import QUERIES
-    from scalable_data_integration_with_llms_spark.session import get_spark
 
-    spark = get_spark("sdi-scale-curve")
-    spark.sparkContext.setLogLevel("ERROR")
-    # warm codegen/worker pools off the clock
-    QUERIES["q_dedup_clusters"](spark, "/root/testdata/sf0.001").collect()
+    spark = session("sdi-scale-curve")
+    warm_up(spark)
 
     results = {}
     for name in HEAVY:
         row = {}
         for label, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).collect()
-                runs.append(time.perf_counter() - t0)
-                release_scoped()
+            runs = timed(lambda: QUERIES[name](spark, sf_dir).collect(), 2)
             row[label] = round(min(runs), 3)
         row["ratio"] = round(row["sf1"] / row["sf0.1"], 2)
         row["verdict"] = "linear-ok" if row["ratio"] <= 12 else "INVESTIGATE"
         results[name] = row
         print(f"{name:28s} sf0.1={row['sf0.1']:7.2f}s sf1={row['sf1']:8.2f}s "
               f"ratio={row['ratio']:6.2f}  {row['verdict']}")
-    spark.catalog.clearCache()
+    end_sweep(spark)
 
     out = os.path.join(
         ROOT, sys.argv[1] if len(sys.argv) > 1 else "SCALE_CURVE_r07.json"

@@ -40,7 +40,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -109,24 +108,22 @@ def build_sf10() -> None:
 
 
 def probe_one(name: str) -> dict:
-    from scalable_data_integration_with_llms_spark.caching import release_scoped
+    from harness import WARM_SF_DIR, session, timed, warm_up
     from scalable_data_integration_with_llms_spark.queries import QUERIES
-    from scalable_data_integration_with_llms_spark.session import get_spark
 
-    spark = get_spark(f"sdi-scale-probe-{name}")
-    spark.sparkContext.setLogLevel("ERROR")
-    QUERIES[name](spark, "/root/testdata/sf0.001").collect()  # warm
+    spark = session(f"sdi-scale-probe-{name}")
+    warm_up(spark)
+    QUERIES[name](spark, WARM_SF_DIR).collect()  # warm the probed plan too
     row = {}
     for label, sf_dir in (("sf1", SRC), ("sf10", DST)):
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            n = QUERIES[name](spark, sf_dir).count()
-            runs.append(round(time.perf_counter() - t0, 3))
-            release_scoped()
+        counts = []
+        runs = [
+            round(t, 3)
+            for t in timed(lambda: counts.append(QUERIES[name](spark, sf_dir).count()), 2)
+        ]
         row[label] = round(min(runs), 3)
         row[f"runs_{label}"] = runs
-        row[f"rows_{label}"] = n
+        row[f"rows_{label}"] = counts[-1]
     row["ratio"] = round(row["sf10"] / row["sf1"], 2)
     row["verdict"] = "linear-ok" if row["ratio"] <= 12 else "INVESTIGATE"
     return row

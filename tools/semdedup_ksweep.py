@@ -15,12 +15,12 @@ k_eff ∝ N); this sweep produces the committed evidence:
     python tools/semdedup_ksweep.py --out KSWEEP_SEMDEDUP_r13.json
 
 Timing isolation (ADVICE r12): every (query, scale) wall-clock runs in a
-FRESH SUBPROCESS (`--only query:sf_dir`), the same methodology
-tools/scale_probe_sf10.py established with measurements — a shared
-session's JVM heap carries the previous query's garbage and
-spark.stop() does not reset it, inflating later timings 3–20×.  The
-pair-count combinatorics stay in the parent process: exact integer
-counts are unaffected by heap state.
+FRESH SUBPROCESS, `tools/bench_one.py QUERY --sf-dir DIR --runs N`, whose
+`median` is recorded — a shared session's JVM heap carries the previous
+query's garbage and spark.stop() does not reset it, inflating later
+timings 3–20× (tools/scale_probe_sf10.py measured this).  The pair-count
+combinatorics stay in the parent process: exact integer counts are
+unaffected by heap state.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -85,37 +84,11 @@ def bucket_stats(spark, sf_dir: str, target: int) -> dict:
     }
 
 
-def time_one(qname: str, sf_dir: str, n_runs: int) -> dict:
-    """Timed runs of one query at one scale — meant to be the ONLY Spark
-    work this process does, so the JVM heap is clean."""
-    from scalable_data_integration_with_llms_spark.caching import release_scoped
-    from scalable_data_integration_with_llms_spark.queries import QUERIES
-    from scalable_data_integration_with_llms_spark.session import get_spark
-
-    spark = get_spark(f"semdedup-ksweep-{qname}")
-    spark.sparkContext.setLogLevel("ERROR")
-    QUERIES[qname](spark, sf_dir).collect()  # warm
-    release_scoped()
-    runs = []
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        QUERIES[qname](spark, sf_dir).collect()
-        runs.append(round(time.perf_counter() - t0, 3))
-        release_scoped()
-    return {"runs": runs, "median": sorted(runs)[len(runs) // 2]}
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default="KSWEEP_SEMDEDUP_r13.json")
     ap.add_argument("--runs", type=int, default=3, help="timed runs (median)")
-    ap.add_argument("--only", help="time ONE query in-process: 'qname:sf_dir'")
     args = ap.parse_args()
-
-    if args.only:
-        qname, sf_dir = args.only.split(":", 1)
-        print(json.dumps(time_one(qname, sf_dir, args.runs)))
-        return 0
 
     import subprocess
 
@@ -142,8 +115,8 @@ def main() -> int:
         for qname in ("q_semdedup_scaled", "q_semdedup"):
             try:
                 out = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__),
-                     "--only", f"{qname}:{sf_dir}", "--runs", str(args.runs)],
+                    [sys.executable, os.path.join(repo, "tools", "bench_one.py"),
+                     qname, "--sf-dir", sf_dir, "--runs", str(args.runs)],
                     capture_output=True, text=True, cwd=repo, check=True,
                 )
             except subprocess.CalledProcessError as e:
