@@ -18,7 +18,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.overlap import OverlapCounts, table_overlap
-from ..plans.sql_rewrite import Statement, prepare_response, rewrite_map_pk
+from ..plans.sql_ast import qualify_sql
+from ..plans.sql_rewrite import (
+    Statement,
+    insert_query,
+    prepare_response,
+    referenced_tables,
+    rewrite_map_pk,
+)
 from ..plans.timeout import DEFAULT_TIMEOUT_S, OK, run_with_timeout
 
 
@@ -43,18 +50,6 @@ class MappingScenario:
     # idempotent — unless two concurrent scenarios bind the SAME source
     # table name to DIFFERENT data and both call map_pk on it (don't).
     view_ns: str = ""
-
-
-def join_referenced_tables(join_sql: str, tables: dict[str, str] | list[str]) -> list[str]:
-    """Target tables the join-overlap SQL actually references, in dict
-    order — decided by ``sql_rewrite.referenced_tables``, the same
-    literal-aware word-boundary matcher ``_sub_namespace`` substitutes
-    with, so the persist selection and the namespace rewrite can never
-    diverge (ADVICE r8; previously an independent ``\\b``-regex that also
-    scanned string literals)."""
-    from ..plans.sql_rewrite import referenced_tables
-
-    return referenced_tables(join_sql, list(tables))
 
 
 @dataclass
@@ -124,7 +119,7 @@ class MappingEngine:
                 self._register_map_pk_dim(tbl, attr)
             if s.kind == "INSERT" and s.target_table:
                 bare = s.target_table.split(".")[-1].removeprefix(f"{vp}{ns}_")
-                select_sql = _strip_insert_prefix(s.sql)
+                select_sql = insert_query(s.sql)
                 res = run_with_timeout(
                     self.spark,
                     lambda sel=select_sql, b=bare: self._apply_insert(ns, b, sel),
@@ -184,7 +179,7 @@ class MappingEngine:
         # lazy engine's equivalent for the re-read case only)
         persisted = []
         if self.sc.join_overlap_sql:
-            for t in join_referenced_tables(self.sc.join_overlap_sql, self.sc.target_tables):
+            for t in referenced_tables(self.sc.join_overlap_sql, self.sc.target_tables):
                 for ns in ("gold", "pred"):
                     df = self._acc[(ns, t)].persist()
                     self._acc[(ns, t)] = df
@@ -213,17 +208,14 @@ class MappingEngine:
                 continue
             counts.append(c)
         if self.sc.join_overlap_sql:
-            gold_join = self.spark.sql(
-                _sub_namespace(
-                    self.sc.join_overlap_sql, self.sc.target_tables,
-                    f"{self.sc.view_ns}gold",
+            gold_join, pred_join = (
+                self.spark.sql(
+                    qualify_sql(
+                        self.sc.join_overlap_sql,
+                        {t: f"{self.sc.view_ns}{ns}_{t}" for t in self.sc.target_tables},
+                    )
                 )
-            )
-            pred_join = self.spark.sql(
-                _sub_namespace(
-                    self.sc.join_overlap_sql, self.sc.target_tables,
-                    f"{self.sc.view_ns}pred",
-                )
+                for ns in ("gold", "pred")
             )
             # the join overlap honors the same timeout contract as the
             # per-table overlaps (keyed "__join__" in a dict) — the
@@ -248,19 +240,3 @@ class MappingEngine:
         for df in persisted:
             df.unpersist()
         return MappingResult(counts=counts, statement_log=log)
-
-
-def _strip_insert_prefix(sql: str) -> str:
-    """``INSERT INTO t [(cols)] SELECT ...`` -> the SELECT part."""
-    import re
-
-    m = re.search(r"INSERT\s+INTO\s+[\w.]+\s*(?:\([^)]*\))?\s*(SELECT|WITH|VALUES)", sql, re.IGNORECASE)
-    if not m:
-        raise ValueError(f"unsupported INSERT shape: {sql[:80]}")
-    return sql[m.start(1):]
-
-
-def _sub_namespace(sql: str, target_tables: dict[str, str], ns: str) -> str:
-    from ..plans.sql_rewrite import _replace_table_refs
-
-    return _replace_table_refs(sql, {t: f"{ns}_{t}" for t in target_tables})

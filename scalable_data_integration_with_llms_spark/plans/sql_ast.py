@@ -1,13 +1,16 @@
-"""Scope-aware SQL qualification backend (U7) — no third-party parser.
+"""The one SQL lexer of the Schema-Mapping pre-pass (U7) — no third-party
+parser.
 
-The reference qualifies LLM-emitted SQL on a sqlglot parse tree
-(``Schema Mapping/AnalysisUtils/Evaluator.py:89-105``: set the ``db`` arg on
-every unqualified Table node) and re-renders per dialect (``:257,271``).
-This container has no sqlglot, so this module implements the same decision
-procedure over its own parse: a SQL tokenizer plus a single-pass structural
-analysis that classifies every identifier's ROLE — table reference, alias
-definition, CTE name, column qualifier, function name, plain column — and
-rewrites only the roles the reference's mechanism rewrites:
+The reference parses LLM-emitted SQL once with sqlglot and reads every later
+step off that parse (``Schema Mapping/AnalysisUtils/Evaluator.py:59-119``:
+qualification sets the ``db`` arg on every unqualified Table node, then the
+tree re-renders per dialect, ``:257,271``).  Here ``tokenize`` is that one
+parse: statement splitting, classification and the ``map_pk`` rewrite
+(``sql_rewrite``) walk its token list, and ``analyze`` adds a single-pass
+structural analysis that classifies every identifier's ROLE — table
+reference, alias definition, CTE name, column qualifier, function name,
+plain column — so qualification rewrites only the roles the reference's
+mechanism rewrites:
 
 * unqualified table references whose name is in the mapping;
 * column qualifiers (``t.col``) that follow a renamed table, because this
@@ -34,7 +37,8 @@ from dataclasses import dataclass, field
 
 _TOKEN_RE = re.compile(
     r"""
-    (?P<ws>(?:\s|--[^\n]*|/\*.*?\*/)*)
+    (?P<ws>(?:\s|--[^\n]*|/\*.*?\*/)*+)   # possessive: trailing space or
+                                        # comments never split into a token
     (?P<tok>
         '(?:[^']|'')*'            # string literal
       | "(?:[^"]|"")*"            # quoted identifier
@@ -88,6 +92,15 @@ class Analysis:
     table_refs: list[int] = field(default_factory=list)
     qualifiers: list[int] = field(default_factory=list)
     local_names: set[str] = field(default_factory=set)
+
+    @property
+    def rewritable(self) -> list[int]:
+        """Token positions qualification may rename: table references and
+        column qualifiers, minus the statement-local names."""
+        return [
+            i for i in self.table_refs + self.qualifiers
+            if self.tokens[i].lower not in self.local_names
+        ]
 
 
 def tokenize(sql: str) -> list[Tok]:
@@ -295,14 +308,8 @@ def qualify_sql(sql: str, mapping: dict[str, str]) -> str:
     """Rewrite unqualified table references (and the column qualifiers that
     follow them) per ``mapping``; statement-local names shadow the mapping."""
     a = analyze(sql)
-    out = []
-    rewrite = {
-        k.lower(): v for k, v in mapping.items() if k.lower() not in a.local_names
-    }
-    positions = set(a.table_refs) | set(a.qualifiers)
-    for i, t in enumerate(a.tokens):
-        text = t.text
-        if i in positions and t.lower in rewrite:
-            text = rewrite[t.lower]
-        out.append(t.ws + text)
-    return "".join(out)
+    rewrite = {k.lower(): v for k, v in mapping.items()}
+    texts = [t.text for t in a.tokens]
+    for i in a.rewritable:
+        texts[i] = rewrite.get(a.tokens[i].lower, texts[i])
+    return "".join(t.ws + text for t, text in zip(a.tokens, texts))

@@ -18,22 +18,16 @@ against temp views named ``{namespace}_{table}``:
   ns_t AS (prior UNION ALL) SELECT ...`` handled by the executor
   (mapping_engine.py).
 
-Three qualification backends, preferred in this order:
-
-* **sqlglot AST path** (``_replace_table_refs_ast``): when the public
-  ``sqlglot`` package is importable, table nodes and table-qualified column
-  references are renamed on the parse tree — the reference's own mechanism.
-* **built-in scope-aware path** (``plans/sql_ast.qualify_sql``): this
-  repo's own tokenizer + structural analysis, always available, with
-  statement-local names (aliases, CTEs) shadowing the mapping — the default
-  in this container where sqlglot is absent, so the AST-grade decision
-  procedure actually RUNS in CI rather than lying dormant behind an import
-  guard.
-* **regex path** (``_replace_table_refs``): the conservative word-boundary
-  rewriter, kept as the parity reference for the admissible statement
-  shapes (LLM-emitted INSERT/SELECT/CREATE/DROP over simple identifiers).
-  tests/test_mapping_streaming.py asserts built-in == regex on those
-  shapes, and == sqlglot whenever that package is present.
+One lexer, one qualification backend: every step below is a walk over
+``plans/sql_ast.tokenize``'s token list, so splitting, classification,
+qualification, the persist selection (``referenced_tables``) and the
+``map_pk`` rewrite agree by construction on what is a literal, a comment
+or an identifier — ``;`` or ``map_pk(`` inside a string or comment is
+inert everywhere.  Qualification is ``sql_ast.qualify_sql``: scope-aware,
+with statement-local names (aliases, CTEs) shadowing the mapping.  That is
+the one place it departs from the reference's sqlglot
+``find_all(exp.Table)``, which does not scope-resolve and would rename a
+CTE reference that collides with a source-table name.
 """
 
 from __future__ import annotations
@@ -41,12 +35,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-try:  # pragma: no cover - environment-dependent upgrade path
-    import sqlglot  # noqa: F401
-
-    HAVE_SQLGLOT = True
-except ImportError:
-    HAVE_SQLGLOT = False
+from .sql_ast import Tok, analyze, qualify_sql, tokenize, transpile_sqlite_to_spark
 
 
 @dataclass
@@ -73,52 +62,74 @@ def extract_sql_blocks(response: str) -> str:
 
 
 def split_statements(sql: str) -> list[str]:
-    """Split on ';' outside single/double-quoted strings."""
-    out, buf, quote = [], [], None
-    for ch in sql:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-            buf.append(ch)
-        elif ch == ";":
-            out.append("".join(buf))
-            buf = []
+    """Split on ``;`` tokens; a segment holding only whitespace and comments
+    is not a statement."""
+    out, buf, has_token = [], [], False
+    for t in tokenize(sql) + [Tok("op", ";", "")]:
+        if t.kind == "op" and t.text == ";":
+            if has_token:
+                out.append(("".join(buf) + t.ws).strip())
+            buf, has_token = [], False
         else:
-            buf.append(ch)
-    out.append("".join(buf))
-    return [s.strip() for s in out if s.strip()]
+            buf.append(t.ws + t.text)
+            has_token = has_token or bool(t.text)
+    return out
 
 
-_KIND_RE = re.compile(r"^\s*(INSERT|SELECT|CREATE|DROP|UPDATE|DELETE|WITH)\b", re.IGNORECASE)
-_INSERT_TABLE_RE = re.compile(r"INSERT\s+INTO\s+([A-Za-z_][\w.]*)", re.IGNORECASE)
-_CREATE_TABLE_RE = re.compile(
-    r"CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?(TABLE|VIEW|SCHEMA)\s+(?:IF\s+NOT\s+EXISTS\s+)?([A-Za-z_][\w.]*)",
-    re.IGNORECASE,
-)
-_DROP_TABLE_RE = re.compile(r"DROP\s+(?:TABLE|VIEW)\s+(?:IF\s+EXISTS\s+)?([A-Za-z_][\w.]*)", re.IGNORECASE)
+def _word(toks: list[Tok], i: int) -> str:
+    """The lowercased bare identifier or keyword at ``toks[i]``, else ''."""
+    t = toks[i] if i < len(toks) else None
+    return t.lower if t and t.kind == "ident" and t.text[0] not in '"`[' else ""
+
+
+def _name(toks: list[Tok], i: int) -> tuple[str | None, int]:
+    """The bare, possibly dotted object name at ``toks[i]`` (``ns.t``, no
+    space around the dots), lowercased, and the index after it."""
+    name = _word(toks, i)
+    if not name:
+        return None, i
+    i += 1
+    while (
+        i < len(toks) and toks[i].text == "." and not toks[i].ws
+        and _word(toks, i + 1) and not toks[i + 1].ws
+    ):
+        name += "." + toks[i + 1].lower
+        i += 2
+    return name, i
+
+
+def _skip_if_exists(toks: list[Tok], i: int) -> int:
+    """Skip an ``IF [NOT] EXISTS`` clause at ``toks[i]``."""
+    if _word(toks, i) != "if":
+        return i
+    j = i + 2 if _word(toks, i + 1) == "not" else i + 1
+    return j + 1 if _word(toks, j) == "exists" else i
+
+
+_KINDS = frozenset({"insert", "select", "create", "drop", "update", "delete", "with"})
 
 
 def classify(stmt: str) -> Statement:
-    m = _KIND_RE.match(stmt)
-    kind = m.group(1).upper() if m else "OTHER"
-    if kind == "WITH":
-        kind = "SELECT"
+    """Kind from the first token (``WITH`` reads as SELECT); the object
+    table of INSERT INTO / CREATE [OR REPLACE] [TEMP] TABLE|VIEW|SCHEMA /
+    DROP TABLE|VIEW from the identifiers that follow it."""
+    toks = tokenize(stmt)
+    head = _word(toks, 0)
+    kind = ("SELECT" if head == "with" else head.upper()) if head in _KINDS else "OTHER"
     s = Statement(sql=stmt, kind=kind)
-    if kind == "INSERT":
-        t = _INSERT_TABLE_RE.search(stmt)
-        s.target_table = t.group(1).lower() if t else None
+    if (_word(toks, 0), _word(toks, 1)) == ("insert", "into"):
+        s.target_table = _name(toks, 2)[0]
     elif kind == "CREATE":
-        t = _CREATE_TABLE_RE.search(stmt)
-        if t:
-            if t.group(1).upper() == "SCHEMA":
+        i = 3 if (_word(toks, 1), _word(toks, 2)) == ("or", "replace") else 1
+        if _word(toks, i) in ("temp", "temporary"):
+            i += 1
+        obj = _word(toks, i)
+        if obj in ("table", "view", "schema"):
+            s.target_table = _name(toks, _skip_if_exists(toks, i + 1))[0]
+            if obj == "schema" and s.target_table:
                 s.ignore_reason = "Trying to CREATE SCHEMA. Statement ignored"
-            s.target_table = t.group(2).lower()
-    elif kind == "DROP":
-        t = _DROP_TABLE_RE.search(stmt)
-        s.target_table = t.group(1).lower() if t else None
+    elif kind == "DROP" and _word(toks, 1) in ("table", "view"):
+        s.target_table = _name(toks, _skip_if_exists(toks, 2))[0]
     return s
 
 
@@ -134,76 +145,27 @@ def admit(statements: list[Statement], target_tables: set[str]) -> list[Statemen
     return statements
 
 
-# The ONE protected-segment splitter shared by ``_replace_table_refs`` and
-# ``referenced_tables`` (they must stay in lockstep — ADVICE r8): odd split
-# parts are passed through untouched and never matched against.  Protected:
-# single-quoted literals (with '' escapes), double-quoted identifiers,
-# ``--`` line comments, and ``/* */`` block comments — so a table name that
-# appears only inside a comment or quoted identifier neither triggers a
-# persist nor gets rewritten (ADVICE r9).
-_LITERAL_SPLIT = re.compile(
-    r"('(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|--[^\n]*|/\*.*?\*/)", re.DOTALL
-)
-
-
-def _table_ref_pattern(names) -> re.Pattern:
-    """The ONE matcher for bare table references: word-boundary, longest
-    name first, case-insensitive; ``(?<![\\w.])`` protects already-qualified
-    ``ns.t``, ``(?![\\w(]`` keeps function calls and longer identifiers out
-    while letting ``t.col`` qualifiers follow a rename."""
-    return re.compile(
-        r"(?<![\w.])(" + "|".join(re.escape(t) for t in sorted(names, key=len, reverse=True)) + r")(?![\w(])",
-        re.IGNORECASE,
-    )
-
-
-def _replace_table_refs(sql: str, mapping: dict[str, str]) -> str:
-    """Word-boundary replacement of bare table names outside string
-    literals.  Names already namespace-qualified (``ns.t``) are protected by
-    the lookbehind; a trailing ``.`` is allowed so table-qualified column
-    references (``t.col``) follow the table rename and don't dangle."""
-    pattern = _table_ref_pattern(mapping)
-    out = []
-    for i, part in enumerate(_LITERAL_SPLIT.split(sql)):
-        if i % 2 == 1:
-            out.append(part)
-        else:
-            out.append(pattern.sub(lambda m: mapping[m.group(1).lower()], part))
-    return "".join(out)
-
-
 def referenced_tables(sql: str, names) -> list[str]:
-    """Which of ``names`` the SQL actually references, decided by the EXACT
-    matcher ``_replace_table_refs`` substitutes with (same literal split,
-    same word-boundary pattern), so a caller choosing what to persist can
-    never disagree with what the namespace rewrite will touch (ADVICE r8 on
-    the old independent regex in ``mapping_engine.join_referenced_tables``).
-    Returns names in their input order."""
-    if not names:
-        return []
-    pattern = _table_ref_pattern(names)
-    found = set()
-    for i, part in enumerate(_LITERAL_SPLIT.split(sql)):
-        if i % 2 == 0:
-            found.update(m.group(1).lower() for m in pattern.finditer(part))
+    """Which of ``names`` the SQL references at a position ``qualify_sql``
+    would rename (``Analysis.rewritable``), so a caller choosing what to
+    persist can never disagree with what the namespace rewrite touches
+    (ADVICE r8).  Returns names in their input order."""
+    a = analyze(sql)
+    found = {a.tokens[i].lower for i in a.rewritable}
     return [t for t in names if t.lower() in found]
 
 
-def _replace_table_refs_ast(sql: str, mapping: dict[str, str]) -> str:
-    """sqlglot-backed qualification (the reference's own mechanism,
-    Evaluator.py:89-105): rename unqualified table nodes and the column
-    qualifiers that reference them on the parse tree, then re-render."""
-    import sqlglot
-    from sqlglot import exp
-
-    tree = sqlglot.parse_one(sql)
-    for node in tree.find_all(exp.Table):
-        if not node.db and node.name and node.name.lower() in mapping:
-            node.set("this", exp.to_identifier(mapping[node.name.lower()]))
-    for node in tree.find_all(exp.Column):
-        if node.table and node.table.lower() in mapping:
-            node.set("table", exp.to_identifier(mapping[node.table.lower()]))
-    return tree.sql()
+def insert_query(sql: str) -> str:
+    """``INSERT INTO t [(cols)] SELECT|WITH|VALUES ...`` -> the query part."""
+    toks = tokenize(sql)
+    name, i = None, 0
+    if (_word(toks, 0), _word(toks, 1)) == ("insert", "into"):
+        name, i = _name(toks, 2)
+    if name and i < len(toks) and toks[i].text == "(":
+        i = next((j + 1 for j in range(i, len(toks)) if toks[j].text == ")"), len(toks))
+    if not name or _word(toks, i) not in ("select", "with", "values"):
+        raise ValueError(f"unsupported INSERT shape: {sql[:80]}")
+    return toks[i].text + "".join(t.ws + t.text for t in toks[i + 1:])
 
 
 def qualify_namespaces(
@@ -223,14 +185,8 @@ def qualify_namespaces(
         mapping[t] = f"{target_ns}_{t}"
     if not mapping:
         return stmt
-    if HAVE_SQLGLOT:
-        new_sql = _replace_table_refs_ast(stmt.sql, mapping)
-    else:
-        from .sql_ast import qualify_sql
-
-        new_sql = qualify_sql(stmt.sql, mapping)
     return Statement(
-        sql=new_sql,
+        sql=qualify_sql(stmt.sql, mapping),
         kind=stmt.kind,
         ignore_reason=stmt.ignore_reason,
         target_table=stmt.target_table,
@@ -246,8 +202,6 @@ def prepare_response(
     dialect render (the reference renders per dialect at execution time,
     ``Evaluator.py:257,271``; here SQLite-isms normalize to Spark SQL —
     semantics-preserving transforms only, see sql_ast.transpile_sqlite_to_spark)."""
-    from .sql_ast import transpile_sqlite_to_spark
-
     stmts = [classify(s) for s in split_statements(extract_sql_blocks(response))]
     admit(stmts, target_tables)
     out = []
@@ -272,70 +226,56 @@ def prepare_response(
 # calling map_pk is rewritten into a scalar subquery against a precomputed
 # ``__mappk_{tbl}_{attr}`` dimension view (SURVEY §4 "dialect translation").
 
-_MAP_PK_HEAD = re.compile(r"\bmap_pk\s*\(", re.IGNORECASE)
 
-
-def _split_args(src: str, start: int) -> tuple[list[str], int] | None:
-    """Parse a parenthesized argument list starting at ``src[start] == '('``;
-    returns (args, index_after_close) or None if unbalanced."""
-    depth, quote, args, buf = 0, None, [], []
-    i = start
-    while i < len(src):
-        ch = src[i]
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-            buf.append(ch)
-        elif ch == "(":
+def _call_args(toks: list[Tok], i: int) -> tuple[list[str], int] | None:
+    """Split the argument list opened at ``toks[i] == '('`` at its depth-1
+    commas; returns (args, index after the closing paren) or None if
+    unbalanced."""
+    args, buf, depth = [], [], 0
+    for j in range(i, len(toks)):
+        t = toks[j]
+        if t.kind == "op" and t.text == "(":
             depth += 1
-            if depth > 1:
-                buf.append(ch)
-        elif ch == ")":
+            if depth == 1:
+                continue
+        elif t.kind == "op" and t.text == ")":
             depth -= 1
             if depth == 0:
-                args.append("".join(buf).strip())
-                return args, i + 1
-            buf.append(ch)
-        elif ch == "," and depth == 1:
+                return args + ["".join(buf).strip()], j + 1
+        elif t.kind == "op" and t.text == "," and depth == 1:
             args.append("".join(buf).strip())
             buf = []
-        else:
-            buf.append(ch)
-        i += 1
+            continue
+        buf.append(t.ws + t.text)
     return None
-
-
-def _ident(arg: str) -> str:
-    """Strip quotes from a name argument ('publication' or publication)."""
-    return arg.strip().strip("'\"").lower()
 
 
 def rewrite_map_pk(sql: str) -> tuple[str, set[tuple[str, str]]]:
     """Replace every ``map_pk(tbl, attr, val)`` call with a scalar subquery
     ``(SELECT pk_id FROM __mappk_tbl_attr WHERE pk_val = (val))``; returns
     the rewritten SQL plus the set of (tbl, attr) dimensions the executor
-    must register.  Nested parens/quotes in ``val`` are handled; unbalanced
-    calls are left untouched (the statement will fail loudly at execution)."""
+    must register.  A call is the identifier ``map_pk`` followed by ``(``
+    (never text inside a literal or comment); nested parens and quotes in
+    ``val`` are handled.  At the first unbalanced or non-3-argument call
+    the rest of the statement is left untouched (it fails loudly at
+    execution)."""
+    toks = tokenize(sql)
     refs: set[tuple[str, str]] = set()
-    out = sql
-    while True:
-        m = _MAP_PK_HEAD.search(out)
-        if not m:
-            break
-        parsed = _split_args(out, m.end() - 1)
-        if parsed is None:
-            break
-        args, end = parsed
-        if len(args) != 3:
-            break
-        tbl, attr = _ident(args[0]), _ident(args[1])
-        refs.add((tbl, attr))
-        sub = (
-            f"(SELECT pk_id FROM __mappk_{tbl}_{attr} "
-            f"WHERE pk_val = ({args[2]}))"
-        )
-        out = out[: m.start()] + sub + out[end:]
-    return out, refs
+    out = []
+    i = 0
+    while i < len(toks):
+        t = toks[i]
+        if _word(toks, i) == "map_pk" and i + 1 < len(toks) and toks[i + 1].text == "(":
+            call = _call_args(toks, i + 1)
+            if call is None or len(call[0]) != 3:
+                out += [u.ws + u.text for u in toks[i:]]
+                break
+            (tbl, attr, val), i = call
+            tbl, attr = tbl.strip("'\"").lower(), attr.strip("'\"").lower()
+            val, inner = rewrite_map_pk(val)
+            refs |= inner | {(tbl, attr)}
+            out.append(f"{t.ws}(SELECT pk_id FROM __mappk_{tbl}_{attr} WHERE pk_val = ({val}))")
+            continue
+        out.append(t.ws + t.text)
+        i += 1
+    return "".join(out), refs

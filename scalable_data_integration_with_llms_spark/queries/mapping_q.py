@@ -506,8 +506,6 @@ def q_mapping_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matrix of simulated LLM responses and chains execute → overlap → the
 # two-level aggregation through ``operators/metrics.pass_rate``.
 
-_PR_SEEDS = (7, 77)
-
 # (config, seed) -> (t_seg acctbal threshold, t_nat regionkey predicate).
 # Gold is th=0 / "< 3"; a lower threshold or wider predicate adds FP rows
 # (perfect recall), a higher/narrower one adds FN rows (perfect precision).

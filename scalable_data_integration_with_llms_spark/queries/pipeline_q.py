@@ -437,8 +437,6 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stages (applied in order): length floor, script/lang known, repetition cap
 # (distinct-word ratio), alnum density.
 
-_FUNNEL_STAGES = 4
-
 _FUNNEL_ORACLE = """
 WITH f AS (
   SELECT doc_id,

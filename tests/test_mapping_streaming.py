@@ -37,9 +37,9 @@ EXPLAIN SELECT 1;
 
 
 def test_sql_rewrite_qualified_columns_follow_rename():
-    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import _replace_table_refs
+    from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
 
-    out = _replace_table_refs(
+    out = qualify_sql(
         "SELECT src_t.a, o.b FROM src_t JOIN other o ON src_t.k = o.k "
         "WHERE src_t.name = 'src_t literal'",
         {"src_t": "source_src_t"},
@@ -50,7 +50,7 @@ def test_sql_rewrite_qualified_columns_follow_rename():
     assert "source_src_t.a" in out and "source_src_t.k" in out
     assert "'src_t literal'" in out and "o.b" in out
     assert (
-        _replace_table_refs("SELECT * FROM ns.src_t", {"src_t": "source_src_t"})
+        qualify_sql("SELECT * FROM ns.src_t", {"src_t": "source_src_t"})
         == "SELECT * FROM ns.src_t"
     )
 
@@ -69,11 +69,12 @@ _PARITY_CASES = [
 
 
 def test_sql_rewrite_builtin_ast_parity():
-    """The built-in scope-aware backend must agree with the regex backend on
-    every admissible statement shape — this parity gate always executes (no
-    third-party parser needed)."""
+    """The built-in scope-aware qualifier must agree with the regex reference
+    on every admissible statement shape — this parity gate always executes
+    (no third-party parser needed)."""
+    from sql_regex_reference import _replace_table_refs
+
     from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
-    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import _replace_table_refs
 
     for sql in _PARITY_CASES:
         assert qualify_sql(sql, _PARITY_MAPPING) == _replace_table_refs(
@@ -82,9 +83,9 @@ def test_sql_rewrite_builtin_ast_parity():
 
 
 def test_sql_rewrite_builtin_scope_shadowing():
-    """Where the backends legitimately differ: names DEFINED in the
-    statement (aliases, CTEs) shadow the mapping in the built-in backend —
-    the regex rewriter cannot know that."""
+    """Where the built-in qualifier legitimately differs from the regex
+    reference: names DEFINED in the statement (aliases, CTEs) shadow the
+    mapping — the regex rewriter cannot know that."""
     from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
 
     # subquery alias colliding with a mapped table name: alias wins
@@ -135,38 +136,36 @@ def test_sql_rewrite_builtin_structures():
 
 
 def test_sql_rewrite_regex_comment_protection():
-    """ADVICE r9: the regex backend's shared literal split also protects
-    ``--`` / ``/* */`` comments and double-quoted identifiers, so a table
-    name appearing only there neither rewrites nor counts as referenced —
-    and the two functions stay in lockstep on every case."""
-    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import (
-        _replace_table_refs,
-        referenced_tables,
-    )
+    """ADVICE r9: ``--`` / ``/* */`` comments and double-quoted identifiers
+    are protected, so a table name appearing only there neither rewrites
+    nor counts as referenced — and qualification and ``referenced_tables``
+    stay in lockstep on every case."""
+    from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
+    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import referenced_tables
 
     m = {"src_t": "source_src_t", "tgt_t": "pred_tgt_t"}
     names = list(m)
     # name only in a line comment: untouched, not referenced
     sql = "-- src_t setup\nSELECT 1"
-    assert _replace_table_refs(sql, m) == sql
+    assert qualify_sql(sql, m) == sql
     assert referenced_tables(sql, names) == []
     # name only in a block comment (multi-line): untouched, not referenced
     sql = "SELECT a FROM real_t /* join tgt_t\n later */"
-    assert _replace_table_refs(sql, m) == sql
+    assert qualify_sql(sql, m) == sql
     assert referenced_tables(sql, names) == []
-    # name only in a double-quoted identifier: protected (the regex cannot
-    # rewrite inside quotes without corrupting the identifier; fail-loud at
-    # execution beats silently reading the wrong table)
+    # name only in a double-quoted identifier: protected (rewriting inside
+    # quotes would corrupt the identifier; fail-loud at execution beats
+    # silently reading the wrong table)
     sql = 'SELECT "src_t" FROM real_t'
-    assert _replace_table_refs(sql, m) == sql
+    assert qualify_sql(sql, m) == sql
     assert referenced_tables(sql, names) == []
     # real reference next to a comment mention: only the real one acts
     sql = "SELECT a FROM src_t -- not tgt_t\n"
-    assert _replace_table_refs(sql, m) == "SELECT a FROM source_src_t -- not tgt_t\n"
+    assert qualify_sql(sql, m) == "SELECT a FROM source_src_t -- not tgt_t\n"
     assert referenced_tables(sql, names) == ["src_t"]
     # '--' inside a string literal is NOT a comment opener
     sql = "SELECT '--x' FROM src_t"
-    assert _replace_table_refs(sql, m) == "SELECT '--x' FROM source_src_t"
+    assert qualify_sql(sql, m) == "SELECT '--x' FROM source_src_t"
     assert referenced_tables(sql, names) == ["src_t"]
     # lockstep property: whatever referenced_tables reports is exactly what
     # the rewrite touches
@@ -175,28 +174,119 @@ def test_sql_rewrite_regex_comment_protection():
         "SELECT 'src_t', \"tgt_t\" FROM src_t",
     ]:
         refs = set(referenced_tables(sql, names))
-        rewritten = _replace_table_refs(sql, m)
+        rewritten = qualify_sql(sql, m)
         for t in names:
             assert (m[t] in rewritten) == (t in refs), (sql, t)
 
 
-def test_sql_rewrite_ast_parity():
-    """When the public sqlglot package is present, it must agree with BOTH
-    in-repo backends on the admissible statement shapes."""
-    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import (
-        HAVE_SQLGLOT,
-        _replace_table_refs,
-        _replace_table_refs_ast,
-    )
-
-    if not HAVE_SQLGLOT:
-        pytest.skip("sqlglot not installed in this environment")
+def _sqlglot_rename(sql: str, mapping: dict[str, str]) -> str:
+    """The reference's own qualification mechanism (Evaluator.py:89-105):
+    rename unqualified table nodes and the column qualifiers that reference
+    them on the sqlglot parse tree, then re-render."""
     import sqlglot
+    from sqlglot import exp
+
+    tree = sqlglot.parse_one(sql)
+    for node in tree.find_all(exp.Table):
+        if not node.db and node.name and node.name.lower() in mapping:
+            node.set("this", exp.to_identifier(mapping[node.name.lower()]))
+    for node in tree.find_all(exp.Column):
+        if node.table and node.table.lower() in mapping:
+            node.set("table", exp.to_identifier(mapping[node.table.lower()]))
+    return tree.sql()
+
+
+def test_sql_rewrite_ast_parity():
+    """When the public sqlglot package is present, the built-in qualifier
+    must agree with a sqlglot parse-tree rename on the admissible statement
+    shapes."""
+    sqlglot = pytest.importorskip("sqlglot")
+
+    from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
 
     for sql in _PARITY_CASES:
-        regex_out = sqlglot.parse_one(_replace_table_refs(sql, _PARITY_MAPPING)).sql()
-        ast_out = _replace_table_refs_ast(sql, _PARITY_MAPPING)
-        assert regex_out == ast_out, sql
+        builtin_out = sqlglot.parse_one(qualify_sql(sql, _PARITY_MAPPING)).sql()
+        assert builtin_out == _sqlglot_rename(sql, _PARITY_MAPPING), sql
+
+
+_COMMENTED_RESPONSE = """```sql
+-- copy each customer's name
+INSERT INTO tgt_t SELECT c_name FROM src_t;
+INSERT INTO tgt_t SELECT c_name FROM src_t WHERE c_name IS NULL;
+INSERT INTO tgt_t SELECT 'x';
+```"""
+
+
+def test_comment_apostrophe_does_not_swallow_script():
+    """An apostrophe inside a ``--`` comment opens no string: the three
+    INSERTs after it are three admitted statements."""
+    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import prepare_response
+
+    stmts = prepare_response(_COMMENTED_RESPONSE, {"src_t"}, {"tgt_t"})
+    assert [(s.kind, s.target_table, s.admitted) for s in stmts] == [("INSERT", "tgt_t", True)] * 3
+    assert stmts[0].sql.startswith("-- copy each customer's name\nINSERT INTO pred_tgt_t")
+
+
+def test_split_statements_on_tokens():
+    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import split_statements
+
+    # an apostrophe inside a block comment opens no string either
+    assert split_statements("INSERT INTO t SELECT 1 /* it's */; INSERT INTO t SELECT 2") == [
+        "INSERT INTO t SELECT 1 /* it's */",
+        "INSERT INTO t SELECT 2",
+    ]
+    # ';' inside a literal or comment does not split
+    assert split_statements("SELECT ';' -- a;b\n; SELECT 2") == ["SELECT ';' -- a;b", "SELECT 2"]
+    # a segment of only comments and whitespace is not a statement
+    assert split_statements("SELECT 1;\n-- done\n;  /* trailing */ ;\n") == ["SELECT 1"]
+    assert split_statements("-- nothing here") == []
+
+
+def test_trailing_comment_is_not_a_token():
+    """Trailing whitespace or a trailing comment is the ws of one empty
+    token — never re-split into a fake identifier that could, e.g., read
+    as a table alias and shadow the mapping."""
+    from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql, tokenize
+
+    assert [t.text for t in tokenize("SELECT 1 -- x")] == ["SELECT", "1", ""]
+    assert [t.text for t in tokenize("SELECT 1 /* a b */\n")] == ["SELECT", "1", ""]
+    assert qualify_sql("SELECT t.a FROM t -- it", {"t": "ns_t"}) == "SELECT ns_t.a FROM ns_t -- it"
+
+
+def test_classify_skips_leading_comment():
+    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import classify
+
+    s = classify("-- load the dimension\nINSERT INTO Ns.T SELECT 1")
+    assert (s.kind, s.target_table) == ("INSERT", "ns.t")
+    s = classify("/* cte */ WITH a AS (SELECT 1) SELECT * FROM a")
+    assert s.kind == "SELECT"
+    s = classify("-- reset\nDROP TABLE IF EXISTS tgt_t")
+    assert (s.kind, s.target_table) == ("DROP", "tgt_t")
+    s = classify("CREATE OR REPLACE TEMP VIEW IF NOT EXISTS v AS SELECT 1")
+    assert (s.kind, s.target_table) == ("CREATE", "v")
+    s = classify("CREATE SCHEMA foo")
+    assert s.target_table == "foo" and "CREATE SCHEMA" in s.ignore_reason
+    assert classify("EXPLAIN SELECT 1").kind == "OTHER"
+
+
+def test_insert_with_comment_before_select_runs(spark):
+    """A comment between ``INSERT INTO t`` and its SELECT is only
+    whitespace to the token walk that strips the INSERT head."""
+    from scalable_data_integration_with_llms_spark.plans.mapping_engine import MappingEngine, MappingScenario
+
+    scenario = MappingScenario(
+        source_tables={"t_src": spark.range(5).selectExpr("CAST(id AS STRING) AS v")},
+        target_tables={"t_out": "v string"},
+        gold_sql="INSERT INTO t_out SELECT v FROM t_src;",
+        meaningful_cols={"t_out": ["v"]},
+        view_ns="comment_head_",
+    )
+    result = MappingEngine(spark, scenario).evaluate(
+        "INSERT INTO t_out -- all rows\nSELECT v FROM t_src WHERE v <> '0'"
+    )
+    assert all(s.admitted for s in result.statement_log)
+    (c,) = result.counts
+    assert (c.tp, c.fp, c.fn) == (4, 0.0, 1)
 
 
 def test_timeout_classification(spark):
@@ -314,6 +404,21 @@ def test_rewrite_map_pk_edge_cases():
     # wrong arity: left untouched
     sql4 = "SELECT map_pk(a, b) FROM t"
     assert rewrite_map_pk(sql4)[0] == sql4
+
+
+def test_rewrite_map_pk_ignores_literals_and_comments():
+    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import rewrite_map_pk
+
+    new, refs = rewrite_map_pk(
+        "SELECT 'map_pk(a, b, c)' AS note, map_pk('customer','c_name',c_name) FROM customer"
+    )
+    assert refs == {("customer", "c_name")}
+    assert new == (
+        "SELECT 'map_pk(a, b, c)' AS note, "
+        "(SELECT pk_id FROM __mappk_customer_c_name WHERE pk_val = (c_name)) FROM customer"
+    )
+    sql = "SELECT c_name -- was map_pk(a, b, c)\nFROM customer /* map_pk(d, e, f) */"
+    assert rewrite_map_pk(sql) == (sql, set())
 
 
 def test_transpile_sqlite_to_spark():

@@ -83,30 +83,30 @@ def test_ensemble_disjoint_degenerate_n_runs(spark):
 def test_join_referenced_tables_word_boundary():
     """ADVICE r7: substring-of-identifier must not select; case differences
     and quoted references must."""
-    from scalable_data_integration_with_llms_spark.plans.mapping_engine import join_referenced_tables
+    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import referenced_tables
 
     sql = 'SELECT * FROM t_orders JOIN T_CUST USING (k) WHERE t_orders_archive.x > 0'
     tables = ["t_orders", "t_cust", "t_order", "t_orders_archive", "t_absent"]
-    assert join_referenced_tables(sql, tables) == [
+    assert referenced_tables(sql, tables) == [
         "t_orders", "t_cust", "t_orders_archive",
     ]
 
 
 def test_join_referenced_tables_matches_rewrite_semantics():
-    """ADVICE r8: the persist heuristic must use the SAME matcher as
-    _replace_table_refs — a name inside a string literal or already
+    """ADVICE r8: the persist selection must agree with the namespace
+    rewrite (``qualify_sql``) — a name inside a string literal or already
     namespace-qualified is not a reference the rewrite would touch, so it
     must not drive a persist either."""
-    from scalable_data_integration_with_llms_spark.plans.mapping_engine import join_referenced_tables
-    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import _replace_table_refs
+    from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
+    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import referenced_tables
 
     tables = ["t_a", "t_b", "t_c"]
     sql = "SELECT 't_a ignored' AS lbl, x FROM t_b JOIN other.t_c USING (k)"
-    got = join_referenced_tables(sql, tables)
+    got = referenced_tables(sql, tables)
     assert got == ["t_b"]
     # agreement property: a table is selected iff the rewrite changes the SQL
     for t in tables:
-        rewritten = _replace_table_refs(sql, {t: f"ns_{t}"})
+        rewritten = qualify_sql(sql, {t: f"ns_{t}"})
         assert (t in got) == (rewritten != sql), (t, rewritten)
 
 

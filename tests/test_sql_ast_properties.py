@@ -1,17 +1,19 @@
 """Property tests for the built-in SQL qualification backend: generated
 admissible statements (the LLM-emitted shapes the mapping engine admits)
 must rewrite identically to the regex reference, preserve literals and
-comments byte-for-byte, and be idempotent."""
+comments byte-for-byte, be idempotent, and select for persisting exactly
+the tables the rewrite renames."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from sql_regex_reference import _replace_table_refs
 
 from scalable_data_integration_with_llms_spark.plans.sql_ast import (
     qualify_sql,
     tokenize,
     transpile_sqlite_to_spark,
 )
-from scalable_data_integration_with_llms_spark.plans.sql_rewrite import _replace_table_refs
+from scalable_data_integration_with_llms_spark.plans.sql_rewrite import referenced_tables
 
 MAPPING = {"src_t": "source_src_t", "other_t": "source_other_t", "tgt_t": "pred_tgt_t"}
 
@@ -40,6 +42,23 @@ def admissible_select(draw):
     if draw(st.booleans()):
         sql += f" GROUP BY {draw(_col)}"
     return sql
+
+
+# comments and literals naming mapped tables, or holding ';', quotes and
+# map_pk( — none of them is a reference
+_decoration = st.sampled_from(
+    ["", " /* src_t */", " -- tgt_t's\n", " /* other_t; it's */", " -- map_pk(a, b, c)\n"]
+)
+
+
+@st.composite
+def decorated_select(draw):
+    """``admissible_select`` with a comment after any word and optionally a
+    string literal naming a table in the select list."""
+    words = draw(admissible_select()).split(" ")
+    if draw(st.booleans()):
+        words[0] += f" '{draw(_ident)}' AS note,"
+    return "".join(w + draw(_decoration) + " " for w in words).strip()
 
 
 @given(admissible_select())
@@ -80,3 +99,14 @@ def test_transpile_idempotent_and_literal_safe(sql):
     for tb, ta in zip(tokenize(sql), tokenize(once)):
         if tb.kind == "string":
             assert tb.text == ta.text
+
+
+@given(decorated_select())
+@settings(max_examples=200, deadline=None)
+def test_referenced_tables_lockstep_with_qualify(sql):
+    """The persist selection is exactly the set of tables whose mapped name
+    the rewrite puts into the statement."""
+    renamed = {t.text for t in tokenize(qualify_sql(sql, MAPPING))}
+    assert referenced_tables(sql, list(MAPPING)) == [
+        t for t, mapped in MAPPING.items() if mapped in renamed
+    ], sql
