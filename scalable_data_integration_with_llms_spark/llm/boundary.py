@@ -118,7 +118,9 @@ def llm_map(
     base_backoff_s: float = 1.0,
 ) -> DataFrame:
     """Generic external-inference boundary: Arrow-batched ``mapInPandas``
-    with bounded exponential-backoff retry per batch.
+    with bounded exponential-backoff retry per batch: the k-th retry of a
+    batch waits ``base_backoff_s * 2**(k - 1)`` seconds (at most 60), and
+    the batch fails after ``max_retries`` attempts.
 
     The reference retries forever (``llm_classes.py:133-143``); on a cluster
     that wedges an executor slot, so the engine bounds retries and lets Spark
@@ -136,6 +138,6 @@ def llm_map(
                     attempt += 1
                     if attempt >= max_retries:
                         raise
-                    time.sleep(min(base_backoff_s * 2**attempt, 60.0))
+                    time.sleep(min(base_backoff_s * 2 ** (attempt - 1), 60.0))
 
     return df.mapInPandas(batch_fn, schema)

@@ -6,15 +6,20 @@ AQE for runtime re-planning/skew joins, Arrow for every pandas-UDF boundary,
 and a shuffle-partition count sized for the test scale factors (the driver's
 sf0.1 has ~600k-row lineitem; 32 partitions keeps per-task state small while
 using all local cores — at 100 TB you'd let AQE coalesce from a few thousand).
+Python workers start from ``pyworker``, Spark's daemon importing pyspark from
+its unpacked install rather than ``pyspark.zip``, whenever the workers can
+import this package.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+PYWORKER = f"{__package__}.pyworker"
 
 
 def parse_extra_conf(spec: str) -> list[tuple[str, str]]:
@@ -33,6 +38,24 @@ def parse_extra_conf(spec: str) -> list[tuple[str, str]]:
             )
         out.append((k.strip(), v.strip()))
     return out
+
+
+def workers_import_package(master: str, extra: list[tuple[str, str]]) -> bool:
+    """Whether the Python workers of a session on ``master`` with the extra
+    confs ``extra`` find this package's parent directory on their path: the
+    driver's ``PYTHONPATH`` (inherited by local and local-cluster workers),
+    ``spark.executorEnv.PYTHONPATH``, the site directories, or, for a
+    ``local`` master, the working directory."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    dirs = [
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *dict(extra).get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    if master == "local" or master.startswith("local["):
+        dirs.append(os.getcwd())
+    return any(d and os.path.realpath(d) == root for d in dirs)
 
 
 def get_spark(app_name: str = "sdi-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -67,7 +90,7 @@ def get_spark(app_name: str = "sdi-spark", shuffle_partitions: int | None = None
     # generic adversarial-sweep hook: "key=value;key=value" pairs applied
     # last, so a sweep can toggle any conf (codegen, AQE, ...) without a
     # dedicated env var per knob
-    extra = os.environ.get("SDI_EXTRA_CONF", "")
+    extra = parse_extra_conf(os.environ.get("SDI_EXTRA_CONF", ""))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -89,6 +112,8 @@ def get_spark(app_name: str = "sdi-spark", shuffle_partitions: int | None = None
     )
     if ansi is not None:
         builder = builder.config("spark.sql.ansi.enabled", ansi)
-    for k, v in parse_extra_conf(extra):
+    if workers_import_package(master, extra):
+        builder = builder.config("spark.python.daemon.module", PYWORKER)
+    for k, v in extra:
         builder = builder.config(k, v)
     return builder.getOrCreate()

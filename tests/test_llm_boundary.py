@@ -21,6 +21,27 @@ def test_llm_map_retries_then_succeeds(spark):
     assert rows == {i: 2 * i for i in range(10)}
 
 
+def test_llm_map_first_retry_waits_base_backoff(spark):
+    import time
+
+    from scalable_data_integration_with_llms_spark.llm.boundary import llm_map
+
+    df = spark.createDataFrame([(1,)], "x int").coalesce(1)
+    # retries of one batch run in one worker process, so the closure's
+    # list keeps every attempt's timestamp
+    stamps = []
+
+    def fails_once(pdf: pd.DataFrame) -> pd.DataFrame:
+        stamps.append(time.monotonic())
+        if len(stamps) == 1:
+            raise RuntimeError("transient inference failure")
+        return pdf.assign(gap=stamps[1] - stamps[0])
+
+    out = llm_map(df, fails_once, "x int, gap double", max_retries=3, base_backoff_s=1.0)
+    (row,) = out.collect()
+    assert 1.0 <= row.gap < 2.0
+
+
 def test_llm_map_exhausts_retries(spark):
     from scalable_data_integration_with_llms_spark.llm.boundary import llm_map
 
