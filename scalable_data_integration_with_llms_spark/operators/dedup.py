@@ -212,7 +212,6 @@ def minhash_signatures(
     are collapsed to one md5 signature string, so LSH candidate generation is
     a single groupBy on (band, signature).
     """
-    rows_per_band = n_perm // n_bands
     # All n_perm minima ride ONE hash aggregation as side-by-side columns:
     # each shingle row evaluates n_perm salted hashes map-side and combines
     # into per-doc partial minima, so the exchange carries |docs| rows of
@@ -225,8 +224,17 @@ def minhash_signatures(
             for p in range(n_perm)
         ]
     )
-    # band signature rendered exactly as before: md5("p:minh|p:minh|...")
-    # with p ascending within the band
+    return _band_signatures(mins, n_perm, n_bands)
+
+
+def _band_signatures(mins: DataFrame, n_perm: int, n_bands: int) -> DataFrame:
+    """(doc, band, signature) from one row per doc holding the permutation
+    minima ``m0 .. m{n_perm-1}``: band b's signature is
+    md5("p:min_p|p:min_p|...") over its ``n_perm / n_bands`` permutations,
+    p ascending.  The batch operator and the streaming gate's map-only
+    banding (streaming/near_dup_gate.stream_minhash_bands) both end here,
+    so their buckets are the same bytes."""
+    rows_per_band = n_perm // n_bands
     bands = F.array(
         *[
             F.struct(

@@ -14,6 +14,8 @@ input size; estimation is a broadcast join against it.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -58,20 +60,33 @@ def _check_bloom_shape(m: int, n_hashes: int) -> None:
         raise ValueError(f"bloom filter needs n_hashes >= 1, got {n_hashes}")
 
 
-def bloom_bitmap(build: DataFrame, key_col: str, n_hashes: int = 3, m: int = 4096) -> DataFrame:
+def bloom_bitmap(
+    build: DataFrame,
+    key_col: str,
+    position: Callable[[Column, Column, int], Column],
+    n_hashes: int = 3,
+    m: int = 4096,
+) -> DataFrame:
     """The Bloom filter itself, as ONE row holding ``words``: an array of
-    m/64 bigint words with the build keys' md5-derived positions set.
+    m/64 bigint words with the build keys' positions set.
+
+    ``position(j, key, m)`` is the caller's hash: the bit (in [0, m)) that
+    hash ``j`` of ``key`` sets; the probe must use the same one.  An
+    md5-derived position (:func:`_cms_col`) makes every verdict
+    oracle-checkable; a JVM-native one (``xxhash64``) is cheaper when
+    nothing outside Spark has to agree with it.
 
     One bounded aggregation: keys → k positions → per-word BIT_OR (the
     map-side partial agg collapses every partition to ≤ m/64 rows before
     the exchange, and BIT_OR is idempotent so duplicate build keys need no
-    pre-``distinct`` — the runtime_filter/F9 discipline), then the ≤ m/64
-    (word, bits) rows fold into a dense array in a single final row.  The
-    row is m/64·8 bytes regardless of corpus size — broadcast it.
+    pre-``distinct`` — skipping it removes a whole key-sized shuffle), then
+    the ≤ m/64 (word, bits) rows fold into a dense array in a single final
+    row.  The row is m/64·8 bytes regardless of corpus size — broadcast it,
+    or collect it and probe against an array literal.
     """
     _check_bloom_shape(m, n_hashes)
     pow2 = _pow2_literal()
-    pos = _cms_col(F.col("j"), F.col("key"), m)
+    pos = position(F.col("j"), F.col("key"), m)
     word_rows = (
         build.select(F.col(key_col).alias("key"))
         .select(
@@ -94,55 +109,33 @@ def bloom_bitmap(build: DataFrame, key_col: str, n_hashes: int = 3, m: int = 409
     )
 
 
-def bloom_bits_predicate(key, n_hashes: int = 3, m: int = 4096):
-    """Membership test of ``key`` against a ``words`` bitmap column (from
-    :func:`bloom_bitmap`, attached by a 1-row broadcast cross join): true
-    iff all ``n_hashes`` md5-derived positions are set.  Pure column
-    expression — ``element_at`` + bitwise AND per hash inside whole-stage
-    codegen, no explode, no join, no re-aggregation."""
+def bloom_bits_predicate(
+    key,
+    words: Column,
+    position: Callable[[Column, Column, int], Column],
+    n_hashes: int = 3,
+    m: int = 4096,
+) -> Column:
+    """Membership test of ``key`` against a :func:`bloom_bitmap` word array
+    built with the same ``position``, ``n_hashes`` and ``m``: true iff all
+    ``n_hashes`` positions are set.  ``words`` is the bitmap column (the
+    1-row frame attached by a broadcast cross join) or the collected words
+    as an array literal (``F.lit(list)``: one object, not a per-row
+    CreateArray of m/64 children).  Pure column expression —
+    ``element_at`` + bitwise AND per hash inside whole-stage codegen, no
+    explode, no join, no re-aggregation; as a filter it sits in the scan
+    stage below any downstream exchange."""
     _check_bloom_shape(m, n_hashes)
     key_col = F.col(key) if isinstance(key, str) else key
     pow2 = _pow2_literal()
     pred = None
     for j in range(n_hashes):
-        pos = _cms_col(F.lit(j), key_col, m)
-        word = F.element_at("words", (pos / 64).cast("int") + 1)
+        pos = position(F.lit(j), key_col, m)
+        word = F.element_at(words, (pos / 64).cast("int") + 1)
         bit = F.element_at(pow2, F.pmod(pos, F.lit(64)).cast("int") + 1)
         term = word.bitwiseAND(bit) != 0
         pred = term if pred is None else pred & term
     return pred
-
-
-def bloom_membership(
-    build: DataFrame,
-    probe: DataFrame,
-    key_col: str,
-    n_hashes: int = 3,
-    m: int = 4096,
-) -> DataFrame:
-    """Bloom-filter membership: ``probe`` keys tested against the filter
-    built from ``build`` keys.  Returns (key, in_filter).
-
-    r15 form — bitmap + map-only probe: the build side aggregates into a
-    single m/64-word row (:func:`bloom_bitmap`, bounded by m regardless of
-    corpus size), broadcast onto the distinct probe keys with a 1-row
-    nested-loop join; each key then evaluates all ``n_hashes`` positions as
-    a codegen column predicate (:func:`bloom_bits_predicate`).  The former
-    explode(k)/semi-join/re-aggregate form paid TWO probe-key-sized
-    shuffles (the per-key hit-count groupBy and the join-back onto the
-    distinct keys) that the bitmap removes at any scale; the one remaining
-    probe-side exchange is the ``distinct`` itself.
-    """
-    bitmap = bloom_bitmap(build, key_col, n_hashes=n_hashes, m=m)
-    return (
-        probe.select(F.col(key_col).alias("key"))
-        .distinct()
-        .join(F.broadcast(bitmap))
-        .select(
-            "key",
-            bloom_bits_predicate("key", n_hashes=n_hashes, m=m).alias("in_filter"),
-        )
-    )
 
 
 def cms_estimates(

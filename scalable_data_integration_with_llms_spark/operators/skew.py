@@ -16,7 +16,7 @@ discipline, and the JVM-native hash keeps the hot side's scan cheap.)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -51,20 +51,6 @@ def salted_join(
     right = small.select("*", salts).hint("shuffle_hash")
     joined = left.join(right, [on, "__salt"], how)
     return joined.drop("__salt")
-
-
-def key_histogram(df: DataFrame, key: str | Column, top_n: int = 20) -> DataFrame:
-    """Skew diagnosis: the heaviest keys with their share of rows — run this
-    before deciding between AQE skew-join and explicit salting."""
-    k = F.col(key) if isinstance(key, str) else key
-    total = df.count()
-    return (
-        df.groupBy(k.alias("key"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("share", F.col("cnt") / F.lit(float(total)))
-        .orderBy(F.desc("cnt"))
-        .limit(top_n)
-    )
 
 
 def hot_cold_join(

@@ -25,6 +25,14 @@ TIMEOUT = "TIMEOUT"
 
 DEFAULT_TIMEOUT_S = 30.0  # DatabaseManager.py:202 default
 
+# the local properties ``setJobGroup`` writes; restored to the caller's
+# values afterwards
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
 
 @dataclass
 class ExecResult:
@@ -60,6 +68,7 @@ def run_with_timeout(
             sc.cancelJobGroup(group)
 
     canceller = threading.Thread(target=cancel_loop, daemon=True)
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
     sc.setJobGroup(group, "sdi timed statement", interruptOnCancel=True)
     start = time.monotonic()
     canceller.start()
@@ -88,4 +97,5 @@ def run_with_timeout(
         return ExecResult(ERROR, error=str(e))
     finally:
         done.set()
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)

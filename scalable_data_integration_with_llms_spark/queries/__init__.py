@@ -33,29 +33,26 @@ from . import ehr_q  # noqa: F401, E402
 from . import sinks_q  # noqa: F401, E402
 from . import llm_q  # noqa: F401, E402
 
-# Verification-window priority (r16 rotation, regenerated by
-# ``tools/rotate_window.py`` AFTER the round's changes landed): (a) the 10
-# queries whose source path changed this round — every
-# ``read_event_stream`` consumer now takes the events ``ts`` layout from
-# the per-session parquet schema memo (sources/readers._read_parquet)
-# instead of a process-global footer probe — led by the two
-# transformWithStateInPandas twins, one of which (q_stream_near_dup_gate_tws)
-# also missed the r15 window after its spread_stream change; (b) the
-# stalest rows — the r10-latest then the r11-latest block.  Oldest standing
-# driver verification after this round: r11.  The ``*_tws`` twins register
-# only where their runtime exists (streaming_q._has_tws_runtime); elsewhere
-# they drop out of the window and the next registered rows move up.
+# Verification-window priority (regenerated by ``tools/rotate_window.py``
+# AFTER the changes landed): (a) the 8 queries whose code path changed —
+# both Bloom queries now build and probe through operators/sketch (the
+# runtime-filter module is gone), both ``minhash_signatures`` consumers and
+# the streaming near-dup gate share one band-signature builder, and the
+# sessionizer and the gate run one per-key step under either state API,
+# so their transformWithStateInPandas twins changed too; (b) the stalest
+# rows — the r10-latest then the r11-latest block.  The ``*_tws`` twins
+# register only where their runtime exists (streaming_q._has_tws_runtime);
+# there they push the last two stale rows out of the 50-query window,
+# elsewhere they drop out and the list is exactly the window.
 _VERIFY_FIRST = [
+    "q_bloom_join_pushdown",  # changed/new
+    "q_bloom_contamination",  # changed/new
+    "q_minhash_signatures",  # changed/new
+    "q_lsh_verified_pairs",  # changed/new
+    "q_stream_near_dup_gate",  # changed/new
+    "q_sessionization_stream",  # changed/new
     "q_stream_near_dup_gate_tws",  # changed/new
     "q_sessionization_tws",  # changed/new
-    "q_stream_hourly",  # changed/new
-    "q_sessionization_stream",  # changed/new
-    "q_stream_enriched",  # changed/new
-    "q_stream_dedup",  # changed/new
-    "q_stream_stream_join",  # changed/new
-    "q_stream_cdc_apply",  # changed/new
-    "q_stream_topk_types",  # changed/new
-    "q_stream_kmv_distinct",  # changed/new
     "q_kmv_distinct",  # r10-latest
     "q_kmv_set_ops",  # r10-latest
     "q_llm_boundary_http",  # r10-latest
@@ -68,6 +65,7 @@ _VERIFY_FIRST = [
     "q_repr_n2one_prompts",  # r10-latest
     "q_repr_prompt_tokens",  # r10-latest
     "q_rrf_fusion",  # r10-latest
+    "q_stream_kmv_distinct",  # r10-latest
     "q12_priority_by_status",  # r11-latest
     "q_alignment_prf1",  # r11-latest
     "q_ann_ivf",  # r11-latest
@@ -96,6 +94,9 @@ _VERIFY_FIRST = [
     "q_orders_cube",  # r11-latest
     "q_orders_per_status",  # r11-latest
     "q_price_histogram",  # r11-latest
+    "q_price_percentiles",  # r11-latest
+    "q_question_cost_report",  # r11-latest
+    "q_range_join_purchase_context",  # r11-latest
 ]
 _VERIFY_FIRST = [n for n in _VERIFY_FIRST if n in QUERIES or not n.endswith("_tws")]
 

@@ -58,7 +58,7 @@ def workers_import_package(master: str, extra: list[tuple[str, str]]) -> bool:
     return any(d and os.path.realpath(d) == root for d in dirs)
 
 
-def get_spark(app_name: str = "sdi-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "sdi-spark") -> SparkSession:
     """Return (or create) the engine's SparkSession.
 
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism (bench contract) and,
@@ -69,9 +69,7 @@ def get_spark(app_name: str = "sdi-spark", shuffle_partitions: int | None = None
     this to true, the sweep re-proves the registry with it toggled off).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    n_shuffle = shuffle_partitions or int(
-        os.environ.get("SDI_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    n_shuffle = int(os.environ.get("SDI_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))
     session_tz = os.environ.get("SDI_SESSION_TZ", "UTC")
     ansi = os.environ.get("SDI_ANSI")
     # recomputation-under-retry adversary (SURVEY §4 determinism trap):

@@ -1,20 +1,17 @@
 """Result sinks (SURVEY §2.1 K1–K3).
 
-The reference writes JSON result envelopes (``ask_LLM.py:275-284``), Excel/
-markdown report tables (``eval_dataset.py:443-583``), and pickled experiment
-caches (``ExperimentCollection.py:7-28``).  Engine equivalents:
+The reference writes Excel report tables (``eval_dataset.py:443-583``) and
+pickled experiment caches (``ExperimentCollection.py:7-28``).  Engine
+equivalents:
 
 * distributed parquet/json writers for data-scale frames;
-* driver-side JSON envelopes for small control files (config + eval +
-  timing), matching the reference's result shape;
+* a driver-side .xlsx writer for report-sized aggregate tables;
 * parquet checkpoint-or-read memoization replacing the pickle cache.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,30 +26,6 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
 
 def write_json(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
-
-
-def write_result_envelope(path: str, config: dict, eval_rows: list[dict],
-                          generation_time: float | None = None) -> None:
-    """K1: the reference's ``{config, eval, generation_time}`` JSON envelope
-    (``ask_LLM.py:275-284``) — driver-side, control-plane sized."""
-    payload = {
-        "config": config,
-        "eval": eval_rows,
-        "generation_time": generation_time if generation_time is not None else time.time(),
-    }
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(payload, f, indent=2, default=str)
-
-
-def report_markdown(df: DataFrame, max_rows: int = 100) -> str:
-    """K2: small aggregate tables rendered at the driver (``to_markdown``
-    analogue).  Guarded: only for report-sized frames."""
-    pdf = df.limit(max_rows).toPandas()
-    try:
-        return pdf.to_markdown(index=False)  # needs tabulate
-    except ImportError:
-        return pdf.to_string(index=False)
 
 
 def _xml_escape(s: str) -> str:

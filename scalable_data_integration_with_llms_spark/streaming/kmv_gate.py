@@ -59,16 +59,6 @@ def _kmv_fold(
 ) -> Iterator[pd.DataFrame]:
     """Fold one (group, shard)'s arriving hashes into its k-mins state and
     emit the updated sketch row."""
-    if state.hasTimedOut:  # pragma: no cover - NoTimeout drains never hit this
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "event_type": pd.Series(dtype="object"),
-                "shard": pd.Series(dtype="int32"),
-                "mins": pd.Series(dtype="object"),
-            }
-        )
-        return
     mins = (
         np.asarray(state.get[0], dtype=np.int64)
         if state.exists

@@ -12,17 +12,20 @@ Two stages, both bounded:
    3-gram shingles, the 12 salted 60-bit md5 hashes, and per-permutation
    minima all computed as ARRAY expressions on each row — no groupBy, so
    the only stateful shuffle in the whole stream is the gate itself.  The
-   signature bytes are identical to the batch operator's
-   (``minhash_signatures``), pinned by a parity test, so stream and batch
-   stages of one pipeline agree on what a bucket is.  (The batch operator
-   keeps its exploded groupBy formulation: at rest the shuffle carries
-   |docs| x n_perm minima either way, but a *stream* must not re-shuffle
-   per micro-batch.)
+   minima feed the batch operator's own band-signature builder
+   (``dedup._band_signatures``, pinned by a parity test), so stream and
+   batch stages of one pipeline agree on what a bucket is.  (The batch
+   operator keeps its groupBy formulation of the minima: at rest the
+   shuffle carries |docs| x n_perm minima either way, but a *stream* must
+   not re-shuffle per micro-batch.)
 
 2. **Per-bucket first-wins gate** (:func:`near_dup_gate`): state per
    (band, signature) bucket is ONE bigint — the smallest doc id seen.  A
    document is flagged in a bucket iff a smaller id was already seen there.
-   State is O(distinct buckets), not O(documents x permutations).
+   State is O(distinct buckets), not O(documents x permutations).  The
+   per-bucket transition is :func:`_gate_step`; the
+   ``applyInPandasWithState`` function and the TWS processor only read and
+   write their state API around it.
 
 Determinism contract (the q_sessionization bounded-drain precedent): with
 an ``availableNow`` drain of the single-file documents feed, every bucket's
@@ -61,6 +64,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.determinism import hash60
 from ..functions.text import ngram_strings
+from ..operators.dedup import _band_signatures
 
 N_PERM = 12
 N_BANDS = 4
@@ -102,45 +106,15 @@ def stream_minhash_bands(
         .select("doc", F.array_distinct(ngram_strings(F.col("ws"), 3)).alias("grams"))
         .select("doc", *[perm_min(p).alias(f"m{p}") for p in range(n_perm)])
     )
-    rpb = n_perm // n_bands
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.concat_ws(":", F.lit(p), F.col(f"m{p}"))
-                            for p in range(b * rpb, (b + 1) * rpb)
-                        ],
-                    )
-                ).alias("signature"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return mins.select("doc", F.explode(bands).alias("bs")).select(
-        "doc", "bs.band", "bs.signature"
-    )
+    return _band_signatures(mins, n_perm, n_bands)
 
 
-def _gate(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """First-wins gate for one (band, signature) bucket: emit a flag per
-    doc; keep only the bucket's minimum doc id in state."""
-    if state.hasTimedOut:  # pragma: no cover - NoTimeout drains never hit this
-        state.remove()
-        # dtypes must match GATE_OUT_SCHEMA even for the empty frame
-        yield pd.DataFrame(
-            {
-                "doc": pd.Series(dtype="int64"),
-                "band": pd.Series(dtype="int32"),
-                "is_dup": pd.Series(dtype="bool"),
-            }
-        )
-        return
+def _gate_step(
+    band, pdfs: Iterator[pd.DataFrame], min_doc: int | None
+) -> tuple[int, pd.DataFrame]:
+    """First-wins step for one (band, signature) bucket: flag each arriving
+    doc that has a smaller id before it, given the bucket's stored minimum
+    (None for a new bucket); returns the new minimum and the flags."""
     # Hot path runs once per bucket (tens of thousands of tiny groups per
     # micro-batch), so stay vectorized: no pandas sort_values / row loop.
     chunks = list(pdfs)
@@ -148,13 +122,18 @@ def _gate(
     docs = pdf["doc"].to_numpy()
     if len(docs) > 1:
         docs = np.sort(docs)
-    prev = state.get[0] if state.exists else None
     # Within one ascending-sorted batch, a doc has a smaller predecessor iff
     # it exceeds min(state, batch minimum) — doc ids are unique per bucket.
-    floor = docs[0] if prev is None else min(prev, docs[0])
-    flags = docs > floor
-    state.update((int(floor),))
-    yield pd.DataFrame({"doc": docs, "band": key[0], "is_dup": flags})
+    floor = docs[0] if min_doc is None else min(min_doc, docs[0])
+    return int(floor), pd.DataFrame({"doc": docs, "band": band, "is_dup": docs > floor})
+
+
+def _gate(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    floor, flags = _gate_step(key[0], pdfs, state.get[0] if state.exists else None)
+    state.update((floor,))
+    yield flags
 
 
 def near_dup_gate(banded: DataFrame) -> DataFrame:
@@ -186,8 +165,8 @@ def make_gate_processor():
 
     class GateProcessor(StatefulProcessor):
         """Per-(band, signature) bucket: emit a flag per doc, keep the
-        bucket minimum in one bigint of value state — byte-identical
-        output to :func:`_gate`."""
+        bucket minimum in one bigint of value state — the same
+        :func:`_gate_step` as :func:`_gate`."""
 
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._min_doc = handle.getValueState("min_doc", _GATE_STATE_SCHEMA)
@@ -195,15 +174,10 @@ def make_gate_processor():
         def handleInputRows(
             self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
         ) -> Iterator[pd.DataFrame]:
-            chunks = list(rows)
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            docs = pdf["doc"].to_numpy()
-            if len(docs) > 1:
-                docs = np.sort(docs)
             prev = self._min_doc.get()[0] if self._min_doc.exists() else None
-            floor = docs[0] if prev is None else min(prev, docs[0])
-            self._min_doc.update((int(floor),))
-            yield pd.DataFrame({"doc": docs, "band": key[0], "is_dup": docs > floor})
+            floor, flags = _gate_step(key[0], rows, prev)
+            self._min_doc.update((floor,))
+            yield flags
 
         def close(self) -> None:
             pass

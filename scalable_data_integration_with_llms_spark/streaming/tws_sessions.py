@@ -1,18 +1,13 @@
 """Sessionization on Spark 4's ``transformWithStateInPandas`` API — the
 successor to ``applyInPandasWithState`` (streaming/sessions.py keeps the
-classic formulation; semantics are identical and both share the batch
-lag-gap oracle).
+classic formulation).  Both call the same per-user step
+(``sessions._session_step``), so semantics are identical and both share
+the batch lag-gap oracle.
 
 transformWithState runs on the RocksDB state store (required by the API),
 which is also the right engine choice at scale: state lives off-heap with
 incremental-snapshot checkpointing, so per-user session state survives
 100×-more keys than the default HDFS-backed in-memory store.
-
-Emission contract (same as sessions.py): a session row is emitted when a
-later event arrives past the 30-minute gap; each user's final session
-intentionally stays open in state for a bounded (availableNow) drain —
-deterministic regardless of micro-batch boundaries, hence fully
-oracle-checkable as "all sessions but each user's last".
 """
 
 from __future__ import annotations
@@ -24,12 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-OUT_SCHEMA = (
-    "user_id bigint, session_id bigint, n_events bigint, "
-    "session_start timestamp, session_end timestamp"
-)
-_STATE_SCHEMA = "session_id bigint, n_events bigint, start_us bigint, end_us bigint"
-_US = 1_000_000
+from .sessions import _US, OUT_SCHEMA, STATE_SCHEMA, _session_step
 
 
 class SessionProcessor(StatefulProcessor):
@@ -39,36 +29,15 @@ class SessionProcessor(StatefulProcessor):
         self._gap_us = gap_minutes * 60 * _US
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        self._session = handle.getValueState("session", _STATE_SCHEMA)
+        self._session = handle.getValueState("session", STATE_SCHEMA)
 
     def handleInputRows(
         self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
-        user_id = key[0]
-        pdf = pd.concat(list(rows), ignore_index=True).sort_values(["ts", "event_id"])
-        ts_us = pdf.ts.astype("datetime64[us]").astype("int64").tolist()
-        if self._session.exists():
-            sid, n, start_us, end_us = self._session.get()
-        else:
-            sid, n, start_us, end_us = 0, 0, None, None
-        out = []
-        for t in ts_us:
-            if start_us is None:
-                sid, n, start_us, end_us = sid + 1, 1, t, t
-            elif t - end_us > self._gap_us:
-                out.append((user_id, sid, n, start_us, end_us))
-                sid, n, start_us, end_us = sid + 1, 1, t, t
-            else:
-                n += 1
-                end_us = t
-        self._session.update((sid, n, start_us, end_us))
-        yield pd.DataFrame(
-            [
-                (u, s, n_, pd.Timestamp(st, unit="us"), pd.Timestamp(en, unit="us"))
-                for u, s, n_, st, en in out
-            ],
-            columns=["user_id", "session_id", "n_events", "session_start", "session_end"],
-        )
+        prev = self._session.get() if self._session.exists() else None
+        session, closed = _session_step(key[0], rows, prev, self._gap_us)
+        self._session.update(session)
+        yield closed
 
     def close(self) -> None:
         pass

@@ -15,13 +15,23 @@ SF_DIR = os.environ.get("SDI_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_bloom_no_false_negatives(spark):
-    from scalable_data_integration_with_llms_spark.operators.sketch import bloom_membership
+    from scalable_data_integration_with_llms_spark.operators.sketch import (
+        _cms_col,
+        bloom_bitmap,
+        bloom_bits_predicate,
+    )
 
     build = spark.createDataFrame([(f"key{i}",) for i in range(50)], "k string")
     probe = spark.createDataFrame(
         [(f"key{i}",) for i in range(0, 100)], "k string"  # first 50 are members
     )
-    got = {r["key"]: r["in_filter"] for r in bloom_membership(build, probe, "k").collect()}
+    flagged = (
+        probe.select(F.col("k").alias("key"))
+        .distinct()
+        .crossJoin(F.broadcast(bloom_bitmap(build, "k", _cms_col)))
+        .select("key", bloom_bits_predicate("key", F.col("words"), _cms_col).alias("in_filter"))
+    )
+    got = {r["key"]: r["in_filter"] for r in flagged.collect()}
     assert all(got[f"key{i}"] for i in range(50))  # Bloom guarantee
     assert len(got) == 100
 
@@ -30,24 +40,25 @@ def test_bloom_no_false_negatives(spark):
 def test_bloom_rejects_partial_word_sizes(spark):
     """m must be a positive multiple of 64 (the bitmap holds m/64 whole
     words) and n_hashes >= 1 — checked when the plan is built, before any
-    job runs."""
+    job runs, for both the broadcast-column and the collected-literal
+    probe."""
     from scalable_data_integration_with_llms_spark.operators.sketch import (
+        _cms_col,
         bloom_bitmap,
         bloom_bits_predicate,
-        bloom_membership,
     )
+    from scalable_data_integration_with_llms_spark.queries.analytics import _xxhash_position
 
     build = spark.createDataFrame([("a",)], "k string")
     group = "bloom-contract"
     spark.sparkContext.setJobGroup(group, group)
     try:
-        for kw in ({"m": 100}, {"m": 0}, {"m": 32}, {"n_hashes": 0}):
-            with pytest.raises(ValueError):
-                bloom_bitmap(build, "k", **kw)
-            with pytest.raises(ValueError):
-                bloom_bits_predicate("k", **kw)
-            with pytest.raises(ValueError):
-                bloom_membership(build, build, "k", **kw)
+        for position, words in ((_cms_col, F.col("words")), (_xxhash_position, F.lit([0]))):
+            for kw in ({"m": 100}, {"m": 0}, {"m": 32}, {"n_hashes": 0}):
+                with pytest.raises(ValueError):
+                    bloom_bitmap(build, "k", position, **kw).first()
+                with pytest.raises(ValueError):
+                    bloom_bits_predicate("k", words, position, **kw)
     finally:
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
     assert spark.sparkContext.statusTracker().getJobIdsForGroup(group) == []

@@ -345,6 +345,32 @@ def test_timeout_elapsed_based_classification(spark):
     assert res.status == ERROR
 
 
+def test_timeout_restores_caller_local_properties(spark):
+    """A timed statement runs under its own job group, then hands back the
+    caller's job group, description and interrupt flag unchanged — set or
+    unset."""
+    from scalable_data_integration_with_llms_spark.plans.timeout import OK, run_with_timeout
+
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    try:
+        sc.setJobDescription("caller description")
+        before = {k: sc.getLocalProperty(k) for k in props}
+        assert run_with_timeout(spark, lambda: spark.range(3).count(), 30.0).status == OK
+        assert {k: sc.getLocalProperty(k) for k in props} == before
+        assert before["spark.job.description"] == "caller description"
+
+        sc.setJobGroup("caller-group", "caller group", interruptOnCancel=False)
+        before = {k: sc.getLocalProperty(k) for k in props}
+        run_with_timeout(spark, lambda: 1 / 0, 30.0)
+        assert {k: sc.getLocalProperty(k) for k in props} == before
+    finally:
+        for k in props:
+            sc.setLocalProperty(k, None)
+    run_with_timeout(spark, lambda: 1, 30.0)
+    assert all(sc.getLocalProperty(k) is None for k in props)
+
+
 def test_timeout_sentinel(spark):
     """Timed-out predicted query scores FN=|gold|, FP=∞ (Evaluator.py:141-151)."""
     from pyspark.sql import functions as F

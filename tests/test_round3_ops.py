@@ -195,14 +195,35 @@ def test_corr_moment_sums_survive_int64_overflow(spark, tmp_path):
     assert abs(r.pearson_r - 1.0) < 1e-9
 
 
+def _pushdown_bloom():
+    """q_bloom_join_pushdown's build and probe: the collected word list and
+    its array-literal predicate, with the query's xxhash64 positions."""
+    from scalable_data_integration_with_llms_spark.operators.sketch import (
+        bloom_bitmap,
+        bloom_bits_predicate,
+    )
+    from scalable_data_integration_with_llms_spark.queries.analytics import (
+        _BLOOM_JOIN_K,
+        _BLOOM_JOIN_M,
+        _xxhash_position,
+    )
+
+    shape = {"n_hashes": _BLOOM_JOIN_K, "m": _BLOOM_JOIN_M}
+
+    def build(df, key):
+        return bloom_bitmap(df, key, _xxhash_position, **shape).first()["words"]
+
+    def probe(words, key):
+        return bloom_bits_predicate(key, F.lit(words), _xxhash_position, **shape)
+
+    return build, probe
+
+
 def test_bloom_runtime_filter_prunes_and_preserves(spark, duck):
     """The Bloom predicate must (a) never drop a matching row, (b) prune a
     large share of the fact scan, and (c) sit in the scan stage below the
     join exchange."""
-    from scalable_data_integration_with_llms_spark.operators.runtime_filter import (
-        bloom_probe_predicate,
-        build_bloom_words,
-    )
+    build_bloom_words, bloom_probe_predicate = _pushdown_bloom()
     from scalable_data_integration_with_llms_spark.queries import QUERIES
     from scalable_data_integration_with_llms_spark.sources.readers import load_table
 
@@ -232,10 +253,7 @@ def test_bloom_filter_type_mismatch_keeps_matches(spark):
     every matching row.  Without canonicalizing the hash input, xxhash64
     hashes int and bigint differently and silently drops matches (r3/r4
     ADVICE hazard)."""
-    from scalable_data_integration_with_llms_spark.operators.runtime_filter import (
-        bloom_probe_predicate,
-        build_bloom_words,
-    )
+    build_bloom_words, bloom_probe_predicate = _pushdown_bloom()
 
     build = spark.range(0, 500).select(F.col("id").cast("int").alias("k"))
     probe = spark.range(0, 2000).select(F.col("id").alias("k"))  # bigint

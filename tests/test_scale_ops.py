@@ -45,40 +45,6 @@ def test_salted_join_never_broadcasts(spark):
     assert "ShuffledHashJoin" in plan
 
 
-def test_key_histogram(spark):
-    from scalable_data_integration_with_llms_spark.operators.skew import key_histogram
-
-    df = spark.createDataFrame([("a",)] * 8 + [("b",)] * 2, "k string")
-    rows = key_histogram(df, "k").collect()
-    assert rows[0].key == "a" and abs(rows[0].share - 0.8) < 1e-12
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    from scalable_data_integration_with_llms_spark.sources.bucketing import cobucket_join, write_bucketed
-    from scalable_data_integration_with_llms_spark.sources.readers import load_table
-
-    # warehouse dir is a static conf; tables land in ./spark-warehouse
-    # (gitignored) and are dropped in the finally block
-    o = load_table(spark, "/root/testdata/sf0.001", "orders")
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    write_bucketed(o, "b_orders", ["o_orderkey"], 4)
-    write_bucketed(li, "b_lineitem", ["o_orderkey"], 4)
-    joined = cobucket_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
-    # force SMJ path (no broadcast) to prove bucketing removes the shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_partitioned_write_prunes(spark, tmp_path):
     """Date-partitioned layout + partition pruning: the filter must reach
     PartitionFilters, not scan all partitions (SCALE.md relational-core)."""

@@ -86,7 +86,7 @@ def test_mapping_xml_loader_and_subsumption():
 
 
 def test_sinks_roundtrip(spark, tmp_path):
-    from scalable_data_integration_with_llms_spark.sources.sinks import cached_parquet, report_markdown, write_result_envelope
+    from scalable_data_integration_with_llms_spark.sources.sinks import cached_parquet
 
     calls = []
 
@@ -99,17 +99,6 @@ def test_sinks_roundtrip(spark, tmp_path):
     b = cached_parquet(spark, path, build)
     assert a.count() == 5 and b.count() == 5
     assert len(calls) == 1  # second read hits the cache
-
-    md = report_markdown(spark.createDataFrame([("x", 1)], "name string, n int"))
-    assert "name" in md and "x" in md
-
-    env_path = str(tmp_path / "out" / "results.json")
-    write_result_envelope(env_path, {"mode": "test"}, [{"f1": 1.0}], 1.23)
-    import json
-
-    with open(env_path) as f:
-        env = json.load(f)
-    assert env["config"]["mode"] == "test" and env["generation_time"] == 1.23
 
 
 def test_multimodal_plumbing(spark):
