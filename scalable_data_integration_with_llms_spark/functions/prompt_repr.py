@@ -34,8 +34,7 @@ the same substitution the rest of the matching surface makes.
 
 from __future__ import annotations
 
-import re
-
+from ..llm.boundary import mock_score_milli
 from .chat import apply_chat_template
 
 # ---------------------------------------------------------------------------
@@ -231,43 +230,16 @@ def attr_with_type(name: str, col_type: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _levenshtein(a: str, b: str) -> int:
-    if len(a) < len(b):
-        a, b = b, a
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[len(b)]
-
-
-def _strip_prefix(name: str) -> str:
-    return re.sub(r"^[a-z]_", "", name)
-
-
-def _supergroup(t: str) -> str:
-    if re.match(r"^(int|bigint|smallint|tinyint|serial)", t):
-        return "INTEGER"
-    if re.match(r"^(float|real|double|numeric|decimal)", t):
-        return "DOUBLE"
-    return "TEXT"
-
-
 def ranked_candidates(
     query_attr: str, query_type: str, source_cols: list[tuple[str, str]]
 ) -> list[tuple[str, str]]:
     """Mock-scored candidate list for one target attribute, rank order —
     the sequential twin of ``mock_score_candidates`` + ``rank_preferences``
-    (same integer milli-scores, same desc-score/asc-name tiebreak)."""
-
-    def milli(cand: str, cand_type: str) -> int:
-        sim = 1.0 / (1.0 + _levenshtein(_strip_prefix(query_attr), _strip_prefix(cand)))
-        bonus = 0.25 if _supergroup(query_type) == _supergroup(cand_type) else 0.0
-        return round((sim + bonus) * 1_000_000)
-
-    return sorted(source_cols, key=lambda nt: (-milli(nt[0], nt[1]), nt[0]))
+    (the scorer's own ``mock_score_milli``, same desc-score/asc-name
+    tiebreak)."""
+    return sorted(
+        source_cols, key=lambda nt: (-mock_score_milli(query_attr, query_type, *nt), nt[0])
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -90,6 +90,49 @@ def tn_counts(pred: DataFrame, gold: DataFrame, target_cols: DataFrame) -> DataF
     )
 
 
+def case_prf1(pred: DataFrame, gold: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
+    """J4 + A9: per-case ``tp, fp, fn, precision, recall, f1`` of predicted
+    vs gold alignments (``group_cols`` as in :func:`confusion_counts`)."""
+    return prf1_columns(confusion_counts(pred, gold, group_cols))
+
+
+def prf1e(pred: DataFrame, gold: DataFrame, catalog: DataFrame) -> DataFrame:
+    """A9 + SO6: the reference's full per-case evaluation row
+    (``eval_utils.py:466-502`` compute_prf1e + get_tn) — P/R/F1, TN,
+    accuracy = (tp+tn)/N over the N target columns of ``catalog``
+    (``case_id, side, col_name``), accuracy2 = (tp+tn)/(tp+tn+fp+fn) and
+    effort = (3·fn+fp)/|gold|.  Every division is exact bigint over exact
+    bigint, so the doubles are engine-identical."""
+    target_cols = catalog.filter(F.col("side") == "target").select(
+        "case_id", F.col("col_name").alias("tgt")
+    )
+    tn = tn_counts(pred, gold, target_cols)
+    n_target = target_cols.groupBy("case_id").agg(F.count(F.lit(1)).alias("n_target"))
+    n_gold = gold.groupBy("case_id").agg(F.count(F.lit(1)).alias("n_gold"))
+    tp, fp, fn, tn_c = (F.col(c) for c in ("tp", "fp", "fn", "tn"))
+    return (
+        case_prf1(pred, gold)
+        .join(tn, "case_id", "left")
+        .fillna(0, ["tn"])
+        .join(n_target, "case_id")
+        .join(n_gold, "case_id")
+        .select(
+            "case_id", "tp", "fp", "fn", "tn", "precision", "recall", "f1",
+            ((tp + tn_c) / F.col("n_target")).alias("accuracy"),
+            ((tp + tn_c) / (tp + tn_c + fp + fn)).alias("accuracy2"),
+            ((3 * fn + fp) / F.col("n_gold")).alias("effort"),
+        )
+    )
+
+
+def exact_mean(col: str) -> Column:
+    """Cross-case mean of a per-case metric, exact in any engine: each value
+    is rounded to integer micro-units and summed as a bigint, so the mean
+    is (exact sum) / 1e6 / n whatever the summation order."""
+    micro = F.round(F.col(col) * 1_000_000, 0).cast("bigint")
+    return (F.sum(micro) / F.lit(1_000_000.0)) / F.count(F.lit(1))
+
+
 def mrr(preferences: DataFrame, gold: DataFrame) -> DataFrame:
     """A8: per-case mean reciprocal rank over ranked n→1 preference lists
     (``eval_utils.py:9-21``): 1/rank of the first gold pair per query attr,

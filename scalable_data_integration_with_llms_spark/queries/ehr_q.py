@@ -22,27 +22,25 @@ data, not throughput queries.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import SessionMemo
 from ..functions.determinism import TWO_60_SQL, hash60_sql
-from ..llm.boundary import mock_score_candidates
-from ..operators.candidates import generate_candidates, rank_preferences
-from ..operators.metrics import confusion_counts, prf1_columns
-from ..operators.stable_matching import round_r, stable_match
-from ..sources.dataset_json import catalog_from_cases, load_dataset_json
-from .registry import query
-
-_FIXTURE_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures"
-)
-
-
 from ..functions.sql_text import sql_quote as _sq
-from ..functions.localframe import local_df
+from ..operators.candidates import bidirectional_merge
+from ..operators.ensembles import ensemble_majority
+from ..operators.metrics import case_prf1, exact_mean, prf1e
+from .matching import (
+    bidir_top1,
+    case_catalog,
+    dataset_cases_df,
+    preferences,
+    round_matches,
+    seed_runs,
+    stable_rounds,
+    topk_sweep_prf1,
+)
+from .registry import query
 
 
 def _values(rows: list[tuple[str, str, str]], alias: str) -> str:
@@ -58,15 +56,6 @@ def _golden(dataset: str) -> tuple[list, list]:
     return g.SYNTHEA_ROUND1, g.SYNTHEA_GOLD
 
 
-def dataset_cases_df(spark: SparkSession, dataset: str) -> DataFrame:
-    """A committed benchmark through the S1 dataset-JSON scan (the loader
-    whose layout parity with the reference is pinned by
-    tests/test_dataset_loaders.py)."""
-    return load_dataset_json(
-        spark, os.path.join(_FIXTURE_DIR, f"{dataset}_dataset.json")
-    )
-
-
 def dataset_gold_df(spark: SparkSession, dataset: str) -> DataFrame:
     """Gold pairs, case-folded (the datasets write source names in table
     case, e.g. SUBJECT_ID, while schema columns are lower case) and
@@ -80,62 +69,6 @@ def dataset_gold_df(spark: SparkSession, dataset: str) -> DataFrame:
             F.lower(F.col("p")[1]).alias("tgt"),
         )
         .distinct()
-    )
-
-
-_PREFS_MEMOS = {"ehr": SessionMemo(), "synthea": SessionMemo()}
-
-# Fixture-scale parallelism defaults.  The scorer is the pipeline's
-# dominant compute (per-pair Python levenshtein through mapInPandas:
-# ~5.7 s for the ~29k EHR candidate rows on ONE task — profiled r14), and
-# the score is per-row deterministic, so spreading it over 8 tasks is
-# result-identical and cuts the cold build ~6×.  Eight, not 32: each task
-# pays Python-worker spin-up, and with a REAL inference backend each
-# partition is a concurrent request stream — 8 keeps fixture-scale load
-# bounded.  A handful of post-shuffle output partitions keeps every
-# downstream task count small.  At corpus scale pass
-# scorer_partitions/output_partitions sized to the case count (or None to
-# leave Spark's partitioning untouched) — the pipeline shape is identical,
-# only the parallelism knob moves.
-_FIXTURE_SCORER_PARTITIONS = 8
-_FIXTURE_OUTPUT_PARTITIONS = 4
-
-
-def _preferences(
-    spark: SparkSession,
-    dataset: str,
-    scorer_partitions: int | None = _FIXTURE_SCORER_PARTITIONS,
-    output_partitions: int | None = _FIXTURE_OUTPUT_PARTITIONS,
-) -> DataFrame:
-    """Scored + ranked preference frame for a benchmark's cases, memoized
-    per session: the q_{ehr,synthea}_* queries share it, and the
-    mapInPandas scorer must not re-run per consumer (SURVEY §4 recompute
-    trap).  Only the fixture-default parallelism is memoized; a scale run
-    with explicit partition counts builds its own frame."""
-
-    def build() -> DataFrame:
-        catalog = catalog_from_cases(dataset_cases_df(spark, dataset)).select(
-            "case_id", "side", "col_name", "col_type"
-        )
-        cands = generate_candidates(catalog)
-        if scorer_partitions is not None:
-            cands = cands.coalesce(scorer_partitions)
-        ranked = rank_preferences(mock_score_candidates(cands))
-        if output_partitions is not None:
-            ranked = ranked.coalesce(output_partitions)
-        return ranked
-
-    if (scorer_partitions, output_partitions) != (
-        _FIXTURE_SCORER_PARTITIONS,
-        _FIXTURE_OUTPUT_PARTITIONS,
-    ):
-        return build()
-    return _PREFS_MEMOS[dataset].get_or_build(spark, build)
-
-
-def _round1(spark: SparkSession, dataset: str) -> DataFrame:
-    return round_r(stable_match(_preferences(spark, dataset), top_k=5), 1).select(
-        "case_id", "src", "tgt"
     )
 
 
@@ -187,10 +120,8 @@ cases AS (SELECT case_id FROM gold UNION SELECT case_id FROM r1),
 
 
 def _f1_df(spark: SparkSession, dataset: str) -> DataFrame:
-    counts = confusion_counts(_round1(spark, dataset), dataset_gold_df(spark, dataset))
-    return prf1_columns(counts).select(
-        "case_id", "tp", "fp", "fn", "precision", "recall", "f1"
-    )
+    pred = round_matches(preferences(spark, dataset), 1)
+    return case_prf1(pred, dataset_gold_df(spark, dataset))
 
 
 # -- EHR (52 MIMIC-III → OMOP cases) ------------------------------------------
@@ -209,7 +140,7 @@ def q_ehr_round1_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidates → mock scores → ranking → Gale–Shapley round 1 over the
     real 52-case benchmark, pinned row-for-row (542 matches) against the
     pure-Python twin."""
-    return _round1(spark, "ehr")
+    return round_matches(preferences(spark, "ehr"), 1)
 
 
 @query("q_ehr_matching_f1", _f1_oracle("ehr"))
@@ -230,7 +161,7 @@ def q_synthea_round1_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same pipeline, pinned row-for-row (118 matches) against the twin.
     Synthea cases omit the instance-row counts — the nullable-schema branch
     of the S1 loader, which the EHR set cannot exercise."""
-    return _round1(spark, "synthea")
+    return round_matches(preferences(spark, "synthea"), 1)
 
 
 @query("q_synthea_matching_f1", _f1_oracle("synthea"))
@@ -275,9 +206,7 @@ def q_ehr_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     real-data surface the round-r extraction below derives from
     (ask_StableMatcher.py:394-447 keeps round_results whole before
     slicing)."""
-    return stable_match(_preferences(spark, "ehr"), top_k=5).withColumn(
-        "round", F.col("round").cast("int")
-    )
+    return stable_rounds(preferences(spark, "ehr"))
 
 
 def _ehr_round2_oracle() -> str:
@@ -297,7 +226,7 @@ def q_ehr_round2_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the short-case fallback stays pinned by the synthetic golden and
     unit fixtures).  Oracle derives the same extraction in SQL from the
     pinned full-rounds VALUES."""
-    return round_r(stable_match(_preferences(spark, "ehr"), top_k=5), 2)
+    return round_matches(preferences(spark, "ehr"), 2)
 
 
 # -- J3 bidirectional merge + W2 top-k sweep on the real dataset --------------
@@ -357,9 +286,7 @@ def q_ehr_bidirectional_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 on real data: the multiply/zero-drop bidirectional merge over
     both sides of the 52-case EHR candidates.  The oracle re-derives both
     direction scores and the merge in SQL from the catalog VALUES."""
-    from ..operators.candidates import bidirectional_merge
-
-    return bidirectional_merge(_preferences(spark, "ehr"), agg="multiply")
+    return bidirectional_merge(preferences(spark, "ehr"), agg="multiply")
 
 
 def _topk_ranked_cte() -> str:
@@ -398,21 +325,7 @@ def q_ehr_topk_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRF1 vs gold — W2 and A9 exercised together over all five k values in
     ONE plan (the k dimension is a 5-row broadcast, so the merged frame is
     scored once, not five times).  Oracle fully derived in SQL."""
-    from ..operators.candidates import bidirectional_merge, top_k_per_query
-
-    merged = bidirectional_merge(_preferences(spark, "ehr"), agg="avg")
-    topk = top_k_per_query(merged, 5)
-    ks = local_df(spark, [(k,) for k in range(1, 6)], "k int")
-    pred = (
-        topk.crossJoin(F.broadcast(ks))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("k", "case_id", "src", "tgt")
-    )
-    gold = dataset_gold_df(spark, "ehr").crossJoin(F.broadcast(ks))
-    counts = confusion_counts(pred, gold, group_cols=["k"])
-    return prf1_columns(counts).select(
-        "k", "case_id", "tp", "fp", "fn", "precision", "recall", "f1"
-    )
+    return topk_sweep_prf1(preferences(spark, "ehr"), dataset_gold_df(spark, "ehr"))
 
 
 def _ehr_bidir_f1_oracle() -> str:
@@ -430,14 +343,7 @@ def q_ehr_bidirectional_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     data: J3 merge → best alignment per target attr → per-case PRF1 vs
     gold, oracle fully derived in SQL (the AN-1 row of the k-sweep as its
     own first-class entry, mirroring the reference's reported setting)."""
-    from ..operators.candidates import bidirectional_merge, top_k_per_query
-
-    merged = bidirectional_merge(_preferences(spark, "ehr"), agg="avg")
-    pred = top_k_per_query(merged, 1).select("case_id", "src", "tgt")
-    counts = confusion_counts(pred, dataset_gold_df(spark, "ehr"))
-    return prf1_columns(counts).select(
-        "case_id", "tp", "fp", "fn", "precision", "recall", "f1"
-    )
+    return case_prf1(bidir_top1(preferences(spark, "ehr")), dataset_gold_df(spark, "ehr"))
 
 
 # -- seed-ensemble experiment on the real dataset (FULLY-DERIVED oracle) ------
@@ -511,38 +417,8 @@ def q_ehr_ensemble_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-seed md5-dropout runs, majority vote (ties kept), per-case PRF1 vs
     gold.  The oracle re-derives every stage in SQL from the independently
     parsed catalog — no pinned golden anywhere in this check."""
-    from ..functions.determinism import det_rand
-    from ..operators.candidates import NO_MATCH
-    from ..operators.ensembles import ensemble_majority
-    from .matching import ENSEMBLE_SEEDS
-
-    prefs = _preferences(spark, "ehr").filter(
-        (F.col("side") == "n_to_one") & (F.col("candidate_attr") != NO_MATCH)
-    )
-    seeds = local_df(spark, [(s,) for s in ENSEMBLE_SEEDS], "seed int")
-    from pyspark.sql import Window as W
-
-    perturbed = prefs.crossJoin(F.broadcast(seeds)).filter(
-        det_rand(F.col("seed"), "case_id", "query_attr", "candidate_attr") >= 0.15
-    )
-    win = W.partitionBy("seed", "case_id", "query_attr").orderBy(
-        F.desc("score_milli"), F.asc("candidate_attr")
-    )
-    runs = (
-        perturbed.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") == 1)
-        .select(
-            "seed",
-            "case_id",
-            F.col("candidate_attr").alias("src"),
-            F.col("query_attr").alias("tgt"),
-        )
-    )
-    majority = ensemble_majority(runs).select("case_id", "src", "tgt")
-    counts = confusion_counts(majority, dataset_gold_df(spark, "ehr"))
-    return prf1_columns(counts).select(
-        "case_id", "tp", "fp", "fn", "precision", "recall", "f1"
-    )
+    majority = ensemble_majority(seed_runs(preferences(spark, "ehr")))
+    return case_prf1(majority.select("case_id", "src", "tgt"), dataset_gold_df(spark, "ehr"))
 
 
 # -- per-dataset experiment summary (the reference's reported table) -----------
@@ -582,7 +458,6 @@ def q_real_benchmarks_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmarks in one plan (eval_dataset.py's per-dataset rollup on
     MIMIC→OMOP and Synthea→OMOP).  Built as a union of the two per-case
     PRF1 frames — the capstone over the round-6 real-data path."""
-    milli = lambda c: F.round(F.col(c) * 1_000_000, 0).cast("bigint")  # noqa: E731
     out = None
     for name in ("ehr", "synthea"):
         df = _f1_df(spark, name).withColumn("dataset", F.lit(name))
@@ -592,9 +467,7 @@ def q_real_benchmarks_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("tp").cast("bigint").alias("total_tp"),
         F.sum("fp").cast("bigint").alias("total_fp"),
         F.sum("fn").cast("bigint").alias("total_fn"),
-        ((F.sum(milli("precision")) / F.lit(1_000_000.0)) / F.count(F.lit(1))).alias("mean_precision"),
-        ((F.sum(milli("recall")) / F.lit(1_000_000.0)) / F.count(F.lit(1))).alias("mean_recall"),
-        ((F.sum(milli("f1")) / F.lit(1_000_000.0)) / F.count(F.lit(1))).alias("mean_f1"),
+        *(exact_mean(m).alias(f"mean_{m}") for m in ("precision", "recall", "f1")),
     )
 
 
@@ -658,32 +531,8 @@ def q_ehr_effort_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     together on the real benchmark.  TN comes from the catalog's target
     columns (one anti-join vs the gold∪pred covered set); every division
     is exact-bigint over exact-bigint, so the doubles are engine-identical."""
-    from ..operators.metrics import tn_counts
-    from ..sources.dataset_json import catalog_from_cases
-
-    pred = _round1(spark, "ehr")
-    gold = dataset_gold_df(spark, "ehr")
-    counts = prf1_columns(confusion_counts(pred, gold))
-    tgt_cols = (
-        catalog_from_cases(dataset_cases_df(spark, "ehr"))
-        .filter(F.col("side") == "target")
-        .select("case_id", F.col("col_name").alias("tgt"))
-    )
-    tn = tn_counts(pred, gold, tgt_cols)
-    ncols = tgt_cols.groupBy("case_id").agg(
-        F.count(F.lit(1)).alias("n_target_cols")
-    )
-    len_gold = gold.groupBy("case_id").agg(F.count(F.lit(1)).alias("len_gold"))
-    out = (
-        counts.join(ncols, "case_id")
-        .join(len_gold, "case_id")
-        .join(tn, "case_id", "left")
-        .withColumn("tn", F.coalesce(F.col("tn"), F.lit(0)).cast("bigint"))
-    )
-    tp, fp, fn, tncol = (F.col(c) for c in ("tp", "fp", "fn", "tn"))
-    return out.select(
-        "case_id", "tp", "fp", "fn", "tn", "precision", "recall", "f1",
-        ((tp + tncol) / F.col("n_target_cols")).alias("accuracy"),
-        ((tp + tncol) / (tp + tncol + fp + fn)).alias("accuracy2"),
-        ((3 * fn + fp) / F.col("len_gold")).alias("effort"),
+    return prf1e(
+        round_matches(preferences(spark, "ehr"), 1),
+        dataset_gold_df(spark, "ehr"),
+        case_catalog(spark, "ehr"),
     )

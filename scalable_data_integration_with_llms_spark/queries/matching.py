@@ -1,6 +1,9 @@
 """Schema-matching pipeline surface: candidate generation → mock-LLM scoring
 → preference ranking → bidirectional merge → top-k → seed ensembles → stable
 matching (SURVEY §3.1–§3.2 end-to-end, operators J1/J3/W1/W2/SO1-SO3/A3/U2/U6).
+Each stage is defined once here; the static cases, the real benchmarks
+(ehr_q.py) and the case-dimension scale probe (tools/prompt_scale.py) all
+compose the same functions.
 
 Oracle strategy: the matching cases are driver-side constants
 (catalog/cases.py), rendered as a VALUES relation for DuckDB; both engines
@@ -13,23 +16,28 @@ one rows-only entry here; its semantics are pinned by unit fixtures instead
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..caching import SessionMemo
 from ..catalog.cases import case_catalog_df, cases_values_sql, gold_values_sql
 from ..functions.determinism import TWO_60_SQL, det_rand, hash60_sql
+from ..functions.localframe import local_df
 from ..llm.boundary import mock_score_candidates
 from ..operators.candidates import (
     NO_MATCH,
     bidirectional_merge,
     generate_candidates,
     rank_preferences,
+    top_k_per_query,
 )
 from ..operators.ensembles import ensemble_intersection, ensemble_majority, ensemble_union
-from ..operators.stable_matching import stable_match
+from ..operators.metrics import case_prf1
+from ..operators.stable_matching import round_r, stable_match
+from ..sources.dataset_json import catalog_from_cases, load_dataset_json
 from .registry import query
-from ..functions.localframe import local_df
 
 # The reference's full 4-seed ensemble list (ask_StableMatcher.py:254:
 # seeds = [7564, 268799, 87849, 333]; sample_nums=[4] uses all four).
@@ -99,29 +107,132 @@ merged AS (
 """
 
 
-_PREFS_MEMO = SessionMemo()
+# ---------------------------------------------------------------------------
+# the pipeline stages, each written once: the static cases' queries below,
+# the EHR/Synthea benchmark queries (ehr_q.py) and tools/prompt_scale.py all
+# compose these
+# ---------------------------------------------------------------------------
+
+_FIXTURE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures"
+)
+
+# Python tasks of the mock scorer, per case set.  The static set is a few
+# hundred candidate rows: one Arrow batch through one worker beats a worker
+# per partition.  On the benchmarks the scorer is the pipeline's dominant
+# compute (~29k EHR candidate rows of per-pair Python levenshtein: ~5.7 s
+# on ONE task, profiled r14) and the score is per-row deterministic, so 8
+# tasks are result-identical and cut the cold build ~6×.  Eight, not 32:
+# each task pays Python-worker spin-up, and with a REAL inference backend
+# each task is a concurrent request stream.
+SCORER_TASKS = {"static": 1, "ehr": 8, "synthea": 8}
 
 
-def _spark_preferences(spark: SparkSession) -> DataFrame:
-    """Scored+ranked preference frame for the static matching cases.
+def dataset_cases_df(spark: SparkSession, dataset: str) -> DataFrame:
+    """A committed benchmark (``fixtures/<dataset>_dataset.json``) through
+    the S1 dataset-JSON scan (the loader whose layout parity with the
+    reference is pinned by tests/test_dataset_loaders.py)."""
+    return load_dataset_json(
+        spark, os.path.join(_FIXTURE_DIR, f"{dataset}_dataset.json")
+    )
+
+
+def case_catalog(spark: SparkSession, cases: str) -> DataFrame:
+    """``(case_id, side, col_name, col_type)`` of a case set: ``static``
+    (catalog/cases.py) or a committed benchmark (``ehr``, ``synthea``)."""
+    if cases == "static":
+        return case_catalog_df(spark)
+    return catalog_from_cases(dataset_cases_df(spark, cases)).select(
+        "case_id", "side", "col_name", "col_type"
+    )
+
+
+def score_and_rank(catalog: DataFrame, scorer_tasks: int) -> DataFrame:
+    """J1 candidates → U2 mock-LLM scoring on ``scorer_tasks`` Python
+    tasks → W1 preference ranking."""
+    cands = generate_candidates(catalog).coalesce(scorer_tasks)
+    return rank_preferences(mock_score_candidates(cands))
+
+
+_PREFS_MEMOS = {cases: SessionMemo() for cases in SCORER_TASKS}
+
+
+def preferences(spark: SparkSession, cases: str = "static") -> DataFrame:
+    """Scored+ranked preference frame of a case set.
 
     Persisted and memoized per session (caching.SessionMemo — keyed by the
     live session object, so a recycled id can never serve a dead session's
     frame): the frame feeds many downstream consumers (both merge
-    directions, ensembles, metrics), and without a persist every consumer
-    would re-run the mapInPandas scorer — the exact recompute trap SURVEY
-    §4 warns about for sampled/external-call frames.
+    directions, ensembles, stable matching, metrics), and without a persist
+    every consumer would re-run the mapInPandas scorer — the exact
+    recompute trap SURVEY §4 warns about for sampled/external-call frames.
+    Coalesced after the ranking shuffle so every consumer schedules few
+    tasks.
     """
 
     def build() -> DataFrame:
-        # coalesce(1) before the Python boundary: the static case set is a
-        # few hundred rows, and one Arrow batch through one Python worker
-        # beats spinning a worker per partition; coalesce again after the
-        # ranking shuffle so every consumer schedules few tasks
-        cands = generate_candidates(case_catalog_df(spark)).coalesce(1)
-        return rank_preferences(mock_score_candidates(cands)).coalesce(4)
+        catalog = case_catalog(spark, cases)
+        return score_and_rank(catalog, SCORER_TASKS[cases]).coalesce(4)
 
-    return _PREFS_MEMO.get_or_build(spark, build)
+    return _PREFS_MEMOS[cases].get_or_build(spark, build)
+
+
+def seed_runs(prefs: DataFrame) -> DataFrame:
+    """SO1 seed runs ``(seed, case_id, src, tgt)``: each seed drops ~15% of
+    the n→1 candidates (md5 randomness, mirroring how seed-varied prompts
+    change answers) and keeps each target attr's best survivor."""
+    seeds = local_df(prefs.sparkSession, [(s,) for s in ENSEMBLE_SEEDS], "seed int")
+    perturbed = (
+        prefs.filter((F.col("side") == "n_to_one") & (F.col("candidate_attr") != NO_MATCH))
+        .crossJoin(F.broadcast(seeds))
+        .filter(det_rand(F.col("seed"), "case_id", "query_attr", "candidate_attr") >= 0.15)
+    )
+    win = W.partitionBy("seed", "case_id", "query_attr").orderBy(
+        F.desc("score_milli"), F.asc("candidate_attr")
+    )
+    return (
+        perturbed.withColumn("rk", F.row_number().over(win))
+        .filter(F.col("rk") == 1)
+        .select(
+            "seed",
+            "case_id",
+            F.col("candidate_attr").alias("src"),
+            F.col("query_attr").alias("tgt"),
+        )
+    )
+
+
+def stable_rounds(prefs: DataFrame) -> DataFrame:
+    """U6: every Gale–Shapley round ``(case_id, round, src, tgt)`` at top_k=5."""
+    return stable_match(prefs, top_k=5).withColumn("round", F.col("round").cast("int"))
+
+
+def round_matches(prefs: DataFrame, r: int) -> DataFrame:
+    """U6 stable matching at top_k=5 → W3 round-r match set ``(case_id,
+    src, tgt)``."""
+    return round_r(stable_match(prefs, top_k=5), r)
+
+
+def bidir_top1(prefs: DataFrame) -> DataFrame:
+    """J3 avg merge → W2 best alignment ``(case_id, src, tgt)`` per target
+    attr."""
+    merged = bidirectional_merge(prefs, agg="avg")
+    return top_k_per_query(merged, 1).select("case_id", "src", "tgt")
+
+
+def topk_sweep_prf1(prefs: DataFrame, gold: DataFrame) -> DataFrame:
+    """The AN-k sweep (eval/eval_MatchMaker.py:227-244 get_top_k + 386-398
+    k in 1..5): each target attr's k best avg-merged alignments, then
+    per-(k, case) PRF1 vs gold.  The k dimension is a 5-row broadcast, so
+    the merged frame is scored once, not five times."""
+    topk = top_k_per_query(bidirectional_merge(prefs, agg="avg"), 5)
+    ks = local_df(prefs.sparkSession, [(k,) for k in range(1, 6)], "k int")
+    pred = (
+        topk.crossJoin(F.broadcast(ks))
+        .filter(F.col("rank") <= F.col("k"))
+        .select("k", "case_id", "src", "tgt")
+    )
+    return case_prf1(pred, gold.crossJoin(F.broadcast(ks)), group_cols=["k"])
 
 
 # -- J1: candidate generation ------------------------------------------------
@@ -146,7 +257,7 @@ SELECT case_id, side, query_attr, candidate_attr, score_milli, rank, score FROM 
 
 @query("q_mock_match_scores", _SCORES_ORACLE)
 def q_mock_match_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spark_preferences(spark).select(
+    return preferences(spark).select(
         "case_id", "side", "query_attr", "candidate_attr", "score_milli", "rank", "score"
     )
 
@@ -163,7 +274,7 @@ WHERE (fwd_milli * bwd_milli) / 1000000000000.0 <> 0
 
 @query("q_bidirectional_scores", _BIDIR_ORACLE)
 def q_bidirectional_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bidirectional_merge(_spark_preferences(spark), agg="multiply")
+    return bidirectional_merge(preferences(spark), agg="multiply")
 
 
 # -- W2: top-k alignments per target attribute -------------------------------
@@ -182,15 +293,11 @@ SELECT case_id, src, tgt, score, rank FROM (
 
 @query("q_topk_alignments", _TOPK_ORACLE)
 def q_topk_alignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.candidates import top_k_per_query
-
-    merged = bidirectional_merge(_spark_preferences(spark), agg="avg")
+    merged = bidirectional_merge(preferences(spark), agg="avg")
     return top_k_per_query(merged, 2).select("case_id", "src", "tgt", "score", "rank")
 
 
 # -- seed-run ensembles (SO1/SO2/A3) -----------------------------------------
-# Seed runs are simulated by deterministically dropping ~15% of candidates per
-# seed (md5 randomness), mirroring how seed-varied prompts change answers.
 
 _SEEDS_SQL = ", ".join(f"({s})" for s in ENSEMBLE_SEEDS)
 
@@ -219,34 +326,7 @@ _RUNS_MEMO = SessionMemo()
 
 
 def _spark_runs(spark: SparkSession) -> DataFrame:
-    def build() -> DataFrame:
-        prefs = _spark_preferences(spark)
-        seeds = local_df(spark, [(s,) for s in ENSEMBLE_SEEDS], "seed int")
-        perturbed = (
-            prefs.filter(
-                (F.col("side") == "n_to_one") & (F.col("candidate_attr") != NO_MATCH)
-            )
-            .crossJoin(F.broadcast(seeds))
-            .filter(
-                det_rand(F.col("seed"), "case_id", "query_attr", "candidate_attr") >= 0.15
-            )
-        )
-        win = W.partitionBy("seed", "case_id", "query_attr").orderBy(
-            F.desc("score_milli"), F.asc("candidate_attr")
-        )
-        return (
-            perturbed.withColumn("rk", F.row_number().over(win))
-            .filter(F.col("rk") == 1)
-            .select(
-                "seed",
-                "case_id",
-                F.col("candidate_attr").alias("src"),
-                F.col("query_attr").alias("tgt"),
-            )
-            .coalesce(4)
-        )
-
-    return _RUNS_MEMO.get_or_build(spark, build)
+    return _RUNS_MEMO.get_or_build(spark, lambda: seed_runs(preferences(spark)).coalesce(4))
 
 
 _UNION_ORACLE = _runs_cte() + "SELECT DISTINCT case_id, src, tgt FROM runs"
@@ -606,9 +686,7 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the orderkeys); the algorithm's semantics are separately pinned by
     unit fixtures (tests/test_stable_matching.py) and hypothesis property
     tests (tests/test_matching_properties.py)."""
-    return stable_match(_spark_preferences(spark), top_k=5).withColumn(
-        "round", F.col("round").cast("int")
-    )
+    return stable_rounds(preferences(spark))
 
 
 _ROUND2_ORACLE = f"""
@@ -626,9 +704,7 @@ def q_match_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to their last round (ask_StableMatcher.py:374-447).  The oracle
     derives the same extraction in SQL from the pinned stable-matching
     rounds, so W3's pad-with-last semantics are independently checked."""
-    from ..operators.stable_matching import round_r
-
-    return round_r(stable_match(_spark_preferences(spark), top_k=5), 2)
+    return round_matches(preferences(spark), 2)
 
 
 _GOLD_FILTER_ORACLE = _runs_cte() + f""",
@@ -668,7 +744,7 @@ WHERE r.rank < nm.nm_rank
 def q_filtered_preferences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """filtered_preferences (reconstructed): truncate each ranked list at
     the no-match terminator (ask_StableMatcher.py:88-92)."""
-    prefs = _spark_preferences(spark)
+    prefs = preferences(spark)
     nm = prefs.filter(F.col("candidate_attr") == NO_MATCH).select(
         "case_id", "side", "query_attr", F.col("rank").alias("nm_rank")
     )
@@ -689,6 +765,6 @@ def q_stable_matching_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     must produce byte-identical rounds."""
     from ..operators.stable_matching_dist import stable_match_distributed
 
-    return stable_match_distributed(_spark_preferences(spark), top_k=5).withColumn(
+    return stable_match_distributed(preferences(spark), top_k=5).withColumn(
         "round", F.col("round").cast("int")
     )

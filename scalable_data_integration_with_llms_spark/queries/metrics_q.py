@@ -12,10 +12,10 @@ from ..caching import SessionMemo
 from ..catalog.cases import case_catalog_df, gold_alignments_df, gold_values_sql
 from ..catalog.schema_catalog import testdata_catalog
 from ..operators.audit import audit_relation
-from ..operators.candidates import NO_MATCH, bidirectional_merge
-from ..operators.metrics import confusion_counts, mean_ci95, mrr, pass_rate, prf1_columns, tn_counts
+from ..operators.candidates import NO_MATCH
+from ..operators.metrics import case_prf1, exact_mean, mean_ci95, mrr, pass_rate, prf1e
 from ..sources.readers import load_table
-from .matching import _base_cte, _runs_cte, _spark_preferences, _spark_runs
+from .matching import _base_cte, _runs_cte, _spark_runs, bidir_top1, preferences, round_matches
 from .registry import query
 
 
@@ -26,23 +26,14 @@ def _predicted_top1(spark: SparkSession) -> DataFrame:
     """Deterministic predicted alignments: best avg-merged candidate per
     (case, target attr).
 
-    Memoized+persisted per session like ``_spark_preferences``
+    Memoized+persisted per session like ``preferences``
     (caching.SessionMemo — live-object keys, stopped sessions evicted): the
     frame is a few hundred rows but its plan (bidirectional merge + rank
     window) is rebuilt by every metrics consumer (PRF1, MRR, category
     rollup) — caching the OUTPUT collapses those to an InMemoryTableScan."""
-
-    def build() -> DataFrame:
-        merged = bidirectional_merge(_spark_preferences(spark), agg="avg")
-        win = W.partitionBy("case_id", "tgt").orderBy(F.desc("score"), F.asc("src"))
-        return (
-            merged.withColumn("rk", F.row_number().over(win))
-            .filter(F.col("rk") == 1)
-            .select("case_id", "src", "tgt")
-            .coalesce(1)
-        )
-
-    return _PRED_MEMO.get_or_build(spark, build)
+    return _PRED_MEMO.get_or_build(
+        spark, lambda: bidir_top1(preferences(spark)).coalesce(1)
+    )
 
 
 _PRED_CTE = """,
@@ -104,30 +95,7 @@ JOIN gold_sizes USING (case_id)
 
 @query("q_alignment_prf1", _PRF1_ORACLE)
 def q_alignment_prf1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pred = _predicted_top1(spark)
-    gold = gold_alignments_df(spark)
-    catalog = case_catalog_df(spark)
-    target_cols = catalog.filter(F.col("side") == "target").select(
-        "case_id", F.col("col_name").alias("tgt")
-    )
-    counts = confusion_counts(pred, gold)
-    scored = prf1_columns(counts)
-    tn = tn_counts(pred, gold, target_cols)
-    sizes = target_cols.groupBy("case_id").agg(F.count(F.lit(1)).alias("n_target"))
-    gold_sizes = gold.groupBy("case_id").agg(F.count(F.lit(1)).alias("n_gold"))
-    tp, fp, fn, tn_c = F.col("tp"), F.col("fp"), F.col("fn"), F.col("tn")
-    return (
-        scored.join(tn, "case_id", "left")
-        .fillna(0, ["tn"])
-        .join(sizes, "case_id")
-        .join(gold_sizes, "case_id")
-        .select(
-            "case_id", "tp", "fp", "fn", "tn", "precision", "recall", "f1",
-            ((tp + tn_c) / F.col("n_target")).alias("accuracy"),
-            ((tp + tn_c) / (tp + tn_c + fp + fn)).alias("accuracy2"),
-            ((3 * fn + fp) / F.col("n_gold")).alias("effort"),
-        )
-    )
+    return prf1e(_predicted_top1(spark), gold_alignments_df(spark), case_catalog_df(spark))
 
 
 # -- A8: mean reciprocal rank ------------------------------------------------
@@ -152,7 +120,7 @@ GROUP BY case_id
 
 @query("q_mrr", _MRR_ORACLE)
 def q_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prefs = _spark_preferences(spark).filter(F.col("side") == "n_to_one")
+    prefs = preferences(spark).filter(F.col("side") == "n_to_one")
     return mrr(prefs, gold_alignments_df(spark))
 
 
@@ -195,8 +163,7 @@ def q_metric_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     gold = gold_alignments_df(spark)
     p = runs.select("seed", "case_id", "src", "tgt")
     g = gold.crossJoin(F.broadcast(p.select("seed").distinct()))
-    per_case = confusion_counts(p, g, group_cols=["seed"])
-    f1 = prf1_columns(per_case).withColumn(
+    f1 = case_prf1(p, g, group_cols=["seed"]).withColumn(
         "f1_milli", F.round(F.col("f1") * 1_000_000, 0).cast("bigint")
     )
     return mean_ci95(f1, F.col("f1_milli"), ["seed"])
@@ -245,7 +212,7 @@ GROUP BY case_id
 def q_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parsed top-1 view with 'null' no-match markers (P3 remove_nulls +
     A13 coverage, eval_utils.py:459-508)."""
-    prefs = _spark_preferences(spark)
+    prefs = preferences(spark)
     parsed = (
         prefs.filter((F.col("side") == "n_to_one") & (F.col("rank") == 1))
         .select(
@@ -355,15 +322,14 @@ def q_metrics_by_category(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_target"))
     )
     bucket = F.when(F.col("n_target") >= 6, "wide").otherwise("narrow")
-    milli = lambda c: F.round(F.col(c) * 1_000_000, 0).cast("bigint")  # noqa: E731
     return (
         percase.join(sizes, "case_id")
         .withColumn("size_bucket", bucket)
         .groupBy("size_bucket")
         .agg(
             F.count(F.lit(1)).alias("n_cases"),
-            ((F.sum(milli("f1")) / F.lit(1_000_000.0)) / F.count(F.lit(1))).alias("mean_f1"),
-            ((F.sum(milli("recall")) / F.lit(1_000_000.0)) / F.count(F.lit(1))).alias("mean_recall"),
+            exact_mean("f1").alias("mean_f1"),
+            exact_mean("recall").alias("mean_recall"),
         )
     )
 
@@ -420,18 +386,10 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-1 matches scored against gold → corpus-level mean P/R/F1.  This
     is the query a user of the reference runs end to end; every stage is
     the same operator the individual queries exercise."""
-    from ..operators.stable_matching import round_r, stable_match
-
-    matches = round_r(stable_match(_spark_preferences(spark), top_k=5), 1)
-    gold = gold_alignments_df(spark)
-    counts = confusion_counts(matches.select("case_id", "src", "tgt"), gold)
-    scored = prf1_columns(counts)
-    milli = lambda c: F.round(F.col(c) * 1_000_000, 0).cast("bigint")  # noqa: E731
+    scored = case_prf1(round_matches(preferences(spark), 1), gold_alignments_df(spark))
     return scored.agg(
         F.count(F.lit(1)).alias("n_cases"),
-        ((F.sum(milli("precision")) / F.lit(1_000_000.0)) / F.count(F.lit(1))).alias("mean_precision"),
-        ((F.sum(milli("recall")) / F.lit(1_000_000.0)) / F.count(F.lit(1))).alias("mean_recall"),
-        ((F.sum(milli("f1")) / F.lit(1_000_000.0)) / F.count(F.lit(1))).alias("mean_f1"),
+        *(exact_mean(m).alias(f"mean_{m}") for m in ("precision", "recall", "f1")),
     )
 
 
@@ -555,7 +513,7 @@ SELECT * FROM conf_metrics
 
 
 def _confidence_answers(spark: SparkSession) -> DataFrame:
-    prefs = _spark_preferences(spark).filter(F.col("side") == "n_to_one")
+    prefs = preferences(spark).filter(F.col("side") == "n_to_one")
     win = W.partitionBy("case_id", "query_attr")
     best = F.max(
         F.when(F.col("candidate_attr") != NO_MATCH, F.col("score_milli"))
@@ -608,11 +566,7 @@ def q_confidence_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_case = confidence_metrics(
         confidence_counts(_confidence_answers(spark), gold_alignments_df(spark))
     )
-    micro = lambda c: F.round(F.col(c) * 1000000, 0).cast("bigint")  # noqa: E731
     return per_case.groupBy("metric_group").agg(
         F.count(F.lit(1)).alias("n_cases"),
-        (F.sum(micro("precision")) / 1e6 / F.count(F.lit(1))).alias("mean_precision"),
-        (F.sum(micro("recall")) / 1e6 / F.count(F.lit(1))).alias("mean_recall"),
-        (F.sum(micro("accuracy")) / 1e6 / F.count(F.lit(1))).alias("mean_accuracy"),
-        (F.sum(micro("f1")) / 1e6 / F.count(F.lit(1))).alias("mean_f1"),
+        *(exact_mean(m).alias(f"mean_{m}") for m in ("precision", "recall", "accuracy", "f1")),
     )

@@ -27,7 +27,7 @@ from ..functions.chat import chat_prompt
 from ..functions.determinism import TWO_60_SQL, hash60_sql
 from ..functions.text import token_count
 from ..operators.candidates import NO_MATCH
-from .matching import _base_cte, _spark_preferences
+from .matching import _base_cte, preferences
 from .registry import query
 
 _DATASET = "tpch"  # fixture dataset key for MM_SCHEMA_NAME
@@ -231,7 +231,7 @@ def _sorted_source_agg(spark: SparkSession, part: F.Column) -> DataFrame:
 def _ranked_options(spark: SparkSession) -> DataFrame:
     """Per (case, target attr): candidate ``name(type)`` strings in rank
     order (the engine's canonical candidate list)."""
-    prefs = _spark_preferences(spark).filter(
+    prefs = preferences(spark).filter(
         (F.col("side") == "n_to_one") & (F.col("candidate_attr") != NO_MATCH)
     )
     opt = F.concat(
@@ -499,7 +499,7 @@ def q_mm_prompts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-k among the REAL candidates: the rank column numbers the no-match
     # sentinel too, so slice the rank-sorted candidate array instead of
     # filtering on rank (a sentinel inside the top-k would shorten the list)
-    prefs = _spark_preferences(spark).filter(
+    prefs = preferences(spark).filter(
         (F.col("side") == "n_to_one") & (F.col("candidate_attr") != NO_MATCH)
     )
     answers = prefs.groupBy("case_id", "query_attr").agg(
@@ -862,7 +862,7 @@ def q_example_selector_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     on ties; the engine uses the explicit case ordinal as the tiebreak —
     same order, shuffle-safe.  One tiny coverage dimension (broadcast) +
     a per-target window."""
-    prefs = _spark_preferences(spark)
+    prefs = preferences(spark)
     cov = (
         prefs.filter((F.col("side") == "n_to_one") & (F.col("rank") == 1))
         .groupBy("case_id")

@@ -27,7 +27,7 @@ from ..operators.validation import (
     validate_pairs,
 )
 from ..sources.readers import load_table
-from .matching import ENSEMBLE_SEEDS, _base_cte, _spark_preferences
+from .matching import ENSEMBLE_SEEDS, _base_cte, preferences
 from .registry import query
 from ..functions.localframe import local_df
 
@@ -257,7 +257,7 @@ def _case_coverage(spark: SparkSession) -> DataFrame:
     coverage definition must be literally shared, round-6 review)."""
     from ..operators.candidates import NO_MATCH
 
-    prefs = _spark_preferences(spark).filter(F.col("side") == "n_to_one")
+    prefs = preferences(spark).filter(F.col("side") == "n_to_one")
     return prefs.groupBy("case_id").agg(
         (
             F.sum(
@@ -394,7 +394,7 @@ FROM (SELECT DISTINCT case_id, query_attr FROM scored WHERE side = 'n_to_one') s
 @query("q_gold_in_options", _IN_OPTIONS_ORACLE)
 def q_gold_in_options(spark: SparkSession, sf_dir: str) -> DataFrame:
     """is_in_the_options (eval_confidence_score.py:7-9)."""
-    prefs = _spark_preferences(spark).filter(F.col("side") == "n_to_one")
+    prefs = preferences(spark).filter(F.col("side") == "n_to_one")
     gold = gold_alignments_df(spark)
     hit = prefs.join(
         gold,
@@ -445,7 +445,7 @@ def q_softmax_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stable softmax over candidate scores (llm_classes.py:167-176).
     The exp-sum is the one double aggregate that cannot be integer-scaled;
     rounded to 9 dp on both engines."""
-    prefs = _spark_preferences(spark)
+    prefs = preferences(spark)
     win = W.partitionBy("case_id", "side", "query_attr")
     mx = F.max("score_milli").over(win)
     e = F.exp((F.col("score_milli") - mx) / F.lit(1_000_000.0))
@@ -475,7 +475,7 @@ FROM (
 def q_prompt_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MCQ prompt strings: ranked options lettered A.. (F13), schema intro
     (P1), token budget count (U4's whitespace proxy)."""
-    prefs = _spark_preferences(spark).filter(F.col("side") == "n_to_one")
+    prefs = preferences(spark).filter(F.col("side") == "n_to_one")
     part = F.concat(
         F.lit("("), F.char(F.col("rank") + 64), F.lit(") "), F.col("candidate_attr")
     )
@@ -538,7 +538,7 @@ def q_chat_prompt(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-oracle-checkable."""
     from ..functions.chat import chat_prompt
 
-    prefs = _spark_preferences(spark).filter(F.col("side") == "n_to_one")
+    prefs = preferences(spark).filter(F.col("side") == "n_to_one")
     part = F.concat(
         F.lit("("), F.char(F.col("rank") + 64), F.lit(") "), F.col("candidate_attr")
     )
@@ -752,9 +752,8 @@ def q_topk_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-level TP/FP/FN + P/R per k, computed in one pass over the ranked
     alignments crossed with the k dimension."""
     from ..operators.candidates import bidirectional_merge, top_k_per_query
-    from .matching import _spark_preferences
 
-    merged = bidirectional_merge(_spark_preferences(spark), agg="avg")
+    merged = bidirectional_merge(preferences(spark), agg="avg")
     ranked = top_k_per_query(merged, 3)  # rank <= max k
     ks = spark.range(1, 4).select(F.col("id").cast("int").alias("k"))
     gold = gold_alignments_df(spark)

@@ -546,17 +546,27 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         if q.name == "sdi_stream_cdc":
             q.stop()
     # fresh checkpoint per invocation: a reused one would mark the source
-    # files already-processed and the second call would drain ZERO batches
+    # files already-processed and the second call would drain ZERO batches;
+    # removed after the drain (the snapshot is a local checkpoint, it does
+    # not read the streaming checkpoint)
+    import shutil
     import tempfile
 
-    handle = (
-        stream.writeStream.foreachBatch(upsert)
-        .queryName("sdi_stream_cdc")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sdi_ckpt_cdc_"))
-        .start()
-    )
-    handle.awaitTermination()
+    ckpt = tempfile.mkdtemp(prefix="sdi_ckpt_cdc_")
+    handle = None
+    try:
+        handle = (
+            stream.writeStream.foreachBatch(upsert)
+            .queryName("sdi_stream_cdc")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        handle.awaitTermination()
+    finally:
+        if handle is not None and handle.isActive:
+            handle.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     snap = state["snap"]
     return snap.filter(F.col("last.event_type") != "error").select(
         "user_id",
@@ -802,13 +812,26 @@ FROM ranked WHERE rn = 1
 """
 
 
-@query("q_exactly_once_sink", _EXACTLY_ONCE_ORACLE)
-def q_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _sink_event_batches(spark: SparkSession, sf_dir: str, prefix: str):
+    """A fresh TxnParquetSink with ``events`` applied as 4 deterministic
+    micro-batches (md5 of event_id).  Returns the sink, the events frame
+    and ``batch(b)``, micro-batch b's frame.
+
+    The bucketed frame is persisted EAGERLY, then the 4 applies OVERLAP
+    (guide §2.6): each batch writes its own partition dir and commits its
+    own marker, so the commit protocol is batch-independent by
+    construction and the 4 count+write action pairs run as concurrent
+    jobs — the scheduler back-fills each job's straggler tail with the
+    next job's tasks, collapsing 8 sequential ~0.1–0.3 s actions (the
+    job-latency floor) into ~2 concurrent waves.  Eager matters here: 4
+    threads taking their FIRST action on a lazily-persisted frame would
+    each recompute the scan+md5 bucket (caching.scoped_persist note)."""
     import tempfile
+    from concurrent.futures import ThreadPoolExecutor
 
     from ..sources.txn_sink import TxnParquetSink
 
-    sink = TxnParquetSink(tempfile.mkdtemp(prefix="sdi_txn_sink_"))
+    sink = TxnParquetSink(tempfile.mkdtemp(prefix=prefix))
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts"
     )
@@ -817,35 +840,19 @@ def q_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long"),
         F.lit(4),
     )
-    # persist EAGERLY, then OVERLAP the 4 applies (guide §2.6): each batch
-    # writes its own partition dir and commits its own marker, so the
-    # commit protocol is batch-independent by construction and the 4
-    # count+write action pairs can run as concurrent jobs — the scheduler
-    # back-fills each job's straggler tail with the next job's tasks,
-    # collapsing 8 sequential ~0.1–0.3 s actions (the job-latency floor)
-    # into ~2 concurrent waves.  Eager matters here: 4 threads taking
-    # their FIRST action on a lazily-persisted frame would each recompute
-    # the scan+md5 bucket (caching.scoped_persist note).
-    from concurrent.futures import ThreadPoolExecutor
-
     batched = scoped_persist(events.withColumn("__b", bucket), eager=True)
 
-    def _apply(b: int) -> bool:
-        return sink.apply(batched.filter(F.col("__b") == b).drop("__b"), b)
+    def batch(b: int) -> DataFrame:
+        return batched.filter(F.col("__b") == b).drop("__b")
 
     with ThreadPoolExecutor(max_workers=4) as pool:
-        wrote = list(pool.map(_apply, range(4)))
+        wrote = list(pool.map(lambda b: sink.apply(batch(b), b), range(4)))
     assert all(wrote), f"some batch unexpectedly already committed: {wrote}"
-    # replay: at-least-once delivery hands batch 2 over again — the marker
-    # makes it a no-op, not a duplicate append
-    replay_wrote = sink.apply(batched.filter(F.col("__b") == 2).drop("__b"), 2)
-    assert not replay_wrote, "replayed batch was written twice"
-    # torn write: data lands, the writer dies before the commit marker —
-    # readers must never see this partition
-    events.limit(50).write.mode("overwrite").parquet(
-        f"{sink.data_dir}/batch_id=9999"
-    )
-    assert sink.committed_ids() == [0, 1, 2, 3]
+    return sink, events, batch
+
+
+def _last_by_user(spark: SparkSession, sink) -> DataFrame:
+    """The sink's upsert view in the oracle's shape."""
     return sink.latest_by_key(
         spark, "user_id", order=["ts", "event_id"], payload=["event_type", "value"]
     ).select(
@@ -854,6 +861,22 @@ def q_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 1000, 0).cast("bigint").alias("last_value_milli"),
         F.col("ts").alias("last_ts"),
     )
+
+
+@query("q_exactly_once_sink", _EXACTLY_ONCE_ORACLE)
+def q_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sink, events, batch = _sink_event_batches(spark, sf_dir, "sdi_txn_sink_")
+    # replay: at-least-once delivery hands batch 2 over again — the marker
+    # makes it a no-op, not a duplicate append
+    replay_wrote = sink.apply(batch(2), 2)
+    assert not replay_wrote, "replayed batch was written twice"
+    # torn write: data lands, the writer dies before the commit marker —
+    # readers must never see this partition
+    events.limit(50).write.mode("overwrite").parquet(
+        f"{sink.data_dir}/batch_id=9999"
+    )
+    assert sink.committed_ids() == [0, 1, 2, 3]
+    return _last_by_user(spark, sink)
 
 
 # The compaction twin: same events, same oracle — after the 4 batches
@@ -866,32 +889,7 @@ def q_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_sink_compaction", _EXACTLY_ONCE_ORACLE)
 def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.txn_sink import TxnParquetSink
-
-    sink = TxnParquetSink(tempfile.mkdtemp(prefix="sdi_txn_compact_"))
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", "ts"
-    )
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit("b:"), F.col("event_id"))), 1, 8), 16, 10)
-        .cast("long"),
-        F.lit(4),
-    )
-    # eager persist + thread-pool applies — same rationale as
-    # q_exactly_once_sink: batches are commit-independent, so their
-    # count+write actions overlap instead of paying 8 sequential job
-    # latencies (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    batched = scoped_persist(events.withColumn("__b", bucket), eager=True)
-
-    def _apply(b: int) -> bool:
-        return sink.apply(batched.filter(F.col("__b") == b).drop("__b"), b)
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        list(pool.map(_apply, range(4)))
+    sink, _, _ = _sink_event_batches(spark, sf_dir, "sdi_txn_compact_")
     # torn compaction: the rewrite landed but the writer died before the
     # superseding marker — the old generation must still serve reads
     sink.snapshot(spark).drop("batch_id").write.mode("overwrite").parquet(
@@ -902,14 +900,7 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert new_id is not None and sink.committed_ids() == [new_id]
     # idempotence carries over: a second compact sees one active batch
     assert sink.compact(spark) is None
-    return sink.latest_by_key(
-        spark, "user_id", order=["ts", "event_id"], payload=["event_type", "value"]
-    ).select(
-        "user_id",
-        F.col("event_type").alias("last_op"),
-        F.round(F.col("value") * 1000, 0).cast("bigint").alias("last_value_milli"),
-        F.col("ts").alias("last_ts"),
-    )
+    return _last_by_user(spark, sink)
 
 
 # Registered last: _register_tws references _NEAR_DUP_GATE_ORACLE and

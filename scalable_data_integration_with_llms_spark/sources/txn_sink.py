@@ -67,6 +67,25 @@ class TxnParquetSink:
                     out[int(f[: -len(".json")])] = json.load(fh)
         return out
 
+    @staticmethod
+    def _superseded(markers: dict[int, dict]) -> set[int]:
+        return {int(b) for m in markers.values() for b in m.get("supersedes", [])}
+
+    def _write_and_commit(self, df: DataFrame, batch_id: int, **extra) -> None:
+        """Write ``df`` as partition ``batch_id``, then commit its marker.
+        Overwrite, not append: a torn previous attempt may have left orphan
+        files in this partition; the retry must replace them, or the
+        eventual commit would expose duplicates."""
+        n_rows = df.count()
+        df.write.mode("overwrite").parquet(
+            os.path.join(self.data_dir, f"batch_id={int(batch_id)}")
+        )
+        marker = self._marker(batch_id)
+        tmp = marker + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump({"batch_id": int(batch_id), "n_rows": n_rows, **extra}, fh)
+        os.rename(tmp, marker)  # the commit point — atomic
+
     def committed_ids(self) -> list[int]:
         """ACTIVE committed batch ids: every committed id minus those a
         committed compaction supersedes.  A compaction whose data landed
@@ -74,28 +93,16 @@ class TxnParquetSink:
         using the original partitions, which is the crash-safety of
         compaction falling out of the same marker rule as ingest."""
         markers = self._markers()
-        superseded = {
-            int(b) for m in markers.values() for b in m.get("supersedes", [])
-        }
+        superseded = self._superseded(markers)
         return sorted(b for b in markers if b not in superseded)
 
     def apply(self, batch_df: DataFrame, batch_id: int) -> bool:
         """Write one micro-batch exactly once.  Returns True when this call
         performed the write, False when ``batch_id`` was already committed
         (the replay path).  Safe to call from ``foreachBatch`` directly."""
-        marker = self._marker(batch_id)
-        if os.path.exists(marker):
+        if os.path.exists(self._marker(batch_id)):
             return False
-        part_dir = os.path.join(self.data_dir, f"batch_id={int(batch_id)}")
-        # overwrite, not append: a torn previous attempt may have left
-        # orphan files in this partition; the retry must replace them, or
-        # the eventual commit would expose duplicates
-        n_rows = batch_df.count()
-        batch_df.write.mode("overwrite").parquet(part_dir)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": int(batch_id), "n_rows": n_rows}, fh)
-        os.rename(tmp, marker)  # the commit point — atomic
+        self._write_and_commit(batch_df, batch_id)
         return True
 
     def compact(self, spark: SparkSession, target_partitions: int | None = None) -> int | None:
@@ -126,16 +133,8 @@ class TxnParquetSink:
         snap = self.snapshot(spark).drop("batch_id")
         if target_partitions:
             snap = snap.repartition(target_partitions)
-        part_dir = os.path.join(self.data_dir, f"batch_id={new_id}")
-        n_rows = snap.count()
-        snap.write.mode("overwrite").parquet(part_dir)
-        marker = self._marker(new_id)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"batch_id": new_id, "n_rows": n_rows, "supersedes": ids}, fh
-            )
-        os.rename(tmp, marker)  # atomic: old generation visible until here
+        # the marker is the commit: the old generation is visible until then
+        self._write_and_commit(snap, new_id, supersedes=ids)
         return new_id
 
     def vacuum(self) -> list[int]:
@@ -151,12 +150,8 @@ class TxnParquetSink:
         whose data was removed."""
         import shutil
 
-        markers = self._markers()
-        superseded = {
-            int(b) for m in markers.values() for b in m.get("supersedes", [])
-        }
         removed = []
-        for b in sorted(superseded):
+        for b in sorted(self._superseded(self._markers())):
             part_dir = os.path.join(self.data_dir, f"batch_id={b}")
             if os.path.isdir(part_dir):
                 shutil.rmtree(part_dir)

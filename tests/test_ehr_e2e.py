@@ -170,12 +170,17 @@ def test_ehr_bidirectional_f1_is_topk_sweep_k1(spark):
 
 
 def test_preferences_parallelism_is_a_parameter(spark):
-    """Non-default partition counts produce the identical frame (only the
-    plan's parallelism moves) and bypass the session memo."""
-    from scalable_data_integration_with_llms_spark.queries.ehr_q import _preferences
+    """The shared score-and-rank stage at another scorer task count
+    produces the memoized frame's rows (only the plan's parallelism
+    moves)."""
+    from scalable_data_integration_with_llms_spark.queries.matching import (
+        case_catalog,
+        preferences,
+        score_and_rank,
+    )
 
-    base = _preferences(spark, "synthea")
-    alt = _preferences(spark, "synthea", scorer_partitions=4, output_partitions=8)
+    base = preferences(spark, "synthea")
+    alt = score_and_rank(case_catalog(spark, "synthea"), 4)
     cols = ["case_id", "side", "query_attr", "candidate_attr", "score_milli", "rank"]
     assert {tuple(r) for r in base.select(*cols).collect()} == {
         tuple(r) for r in alt.select(*cols).collect()

@@ -114,11 +114,6 @@ def test_full_pipeline_on_real_ehr(spark):
     stable matching → round-1 extraction → PRF1 vs the real gold pairs.
     The lexical mock scores what an LLM would; the engine around it is the
     part under test — 52 cases, deterministic metrics, twice."""
-    from scalable_data_integration_with_llms_spark.llm.boundary import mock_score_candidates
-    from scalable_data_integration_with_llms_spark.operators.candidates import (
-        generate_candidates,
-        rank_preferences,
-    )
     from scalable_data_integration_with_llms_spark.operators.metrics import (
         confusion_counts,
         prf1_columns,
@@ -127,12 +122,16 @@ def test_full_pipeline_on_real_ehr(spark):
         round_r,
         stable_match,
     )
+    from scalable_data_integration_with_llms_spark.queries.matching import (
+        SCORER_TASKS,
+        score_and_rank,
+    )
 
     def run():
         cases = load_dataset_json(spark, EHR)
         cat = catalog_from_cases(cases)
-        cands = generate_candidates(cat.select("case_id", "side", "col_name", "col_type"))
-        prefs = rank_preferences(mock_score_candidates(cands))
+        cat = cat.select("case_id", "side", "col_name", "col_type")
+        prefs = score_and_rank(cat, SCORER_TASKS["ehr"])
         matches = round_r(stable_match(prefs, top_k=5), 1)
         gold = cases.select(
             F.col("id").alias("case_id"), F.explode("gold_mapping").alias("p")

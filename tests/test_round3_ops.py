@@ -279,12 +279,20 @@ def test_stream_cdc_matches_batch(spark):
     """The foreachBatch upsert's final snapshot must equal the batch
     compaction — micro-batch boundaries cannot change an associative
     merge."""
+    import glob
+    import os
+    import tempfile
+
     from scalable_data_integration_with_llms_spark.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
+    ckpts = os.path.join(tempfile.gettempdir(), "sdi_ckpt_cdc_*")
+    before = set(glob.glob(ckpts))
     batch = sorted(map(str, QUERIES["q_cdc_apply"](spark, sf).collect()))
     stream = sorted(map(str, QUERIES["q_stream_cdc_apply"](spark, sf).collect()))
     assert batch == stream
+    # the drain's checkpoint directory is removed, not leaked per call
+    assert set(glob.glob(ckpts)) == before
 
 
 def test_round3_late_queries_oracle(spark, duck):

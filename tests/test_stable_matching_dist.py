@@ -16,9 +16,9 @@ from scalable_data_integration_with_llms_spark.operators.stable_matching_dist im
 
 
 def test_static_cases_parity(spark):
-    from scalable_data_integration_with_llms_spark.queries.matching import _spark_preferences
+    from scalable_data_integration_with_llms_spark.queries.matching import preferences
 
-    prefs = _spark_preferences(spark)
+    prefs = preferences(spark)
     ref = sorted(map(str, stable_match(prefs, top_k=2).collect()))
     dist = sorted(
         map(

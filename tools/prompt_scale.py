@@ -18,11 +18,19 @@ exact plan shapes those queries are built from:
   up to the config dimension (the q_question_cost_report /
   q_generate_questions_record shape).
 
+The matching stages (``match_pipeline``, ``matching_f1``, ``bidir_f1``,
+``topk_sweep``) call the stage functions of ``queries/matching.py`` that
+the EHR queries are composed of: the same score-and-rank at the EHR
+scorer task count, the same round-1 / top-1 / k-sweep stages (the k
+dimension is the same ``local_df``) and the same per-case PRF1.  Their
+numbers are the registered queries' own plans over the replicated
+catalog; only the session memo is left out, so every timing re-scores.
+
 Each stage is forced with a sum-of-lengths aggregate so driver transfer
 stays off the clock.  Verdict rule mirrors tools/scale_curve.py scaled to
 the 100× replica point: ratio at 100× cases ≤ 120 is linear-ok.
 
-    python tools/prompt_scale.py          # writes SCALE_CURVE_PROMPT_r06.json
+    python tools/prompt_scale.py          # writes SCALE_CURVE_PROMPT_r07.json
 """
 
 from __future__ import annotations
@@ -37,12 +45,14 @@ sys.path.insert(0, ROOT)
 from pyspark.sql import DataFrame, SparkSession, Window as W  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from scalable_data_integration_with_llms_spark.operators.metrics import case_prf1  # noqa: E402
+from scalable_data_integration_with_llms_spark.queries import matching as M  # noqa: E402
+
 
 def catalog(spark: SparkSession, copies: int) -> DataFrame:
-    from scalable_data_integration_with_llms_spark.queries.ehr_q import dataset_cases_df
     from scalable_data_integration_with_llms_spark.sources.dataset_json import catalog_from_cases
 
-    base = catalog_from_cases(dataset_cases_df(spark, "ehr")).withColumn(
+    base = catalog_from_cases(M.dataset_cases_df(spark, "ehr")).withColumn(
         "col_idx",
         F.row_number().over(
             W.partitionBy("case_id", "side").orderBy("col_name")
@@ -152,50 +162,12 @@ def cost_report(spark: SparkSession, cat: DataFrame) -> DataFrame:
     )
 
 
-def match_pipeline(spark: SparkSession, cat: DataFrame) -> DataFrame:
-    """The core matching pipeline across the case dimension: candidates →
-    mock scoring (mapInPandas) → ranking → per-case Gale–Shapley
-    (applyInPandas) → round-1 extraction.  THE at-scale shape of the
-    engine (millions of independent cases on a corpus feed)."""
-    from scalable_data_integration_with_llms_spark.operators.stable_matching import (
-        round_r,
-        stable_match,
+def _prefs(cat: DataFrame) -> DataFrame:
+    """The benchmark queries' score-and-rank stage at their scorer task
+    count, over the replicated catalog (no memo: each timing rebuilds it)."""
+    return M.score_and_rank(
+        cat.select("case_id", "side", "col_name", "col_type"), M.SCORER_TASKS["ehr"]
     )
-
-    matched = round_r(stable_match(_ranked_prefs(cat), top_k=5), 1)
-    return matched.select(
-        "case_id", F.concat("src", F.lit(">"), "tgt").alias("prompt")
-    )
-
-
-def matching_f1(spark: SparkSession, cat: DataFrame) -> DataFrame:
-    """The full reproduced experiment (q_ehr_matching_f1's plan) across the
-    case dimension: match_pipeline's stages plus the gold confusion join
-    and per-case PRF1 — gold pairs replicated with the same disjoint case
-    ids, so the metric tail scales with the cases exactly like the
-    pipeline head does."""
-    from scalable_data_integration_with_llms_spark.operators.metrics import (
-        confusion_counts,
-        prf1_columns,
-    )
-    from scalable_data_integration_with_llms_spark.operators.stable_matching import (
-        round_r,
-        stable_match,
-    )
-
-    pred = round_r(stable_match(_ranked_prefs(cat), top_k=5), 1)
-    return prf1_columns(confusion_counts(pred, _replicated_gold(spark, cat)))
-
-
-def _ranked_prefs(cat: DataFrame) -> DataFrame:
-    from scalable_data_integration_with_llms_spark.llm.boundary import mock_score_candidates
-    from scalable_data_integration_with_llms_spark.operators.candidates import (
-        generate_candidates,
-        rank_preferences,
-    )
-
-    cands = generate_candidates(cat.select("case_id", "side", "col_name", "col_type"))
-    return rank_preferences(mock_score_candidates(cands))
 
 
 def _replicated_gold(spark: SparkSession, cat: DataFrame) -> DataFrame:
@@ -209,48 +181,36 @@ def _replicated_gold(spark: SparkSession, cat: DataFrame) -> DataFrame:
     )
 
 
-def bidir_f1(spark: SparkSession, cat: DataFrame) -> DataFrame:
-    """q_ehr_bidirectional_f1's plan across the case dimension: candidate
-    scoring → J3 avg merge → top-1 per target attr → per-case PRF1 vs the
-    replicated gold (round-8 scale-curve row VERDICT r7 asked for)."""
-    from scalable_data_integration_with_llms_spark.operators.candidates import (
-        bidirectional_merge,
-        top_k_per_query,
-    )
-    from scalable_data_integration_with_llms_spark.operators.metrics import (
-        confusion_counts,
-        prf1_columns,
+def match_pipeline(spark: SparkSession, cat: DataFrame) -> DataFrame:
+    """q_ehr_round1_matches across the case dimension: candidates → mock
+    scoring (mapInPandas) → ranking → per-case Gale–Shapley
+    (applyInPandas) → round-1 extraction.  THE at-scale shape of the
+    engine (millions of independent cases on a corpus feed)."""
+    return M.round_matches(_prefs(cat), 1).select(
+        "case_id", F.concat("src", F.lit(">"), "tgt").alias("prompt")
     )
 
-    merged = bidirectional_merge(_ranked_prefs(cat), agg="avg")
-    pred = top_k_per_query(merged, 1).select("case_id", "src", "tgt")
-    return prf1_columns(confusion_counts(pred, _replicated_gold(spark, cat)))
+
+def matching_f1(spark: SparkSession, cat: DataFrame) -> DataFrame:
+    """q_ehr_matching_f1 across the case dimension: match_pipeline's stages
+    plus the gold confusion join and per-case PRF1 — gold pairs replicated
+    with the same disjoint case ids, so the metric tail scales with the
+    cases exactly like the pipeline head does."""
+    return case_prf1(M.round_matches(_prefs(cat), 1), _replicated_gold(spark, cat))
+
+
+def bidir_f1(spark: SparkSession, cat: DataFrame) -> DataFrame:
+    """q_ehr_bidirectional_f1 across the case dimension: candidate scoring
+    → J3 avg merge → top-1 per target attr → per-case PRF1 vs the
+    replicated gold."""
+    return case_prf1(M.bidir_top1(_prefs(cat)), _replicated_gold(spark, cat))
 
 
 def topk_sweep(spark: SparkSession, cat: DataFrame) -> DataFrame:
-    """q_ehr_topk_sweep's plan across the case dimension: one scored merge,
-    the 5-row k dimension broadcast in, per-(k, case) PRF1 — the k sweep
-    must stay a broadcast multiplier, not 5 re-scores, at every case
-    count."""
-    from scalable_data_integration_with_llms_spark.operators.candidates import (
-        bidirectional_merge,
-        top_k_per_query,
-    )
-    from scalable_data_integration_with_llms_spark.operators.metrics import (
-        confusion_counts,
-        prf1_columns,
-    )
-
-    merged = bidirectional_merge(_ranked_prefs(cat), agg="avg")
-    topk = top_k_per_query(merged, 5)
-    ks = spark.createDataFrame([(k,) for k in range(1, 6)], "k int")
-    pred = (
-        topk.crossJoin(F.broadcast(ks))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("k", "case_id", "src", "tgt")
-    )
-    gold = _replicated_gold(spark, cat).crossJoin(F.broadcast(ks))
-    return prf1_columns(confusion_counts(pred, gold, group_cols=["k"]))
+    """q_ehr_topk_sweep across the case dimension: one scored merge, the
+    5-row k dimension broadcast in, per-(k, case) PRF1 — the k sweep must
+    stay a broadcast multiplier, not 5 re-scores, at every case count."""
+    return M.topk_sweep_prf1(_prefs(cat), _replicated_gold(spark, cat))
 
 
 STAGES = {
