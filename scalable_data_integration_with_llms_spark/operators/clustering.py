@@ -4,8 +4,8 @@ trainer for the similarity-search surface.
 One iteration = two relational stages:
 
 * **update** (``label_centroid_arrays``): per-cluster centroid via the
-  integer-quantized dimension sums of ``q_label_centroids`` (posexplode →
-  one (label, i)-keyed shuffle with map-side partial sums — aggregation
+  integer-quantized dimension sums of ``similarity.quantized_dims`` (one
+  (label, i)-keyed shuffle with map-side partial sums — aggregation
   order never affects the result), re-assembled into ordered arrays.
 * **assign** (``kmeans_assign``): K centroids broadcast against the corpus;
   squared distance in dot-product form (‖x‖² − 2⟨x,c⟩ + ‖c‖², each a
@@ -23,29 +23,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import dot
+from .similarity import dequantized_mean, dot, quantized_dims, require_vectors
 
-QUANT = 1e7  # dimension-sum quantization (matches q_label_centroids)
 INERTIA_QUANT = 1e6
 
 
-def label_centroid_arrays(
-    df: DataFrame, vec_col: str = "embedding", label_col: str = "label"
-) -> DataFrame:
-    """(label, centroid array<double>) — centroid components are
-    (sum of quantized dims)/QUANT/count, assembled in dimension order."""
-    ex = df.select(
-        F.col(label_col).alias("c_label"),
-        F.posexplode(F.col(vec_col)).alias("i0", "x"),
-    ).select(
-        "c_label",
-        (F.col("i0") + 1).alias("i"),
-        F.round(F.col("x").cast("double") * F.lit(QUANT), 0).cast("bigint").alias("xq"),
-    )
-    per_dim = ex.groupBy("c_label", "i").agg(
+def label_centroid_arrays(df: DataFrame) -> DataFrame:
+    """(c_label, centroid array<double>) per ``label`` — centroid components
+    are (sum of quantized dims)/QUANT/count, assembled in dimension order."""
+    require_vectors(df, "label")
+    per_dim = quantized_dims(df, "label", "c_label").groupBy("c_label", "i").agg(
         F.sum("xq").alias("sum_q"), F.count(F.lit(1)).alias("cnt")
     )
-    comp = (F.col("sum_q").cast("double") / F.lit(QUANT) / F.col("cnt")).alias("c")
+    comp = dequantized_mean(F.col("sum_q"), F.col("cnt")).alias("c")
     return (
         per_dim.select("c_label", "i", comp)
         .groupBy("c_label")
@@ -58,22 +48,15 @@ def label_centroid_arrays(
     )
 
 
-def kmeans_assign(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def kmeans_assign(df: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: (vec_id, label, cluster, d2) with d2 the
     squared euclidean distance to the winning centroid.  ``centroids`` is a
     (c_label, cvec) frame (e.g. from :func:`label_centroid_arrays`)."""
     from pyspark.sql import Window as W
 
+    require_vectors(df, "label")
     v = df.select(
-        F.col(id_col),
-        F.col(label_col).alias("label"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("ve"),
+        "vec_id", "label", F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("ve")
     )
     d2 = (
         dot(F.col("ve"), F.col("ve"))
@@ -81,24 +64,20 @@ def kmeans_assign(
         + dot(F.col("cvec"), F.col("cvec"))
     )
     scored = v.crossJoin(F.broadcast(centroids)).select(
-        F.col(id_col), "label", "c_label", d2.alias("d2")
+        "vec_id", "label", "c_label", d2.alias("d2")
     )
-    win = W.partitionBy(id_col).orderBy(F.asc("d2"), F.asc("c_label"))
+    win = W.partitionBy("vec_id").orderBy(F.asc("d2"), F.asc("c_label"))
     return (
         scored.withColumn("rk", F.row_number().over(win))
         .filter(F.col("rk") == 1)
-        .select(F.col(id_col), "label", F.col("c_label").alias("cluster"), "d2")
+        .select("vec_id", "label", F.col("c_label").alias("cluster"), "d2")
     )
 
 
-def kmeans_iteration_stats(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def kmeans_iteration_stats(df: DataFrame) -> DataFrame:
     """One full Lloyd iteration rolled up per cluster: size, exact quantized
     inertia, and how many points moved off their seeding label."""
-    cents = label_centroid_arrays(df, vec_col, label_col)
-    assigned = kmeans_assign(df, cents, id_col, vec_col, label_col)
+    assigned = kmeans_assign(df, label_centroid_arrays(df))
     d2q = F.round(F.col("d2") * F.lit(INERTIA_QUANT), 0).cast("bigint")
     return assigned.groupBy(F.col("cluster")).agg(
         F.count(F.lit(1)).alias("n_vectors"),

@@ -1,27 +1,45 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
-Two paths:
+Every operator here reads vectors in one shape, ``(vec_id, embedding[,
+label])``, and checks it at entry (:func:`require_vectors`).  Each stage of
+a search is written once and shared by every path:
 
-* ``cosine_topk`` — brute-force exact top-k: broadcast the (small) query set
-  against the corpus, JVM-side dot products (``zip_with`` + ``aggregate``,
-  no Python), window top-k per query.  At 100 TB the corpus scan is
-  embarrassingly parallel and the broadcast keeps it shuffle-free until the
-  final (tiny) top-k combine.
-* ``ivf_topk`` — the scale path: restrict each query to its coarse partition
-  (inverted-file style).  The driver tables carry a ``label`` cluster id,
-  standing in for a learned centroid assignment; candidate generation is an
-  equi-join on the partition key, cutting compared pairs by ~n_partitions×.
+* :func:`vector_side` — the ``(id, vector, norm)`` projection of the query
+  or the corpus side, each norm computed once per vector, not per pair;
+* :func:`score_pairs` + :func:`keep_top_k` — the cosine of each candidate
+  pair, then the row_number over ``(cos_sim DESC, neighbor_id ASC)`` kept
+  while ``<= k``;
+* :func:`recall_at_k` — the hit-join of an approximate top-k against the
+  exact one;
+* :func:`quantize` / :func:`quantized_dims` — ``round(x·QUANT)`` component
+  quantization, behind the LSH projections and every exact centroid.
+
+The paths differ only in how they generate candidate pairs:
+
+* ``cosine_topk`` — exact: broadcast the (small) query set against the
+  whole corpus (JVM-side dot products, no Python, no shuffle until the
+  final tiny top-k combine; at 100 TB the corpus scan is embarrassingly
+  parallel);
+* ``ivf_topk`` — the query's coarse partition, inverted-file style: the
+  driver tables carry a ``label`` cluster id standing in for a learned
+  centroid assignment, and candidates are an equi-join on it, cutting
+  compared pairs by ~n_partitions×;
+* ``lsh_topk`` — the query's hyperplane-LSH bucket, a computed partition;
+* ``pq_adc_topk`` — IVF candidates scored from product-quantization codes
+  instead of vectors.
 
 Dot products are bit-identical to DuckDB's ``list_dot_product`` on DOUBLE[]
-(verified in tests), so both paths are oracle-checked with no tolerance.
+(verified in tests), so every path is oracle-checked with no tolerance.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from ..caching import scoped_persist
+
+QUANT = 1e7  # component quantization: round(x·QUANT) as bigint
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -76,102 +94,144 @@ def cosine_with_norms(a: Column, b: Column, norm_a: Column, norm_b: Column) -> C
     return dot(a, b) / (norm_a * norm_b)
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def require_vectors(df: DataFrame, *extra: str) -> None:
+    """The input contract of every operator here: a ``vec_id`` column, an
+    array ``embedding`` column and the ``extra`` columns (``label`` for the
+    partitioned paths).  Raises ``ValueError`` before any job runs."""
+    fields = {f.name: f.dataType for f in df.schema.fields}
+    missing = [c for c in ("vec_id", "embedding", *extra) if c not in fields]
+    if missing:
+        raise ValueError(f"vector input lacks columns {missing}; it has {sorted(fields)}")
+    if not isinstance(fields["embedding"], ArrayType):
+        raise ValueError(
+            f"embedding must be an array, got {fields['embedding'].simpleString()}"
+        )
+
+
+def quantize(x: Column, scale: float = QUANT) -> Column:
+    """``round(x·scale)`` as bigint: sums and products of quantized
+    components are order-independent integer arithmetic."""
+    return F.round(x.cast("double") * F.lit(scale), 0).cast("bigint")
+
+
+def quantized_dims(df: DataFrame, key: str, out: str | None = None) -> DataFrame:
+    """``(out, i, xq)``: one row per embedding component, ``i`` 1-based and
+    ``xq`` its :func:`quantize`; ``key`` rides along, renamed to ``out``
+    when given.  The front of every exact centroid: a groupBy on
+    ``(out, i)`` then sums integers, so the result is independent of
+    partitioning and aggregation order (posexplode is map-side; partial
+    aggregation combines dim-wise before the exchange)."""
+    name = out or key
+    return df.select(
+        F.col(key).alias(name) if out else key,
+        F.posexplode(F.col("embedding")).alias("i0", "x"),
+    ).select(name, (F.col("i0") + 1).alias("i"), quantize(F.col("x")).alias("xq"))
+
+
+def dequantized_mean(sum_q: Column, cnt: Column) -> Column:
+    """A centroid component from its quantized sum and count."""
+    return sum_q.cast("double") / F.lit(QUANT) / cnt
+
+
+def vector_side(
+    df: DataFrame, role: str, *extra: Column | str, norm_col: str | None = None
 ) -> DataFrame:
+    """One side of a scored-pair join: ``(query_id, q_vec, q_norm, *extra)``
+    for ``role="query"``, ``(neighbor_id, c_vec, c_norm, *extra)`` for
+    ``role="corpus"``.  The norm is computed once per vector (or read from
+    the precomputed column ``norm_col``), never once per pair."""
+    id_name, p = {"query": ("query_id", "q"), "corpus": ("neighbor_id", "c")}[role]
+    vec_norm = norm(F.col("embedding")) if norm_col is None else F.col(norm_col)
+    return df.select(
+        F.col("vec_id").alias(id_name),
+        F.col("embedding").alias(f"{p}_vec"),
+        vec_norm.alias(f"{p}_norm"),
+        *extra,
+    )
+
+
+def score_pairs(pairs: DataFrame, *keep: str) -> DataFrame:
+    """``(query_id, neighbor_id, *keep, cos_sim)`` over a join of a query
+    and a corpus :func:`vector_side`."""
+    return pairs.select(
+        "query_id",
+        "neighbor_id",
+        *keep,
+        cosine_with_norms(
+            F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
+        ).alias("cos_sim"),
+    )
+
+
+def keep_top_k(scored: DataFrame, k: int, rank_col: str = "sim_rank") -> DataFrame:
+    """The ``k`` best-scored pairs per query: ``rank_col`` is the
+    row_number over ``(cos_sim DESC, neighbor_id ASC)`` — ties go to the
+    smaller neighbor id — kept while ``<= k``."""
+    from pyspark.sql import Window as W
+
+    win = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return scored.withColumn(rank_col, F.row_number().over(win)).filter(
+        F.col(rank_col) <= k
+    )
+
+
+def recall_at_k(exact: DataFrame, ann: DataFrame, k: int, *tag: Column) -> DataFrame:
+    """One row ``(*tag, n_queries, total_hits, recall_at_k)``: how many of
+    each query's exact top-k neighbors the approximate top-k ``ann`` found
+    (a left hit-join on (query_id, neighbor_id)).  Integer hit counts
+    divide exactly."""
+    pair = ["query_id", "neighbor_id"]
+    joined = exact.select(pair).alias("e").join(
+        ann.select(pair).alias("a"),
+        (F.col("e.query_id") == F.col("a.query_id"))
+        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
+        "left",
+    )
+    per_query = joined.groupBy(F.col("e.query_id")).agg(
+        F.count(F.col("a.neighbor_id")).alias("hits")
+    )
+    return per_query.agg(
+        *tag,
+        F.count(F.lit(1)).alias("n_queries"),
+        F.sum("hits").alias("total_hits"),
+        ((F.sum("hits") * F.lit(1.0)) / (F.count(F.lit(1)) * F.lit(k))).alias("recall_at_k"),
+    )
+
+
+def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """Exact top-k neighbors per query: (query_id, neighbor_id, cos_sim,
     sim_rank).  Self-pairs excluded; ties broken by neighbor id."""
-    from pyspark.sql import Window as W
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(_spread(c))
+    require_vectors(queries)
+    require_vectors(corpus)
+    pairs = (
+        F.broadcast(vector_side(queries, "query"))
+        .crossJoin(_spread(vector_side(corpus, "corpus")))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("cos_sim"),
-        )
     )
-    win = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(win))
-        .filter(F.col("sim_rank") <= k)
-    )
+    return keep_top_k(score_pairs(pairs), k)
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    partition_col: str = "label",
-) -> DataFrame:
+def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """IVF-style approximate top-k: candidates limited to the query's coarse
-    partition (equi-join on the partition key instead of a cross join)."""
-    from pyspark.sql import Window as W
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-        F.col(partition_col).alias("part"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-        F.col(partition_col).alias("part"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(_spread(c), "part")
+    partition (equi-join on ``label`` instead of a cross join)."""
+    require_vectors(queries, "label")
+    require_vectors(corpus, "label")
+    part = F.col("label").alias("part")
+    pairs = (
+        F.broadcast(vector_side(queries, "query", part))
+        .join(_spread(vector_side(corpus, "corpus", part)), "part")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("cos_sim"),
-        )
     )
-    win = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(win))
-        .filter(F.col("sim_rank") <= k)
-    )
+    return keep_top_k(score_pairs(pairs), k)
 
 
-def hyperplane_signature(
-    df: DataFrame,
-    n_planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
+def hyperplane_signature(df: DataFrame, n_planes: int = 6) -> DataFrame:
     """Random-hyperplane (cosine) LSH bucket per vector: bit p of the bucket
     id is the sign of the projection onto a Rademacher (±1) hyperplane whose
     components derive from md5(p ':' i) — deterministic in any engine, any
     partitioning (functions/determinism.py discipline).
 
-    Exactness: components quantize to integers (round(x·1e7)) before the
+    Exactness: components :func:`quantize` to integers before the
     projection, so the per-plane sum is order-independent BIGINT arithmetic —
     no float-summation-order drift.
 
@@ -186,28 +246,23 @@ def hyperplane_signature(
     :func:`dot`, deliberately NOT the three-level transform-in-zip_with-in-
     aggregate tower that Spark 4.1 was observed to miscompile (every LSH
     oracle stays value-checked, so a regression of that bug would go red).
+    The dimension is read from the first row (one small job).
 
     At 100 TB: the bucket is computed in the scan stage; the only shuffle
     anywhere downstream is whatever the caller does with (id, bucket).
     """
     import hashlib
 
-    if dim is None:
-        # fallback probe (one extra Spark job) — callers that know the
-        # embedding dimensionality pass ``dim`` and skip it
-        dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(dim_row["d"]) if dim_row else 0
+    require_vectors(df)
+    dim_row = df.select(F.size(F.col("embedding")).alias("d")).first()
+    dim = int(dim_row["d"]) if dim_row else 0
 
     def sign(p: int, i: int) -> int:
         return 1 if int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[0], 16) % 2 == 0 else -1
 
     def projection(p: int) -> Column:
         signs_p = F.array(*[F.lit(sign(p, i)).cast("bigint") for i in range(dim)])
-        quantized = F.zip_with(
-            F.col(vec_col),
-            signs_p,
-            lambda x, s: F.round(x.cast("double") * F.lit(1e7), 0).cast("bigint") * s,
-        )
+        quantized = F.zip_with(F.col("embedding"), signs_p, lambda x, s: quantize(x) * s)
         return F.aggregate(quantized, F.lit(0).cast("bigint"), lambda acc, x: acc + x)
 
     bucket = None
@@ -216,17 +271,11 @@ def hyperplane_signature(
             F.lit(0).cast("bigint")
         )
         bucket = bit if bucket is None else bucket + bit
-    return df.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
+    return df.select(F.col("vec_id"), F.col("embedding"), bucket.alias("bucket"))
 
 
 def lsh_topk(
-    df: DataFrame,
-    k: int,
-    n_planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    query_pred: Column | None = None,
+    df: DataFrame, k: int, n_planes: int = 6, query_pred: Column | None = None
 ) -> DataFrame:
     """Approximate top-k via hyperplane-LSH bucketing: candidates limited to
     the query's bucket (equi-join on the bucket id), then exact cosine +
@@ -239,62 +288,28 @@ def lsh_topk(
     bucketed corpus, O(anchors × bucket size) instead of the symmetric
     all-pairs-within-bucket N²/buckets.  This is what makes the recall
     harnesses linear at any scale (VERDICT r11 task #4)."""
-    from pyspark.sql import Window as W
-
     # persist: the bucket self-join references the signature frame twice and
     # Spark would otherwise recompute the explode+agg once per branch
     sigs = scoped_persist(
-        hyperplane_signature(df, n_planes, id_col, vec_col, dim=dim)
-        .withColumn("v_norm", norm(F.col(vec_col)))
+        hyperplane_signature(df, n_planes).withColumn("v_norm", norm(F.col("embedding")))
     )
     q_src = sigs.filter(query_pred) if query_pred is not None else sigs
-    q = q_src.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("v_norm").alias("q_norm"),
-        "bucket",
-    )
-    c = sigs.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("v_norm").alias("c_norm"),
-        "bucket",
-    )
+    q = vector_side(q_src, "query", "bucket", norm_col="v_norm")
+    c = vector_side(sigs, "corpus", "bucket", norm_col="v_norm")
     if query_pred is not None:
-        win = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-        return (
-            F.broadcast(q)
-            .join(c, "bucket")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                cosine_with_norms(
-                    F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-                ).alias("cos_sim"),
-            )
-            .withColumn("sim_rank", F.row_number().over(win))
-            .filter(F.col("sim_rank") <= k)
+        pairs = (
+            F.broadcast(q).join(c, "bucket").filter(F.col("query_id") != F.col("neighbor_id"))
         )
+        return keep_top_k(score_pairs(pairs), k)
     # Each unordered pair is scored ONCE (query_id < neighbor_id) and then
     # mirrored: x*y and the fold order are symmetric, so the mirrored score
     # is bit-identical while the dominant cosine fold costs half.  Every
     # vector has exactly one bucket, so a pair can't duplicate across
     # buckets.
-    pairs = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") < F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("cos_sim"),
-        )
-    )
+    pairs = q.join(c, "bucket").filter(F.col("query_id") < F.col("neighbor_id"))
     # mirror via a row-local explode (NOT a self-union, which would run the
     # join+cosine subtree once per branch)
-    scored = pairs.select(
+    scored = score_pairs(pairs).select(
         F.explode(
             F.array(
                 F.struct(F.col("query_id"), F.col("neighbor_id")),
@@ -306,42 +321,47 @@ def lsh_topk(
         ).alias("p"),
         "cos_sim",
     ).select("p.query_id", "p.neighbor_id", "cos_sim")
-    win = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("sim_rank", F.row_number().over(win)).filter(
-        F.col("sim_rank") <= k
-    )
+    return keep_top_k(scored, k)
 
 
-def pq_subvectors(
-    df: DataFrame,
-    m: int,
-    sub_dim: int,
-    quant: float,
-    id_col: str,
-    vec_col: str,
-    out_id: str,
-) -> DataFrame:
-    """Explode each vector into ``m`` quantized-bigint subvectors:
+# Product-quantization shape: PQ_M subvectors of PQ_SUB_DIM components each,
+# PQ_CODES sample-initialized codebook entries, components quantized at
+# PQ_QUANT.
+PQ_M = 4
+PQ_CODES = 8
+PQ_SUB_DIM = 16
+PQ_QUANT = 1e6
+
+
+def pq_subvectors(df: DataFrame, out_id: str) -> DataFrame:
+    """Explode each vector into ``PQ_M`` quantized-bigint subvectors:
     (out_id, s, qv) — the shared front half of PQ encoding and ADC lookup
-    tables.  Quantization is per-component round(x·quant) so all downstream
-    distance arithmetic is exact integer."""
+    tables.  Quantization is per-component round(x·PQ_QUANT) so all
+    downstream distance arithmetic is exact integer."""
 
     def quantized_sub(s: int) -> Column:
         return F.transform(
-            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim),
-            lambda x: F.round(x.cast("double") * F.lit(quant), 0).cast("bigint"),
+            F.slice(F.col("embedding"), s * PQ_SUB_DIM + 1, PQ_SUB_DIM),
+            lambda x: quantize(x, PQ_QUANT),
         )
 
     subs = F.explode(
         F.array(
             *[
                 F.struct(F.lit(s).alias("s"), quantized_sub(s).alias("qv"))
-                for s in range(m)
+                for s in range(PQ_M)
             ]
         )
     ).alias("sub")
-    return df.select(F.col(id_col).alias(out_id), subs).select(
+    return df.select(F.col("vec_id").alias(out_id), subs).select(
         out_id, F.col("sub.s").alias("s"), F.col("sub.qv").alias("qv")
+    )
+
+
+def _pq_codebook(df: DataFrame) -> DataFrame:
+    """(code_id, s, cv): the subvectors of the first ``PQ_CODES`` vectors."""
+    return pq_subvectors(df.filter(F.col("vec_id") < PQ_CODES), "code_id").withColumnRenamed(
+        "qv", "cv"
     )
 
 
@@ -355,24 +375,17 @@ def _pq_dist() -> Column:
     )
 
 
-def pq_codes(
-    df: DataFrame,
-    m: int = 4,
-    k: int = 8,
-    sub_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quant: float = 1e6,
-) -> DataFrame:
+def pq_codes(df: DataFrame) -> DataFrame:
     """Product-quantization codes — the compression half of IVF-PQ, the
-    standard billion-scale ANN layout: split each vector into ``m``
+    standard billion-scale ANN layout: split each vector into ``PQ_M``
     subvectors, assign each to its nearest codebook entry, emit the m-byte
     code plus the total quantization error.
 
-    Codebook: the subvectors of the first ``k`` vectors (sample-initialized
-    codebooks — a valid PQ init; a trained variant iterates q_kmeans_iteration
-    per subspace).  Distances are exact BIGINT arithmetic on round(x·quant)
-    components, so assignment and error are engine-exact and oracle-checkable.
+    Codebook: the subvectors of the first ``PQ_CODES`` vectors
+    (sample-initialized codebooks — a valid PQ init; a trained variant
+    iterates q_kmeans_iteration per subspace).  Distances are exact BIGINT
+    arithmetic on round(x·PQ_QUANT) components, so assignment and error are
+    engine-exact and oracle-checkable.
 
     Scale shape: the codebook is k·m tiny rows → broadcast; the corpus
     explodes to m rows per vector (subspace axis), joins map-side, and the
@@ -380,47 +393,33 @@ def pq_codes(
     the pattern that turns a 256 GB float corpus into m bytes/vector."""
     from pyspark.sql import Window as W
 
-    corpus = pq_subvectors(df, m, sub_dim, quant, id_col, vec_col, id_col)
-    codebook = pq_subvectors(
-        df.filter(F.col(id_col) < k), m, sub_dim, quant, id_col, vec_col, "code_id"
-    ).withColumnRenamed("qv", "cv")
-    scored = corpus.join(F.broadcast(codebook), "s").select(
-        F.col(id_col), "s", "code_id", _pq_dist().alias("dist")
+    require_vectors(df)
+    scored = pq_subvectors(df, "vec_id").join(F.broadcast(_pq_codebook(df)), "s").select(
+        "vec_id", "s", "code_id", _pq_dist().alias("dist")
     )
-    win = W.partitionBy(id_col, "s").orderBy(F.asc("dist"), F.asc("code_id"))
+    win = W.partitionBy("vec_id", "s").orderBy(F.asc("dist"), F.asc("code_id"))
     best = scored.withColumn("rk", F.row_number().over(win)).filter(F.col("rk") == 1)
-    return best.groupBy(id_col).agg(
+    return best.groupBy("vec_id").agg(
         *[
             F.max(F.when(F.col("s") == s, F.col("code_id"))).cast("int").alias(f"code_{s}")
-            for s in range(m)
+            for s in range(PQ_M)
         ],
         F.sum("dist").alias("err_q"),
     )
 
 
-def pq_adc_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k_neighbors: int = 5,
-    m: int = 4,
-    k_codes: int = 8,
-    sub_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    part_col: str = "label",
-    quant: float = 1e6,
-) -> DataFrame:
+def pq_adc_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """IVF-PQ search with ADC (asymmetric distance computation) — the full
     billion-scale ANN read path: candidates come only from the query's
-    coarse partition (IVF equi-join on ``part_col``), and each candidate's
+    coarse partition (IVF equi-join on ``label``), and each candidate's
     distance is looked up from its m-byte PQ code via a per-query distance
     table instead of touching the float vector.
 
     The distance table (query × subspace × codebook entry) has
-    |Q|·m·k_codes rows — tiny, broadcast — so scoring a candidate is m
+    |Q|·PQ_M·PQ_CODES rows — tiny, broadcast — so scoring a candidate is m
     integer lookups + a sum: the corpus float vectors are read exactly once
     (at encode time), never at query time.  All distances are exact BIGINT
-    on round(x·quant) components, so ranking is engine-exact.
+    on round(x·PQ_QUANT) components, so ranking is engine-exact.
 
     Scale shape: codes+partition form the index table (m bytes + 1 key per
     vector); the search is one equi-join on the partition key, one broadcast
@@ -428,38 +427,30 @@ def pq_adc_topk(
     anything vector-sized."""
     from pyspark.sql import Window as W
 
-    codes = pq_codes(
-        corpus, m=m, k=k_codes, sub_dim=sub_dim, id_col=id_col,
-        vec_col=vec_col, quant=quant,
-    ).join(corpus.select(F.col(id_col), F.col(part_col)), id_col)
-
-    codebook = pq_subvectors(
-        corpus.filter(F.col(id_col) < k_codes), m, sub_dim, quant,
-        id_col, vec_col, "code_id",
-    ).withColumnRenamed("qv", "cv")
-    qsubs = pq_subvectors(queries, m, sub_dim, quant, id_col, vec_col, "query_id")
-    lut = qsubs.join(F.broadcast(codebook), "s").select(
+    require_vectors(queries, "label")
+    require_vectors(corpus, "label")
+    codes = pq_codes(corpus).join(corpus.select("vec_id", "label"), "vec_id")
+    lut = pq_subvectors(queries, "query_id").join(F.broadcast(_pq_codebook(corpus)), "s").select(
         "query_id", "s", "code_id", _pq_dist().alias("dist")
     )
-
     cand = codes.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(part_col),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label"),
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(s).alias("s"), F.col(f"code_{s}").alias("code_id")
-                    )
-                    for s in range(m)
+                    F.struct(F.lit(s).alias("s"), F.col(f"code_{s}").alias("code_id"))
+                    for s in range(PQ_M)
                 ]
             )
         ).alias("sub"),
-    ).select("neighbor_id", part_col, F.col("sub.s").alias("s"), F.col("sub.code_id").alias("code_id"))
+    ).select(
+        "neighbor_id", "label", F.col("sub.s").alias("s"), F.col("sub.code_id").alias("code_id")
+    )
 
-    q_part = queries.select(F.col(id_col).alias("query_id"), F.col(part_col))
+    q_part = queries.select(F.col("vec_id").alias("query_id"), F.col("label"))
     scored = (
-        cand.join(F.broadcast(q_part), part_col)
+        cand.join(F.broadcast(q_part), "label")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .join(F.broadcast(lut), ["query_id", "s", "code_id"])
         .groupBy("query_id", "neighbor_id")
@@ -468,7 +459,7 @@ def pq_adc_topk(
     win = W.partitionBy("query_id").orderBy(F.asc("adc_q"), F.asc("neighbor_id"))
     return (
         scored.withColumn("adc_rank", F.row_number().over(win))
-        .filter(F.col("adc_rank") <= k_neighbors)
+        .filter(F.col("adc_rank") <= k)
     )
 
 

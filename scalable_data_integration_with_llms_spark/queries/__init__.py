@@ -34,25 +34,38 @@ from . import sinks_q  # noqa: F401, E402
 from . import llm_q  # noqa: F401, E402
 
 # Verification-window priority (regenerated by ``tools/rotate_window.py``
-# AFTER the changes landed): (a) the 8 queries whose code path changed —
-# both Bloom queries now build and probe through operators/sketch (the
-# runtime-filter module is gone), both ``minhash_signatures`` consumers and
-# the streaming near-dup gate share one band-signature builder, and the
-# sessionizer and the gate run one per-key step under either state API,
-# so their transformWithStateInPandas twins changed too; (b) the stalest
-# rows — the r10-latest then the r11-latest block.  The ``*_tws`` twins
-# register only where their runtime exists (streaming_q._has_tws_runtime);
-# there they push the last two stale rows out of the 50-query window,
-# elsewhere they drop out and the list is exactly the window.
+# AFTER the changes landed): (a) the 23 queries whose code path changed —
+# every exact/IVF/LSH/PQ top-k, recall harness and tuning sweep now runs
+# through the one side projection, pair scorer, top-k and recall@k of
+# operators/similarity; the centroid, k-means, SemDeDup and drift queries
+# through its one quantized-dimension stage; the int8 audit and the
+# k-center coreset through its one quantizer; and the two sink queries
+# through the per-prefix table directory; (b) the stalest rows — the
+# r10-latest then the r11-latest block.
 _VERIFY_FIRST = [
-    "q_bloom_join_pushdown",  # changed/new
-    "q_bloom_contamination",  # changed/new
-    "q_minhash_signatures",  # changed/new
-    "q_lsh_verified_pairs",  # changed/new
-    "q_stream_near_dup_gate",  # changed/new
-    "q_sessionization_stream",  # changed/new
-    "q_stream_near_dup_gate_tws",  # changed/new
-    "q_sessionization_tws",  # changed/new
+    "q_ivf_nprobe_sweep",  # changed/new
+    "q_hard_negatives",  # changed/new
+    "q_cosine_topk",  # changed/new
+    "q_ann_ivf",  # changed/new
+    "q_ann_lsh",  # changed/new
+    "q_lsh_hyperplane_buckets",  # changed/new
+    "q_knn_classify",  # changed/new
+    "q_ann_filtered",  # changed/new
+    "q_ann_recall",  # changed/new
+    "q_ann_recall_hashed",  # changed/new
+    "q_ivf_recall",  # changed/new
+    "q_ann_plane_sweep",  # changed/new
+    "q_label_centroids",  # changed/new
+    "q_kmeans_iteration",  # changed/new
+    "q_semdedup",  # changed/new
+    "q_semdedup_scaled",  # changed/new
+    "q_embedding_drift",  # changed/new
+    "q_embedding_quantize",  # changed/new
+    "q_pq_codes",  # changed/new
+    "q_ivfpq_adc",  # changed/new
+    "q_kcenter_coreset",  # changed/new
+    "q_exactly_once_sink",  # changed/new
+    "q_sink_compaction",  # changed/new
     "q_kmv_distinct",  # r10-latest
     "q_kmv_set_ops",  # r10-latest
     "q_llm_boundary_http",  # r10-latest
@@ -68,8 +81,6 @@ _VERIFY_FIRST = [
     "q_stream_kmv_distinct",  # r10-latest
     "q12_priority_by_status",  # r11-latest
     "q_alignment_prf1",  # r11-latest
-    "q_ann_ivf",  # r11-latest
-    "q_ann_lsh",  # r11-latest
     "q_bidirectional_scores",  # r11-latest
     "q_bpe_train",  # r11-latest
     "q_chat_prompt",  # r11-latest
@@ -82,21 +93,6 @@ _VERIFY_FIRST = [
     "q_ehr_gold_parity",  # r11-latest
     "q_ehr_matching_f1",  # r11-latest
     "q_ehr_round1_matches",  # r11-latest
-    "q_events_hourly",  # r11-latest
-    "q_events_rollup_multires",  # r11-latest
-    "q_example_selection",  # r11-latest
-    "q_example_selection_scalable",  # r11-latest
-    "q_filtered_preferences",  # r11-latest
-    "q_majority_vote",  # r11-latest
-    "q_match_candidates",  # r11-latest
-    "q_mixture_schedule",  # r11-latest
-    "q_normalize_chain",  # r11-latest
-    "q_orders_cube",  # r11-latest
-    "q_orders_per_status",  # r11-latest
-    "q_price_histogram",  # r11-latest
-    "q_price_percentiles",  # r11-latest
-    "q_question_cost_report",  # r11-latest
-    "q_range_join_purchase_context",  # r11-latest
 ]
 _VERIFY_FIRST = [n for n in _VERIFY_FIRST if n in QUERIES or not n.endswith("_tws")]
 

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from ..caching import scoped_persist
 from ..functions.determinism import hash60, hash60_sql
 from ..functions.text import ngram_structs
+from ..operators.similarity import quantize
 from ..sources.readers import load_table, spread_scan
 from .registry import query
 from ..functions.localframe import local_df
@@ -726,9 +727,10 @@ def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcast as a literal.  The driver holds only the k chosen rows — the
 # corpus is never collected.  k is small by definition (exemplar count).
 #
-# Exactness: components quantize to bigint at 1e7 before squared distances,
-# so the argmax and every reported distance are integer arithmetic; ties
-# break on vec_id.  The oracle unrolls the same k rounds as a CTE chain.
+# Exactness: components quantize to bigint (similarity.quantize, at 1e7)
+# before squared distances, so the argmax and every reported distance are
+# integer arithmetic; ties break on vec_id.  The oracle unrolls the same k
+# rounds as a CTE chain.
 
 _KCENTER_K = 6
 _KC_QV = (
@@ -773,10 +775,7 @@ def _kcenter_oracle(k: int) -> str:
 @query("q_kcenter_coreset", _kcenter_oracle(_KCENTER_K))
 def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * F.lit(1e7), 0).cast("bigint"),
-    )
+    qv = F.transform(F.col("embedding"), lambda x: quantize(x))
     v = scoped_persist(emb.select("vec_id", qv.alias("qv")))
 
     def d2_to(vec: list) -> F.Column:

@@ -1,7 +1,10 @@
-"""Similarity-search surface over ``embeddings``: exact brute-force cosine
-top-k and the IVF-partitioned approximate path.  Dot products are bit-identical
-to DuckDB's list_dot_product on DOUBLE[] (sequential fold), so results are
-oracle-checked with no tolerance.
+"""Similarity-search surface over ``embeddings``: exact, IVF, LSH and PQ
+top-k, their recall harnesses, k-means/SemDeDup and hard-negative mining.
+Each stage (side projection, pair scoring, top-k, recall@k, quantized
+dimensions) is one function in operators/similarity.py or
+operators/clustering.py; the queries here choose the join shape.  Dot
+products are bit-identical to DuckDB's list_dot_product on DOUBLE[]
+(sequential fold), so results are oracle-checked with no tolerance.
 """
 
 from __future__ import annotations
@@ -11,7 +14,29 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..functions.determinism import hash60, hash60_sql
-from ..operators.similarity import cosine_topk, ivf_topk
+from ..operators.clustering import (
+    kmeans_assign,
+    kmeans_iteration_stats,
+    label_centroid_arrays,
+)
+from ..operators.similarity import (
+    cosine,
+    cosine_topk,
+    cosine_with_norms,
+    dequantized_mean,
+    hyperplane_signature,
+    ivf_topk,
+    keep_top_k,
+    lsh_topk,
+    norm,
+    pq_adc_topk,
+    pq_codes,
+    quantize,
+    quantized_dims,
+    recall_at_k,
+    score_pairs,
+    vector_side,
+)
 from ..sources.readers import load_table
 from .registry import query
 
@@ -79,8 +104,6 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, IVF-restricted to the same
     coarse partition (label) so the candidate set is an equi-join, not a
     cross join — the scale path for embedding dedup."""
-    from ..operators.similarity import cosine_with_norms, norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     with_norm = emb.withColumn("v_norm", norm(F.col("embedding")))
     a = with_norm.select(
@@ -134,8 +157,6 @@ FROM buckets GROUP BY bucket
 def q_lsh_hyperplane_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket histogram of the cosine-LSH signatures (exact parity on every
     signature bit via the md5-Rademacher hyperplanes)."""
-    from ..operators.similarity import hyperplane_signature
-
     e = load_table(spark, sf_dir, "embeddings")
     return (
         hyperplane_signature(e, n_planes=6)
@@ -167,8 +188,6 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via hyperplane-LSH buckets: equi-join on the computed bucket id
     instead of the IVF label — the all-computed scale path (no learned
     centroids needed)."""
-    from ..operators.similarity import lsh_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     return lsh_topk(e, k=5, n_planes=6)
 
@@ -198,21 +217,15 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: posexplode is map-side; one shuffle on (label, i) with
     partial aggregation doing dim-wise combines before the exchange."""
     e = load_table(spark, sf_dir, "embeddings")
-    ex = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("i0", "x")
-    ).select(
-        "label",
-        (F.col("i0") + 1).alias("i"),
-        F.round(F.col("x").cast("double") * F.lit(1e7), 0).cast("bigint").alias("xq"),
-    )
     return (
-        ex.groupBy("label", "i")
+        quantized_dims(e, "label")
+        .groupBy("label", "i")
         .agg(F.sum("xq").alias("sum_q"), F.count(F.lit(1)).alias("cnt"))
         .select(
             "label",
             "i",
             "sum_q",
-            (F.col("sum_q").cast("double") / F.lit(1e7) / F.col("cnt")).alias("centroid"),
+            dequantized_mean(F.col("sum_q"), F.col("cnt")).alias("centroid"),
         )
     )
 
@@ -329,27 +342,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale).  This is the query that tunes n_planes: more planes → smaller
     buckets → faster but lower recall.  Both paths and the hit-join run in
     one plan; integer hit counts divide exactly."""
-    from ..operators.similarity import cosine_topk, lsh_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     anchor = F.col("vec_id") < _N_ANCHORS
-    ann = lsh_topk(e, k=_K, n_planes=6, query_pred=anchor).select(
-        "query_id", "neighbor_id"
-    )
-    exact = cosine_topk(e.filter(anchor), e, _K).select("query_id", "neighbor_id")
-    joined = exact.alias("e").join(
-        ann.alias("a"),
-        (F.col("e.query_id") == F.col("a.query_id"))
-        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-        "left",
-    )
-    per_query = joined.groupBy(F.col("e.query_id")).agg(
-        F.count(F.col("a.neighbor_id")).alias("hits")
-    )
-    return per_query.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum("hits").alias("total_hits"),
-        ((F.sum("hits") * F.lit(1.0)) / (F.count(F.lit(1)) * F.lit(_K))).alias("recall_at_k"),
+    return recall_at_k(
+        cosine_topk(e.filter(anchor), e, _K),
+        lsh_topk(e, k=_K, n_planes=6, query_pred=anchor),
+        _K,
     )
 
 
@@ -410,8 +408,6 @@ def q_ann_recall_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded TakeOrdered (64 rows collected — the same bounded-collect
     class as the centroid frames); everything downstream is the
     anchor-broadcast probe, O(anchors × N) at any scale."""
-    from ..operators.similarity import cosine_topk, lsh_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     panel = [
         r[0]
@@ -424,23 +420,10 @@ def q_ann_recall_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     ]
     anchor = F.col("vec_id").isin(panel)
-    ann = lsh_topk(e, k=_K, n_planes=6, query_pred=anchor).select(
-        "query_id", "neighbor_id"
-    )
-    exact = cosine_topk(e.filter(anchor), e, _K).select("query_id", "neighbor_id")
-    joined = exact.alias("e").join(
-        ann.alias("a"),
-        (F.col("e.query_id") == F.col("a.query_id"))
-        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-        "left",
-    )
-    per_query = joined.groupBy(F.col("e.query_id")).agg(
-        F.count(F.col("a.neighbor_id")).alias("hits")
-    )
-    return per_query.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum("hits").alias("total_hits"),
-        ((F.sum("hits") * F.lit(1.0)) / (F.count(F.lit(1)) * F.lit(_K))).alias("recall_at_k"),
+    return recall_at_k(
+        cosine_topk(e.filter(anchor), e, _K),
+        lsh_topk(e, k=_K, n_planes=6, query_pred=anchor),
+        _K,
     )
 
 
@@ -483,26 +466,9 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe/partition-count tuning measurement (q_ann_recall's twin for the
     learned-partition path).  Both arms broadcast the anchor frame:
     O(anchors × N), linear at any scale."""
-    from ..operators.similarity import cosine_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     anchors = e.filter(F.col("vec_id") < _N_ANCHORS)
-    ann = ivf_topk(anchors, e, _K).select("query_id", "neighbor_id")
-    exact = cosine_topk(anchors, e, _K).select("query_id", "neighbor_id")
-    joined = exact.alias("e").join(
-        ann.alias("a"),
-        (F.col("e.query_id") == F.col("a.query_id"))
-        & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-        "left",
-    )
-    per_query = joined.groupBy(F.col("e.query_id")).agg(
-        F.count(F.col("a.neighbor_id")).alias("hits")
-    )
-    return per_query.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum("hits").alias("total_hits"),
-        ((F.sum("hits") * F.lit(1.0)) / (F.count(F.lit(1)) * F.lit(_K))).alias("recall_at_k"),
-    )
+    return recall_at_k(cosine_topk(anchors, e, _K), ivf_topk(anchors, e, _K), _K)
 
 
 # -- k-means: one full Lloyd iteration, exact-hash verified -------------------
@@ -557,8 +523,6 @@ def q_kmeans_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the initial partition): per-cluster size, exact quantized inertia, and
     migration count.  The full trainer is this query iterated — each round
     is one broadcast-assign scan plus one exploded-centroid shuffle."""
-    from ..operators.clustering import kmeans_iteration_stats
-
     e = load_table(spark, sf_dir, "embeddings")
     return kmeans_iteration_stats(e)
 
@@ -627,7 +591,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return with_q.select(
         "vec_id",
-        F.round(F.col("scale") * F.lit(1e7), 0).cast("bigint").alias("scale_q"),
+        quantize(F.col("scale")).alias("scale_q"),
         F.aggregate(F.col("q8"), F.lit(0).cast("bigint"), lambda a, x: a + x).alias("sum_q8"),
         F.round(F.array_max(err) * F.lit(1e9), 0).cast("bigint").alias("max_err_q"),
     )
@@ -673,10 +637,8 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     code assignment + total quantization error (operators/similarity.pq_codes).
     The m-byte code column is what an IVF-PQ index stores per vector at
     billion scale."""
-    from ..operators.similarity import pq_codes
-
     e = load_table(spark, sf_dir, "embeddings")
-    return pq_codes(e, m=4, k=8, sub_dim=16)
+    return pq_codes(e)
 
 
 # -- metadata-filtered ANN (pre-filtering) ------------------------------------
@@ -713,8 +675,6 @@ def q_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     away afterwards).  The label predicate reaches the parquet scan
     (PushedFilters) so the filtered corpus never materializes unfiltered;
     then exact cosine top-3 per query over the survivors."""
-    from ..operators.similarity import cosine_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") % 50 == 0)
     corpus = e.filter(F.col("label") % 2 == 0)
@@ -840,9 +800,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant cluster COUNT), which the scaled twin realizes with bounded
     md5 sub-buckets; this one exists so the exact paper semantics stay
     value-oracled."""
-    from ..operators.clustering import kmeans_assign, label_centroid_arrays
-    from ..operators.similarity import cosine_with_norms, norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = label_centroid_arrays(emb)
     assigned = kmeans_assign(emb, cents).select("vec_id", "cluster", "d2")
@@ -995,9 +952,6 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule and τ as q_semdedup; rollup adds n_subclusters so the k-sweep
     artifact can show k_eff growing with N while the per-bucket cost
     stays flat."""
-    from ..operators.clustering import kmeans_assign, label_centroid_arrays
-    from ..operators.similarity import cosine_with_norms, norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = label_centroid_arrays(emb)
     assigned = kmeans_assign(emb, cents).select("vec_id", "cluster", "d2")
@@ -1121,11 +1075,9 @@ def q_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.pq_adc_topk).  Exact-bigint distances keep the
     ranking engine-exact, so even the approximate path carries a hard
     value oracle."""
-    from ..operators.similarity import pq_adc_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") % 50 == 0)
-    return pq_adc_topk(queries_df, emb, k_neighbors=5)
+    return pq_adc_topk(queries_df, emb, 5)
 
 
 # -- hard-negative mining (contrastive training pairs) ------------------------
@@ -1150,40 +1102,13 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine_topk with the label-inequality predicate fused into the join; at
     scale the cross join becomes the IVF/LSH candidate path with the label
     filter applied before scoring."""
-    from pyspark.sql import Window as W
-
-    from ..operators.similarity import cosine_with_norms, norm
-
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_vec"),
-        norm(F.col("embedding")).alias("q_norm"),
+    q = vector_side(
+        emb.filter(F.col("vec_id") % 50 == 0), "query", F.col("label").alias("q_label")
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neg_label"),
-        F.col("embedding").alias("c_vec"),
-        norm(F.col("embedding")).alias("c_norm"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("q_label") != F.col("neg_label"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neg_label",
-            cosine_with_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-            ).alias("cos_sim"),
-        )
-    )
-    win = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("neg_rank", F.row_number().over(win))
-        .filter(F.col("neg_rank") <= 4)
-    )
+    c = vector_side(emb, "corpus", F.col("label").alias("neg_label"))
+    pairs = F.broadcast(q).join(c, F.col("q_label") != F.col("neg_label"))
+    return keep_top_k(score_pairs(pairs, "neg_label"), 4, "neg_rank")
 
 
 # -- per-source embedding drift (centroid shift) ------------------------------
@@ -1222,28 +1147,13 @@ GROUP BY s.source
 def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    ex = (
-        emb.join(docs, emb.vec_id == docs.doc_id)
-        .select(
-            "source",
-            F.posexplode(F.col("embedding")).alias("i0", "x"),
-        )
-        .select(
-            "source",
-            (F.col("i0") + 1).alias("i"),
-            F.round(F.col("x").cast("double") * F.lit(1e7), 0)
-            .cast("bigint")
-            .alias("xq"),
-        )
-        # two aggregations (per-source and corpus) read this frame
+    # two aggregations (per-source and corpus) read this frame
+    ex = scoped_persist(
+        quantized_dims(emb.join(docs, emb.vec_id == docs.doc_id), "source"), eager=True
     )
-    ex = scoped_persist(ex, eager=True)
-    src = ex.groupBy("source", "i").agg(
-        (F.sum("xq").cast("double") / F.lit(1e7) / F.count(F.lit(1))).alias("c")
-    )
-    corp = ex.groupBy("i").agg(
-        (F.sum("xq").cast("double") / F.lit(1e7) / F.count(F.lit(1))).alias("gc")
-    )
+    mean = dequantized_mean(F.sum("xq"), F.count(F.lit(1)))
+    src = ex.groupBy("source", "i").agg(mean.alias("c"))
+    corp = ex.groupBy("i").agg(mean.alias("gc"))
     term = F.round((F.col("c") - F.col("gc")) * (F.col("c") - F.col("gc")) * F.lit(1e9), 0).cast("bigint")
     return (
         src.join(corp, "i")
@@ -1450,8 +1360,6 @@ def q_ann_plane_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact side is computed once behind a scoped persist; each config
     adds only its map-only signature pass, anchor-broadcast bucket probe,
     and hit join against the cache."""
-    from ..operators.similarity import cosine_topk, hyperplane_signature, lsh_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     anchor = F.col("vec_id") < _N_ANCHORS
     exact = scoped_persist(
@@ -1460,9 +1368,7 @@ def q_ann_plane_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for n in _SWEEP_PLANES:
-        ann = lsh_topk(e, k=_K, n_planes=n, query_pred=anchor).select(
-            "query_id", "neighbor_id"
-        )
+        ann = lsh_topk(e, k=_K, n_planes=n, query_pred=anchor)
         cand = (
             hyperplane_signature(e, n)
             .groupBy("bucket")
@@ -1473,23 +1379,9 @@ def q_ann_plane_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("candidate_pairs")
             )
         )
-        joined = exact.alias("e").join(
-            ann.alias("a"),
-            (F.col("e.query_id") == F.col("a.query_id"))
-            & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-            "left",
+        row = recall_at_k(exact, ann, _K, F.lit(n).cast("int").alias("n_planes")).crossJoin(
+            F.broadcast(cand)
         )
-        per_q = joined.groupBy(F.col("e.query_id")).agg(
-            F.count(F.col("a.neighbor_id")).alias("hits")
-        )
-        row = per_q.agg(
-            F.lit(n).cast("int").alias("n_planes"),
-            F.count(F.lit(1)).alias("n_queries"),
-            F.sum("hits").cast("bigint").alias("total_hits"),
-            ((F.sum("hits") * F.lit(1.0)) / (F.count(F.lit(1)) * F.lit(_K))).alias(
-                "recall_at_k"
-            ),
-        ).crossJoin(F.broadcast(cand))
         out = row if out is None else out.unionByName(row)
     return out
 
@@ -1580,7 +1472,8 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF tuning curve: recall@5 and scored-candidate count when probing
     the nprobe nearest coarse partitions (by centroid cosine) instead of
     q_ivf_recall's own-label-only probe.  Centroids come from the
-    integer-quantized per-label sums (order-independent, so the centroid
+    integer-quantized per-label sums of ``label_centroid_arrays``
+    (order-independent, so the centroid
     bits — and therefore the probe sets — are identical in any engine or
     partitioning); the 10-row centroid dimension broadcasts, the probe set
     rides a window over 10 rows per query, and candidates are one equi-join
@@ -1591,8 +1484,6 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed once behind a scoped persist, shared by every config's hit
     join."""
     from pyspark.sql import Window as W
-
-    from ..operators.similarity import cosine, cosine_with_norms, cosine_topk, norm
 
     e = load_table(spark, sf_dir, "embeddings")
     exact = scoped_persist(
@@ -1606,32 +1497,12 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True,
     )
 
-    # centroids: quantized dim-wise sums -> per-label double array
-    quant = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("i0", "x")
-    ).select(
-        "label",
-        (F.col("i0") + 1).alias("i"),
-        F.round(F.col("x").cast("double") * F.lit(1e7), 0).cast("bigint").alias("xq"),
-    )
-    cent = (
-        quant.groupBy("label", "i")
-        .agg(F.sum("xq").alias("sum_q"), F.count(F.lit(1)).alias("cnt"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "sum_q", "cnt"))),
-                lambda s: s["sum_q"].cast("double") / F.lit(1e7) / s["cnt"],
-            ).alias("cvec")
-        )
-    )
-
     ranked = (
         e.select(F.col("vec_id").alias("query_id"), "embedding")
-        .crossJoin(F.broadcast(cent.withColumnRenamed("label", "clabel")))
+        .crossJoin(F.broadcast(label_centroid_arrays(e)))
         .select(
             "query_id",
-            F.col("clabel").alias("label"),
+            F.col("c_label").alias("label"),
             cosine(F.col("embedding"), F.col("cvec")).alias("cscore"),
         )
         .withColumn(
@@ -1648,14 +1519,8 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lbl_sz = e.groupBy("label").agg(F.count(F.lit(1)).alias("sz"))
     own = e.select(F.col("vec_id").alias("query_id"), F.col("label").alias("own_label"))
-    c_side = wn.select(
-        F.col("vec_id").alias("neighbor_id"), "label",
-        F.col("embedding").alias("c_vec"), F.col("vnorm").alias("c_norm"),
-    )
-    q_side = wn.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"), F.col("vnorm").alias("q_norm"),
-    )
+    c_side = vector_side(wn, "corpus", "label", norm_col="vnorm")
+    q_side = vector_side(wn, "query", norm_col="vnorm")
 
     out = None
     for P in _NPROBES:
@@ -1667,26 +1532,8 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             pr_anchor.join(c_side, "label")
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .join(F.broadcast(q_side), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                cosine_with_norms(
-                    F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-                ).alias("cos_sim"),
-            )
         )
-        ann = (
-            pairs.withColumn(
-                "r",
-                F.row_number().over(
-                    W.partitionBy("query_id").orderBy(
-                        F.desc("cos_sim"), F.asc("neighbor_id")
-                    )
-                ),
-            )
-            .filter(F.col("r") <= _K)
-            .select("query_id", "neighbor_id")
-        )
+        ann = keep_top_k(score_pairs(pairs), _K, "r")
         cand = (
             pr.join(F.broadcast(lbl_sz), "label")
             .join(F.broadcast(own), "query_id")
@@ -1701,22 +1548,8 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("candidate_pairs")
             )
         )
-        joined = exact.alias("e").join(
-            ann.alias("a"),
-            (F.col("e.query_id") == F.col("a.query_id"))
-            & (F.col("e.neighbor_id") == F.col("a.neighbor_id")),
-            "left",
+        row = recall_at_k(exact, ann, _K, F.lit(P).cast("int").alias("nprobe")).crossJoin(
+            F.broadcast(cand)
         )
-        per_q = joined.groupBy(F.col("e.query_id")).agg(
-            F.count(F.col("a.neighbor_id")).alias("hits")
-        )
-        row = per_q.agg(
-            F.lit(P).cast("int").alias("nprobe"),
-            F.count(F.lit(1)).alias("n_queries"),
-            F.sum("hits").cast("bigint").alias("total_hits"),
-            ((F.sum("hits") * F.lit(1.0)) / (F.count(F.lit(1)) * F.lit(_K))).alias(
-                "recall_at_k"
-            ),
-        ).crossJoin(F.broadcast(cand))
         out = row if out is None else out.unionByName(row)
     return out

@@ -7,6 +7,12 @@ variant).
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -549,9 +555,6 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files already-processed and the second call would drain ZERO batches;
     # removed after the drain (the snapshot is a local checkpoint, it does
     # not read the streaming checkpoint)
-    import shutil
-    import tempfile
-
     ckpt = tempfile.mkdtemp(prefix="sdi_ckpt_cdc_")
     handle = None
     try:
@@ -812,10 +815,38 @@ FROM ranked WHERE rn = 1
 """
 
 
+# The newest sink table per (process, prefix).  The frame a sink query
+# returns reads its table lazily, so the table must outlive the query (and
+# the caller's release_scoped()); it is removed when the next call with the
+# same prefix starts, so repeated runs keep one table per prefix, and the
+# last one goes at interpreter exit.
+_SINK_TABLES: dict[tuple[int, str], str] = {}
+_SINK_TABLES_LOCK = threading.Lock()
+
+
+def _drop_sink_tables(prefix: str | None = None) -> None:
+    """Remove this process's tables for ``prefix`` (all prefixes if None)."""
+    pid = os.getpid()
+    for key in [k for k in _SINK_TABLES if k[0] == pid and prefix in (None, k[1])]:
+        shutil.rmtree(_SINK_TABLES.pop(key), ignore_errors=True)
+
+
+atexit.register(_drop_sink_tables)
+
+
+def _sink_table_dir(prefix: str) -> str:
+    """A new empty table directory for ``prefix``; the previous one this
+    process made for ``prefix`` is removed first."""
+    with _SINK_TABLES_LOCK:
+        _drop_sink_tables(prefix)
+        path = _SINK_TABLES[(os.getpid(), prefix)] = tempfile.mkdtemp(prefix=prefix)
+    return path
+
+
 def _sink_event_batches(spark: SparkSession, sf_dir: str, prefix: str):
-    """A fresh TxnParquetSink with ``events`` applied as 4 deterministic
-    micro-batches (md5 of event_id).  Returns the sink, the events frame
-    and ``batch(b)``, micro-batch b's frame.
+    """A fresh TxnParquetSink (:func:`_sink_table_dir`) with ``events``
+    applied as 4 deterministic micro-batches (md5 of event_id).  Returns
+    the sink, the events frame and ``batch(b)``, micro-batch b's frame.
 
     The bucketed frame is persisted EAGERLY, then the 4 applies OVERLAP
     (guide §2.6): each batch writes its own partition dir and commits its
@@ -826,12 +857,11 @@ def _sink_event_batches(spark: SparkSession, sf_dir: str, prefix: str):
     job-latency floor) into ~2 concurrent waves.  Eager matters here: 4
     threads taking their FIRST action on a lazily-persisted frame would
     each recompute the scan+md5 bucket (caching.scoped_persist note)."""
-    import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
     from ..sources.txn_sink import TxnParquetSink
 
-    sink = TxnParquetSink(tempfile.mkdtemp(prefix=prefix))
+    sink = TxnParquetSink(_sink_table_dir(prefix))
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts"
     )

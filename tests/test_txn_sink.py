@@ -118,8 +118,6 @@ def test_foreach_batch_integration(spark, tmp_path):
     """The sink's apply IS a foreachBatch callback: drain the sf0.001 event
     stream through a real Structured Streaming query writing via the sink,
     then check the committed snapshot equals the batch read."""
-    import tempfile
-
     from scalable_data_integration_with_llms_spark.sources.readers import load_table
     from scalable_data_integration_with_llms_spark.streaming.events import read_event_stream
 
@@ -130,7 +128,7 @@ def test_foreach_batch_integration(spark, tmp_path):
         stream.writeStream.foreachBatch(sink.apply)
         .queryName("sdi_txn_sink_test")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sdi_ckpt_txn_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     handle.awaitTermination()
@@ -140,3 +138,22 @@ def test_foreach_batch_integration(spark, tmp_path):
     got = sink.snapshot(spark).agg(F.sum("event_id")).collect()[0][0]
     want = batch.agg(F.sum("event_id")).collect()[0][0]
     assert got == want
+
+
+def test_sink_queries_keep_one_table_per_prefix(spark):
+    """Each run of a sink query removes the table its previous run left, so
+    repeated runs keep at most one ``sdi_txn_sink_*`` directory; the frame
+    the last run returned still reads its table."""
+    import glob
+    import tempfile
+
+    from scalable_data_integration_with_llms_spark.caching import release_scoped
+    from scalable_data_integration_with_llms_spark.queries import QUERIES
+
+    pattern = os.path.join(tempfile.gettempdir(), "sdi_txn_sink_*")
+    before = set(glob.glob(pattern))
+    for _ in range(2):
+        df = QUERIES["q_exactly_once_sink"](spark, "/root/testdata/sf0.001")
+        release_scoped()
+    assert len(set(glob.glob(pattern)) - before) <= 1
+    assert df.count() > 0

@@ -15,12 +15,23 @@ It writes plans/r<N>/<query>_<tag>.txt, reading tables from
 ``SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data).  Queries that drain a
 stream through a memory sink have no single batch plan; for those the
 batch-side plan of the returned frame is dumped.
+
+Compare mode diffs each before/after pair with run-to-run noise masked
+(expression ids, plan ids, lambda variable names, file paths, RDD ids),
+prints the queries whose plans differ and exits 1 if any do:
+
+    python tools/dump_plans.py --round 16 compare [QUERY...]
+
+With no query names it compares every pair in plans/r<N>/.
 """
 
 from __future__ import annotations
 
+import difflib
+import glob
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -333,6 +344,12 @@ def _watermark_col(splan: str) -> str:
     return "ts (LTZ)" if "ts#" in tail else "ts_wall"
 
 
+def _round_dir(rnd: int) -> str:
+    return os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", f"r{rnd}"
+    )
+
+
 def dump_round(rnd: int, tag: str, names: list[str]) -> None:
     """Write each query's formatted plan to plans/r<rnd>/<query>_<tag>.txt."""
     if tag not in ("before", "after"):
@@ -348,9 +365,7 @@ def dump_round(rnd: int, tag: str, names: list[str]) -> None:
 
     spark = get_spark("sdi-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", f"r{rnd}"
-    )
+    out_dir = _round_dir(rnd)
     os.makedirs(out_dir, exist_ok=True)
 
     for name in names:
@@ -368,8 +383,56 @@ def dump_round(rnd: int, tag: str, names: list[str]) -> None:
     spark.stop()
 
 
+# Run-to-run noise in a formatted plan: expression ids, plan ids, lambda
+# variable names, file paths (the sink queries write to fresh temp dirs) and
+# RDD ids (scans of a localCheckpoint).
+_PLAN_NOISE = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_"),
+    (re.compile(r"(?:file:)?/[^\s,\]]+"), "<path>"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+]
+
+
+def masked_plan(text: str) -> list[str]:
+    """A dumped plan without its header line and with the noise masked."""
+    lines = text.splitlines()[1:]
+    for rx, sub in _PLAN_NOISE:
+        lines = [rx.sub(sub, line) for line in lines]
+    return lines
+
+
+def compare_round(rnd: int, names: list[str]) -> int:
+    """Print the queries whose masked before/after plans differ; 1 if any."""
+    out_dir = _round_dir(rnd)
+    if not names:
+        names = sorted(
+            os.path.basename(p)[: -len("_before.txt")]
+            for p in glob.glob(os.path.join(out_dir, "*_before.txt"))
+        )
+    differ = []
+    for name in names:
+        plans = []
+        for tag in ("before", "after"):
+            path = os.path.join(out_dir, f"{name}_{tag}.txt")
+            if not os.path.exists(path):
+                raise SystemExit(f"missing {path}")
+            with open(path) as fh:
+                plans.append(masked_plan(fh.read()))
+        diff = list(difflib.unified_diff(*plans, "before", "after", lineterm="", n=1))
+        if diff:
+            differ.append(name)
+            print(f"== {name}: plans differ")
+            print("\n".join(diff))
+    print(f"{len(names) - len(differ)}/{len(names)} plans identical (masked)")
+    return 1 if differ else 0
+
+
 def main() -> None:
     if sys.argv[1:2] == ["--round"]:
+        if sys.argv[3] == "compare":
+            sys.exit(compare_round(int(sys.argv[2]), sys.argv[4:]))
         dump_round(int(sys.argv[2]), sys.argv[3], sys.argv[4:])
         return
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
