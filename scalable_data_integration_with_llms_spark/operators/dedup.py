@@ -2,31 +2,79 @@
 (BASELINE.json north star; additive beyond the reference — SURVEY §7 step 11).
 
 All variants are pure DataFrame plans (no Python UDFs in the hot path) and
-deterministic via md5-derived hashing, so each has a DuckDB oracle.
+deterministic via md5-derived hashing, so each has a DuckDB oracle.  Input
+is a documents frame ``(doc_id, text)`` or the ``(doc, shingle)`` frame of
+:func:`word_shingles`, checked at entry (:func:`require_documents`,
+:func:`require_shingles`); the shape every caller uses is a module
+constant, and each stage below is written once for the operators, the
+queries and the streaming gate.
 
-Scale design notes (100 TB):
-
-* exact: one shuffle on the content hash; canonical representative = min id
-  (no window needed — groupBy min).
-* shingle/Jaccard: explode → distinct → self-equi-join on shingle.  The
+* exact: :func:`content_key` is the one content hash; one shuffle on it,
+  canonical representative = min id (groupBy min, no window).
+* shingle overlap (:func:`_shingle_overlap`, under both Jaccard and
+  containment): explode → distinct → self-equi-join on shingle.  The
   classic skew killer is a stop-shingle appearing in millions of docs; the
-  ``max_df`` cap drops shingles above a document-frequency bound *before*
+  ``MAX_DF`` cap drops shingles above a document-frequency bound *before*
   the join (standard MinHash-pipeline practice), bounding join fan-out.
-* MinHash-LSH: P permutations × B bands; the band signature is a hash of the
-  per-band minhash vector, so candidate generation is a groupBy on
-  (band, signature) — shuffle keys are uniformly distributed by construction.
+* MinHash-LSH: ``N_PERM`` salted minima (:func:`minhash_minima`) in
+  ``N_BANDS`` bands; the band signature is a hash of the per-band minhash
+  vector, so candidate generation is a groupBy on (band, signature) —
+  shuffle keys are uniformly distributed by construction.
 * SimHash: per-token hashes aggregated into per-bit sums — one groupBy per
   doc, fingerprint comparison is cheap bit arithmetic.
+* spans: :func:`span_windows`, the ``SPAN_W``-token window hashes that
+  span detection and span removal both read.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..functions.determinism import hash60
-from ..functions.text import ngram_strings
+from ..functions.text import ngram_strings, word_tokens
+from ..sources.readers import spread_scan
+
+SHINGLE_N = 3  # word n-gram width of every shingle
+# 64 is far above the planted near-dup cluster sizes in the test corpus, so
+# at test sf the results are unchanged — while on a real corpus this is the
+# bound that keeps the join fan-out at O(MAX_DF · n_shingles) instead of
+# O(df²) on viral boilerplate
+MAX_DF = 64
+JACCARD_MIN = 0.5
+CONTAINMENT_MIN = 0.8
+N_PERM = 12
+N_BANDS = 4
+# 4 bands × 8 bits of a 32-bit fingerprint: by pigeonhole every pair within
+# Hamming ≤ 3 shares a band
+SIMHASH_BANDS = 4
+SIMHASH_BAND_BITS = 8
+SIMHASH_MAX_HAMMING = 3
+# docs average ~54 tokens; the published substring-dedup recipe uses
+# 50-token windows on real documents
+SPAN_W = 12
+_CC_MAX_ROUNDS = 20
+
+
+def _require(df: DataFrame, what: str, cols: tuple[str, ...]) -> DataFrame:
+    names = df.schema.fieldNames()
+    missing = [c for c in cols if c not in names]
+    if missing:
+        raise ValueError(f"{what} input lacks columns {missing}; it has {sorted(names)}")
+    return df
+
+
+def require_documents(df: DataFrame) -> DataFrame:
+    """The documents contract: ``doc_id`` and ``text`` columns.  Raises
+    ``ValueError`` before any job runs; returns ``df``."""
+    return _require(df, "documents", ("doc_id", "text"))
+
+
+def require_shingles(df: DataFrame) -> DataFrame:
+    """The shingle contract: the ``(doc, shingle)`` frame of
+    :func:`word_shingles`.  Raises ``ValueError`` before any job runs."""
+    return _require(df, "shingle", ("doc", "shingle"))
 
 
 def content_key(text: Column | str) -> Column:
@@ -35,84 +83,55 @@ def content_key(text: Column | str) -> Column:
     return F.md5(c)
 
 
-def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup: one row per distinct content with the canonical (min) id
     and the duplicate count.  ``groupBy`` gets map-side combine; no window."""
     return (
-        df.select(F.col(id_col), content_key(text_col).alias("content_hash"))
+        require_documents(df)
+        .select(F.col("doc_id"), content_key("text").alias("content_hash"))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def word_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, spread: bool | None = None
-) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle).
+def word_shingles(df: DataFrame) -> DataFrame:
+    """Distinct word ``SHINGLE_N``-gram shingles per document: (doc, shingle).
 
-    Built from ``split`` + zipped shifted slices (``ngram_strings``) —
+    Built from ``word_tokens`` + zipped shifted slices (``ngram_strings``) —
     JVM-side, no UDF: shingle i joins words[i .. i+n-1] for i in 0 .. len-n.
-
-    ``spread`` controls a pre-explode ``repartition`` that spreads doc rows
-    across cores when the source arrives in fewer partitions than the
-    cluster has slots (a single local parquet file = one partition).  The
-    default (None) auto-detects: repartition only when the scan is at less
-    than half the default parallelism — at cluster scale the input already
-    has enough partitions and this no-ops, while at bench scale the check
-    avoids paying a doc-row shuffle the downstream shuffles would absorb
-    anyway.
+    The scan is spread first (``readers.spread_scan``) when it arrives in
+    fewer partitions than half the cluster's slots.
     """
-    if spread is None:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        spread = df.rdd.getNumPartitions() < max(2, par // 2)
-    if spread:
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    words = F.split(F.col(text_col), " ")
-    shingles = ngram_strings(words, n)
+    df = spread_scan(require_documents(df))
+    shingles = ngram_strings(word_tokens("text"), SHINGLE_N)
     # distinct-per-doc happens map-side (array_distinct before the explode):
     # (doc, shingle) uniqueness needs no shingle-level shuffle, unlike
     # explode + DISTINCT
     return df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.explode(F.array_distinct(shingles)).alias("shingle"),
     )
 
 
-def jaccard_pairs(
-    shingles: DataFrame,
-    threshold: float = 0.5,
-    max_df: int | None = None,
-    materialize: bool = False,
-) -> DataFrame:
-    """N-gram Jaccard near-dup pairs from a distinct (doc, shingle) frame:
-    self-join on shingle (doc_a < doc_b), intersection counts, then
-    jaccard = |∩| / (|a| + |b| − |∩|) ≥ threshold.
+def _shingle_overlap(shingles: DataFrame, eager: bool) -> DataFrame:
+    """(doc_a, doc_b, inter, sz_a, sz_b) for every doc pair sharing a
+    shingle, after the ``MAX_DF`` guard: self-join on shingle (doc_a <
+    doc_b), intersection counts.  The sized frame is persisted (``eager``
+    materializes it now) because both join sides read it.
 
-    ``max_df`` drops shingles shared by more than that many docs before the
-    join — the skew guard that keeps fan-out bounded at corpus scale.
-
-    ``materialize`` persists the guarded+sized shingle frame before the
-    self-join references it twice.  The measured plan economics at sf0.1:
-    without it the whole scan→explode→anti-join subtree runs once per join
-    side (~2× the work); with it the second side reads the cache.  At
-    corpus scale this persist is the checkpoint you'd take before any
-    self-join.
-    """
-    if max_df is not None:
-        shingles = _drop_heavy_shingles(shingles, max_df)
-    # Per-doc size rides the shingle frame as a window count (one shuffle on
-    # doc, bounded partitions — a doc has at most |words| shingles), so the
-    # final pair aggregate already carries sz_a/sz_b and the two join-backs
-    # against a sizes dimension disappear.  Measured at sf0.1 this halves
-    # the wall time of the join-back formulation.
-    from pyspark.sql import Window as W
-
-    sized = shingles.withColumn("sz", F.count(F.lit(1)).over(W.partitionBy("doc")))
-    if materialize:
-        sized = scoped_persist(sized, eager=True)
+    Per-doc size rides the shingle frame as a window count (one shuffle on
+    doc, bounded partitions — a doc has at most |words| shingles), so the
+    pair aggregate already carries sz_a/sz_b and the two join-backs against
+    a sizes dimension disappear.  Measured at sf0.1 this halves the wall
+    time of the join-back formulation."""
+    guarded = _drop_heavy_shingles(require_shingles(shingles))
+    sized = scoped_persist(
+        guarded.withColumn("sz", F.count(F.lit(1)).over(W.partitionBy("doc"))),
+        eager=eager,
+    )
     a = sized.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"), "shingle")
     b = sized.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"), "shingle")
     return (
@@ -124,20 +143,37 @@ def jaccard_pairs(
             F.first("sz_a").alias("sz_a"),
             F.first("sz_b").alias("sz_b"),
         )
+    )
+
+
+def jaccard_pairs(shingles: DataFrame) -> DataFrame:
+    """N-gram Jaccard near-dup pairs from a distinct (doc, shingle) frame:
+    jaccard = |∩| / (|a| + |b| − |∩|) ≥ ``JACCARD_MIN`` over the shingle
+    overlap.
+
+    The guarded+sized shingle frame is persisted eagerly before the
+    self-join references it twice.  The measured plan economics at sf0.1:
+    without it the whole scan→explode→anti-join subtree runs once per join
+    side (~2× the work); with it the second side reads the cache.  At
+    corpus scale this persist is the checkpoint you'd take before any
+    self-join.
+    """
+    return (
+        _shingle_overlap(shingles, eager=True)
         .withColumn(
             "jaccard",
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_MIN)
         .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
     )
 
 
-def _drop_heavy_shingles(shingles: DataFrame, max_df: int) -> DataFrame:
-    """The max_df skew guard as an ANTI-join against the heavy-hitter set
-    (shingles with document frequency > max_df) rather than an inner join
+def _drop_heavy_shingles(shingles: DataFrame) -> DataFrame:
+    """The ``MAX_DF`` skew guard as an ANTI-join against the heavy-hitter set
+    (shingles with document frequency > MAX_DF) rather than an inner join
     against the keep set.  The heavy set is small by construction — viral
-    boilerplate shingles, at most |instances|/max_df distinct values — so
+    boilerplate shingles, at most |instances|/MAX_DF distinct values — so
     AQE turns the anti-join into a broadcast (map-side filter): the shingle
     frame itself is never shuffled to apply the guard.  The inner-join
     formulation costs a full shuffle of the shingle frame; measured at
@@ -146,95 +182,87 @@ def _drop_heavy_shingles(shingles: DataFrame, max_df: int) -> DataFrame:
     heavy = (
         shingles.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
+        .filter(F.col("df") > MAX_DF)
         .select("shingle")
         # the heavy set is referenced by every consumer branch of the
         # guarded frame; without this persist each branch re-runs the full
         # frequency scan (measured 4x wall time at sf0.1).  Bounded size:
-        # at most |shingle rows| / max_df distinct values.  Scoped: the
+        # at most |shingle rows| / MAX_DF distinct values.  Scoped: the
         # harness releases it after the consuming action (caching.py).
     )
     heavy = scoped_persist(heavy)
     return shingles.join(heavy, "shingle", "left_anti")
 
 
-def containment_pairs(
-    shingles: DataFrame, threshold: float = 0.8, max_df: int | None = 64
-) -> DataFrame:
-    """Containment near-dup pairs: |A∩B| / min(|A|,|B|) ≥ threshold — the
-    short-doc-embedded-in-long-doc case symmetric Jaccard dilutes away.
+def containment_pairs(shingles: DataFrame) -> DataFrame:
+    """Containment near-dup pairs: |A∩B| / min(|A|,|B|) ≥
+    ``CONTAINMENT_MIN`` — the short-doc-embedded-in-long-doc case symmetric
+    Jaccard dilutes away.
 
-    Unlike routing through ``jaccard_pairs(threshold=0.0)`` (which
-    materializes the *entire* co-shingle pair set before any filter), this
-    plan is bounded end-to-end: ``max_df`` caps per-shingle join fan-out
-    BEFORE the self-join — on a boilerplate-heavy corpus the unbounded plan
-    is the all-pairs blowup — and the containment feasibility bound
-    ``inter ≥ ceil(threshold · min(sz_a, sz_b))`` (equivalent to the final
+    Unlike routing through a zero-threshold Jaccard (which materializes the
+    *entire* co-shingle pair set before any filter), this plan is bounded
+    end-to-end: ``MAX_DF`` caps per-shingle join fan-out BEFORE the
+    self-join — on a boilerplate-heavy corpus the unbounded plan is the
+    all-pairs blowup — and the containment feasibility bound
+    ``inter ≥ ceil(CONTAINMENT_MIN · min(sz_a, sz_b))`` (equivalent to the final
     score filter, since containment = inter / min) is applied in the same
     stage as the intersection aggregate, so no unfiltered pair frame ever
-    reaches a downstream exchange.
+    reaches a downstream exchange.  The sized frame's persist is lazy.
     """
-    if max_df is not None:
-        shingles = _drop_heavy_shingles(shingles, max_df)
-    from pyspark.sql import Window as W
-
-    sized = scoped_persist(
-        shingles.withColumn("sz", F.count(F.lit(1)).over(W.partitionBy("doc")))
-    )
-    a = sized.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"), "shingle")
-    b = sized.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"), "shingle")
+    pairs = _shingle_overlap(shingles, eager=False)
     sz_min = F.least(F.col("sz_a"), F.col("sz_b"))
     return (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("sz_a").alias("sz_a"),
-            F.first("sz_b").alias("sz_b"),
-        )
+        pairs
         # feasibility bound == score filter, in integer form (no float yet):
         # keeps the pair frame pruned inside this stage
-        .filter(F.col("inter") >= F.ceil(F.lit(threshold) * sz_min))
+        .filter(F.col("inter") >= F.ceil(F.lit(CONTAINMENT_MIN) * sz_min))
         .withColumn("containment", F.col("inter").cast("double") / sz_min)
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= CONTAINMENT_MIN)
         .select("doc_a", "doc_b", "inter", "containment")
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame, n_perm: int = 12, n_bands: int = 4
-) -> DataFrame:
+def _perm_hash(p: int, shingle: Column) -> Column:
+    """Permutation ``p``'s 60-bit hash of a shingle: md5 salted with
+    ``"p:"``.  The batch minima and the streaming gate's array minima
+    both hash through here."""
+    return hash60(F.concat_ws(":", F.lit(p), shingle))
+
+
+def minhash_minima(shingles: DataFrame) -> DataFrame:
+    """One row per doc, ``(doc, m0 .. m{N_PERM-1})``: each permutation's
+    minimum salted hash over the doc's shingles.
+
+    All N_PERM minima ride ONE hash aggregation as side-by-side columns:
+    each shingle row evaluates N_PERM salted hashes map-side and combines
+    into per-doc partial minima, so the exchange carries |docs| rows of
+    N_PERM bigints — NOT the N_PERM × |shingles| exploded rows of the
+    row-per-permutation formulation (measured 12x less shuffle volume;
+    identical minima, same oracle)."""
+    return require_shingles(shingles).groupBy("doc").agg(
+        *[F.min(_perm_hash(p, F.col("shingle"))).alias(f"m{p}") for p in range(N_PERM)]
+    )
+
+
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
     """MinHash band signatures: (doc, band, signature).
 
     Each "permutation" p hashes shingles with a distinct salt; the minimum per
-    (doc, p) is the signature component.  Bands of ``n_perm / n_bands`` rows
+    (doc, p) is the signature component.  Bands of ``N_PERM / N_BANDS`` rows
     are collapsed to one md5 signature string, so LSH candidate generation is
     a single groupBy on (band, signature).
     """
-    # All n_perm minima ride ONE hash aggregation as side-by-side columns:
-    # each shingle row evaluates n_perm salted hashes map-side and combines
-    # into per-doc partial minima, so the exchange carries |docs| rows of
-    # n_perm bigints — NOT the n_perm × |shingles| exploded rows of the
-    # row-per-permutation formulation (measured 12x less shuffle volume at
-    # n_perm=12; identical minima, same oracle).
-    mins = shingles.groupBy("doc").agg(
-        *[
-            F.min(hash60(F.concat_ws(":", F.lit(p), F.col("shingle")))).alias(f"m{p}")
-            for p in range(n_perm)
-        ]
-    )
-    return _band_signatures(mins, n_perm, n_bands)
+    return _band_signatures(minhash_minima(shingles))
 
 
-def _band_signatures(mins: DataFrame, n_perm: int, n_bands: int) -> DataFrame:
+def _band_signatures(mins: DataFrame) -> DataFrame:
     """(doc, band, signature) from one row per doc holding the permutation
-    minima ``m0 .. m{n_perm-1}``: band b's signature is
-    md5("p:min_p|p:min_p|...") over its ``n_perm / n_bands`` permutations,
+    minima ``m0 .. m{N_PERM-1}``: band b's signature is
+    md5("p:min_p|p:min_p|...") over its ``N_PERM / N_BANDS`` permutations,
     p ascending.  The batch operator and the streaming gate's map-only
     banding (streaming/near_dup_gate.stream_minhash_bands) both end here,
     so their buckets are the same bytes."""
-    rows_per_band = n_perm // n_bands
+    rows_per_band = N_PERM // N_BANDS
     bands = F.array(
         *[
             F.struct(
@@ -251,7 +279,7 @@ def _band_signatures(mins: DataFrame, n_perm: int, n_bands: int) -> DataFrame:
                     )
                 ).alias("signature"),
             )
-            for b in range(n_bands)
+            for b in range(N_BANDS)
         ]
     )
     return (
@@ -303,7 +331,7 @@ def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
+def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash fingerprints: per-token 60-bit hashes, per-bit signed sums,
     sign → bit.  (doc, simhash).
 
@@ -314,8 +342,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     exploded sums run inside whole-stage codegen with map-side partial
     aggregation — measured ~4× faster at bits=32, sf0.1.  The shuffle
     ships ``bits`` longs per doc, not tokens."""
-    tokens = df.select(
-        F.col(id_col).alias("doc"), F.explode(F.split(F.col(text_col), " ")).alias("tok")
+    tokens = require_documents(df).select(
+        F.col("doc_id").alias("doc"), F.explode(word_tokens("text")).alias("tok")
     ).withColumn("h", hash60(F.concat_ws(":", F.col("tok"))))  # one-part key: md5(tok)
     bit_sums = tokens.groupBy("doc").agg(
         *[
@@ -330,44 +358,39 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     return bit_sums.select("doc", fp.cast("bigint").alias("simhash"))
 
 
-def simhash_near_dup(
-    sigs: DataFrame,
-    n_bands: int = 4,
-    band_bits: int = 4,
-    max_hamming: int = 3,
-    id_col: str = "doc",
-    sig_col: str = "simhash",
-) -> DataFrame:
-    """SimHash → banded candidates → Hamming verify: (doc_a, doc_b, hamming)
-    for pairs sharing at least one band whose fingerprints differ in at most
-    ``max_hamming`` bits — the SimHash twin of MinHash→LSH→Jaccard-verify.
+def simhash_near_dup(sigs: DataFrame) -> DataFrame:
+    """SimHash → banded candidates → Hamming verify over the ``(doc,
+    simhash)`` frame of :func:`simhash`: (doc_a, doc_b, hamming) for pairs
+    sharing at least one of ``SIMHASH_BANDS`` ``SIMHASH_BAND_BITS``-bit
+    bands whose fingerprints differ in at most ``SIMHASH_MAX_HAMMING``
+    bits — the SimHash twin of MinHash→LSH→Jaccard-verify.
 
     Candidates come from an equi-join on (band, band_sig) — by pigeonhole a
-    pair within Hamming distance < n_bands MUST agree on some band, so the
-    banding has no false negatives at max_hamming ≤ n_bands - 1 while
-    cutting the pair space from all-pairs to per-bucket.  The verify step is
-    two integer ops per pair (xor + popcount).
+    pair within Hamming distance < SIMHASH_BANDS MUST agree on some band,
+    so the banding has no false negatives at the pinned shape while cutting
+    the pair space from all-pairs to per-bucket.  The verify step is two
+    integer ops per pair (xor + popcount).
 
     The signature frame is persisted before banding: both sides of the
     bucket self-join reference it, and without the cache each side re-runs
     the full fingerprint pipeline (token explode + ``bits``-column agg) —
     the dominant cost.  Doc-level (id, fingerprint) rows are tiny relative
     to the corpus, so the cache is bounded."""
-    sigs = scoped_persist(sigs)
-    mask = (1 << band_bits) - 1
+    sigs = scoped_persist(_require(sigs, "simhash", ("doc", "simhash")))
+    mask = (1 << SIMHASH_BAND_BITS) - 1
     banded = sigs.select(
-        F.col(id_col).alias("doc"),
-        F.col(sig_col).alias("sig"),
+        "doc",
+        F.col("simhash").alias("sig"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftright(F.col(sig_col), b * band_bits)
+                        F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS)
                         .bitwiseAND(F.lit(mask))
                         .alias("band_sig"),
                     )
-                    for b in range(n_bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("bs"),
@@ -387,13 +410,13 @@ def simhash_near_dup(
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("int")
     return (
         cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
 
 def connected_components(
-    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b", max_iter: int = 20
+    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
 ) -> DataFrame:
     """Duplicate-cluster formation: connected components over an undirected
     pair graph, as ``(doc, cluster_id)`` with cluster_id = min doc id in the
@@ -404,7 +427,8 @@ def connected_components(
     then follows its label's label (path halving) — the doubling step that
     turns O(diameter) convergence into O(log n) rounds, the property that
     makes edge-list CC tractable on long-chain components at corpus scale.
-    Converged when no label changes; raises if max_iter is hit first (an
+    Converged when no label changes; raises if ``_CC_MAX_ROUNDS`` rounds
+    pass first (an
     unconverged labeling silently merges nothing — fail loudly instead).
     Each round's labels are ``localCheckpoint``-ed: the round references the
     label frame several times (neighbor join, pointer self-join, change
@@ -474,7 +498,7 @@ def connected_components(
     prev_sum = (
         labels.agg(F.sum("label")).collect()[0][0] if numeric_ids else None
     )
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
@@ -515,53 +539,60 @@ def connected_components(
     pairs.unpersist()
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds"
         )
     return labels.select(F.col("node").alias("doc"), F.col("label").alias("cluster_id"))
 
 
-def duplicate_spans(
-    df: DataFrame, id_col: str, text_col: str, w: int = 12, min_docs: int = 2
-) -> DataFrame:
+def span_tokens(df: DataFrame) -> DataFrame:
+    """``(doc, w)``: each document's token array, the scan spread first —
+    a single-file scan is ONE input partition, so the window-hash stream
+    (explode + per-position md5 over the slice) otherwise runs on one core,
+    once per plan branch that reads it."""
+    return spread_scan(require_documents(df)).select(
+        F.col("doc_id").alias("doc"), word_tokens("text").alias("w")
+    )
+
+
+def span_windows(tokens: DataFrame, w: int = SPAN_W) -> DataFrame:
+    """``(doc, pos, h)`` over a :func:`span_tokens` frame: one row per
+    ``w``-token window of every doc with at least ``w`` tokens, ``pos``
+    1-based, ``h`` the md5 of the window's space-joined tokens."""
+    return (
+        tokens.filter(F.size("w") >= w)
+        .select(
+            "doc",
+            F.explode(F.sequence(F.lit(1), F.size("w") - w + 1)).alias("pos"),
+            "w",
+        )
+        .select(
+            "doc",
+            "pos",
+            F.md5(F.concat_ws(" ", F.slice("w", F.col("pos"), w))).alias("h"),
+        )
+    )
+
+
+def duplicate_spans(df: DataFrame, w: int = SPAN_W) -> DataFrame:
     """Substring-level duplicate spans: maximal runs of consecutive token
-    positions whose ``w``-token windows each occur in ≥ ``min_docs``
-    documents (the distributed re-expression of suffix-array training-data
-    dedup — window-hash → document-frequency filter → gaps-and-islands).
+    positions whose ``w``-token windows each occur in ≥ 2 documents (the
+    distributed re-expression of suffix-array training-data dedup —
+    window-hash → document-frequency filter → gaps-and-islands).
 
     Returns (doc, span_start, span_end, n_windows) with 1-based token
     positions; span_end = last covered token.  Every shuffle is keyed by
     either the 128-bit window hash (uniform by construction) or the doc id
     (island merge, bounded by doc length) — no global window, no UDF.
     """
-    from pyspark.sql import Window as W
-
-    # spread doc rows pre-explode (word_shingles' auto-detect): a
-    # single-file scan is ONE input partition, so the window-hash stream
-    # (explode + per-position md5 over the slice) otherwise runs on one
-    # core — and it runs once per plan branch (the df-filter build side and
-    # the semi-join probe both read it)
-    from ..sources.readers import spread_scan
-
-    df = spread_scan(df)
-    words = F.split(F.col(text_col), " ", -1)
-    base = df.select(F.col(id_col).alias("doc"), words.alias("w")).filter(
-        F.size("w") >= w
-    )
-    wins = base.select(
-        "doc",
-        F.explode(F.sequence(F.lit(1), F.size("w") - w + 1)).alias("pos"),
-        "w",
-    ).select(
-        "doc",
-        "pos",
-        F.md5(F.concat_ws(" ", F.slice("w", F.col("pos"), w))).alias("h"),
-    )
+    # the window stream runs once per plan branch (the df-filter build side
+    # and the semi-join probe both read it)
+    wins = span_windows(span_tokens(df), w)
     dup = (
         wins.select("h", "doc")
         .distinct()
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_docs)
+        .filter(F.col("df") >= 2)
         .select("h")
     )
     hits = wins.join(dup, "h", "left_semi").select("doc", "pos")
@@ -580,20 +611,14 @@ def duplicate_spans(
     )
 
 
-def ppjoin_pairs(
-    elements: DataFrame,
-    t_num: int = 1,
-    t_den: int = 2,
-    doc_col: str = "doc",
-    elem_col: str = "shingle",
-) -> DataFrame:
+def ppjoin_pairs(elements: DataFrame, t_num: int = 1, t_den: int = 2) -> DataFrame:
     """All-pairs set-similarity self-join with PREFIX + POSITIONAL
     FILTERING (AllPairs, Bayardo et al. WWW'07; the positional filter is
-    the "PP" of PPJoin, Xiao et al. WWW'08/TODS'11) over a (doc, element)
-    frame — the same input shape as :func:`jaccard_pairs`: every unordered
-    document pair whose element-set Jaccard ≥ t_num/t_den, found WITHOUT an
-    all-pairs comparison and WITHOUT the LOSSY ``max_df`` heavy-hitter drop.
-    Input rows are ``.distinct()``-ed up front, so duplicate (doc, element)
+    the "PP" of PPJoin, Xiao et al. WWW'08/TODS'11) over a (doc, shingle)
+    frame — the same input as :func:`jaccard_pairs`: every unordered
+    document pair whose shingle-set Jaccard ≥ t_num/t_den, found WITHOUT an
+    all-pairs comparison and WITHOUT the LOSSY ``MAX_DF`` heavy-hitter drop.
+    Input rows are ``.distinct()``-ed up front, so duplicate (doc, shingle)
     rows cannot corrupt the df counts, prefix-length math, or the
     array_intersect verification (the set semantics are a hard contract,
     now enforced rather than documented).
@@ -641,16 +666,14 @@ def ppjoin_pairs(
     back to per-doc element arrays and evaluates one array_intersect per
     pair, O(|a|+|b|).
     """
-    from pyspark.sql import Window as W
-
     # persist (eager): the distinct element frame feeds THREE branches —
     # the df table, the ranked join-back, and the verification arrays —
     # which AQE materializes concurrently on a cold run; unpersisted, each
     # re-ran the upstream scan+explode+distinct
     toks = scoped_persist(
-        elements.select(
-            F.col(doc_col).alias("doc"), F.col(elem_col).alias("tok")
-        ).distinct(),
+        require_shingles(elements)
+        .select("doc", F.col("shingle").alias("tok"))
+        .distinct(),
         eager=True,
     )
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))

@@ -15,6 +15,7 @@ input size; estimation is a broadcast join against it.
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -51,30 +52,40 @@ def _pow2_literal():
     )
 
 
-def _check_bloom_shape(m: int, n_hashes: int) -> None:
-    """The bitmap holds m/64 whole words: an m that is not a positive
-    multiple of 64 would drop the positions past the last word."""
-    if m < 64 or m % 64 != 0:
-        raise ValueError(f"bloom filter size m={m} must be a positive multiple of 64")
-    if n_hashes < 1:
-        raise ValueError(f"bloom filter needs n_hashes >= 1, got {n_hashes}")
+# Largest Bloom size: the collected bitmap ships as an m/64-word plan
+# literal (q_bloom_join_pushdown), 128 KiB at this ceiling
+BLOOM_M_MAX = 1 << 20
 
 
-def bloom_bitmap(
-    build: DataFrame,
-    key_col: str,
-    position: Callable[[Column, Column, int], Column],
-    n_hashes: int = 3,
-    m: int = 4096,
-) -> DataFrame:
+@dataclass(frozen=True)
+class BloomShape:
+    """One Bloom filter's shape: ``m`` bits, ``n_hashes`` positions per key,
+    and ``position(j, key, m)`` — the bit (in [0, m)) that hash ``j`` of
+    ``key`` sets.  The build and the probe take the same value, so they
+    cannot disagree.  An md5-derived position (:func:`_cms_col`) makes
+    every verdict oracle-checkable; a JVM-native one (``xxhash64``) is
+    cheaper when nothing outside Spark has to agree with it.
+
+    Checked once, when built: the bitmap holds m/64 whole words, so ``m``
+    must be a positive multiple of 64 (else positions past the last word
+    drop) and at most ``BLOOM_M_MAX``."""
+
+    m: int
+    n_hashes: int
+    position: Callable[[Column, Column, int], Column]
+
+    def __post_init__(self) -> None:
+        if self.m < 64 or self.m % 64 != 0:
+            raise ValueError(f"bloom filter size m={self.m} must be a positive multiple of 64")
+        if self.m > BLOOM_M_MAX:
+            raise ValueError(f"bloom filter size m={self.m} exceeds BLOOM_M_MAX={BLOOM_M_MAX}")
+        if self.n_hashes < 1:
+            raise ValueError(f"bloom filter needs n_hashes >= 1, got {self.n_hashes}")
+
+
+def bloom_bitmap(build: DataFrame, key_col: str, shape: BloomShape) -> DataFrame:
     """The Bloom filter itself, as ONE row holding ``words``: an array of
     m/64 bigint words with the build keys' positions set.
-
-    ``position(j, key, m)`` is the caller's hash: the bit (in [0, m)) that
-    hash ``j`` of ``key`` sets; the probe must use the same one.  An
-    md5-derived position (:func:`_cms_col`) makes every verdict
-    oracle-checkable; a JVM-native one (``xxhash64``) is cheaper when
-    nothing outside Spark has to agree with it.
 
     One bounded aggregation: keys → k positions → per-word BIT_OR (the
     map-side partial agg collapses every partition to ≤ m/64 rows before
@@ -84,13 +95,12 @@ def bloom_bitmap(
     row.  The row is m/64·8 bytes regardless of corpus size — broadcast it,
     or collect it and probe against an array literal.
     """
-    _check_bloom_shape(m, n_hashes)
     pow2 = _pow2_literal()
-    pos = position(F.col("j"), F.col("key"), m)
+    pos = shape.position(F.col("j"), F.col("key"), shape.m)
     word_rows = (
         build.select(F.col(key_col).alias("key"))
         .select(
-            "key", F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("j")
+            "key", F.explode(F.sequence(F.lit(0), F.lit(shape.n_hashes - 1))).alias("j")
         )
         .select(
             (pos / 64).cast("int").alias("w"),
@@ -103,34 +113,27 @@ def bloom_bitmap(
         F.map_from_entries(F.collect_list(F.struct("w", "bits"))).alias("wm")
     ).select(
         F.transform(
-            F.sequence(F.lit(0), F.lit(m // 64 - 1)),
+            F.sequence(F.lit(0), F.lit(shape.m // 64 - 1)),
             lambda i: F.coalesce(F.element_at(F.col("wm"), i), F.lit(0)),
         ).alias("words")
     )
 
 
-def bloom_bits_predicate(
-    key,
-    words: Column,
-    position: Callable[[Column, Column, int], Column],
-    n_hashes: int = 3,
-    m: int = 4096,
-) -> Column:
+def bloom_bits_predicate(key, words: Column, shape: BloomShape) -> Column:
     """Membership test of ``key`` against a :func:`bloom_bitmap` word array
-    built with the same ``position``, ``n_hashes`` and ``m``: true iff all
-    ``n_hashes`` positions are set.  ``words`` is the bitmap column (the
-    1-row frame attached by a broadcast cross join) or the collected words
-    as an array literal (``F.lit(list)``: one object, not a per-row
-    CreateArray of m/64 children).  Pure column expression —
-    ``element_at`` + bitwise AND per hash inside whole-stage codegen, no
-    explode, no join, no re-aggregation; as a filter it sits in the scan
-    stage below any downstream exchange."""
-    _check_bloom_shape(m, n_hashes)
+    built with the same ``shape``: true iff all ``n_hashes`` positions are
+    set.  ``words`` is the bitmap column (the 1-row frame attached by a
+    broadcast cross join) or the collected words as an array literal
+    (``F.lit(list)``: one object, not a per-row CreateArray of m/64
+    children).  Pure column expression — ``element_at`` + bitwise AND per
+    hash inside whole-stage codegen, no explode, no join, no
+    re-aggregation; as a filter it sits in the scan stage below any
+    downstream exchange."""
     key_col = F.col(key) if isinstance(key, str) else key
     pow2 = _pow2_literal()
     pred = None
-    for j in range(n_hashes):
-        pos = position(F.lit(j), key_col, m)
+    for j in range(shape.n_hashes):
+        pos = shape.position(F.lit(j), key_col, shape.m)
         word = F.element_at(words, (pos / 64).cast("int") + 1)
         bit = F.element_at(pow2, F.pmod(pos, F.lit(64)).cast("int") + 1)
         term = word.bitwiseAND(bit) != 0

@@ -34,38 +34,39 @@ from . import sinks_q  # noqa: F401, E402
 from . import llm_q  # noqa: F401, E402
 
 # Verification-window priority (regenerated by ``tools/rotate_window.py``
-# AFTER the changes landed): (a) the 23 queries whose code path changed —
-# every exact/IVF/LSH/PQ top-k, recall harness and tuning sweep now runs
-# through the one side projection, pair scorer, top-k and recall@k of
-# operators/similarity; the centroid, k-means, SemDeDup and drift queries
-# through its one quantized-dimension stage; the int8 audit and the
-# k-center coreset through its one quantizer; and the two sink queries
-# through the per-prefix table directory; (b) the stalest rows — the
-# r10-latest then the r11-latest block.
+# AFTER the changes landed): (a) the 24 queries whose code path changed —
+# every shingle, MinHash, SimHash, span and exact-dedup query now runs
+# through the one stage definitions and input contract of operators/dedup
+# (plus the streaming gate and ingest, which share its band builder and
+# content key, and the two other connected-components callers); the two
+# Bloom queries through one BloomShape; and the two sinks_q queries through
+# the exit-removed temp dir; (b) the stalest rows — the r10-latest then the
+# r11-latest block.
 _VERIFY_FIRST = [
-    "q_ivf_nprobe_sweep",  # changed/new
-    "q_hard_negatives",  # changed/new
-    "q_cosine_topk",  # changed/new
-    "q_ann_ivf",  # changed/new
-    "q_ann_lsh",  # changed/new
-    "q_lsh_hyperplane_buckets",  # changed/new
-    "q_knn_classify",  # changed/new
-    "q_ann_filtered",  # changed/new
-    "q_ann_recall",  # changed/new
-    "q_ann_recall_hashed",  # changed/new
-    "q_ivf_recall",  # changed/new
-    "q_ann_plane_sweep",  # changed/new
-    "q_label_centroids",  # changed/new
-    "q_kmeans_iteration",  # changed/new
-    "q_semdedup",  # changed/new
-    "q_semdedup_scaled",  # changed/new
-    "q_embedding_drift",  # changed/new
-    "q_embedding_quantize",  # changed/new
-    "q_pq_codes",  # changed/new
-    "q_ivfpq_adc",  # changed/new
-    "q_kcenter_coreset",  # changed/new
-    "q_exactly_once_sink",  # changed/new
-    "q_sink_compaction",  # changed/new
+    "q_dedup_exact",  # changed/new
+    "q_dedup_ngram_jaccard",  # changed/new
+    "q_minhash_signatures",  # changed/new
+    "q_simhash",  # changed/new
+    "q_simhash_near_dup",  # changed/new
+    "q_lsh_verified_pairs",  # changed/new
+    "q_dedup_clusters",  # changed/new
+    "q_dedup_containment",  # changed/new
+    "q_dedup_keepers",  # changed/new
+    "q_minhash_est_jaccard",  # changed/new
+    "q_cross_source_dup_matrix",  # changed/new
+    "q_ppjoin_near_dup",  # changed/new
+    "q_duplicate_spans",  # changed/new
+    "q_strip_duplicate_spans",  # changed/new
+    "q_incremental_dedup",  # changed/new
+    "q_corpus_pipeline_e2e",  # changed/new
+    "q_stream_corpus_ingest",  # changed/new
+    "q_stream_near_dup_gate",  # changed/new
+    "q_er_entities",  # changed/new
+    "q_embedding_dup_clusters",  # changed/new
+    "q_bloom_contamination",  # changed/new
+    "q_bloom_join_pushdown",  # changed/new
+    "q_sink_roundtrip",  # changed/new
+    "q_dataset_loaders",  # changed/new
     "q_kmv_distinct",  # r10-latest
     "q_kmv_set_ops",  # r10-latest
     "q_llm_boundary_http",  # r10-latest
@@ -81,6 +82,8 @@ _VERIFY_FIRST = [
     "q_stream_kmv_distinct",  # r10-latest
     "q12_priority_by_status",  # r11-latest
     "q_alignment_prf1",  # r11-latest
+    "q_ann_ivf",  # r11-latest
+    "q_ann_lsh",  # r11-latest
     "q_bidirectional_scores",  # r11-latest
     "q_bpe_train",  # r11-latest
     "q_chat_prompt",  # r11-latest
@@ -88,11 +91,8 @@ _VERIFY_FIRST = [
     "q_constraint_audit",  # r11-latest
     "q_corr_qty_price",  # r11-latest
     "q_coverage",  # r11-latest
-    "q_dedup_exact",  # r11-latest
-    "q_dedup_ngram_jaccard",  # r11-latest
     "q_ehr_gold_parity",  # r11-latest
     "q_ehr_matching_f1",  # r11-latest
-    "q_ehr_round1_matches",  # r11-latest
 ]
 _VERIFY_FIRST = [n for n in _VERIFY_FIRST if n in QUERIES or not n.endswith("_tws")]
 

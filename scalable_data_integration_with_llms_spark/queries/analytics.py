@@ -16,6 +16,7 @@ from ..caching import scoped_persist
 from ..functions.determinism import TWO_60_SQL, cents, hash60_sql
 from ..functions.normalize import normalize_colname, option_letter, truncate_values
 from ..operators.sampling import most_frequent, random_sample, weighted_sample
+from ..operators.sketch import BloomShape, bloom_bitmap, bloom_bits_predicate
 from ..operators.surrogate import map_pk_dim
 from ..sources.readers import load_table
 from .registry import query
@@ -992,9 +993,6 @@ def q_corr_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows and the exact join drops them, so results are identical by
 # construction (the filter shapes the plan, never the answer).
 
-_BLOOM_JOIN_M = 1 << 17
-_BLOOM_JOIN_K = 3
-
 
 def _xxhash_position(j, key, m: int):
     """Bit position of hash ``j`` of ``key``: the JVM-native ``xxhash64``
@@ -1008,6 +1006,8 @@ def _xxhash_position(j, key, m: int):
     return F.pmod(F.xxhash64(j, key.cast("string")), F.lit(m))
 
 
+_BLOOM_JOIN = BloomShape(1 << 17, 3, _xxhash_position)
+
 _BLOOM_JOIN_ORACLE = """
 SELECT date_trunc('month', o_orderdate) AS order_month,
        COUNT(*) AS n_items,
@@ -1020,17 +1020,12 @@ GROUP BY 1
 
 @query("q_bloom_join_pushdown", _BLOOM_JOIN_ORACLE)
 def q_bloom_join_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sketch import bloom_bitmap, bloom_bits_predicate
-
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
     li = load_table(spark, sf_dir, "lineitem")
-    shape = {"n_hashes": _BLOOM_JOIN_K, "m": _BLOOM_JOIN_M}
-    words = bloom_bitmap(o, "o_orderkey", _xxhash_position, **shape).first()["words"]
-    pruned = li.filter(
-        bloom_bits_predicate("l_orderkey", F.lit(words), _xxhash_position, **shape)
-    )
+    words = bloom_bitmap(o, "o_orderkey", _BLOOM_JOIN).first()["words"]
+    pruned = li.filter(bloom_bits_predicate("l_orderkey", F.lit(words), _BLOOM_JOIN))
     joined = pruned.join(o, pruned.l_orderkey == o.o_orderkey)
     return joined.groupBy(
         F.trunc("o_orderdate", "month").alias("order_month")

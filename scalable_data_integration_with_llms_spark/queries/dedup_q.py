@@ -9,23 +9,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import scoped_persist
 from ..operators.dedup import (
+    MAX_DF,
+    N_PERM,
+    connected_components,
     containment_pairs,
     exact_dedup_groups,
     jaccard_pairs,
+    lsh_candidate_pairs,
+    minhash_minima,
     minhash_signatures,
+    ppjoin_pairs,
     simhash,
+    simhash_near_dup,
     word_shingles,
 )
-
-# Document-frequency cap for every shingle self-join on the query surface:
-# shingles shared by more than MAX_DF docs are dropped BEFORE the join (the
-# standard boilerplate/stop-shingle skew guard).  64 is far above the planted
-# near-dup cluster sizes in the test corpus, so at test sf the results are
-# unchanged — while on a real corpus this is the bound that keeps the join
-# fan-out at O(max_df · n_shingles) instead of O(df²) on viral boilerplate.
-MAX_DF = 64
-from ..caching import scoped_persist
 from ..functions.determinism import hash60_sql
 from ..sources.readers import load_table
 from .registry import query
@@ -41,7 +40,7 @@ FROM documents GROUP BY 1
 @query("q_dedup_exact", _EXACT_ORACLE)
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return exact_dedup_groups(d, "doc_id", "text")
+    return exact_dedup_groups(d)
 
 
 # -- n-gram Jaccard near-dup pairs --------------------------------------------
@@ -56,9 +55,9 @@ s AS (SELECT DISTINCT doc, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
 """
 
 # the df-capped shingle set every self-join query reads (mirrors the Spark
-# side's max_df guard in operators/dedup.py)
-_DF_FILTER_CTE = """,
-sdf AS (SELECT shingle FROM s GROUP BY shingle HAVING COUNT(*) <= 64),
+# side's MAX_DF guard in operators/dedup.py)
+_DF_FILTER_CTE = f""",
+sdf AS (SELECT shingle FROM s GROUP BY shingle HAVING COUNT(*) <= {MAX_DF}),
 s2 AS (SELECT s.doc, s.shingle FROM s JOIN sdf USING (shingle))
 """
 
@@ -77,8 +76,7 @@ WHERE inter / (x.sz + y.sz - inter) >= 0.5
 @query("q_dedup_ngram_jaccard", _JACCARD_ORACLE)
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sh = word_shingles(d, "doc_id", "text", n=3)
-    return jaccard_pairs(sh, threshold=0.5, max_df=MAX_DF, materialize=True)
+    return jaccard_pairs(word_shingles(d))
 
 
 # -- MinHash-LSH band signatures ----------------------------------------------
@@ -97,8 +95,7 @@ FROM banded GROUP BY doc, band
 @query("q_minhash_signatures", _MINHASH_ORACLE)
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sh = word_shingles(d, "doc_id", "text", n=3)
-    return minhash_signatures(sh, n_perm=12, n_bands=4)
+    return minhash_signatures(word_shingles(d))
 
 
 # -- SimHash fingerprints ------------------------------------------------------
@@ -126,7 +123,7 @@ FROM sums
 @query("q_simhash", _SIMHASH_ORACLE)
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return simhash(d, "doc_id", "text", bits=_SIMHASH_BITS)
+    return simhash(d, bits=_SIMHASH_BITS)
 
 
 # SimHash → banded candidates → Hamming verify (the SimHash twin of the
@@ -174,11 +171,8 @@ FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= 3
 def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded SimHash near-duplicate pairs with exact Hamming verify
     (operators/dedup.simhash_near_dup)."""
-    from ..operators.dedup import simhash_near_dup
-
     d = load_table(spark, sf_dir, "documents")
-    sigs = simhash(d, "doc_id", "text", bits=_SIMHASH_PAIR_BITS)
-    return simhash_near_dup(sigs, n_bands=4, band_bits=8, max_hamming=3)
+    return simhash_near_dup(simhash(d, bits=_SIMHASH_PAIR_BITS))
 
 
 # Real PNG decode, value-oracled: the Spark side synthesizes a valid PNG per
@@ -325,11 +319,8 @@ def q_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager: the shingle frame feeds 4 plan branches (signatures, sizes,
     # both verify sides) that AQE materializes as CONCURRENT jobs — a lazy
     # persist left every branch recomputing the scan+explode on a cold run
-    sh = scoped_persist(word_shingles(d, "doc_id", "text", n=3), eager=True)
-    sigs = minhash_signatures(sh, n_perm=12, n_bands=4)
-    from ..operators.dedup import lsh_candidate_pairs
-
-    cands = lsh_candidate_pairs(sigs)
+    sh = scoped_persist(word_shingles(d), eager=True)
+    cands = lsh_candidate_pairs(minhash_signatures(sh))
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     sa = sh.select(F.col("doc").alias("doc_a"), "shingle")
     sb = sh.select(F.col("doc").alias("doc_b"), "shingle")
@@ -380,12 +371,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the same closure with a recursive CTE.  At 100 TB the iterative
     join rounds are the standard CC-on-edge-list recipe; the keep/drop
     decision is then `doc != cluster_id`."""
-    from ..operators.dedup import connected_components
-
     d = load_table(spark, sf_dir, "documents")
-    sh = word_shingles(d, "doc_id", "text", n=3)
-    pairs = jaccard_pairs(sh, threshold=0.5, max_df=MAX_DF, materialize=True)
-    return connected_components(pairs)
+    return connected_components(jaccard_pairs(word_shingles(d)))
 
 
 # -- multimodal metadata with an exact oracle ---------------------------------
@@ -437,8 +424,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter ≥ ceil(0.8·min(sz)) prunes in the same stage as the intersection
     aggregate — the unfiltered co-shingle pair set is never materialized."""
     d = load_table(spark, sf_dir, "documents")
-    sh = word_shingles(d, "doc_id", "text", n=3)
-    return containment_pairs(sh, threshold=0.8, max_df=MAX_DF)
+    return containment_pairs(word_shingles(d))
 
 
 # -- canonical selection: keep the best doc per duplicate cluster -------------
@@ -464,11 +450,8 @@ def q_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment joined back to doc metadata."""
     from pyspark.sql import Window as W
 
-    from ..operators.dedup import connected_components, jaccard_pairs, word_shingles
-
     d = load_table(spark, sf_dir, "documents")
-    sh = word_shingles(d, "doc_id", "text", n=3)
-    clusters = connected_components(jaccard_pairs(sh, threshold=0.5, max_df=MAX_DF, materialize=True))
+    clusters = connected_components(jaccard_pairs(word_shingles(d)))
     joined = clusters.join(
         d.select("doc_id", "n_chars"), clusters.doc == F.col("doc_id")
     )
@@ -516,16 +499,13 @@ def q_minhash_est_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_perm choice (the dedup analog of q_ann_recall's n_planes tuning).
     Exact integer minhashes in both engines make the estimate itself
     oracle-checked."""
-    from ..functions.determinism import hash60
-    from ..operators.dedup import jaccard_pairs, word_shingles
-
     d = load_table(spark, sf_dir, "documents")
-    sh = scoped_persist(word_shingles(d, "doc_id", "text", n=3), eager=True)
-    pairs = jaccard_pairs(sh, threshold=0.5, max_df=MAX_DF, materialize=True).select(
+    sh = scoped_persist(word_shingles(d), eager=True)
+    pairs = jaccard_pairs(sh).select(
         "doc_a", "doc_b", F.col("jaccard").alias("true_jaccard")
     )
-    # wide minhash layout (one agg, 12 min columns — same shape as
-    # minhash_signatures): the per-pair estimate is then a column
+    # wide minhash layout (minhash_minima, the minima minhash_signatures
+    # bands): the per-pair estimate is then a column
     # expression over two co-keyed joins, not a 12-way (doc, p) join + agg.
     # Persisted: ma and mb below both read it — without the cache the
     # 12-permutation md5 aggregation (the dominant compute) runs per side.
@@ -537,23 +517,15 @@ def q_minhash_est_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial_min — md5 recompute is shuffle-free map work.  Interleaved
     # fresh-process x3 at sf0.1: recompute 3.63/3.32/3.34 s best vs
     # distinct+join-back 5.24/5.46/4.88 s.
-    mins = scoped_persist(
-        sh.groupBy("doc").agg(
-            *[
-                F.min(hash60(F.concat_ws(":", F.lit(p), F.col("shingle")))).alias(f"m{p}")
-                for p in range(12)
-            ]
-        ),
-        eager=True,
-    )
+    mins = scoped_persist(minhash_minima(sh), eager=True)
     ma = mins.select(
-        F.col("doc").alias("doc_a"), *[F.col(f"m{p}").alias(f"a{p}") for p in range(12)]
+        F.col("doc").alias("doc_a"), *[F.col(f"m{p}").alias(f"a{p}") for p in range(N_PERM)]
     )
     mb = mins.select(
-        F.col("doc").alias("doc_b"), *[F.col(f"m{p}").alias(f"b{p}") for p in range(12)]
+        F.col("doc").alias("doc_b"), *[F.col(f"m{p}").alias(f"b{p}") for p in range(N_PERM)]
     )
     matches = sum(
-        F.when(F.col(f"a{p}") == F.col(f"b{p}"), 1).otherwise(0) for p in range(12)
+        F.when(F.col(f"a{p}") == F.col(f"b{p}"), 1).otherwise(0) for p in range(N_PERM)
     )
     return (
         pairs.join(ma, "doc_a")
@@ -563,7 +535,7 @@ def q_minhash_est_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_b",
             "true_jaccard",
             matches.cast("bigint").alias("matching_perms"),
-            (matches / F.lit(12.0)).alias("est_jaccard"),
+            (matches / F.lit(float(N_PERM))).alias("est_jaccard"),
         )
     )
 
@@ -608,8 +580,7 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension; everything upstream is the existing candidate-bounded
     near-dup plan."""
     d = load_table(spark, sf_dir, "documents")
-    sh = word_shingles(d, "doc_id", "text", n=3)
-    pairs = jaccard_pairs(sh, threshold=0.5, max_df=MAX_DF, materialize=True)
+    pairs = jaccard_pairs(word_shingles(d))
     src = d.select("doc_id", "source")
     sa = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("sa"))
     sb = src.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("sb"))
@@ -679,8 +650,5 @@ def q_ppjoin_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes an all-pairs set — the candidate join touches only each
     document's rarest shingles.  The lossless twin of
     q_dedup_ngram_jaccard's max_df-guarded join on the same universe."""
-    from ..operators.dedup import ppjoin_pairs
-
     d = load_table(spark, sf_dir, "documents")
-    sh = word_shingles(d, "doc_id", "text", n=3)
-    return ppjoin_pairs(sh, t_num=1, t_den=2)
+    return ppjoin_pairs(word_shingles(d), t_num=1, t_den=2)

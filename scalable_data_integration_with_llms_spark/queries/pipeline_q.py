@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.determinism import hash60, hash60_sql
+from ..operators.dedup import content_key
 from ..sources.readers import load_table
 from .registry import query
 
@@ -59,10 +60,10 @@ FROM flagged GROUP BY source
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     incoming = d.filter(F.col("doc_id") % 10 == 0).select(
-        "doc_id", "source", F.md5("text").alias("h")
+        "doc_id", "source", content_key("text").alias("h")
     )
     corpus_hashes = (
-        d.filter(F.col("doc_id") % 10 != 0).select(F.md5("text").alias("h")).distinct()
+        d.filter(F.col("doc_id") % 10 != 0).select(content_key("text").alias("h")).distinct()
     )
     firsts = incoming.groupBy("h").agg(F.min("doc_id").alias("first_id"))
     flagged = (
@@ -281,7 +282,7 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = gated.select("doc_id", "text", predicted.alias("predicted"))
     keepers = (
         flagged.withColumn(
-            "first_id", F.min("doc_id").over(Window.partitionBy(F.md5("text")))
+            "first_id", F.min("doc_id").over(Window.partitionBy(content_key("text")))
         )
         .filter(F.col("doc_id") == F.col("first_id"))
         .drop("first_id")

@@ -41,17 +41,15 @@ from pyspark.sql import functions as F
 from ..caching import scoped_persist
 from ..functions.determinism import hash60, hash60_sql
 from ..functions.text import ngram_structs
+from ..operators.dedup import SPAN_W, duplicate_spans, span_tokens, span_windows
 from ..operators.similarity import quantize
-from ..sources.readers import load_table, spread_scan
+from ..sources.readers import load_table
 from .registry import query
 from ..functions.localframe import local_df
 
 # -- substring-level duplicate spans ------------------------------------------
-# W chosen at 12 tokens for the synthetic corpus (docs average ~54 tokens);
-# the published substring-dedup recipe uses 50-token windows on real
-# documents — W is a constant, not a semantic.
-
-_SPAN_W = 12
+# W is operators/dedup.SPAN_W (12 tokens for the synthetic corpus) — a
+# constant, not a semantic.
 
 _SPAN_ORACLE = f"""
 WITH arrs AS (
@@ -59,10 +57,10 @@ WITH arrs AS (
 ),
 wins AS (
   SELECT doc_id, i AS pos,
-         md5(array_to_string(arr[i:i + {_SPAN_W} - 1], ' ')) AS h
+         md5(array_to_string(arr[i:i + {SPAN_W} - 1], ' ')) AS h
   FROM arrs,
        LATERAL (SELECT unnest(generate_series(
-                 1, greatest(len(arr) - {_SPAN_W} + 1, 0))) AS i) t(i)
+                 1, greatest(len(arr) - {SPAN_W} + 1, 0))) AS i) t(i)
 ),
 dup AS (
   SELECT h FROM (SELECT DISTINCT h, doc_id FROM wins)
@@ -78,7 +76,7 @@ isl AS (
 )
 SELECT doc_id,
        MIN(pos) AS span_start,
-       MAX(pos) + {_SPAN_W} - 1 AS span_end,
+       MAX(pos) + {SPAN_W} - 1 AS span_end,
        CAST(COUNT(*) AS BIGINT) AS n_windows
 FROM isl GROUP BY doc_id, grp
 """
@@ -96,12 +94,8 @@ def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts when small; the probe side never reships window text, only
     (doc, pos, 128-bit hash).  The only window function runs partitioned by
     doc (bounded by document length), never globally."""
-    from ..operators.dedup import duplicate_spans
-
     d = load_table(spark, sf_dir, "documents")
-    return duplicate_spans(d, "doc_id", "text", w=_SPAN_W).withColumnRenamed(
-        "doc", "doc_id"
-    )
+    return duplicate_spans(d).withColumnRenamed("doc", "doc_id")
 
 
 # -- BM25 top-k retrieval -----------------------------------------------------
@@ -476,10 +470,10 @@ WITH arrs AS (
 ),
 wins AS (
   SELECT doc_id, i AS pos,
-         md5(array_to_string(arr[i:i + {_SPAN_W} - 1], ' ')) AS h
+         md5(array_to_string(arr[i:i + {SPAN_W} - 1], ' ')) AS h
   FROM arrs,
        LATERAL (SELECT unnest(generate_series(
-                 1, greatest(len(arr) - {_SPAN_W} + 1, 0))) AS i) t(i)
+                 1, greatest(len(arr) - {SPAN_W} + 1, 0))) AS i) t(i)
 ),
 owners AS (
   SELECT h, MIN(doc_id) AS owner, COUNT(DISTINCT doc_id) AS df
@@ -492,7 +486,7 @@ foreign_hits AS (
 covered AS (
   SELECT DISTINCT doc_id, tokpos
   FROM foreign_hits,
-       LATERAL (SELECT unnest(generate_series(pos, pos + {_SPAN_W} - 1))
+       LATERAL (SELECT unnest(generate_series(pos, pos + {SPAN_W} - 1))
                 AS tokpos) t(tokpos)
 ),
 toks AS (
@@ -525,26 +519,8 @@ def q_strip_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token stream on (doc, tokpos) — both sides uniform.  Text
     re-assembly is array_sort(collect_list(struct(pos, tok))) per doc —
     bounded by document length, never a global sort."""
-    d = spread_scan(load_table(spark, sf_dir, "documents"))
-    words = F.split("text", " ", -1)
-    base = d.select(F.col("doc_id").alias("doc"), words.alias("w"))
-    wins = (
-        base.filter(F.size("w") >= _SPAN_W)
-        .select(
-            "doc",
-            F.explode(
-                F.sequence(F.lit(1), F.size("w") - _SPAN_W + 1)
-            ).alias("pos"),
-            "w",
-        )
-        .select(
-            "doc",
-            "pos",
-            F.md5(
-                F.concat_ws(" ", F.slice("w", F.col("pos"), _SPAN_W))
-            ).alias("h"),
-        )
-    )
+    base = span_tokens(load_table(spark, sf_dir, "documents"))
+    wins = span_windows(base)
     owners = wins.groupBy("h").agg(
         F.min("doc").alias("owner"),
         F.count_distinct("doc").alias("df"),
@@ -557,7 +533,7 @@ def q_strip_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered = foreign.select(
         "doc",
         F.explode(
-            F.sequence(F.col("pos"), F.col("pos") + _SPAN_W - 1)
+            F.sequence(F.col("pos"), F.col("pos") + SPAN_W - 1)
         ).alias("tokpos"),
     ).distinct()
     toks = base.select(

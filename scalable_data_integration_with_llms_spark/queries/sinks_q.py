@@ -6,14 +6,16 @@ and let the driver's value-hash compare the re-read rows against DuckDB —
 any encode/decode infidelity breaks the hash.
 
 Temp outputs go under ``tempfile.mkdtemp`` — written ONCE per process (per
-sf_dir for the sink roundtrip) and memoized — and are left for the OS: the
-returned DataFrames are LAZY over the written files, so deleting them
-before the driver collects would break the contract.
+sf_dir for the sink roundtrip) and memoized — and are removed when the
+interpreter exits: the returned DataFrames are LAZY over the written files,
+so deleting them before the driver collects would break the contract.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +25,14 @@ from pyspark.sql import types as T
 from ..sources.readers import load_table
 from .registry import query
 from ..functions.localframe import local_df
+
+
+def _process_dir(prefix: str) -> str:
+    """A fresh temp dir that lives until the interpreter exits."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
 
 # -- K1/K2/K3: sink roundtrip -------------------------------------------------
 
@@ -87,7 +97,7 @@ def _sink_base(spark: SparkSession, sf_dir: str) -> str:
             F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("sum_cents"),
         )
     )
-    tmp = tempfile.mkdtemp(prefix="sdi_sink_")
+    tmp = _process_dir("sdi_sink_")
     # K3: build -> write parquet -> read back (the cache-miss path)
     cached = cached_parquet(spark, os.path.join(tmp, "cache"), lambda: agg)
     # K1: distributed JSON out
@@ -147,7 +157,7 @@ _LOADER_BASE: list[str] = []  # memo: fixtures written once per process
 
 def _loader_base() -> str:
     if not _LOADER_BASE:
-        base = tempfile.mkdtemp(prefix="sdi_loaders_")
+        base = _process_dir("sdi_loaders_")
         for rel, text in _LOADER_FIXTURES.items():
             path = os.path.join(base, rel)
             os.makedirs(os.path.dirname(path), exist_ok=True)

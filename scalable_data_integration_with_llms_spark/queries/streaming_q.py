@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..functions.determinism import TWO_60_INT, hash60_sql
+from ..operators.dedup import content_key
 from ..sources.readers import load_table
 from ..streaming.events import (
     hourly_rollup,
@@ -489,10 +490,10 @@ def q_stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = F.broadcast(
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 != 0)
-        .select(F.md5("text").alias("h"))
+        .select(content_key("text").alias("h"))
         .distinct()
     )
-    admitted = stream.withColumn("h", F.md5("text")).join(
+    admitted = stream.withColumn("h", content_key("text")).join(
         corpus, "h", "left_anti"
     )
     rolled = admitted.groupBy("source").agg(

@@ -535,7 +535,7 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.67/1.85 s vs distinct+join-back (same bitmap) 1.71–2.06/2.36–2.62 s
     vs the r14 explode/semi-join form 3.15/3.65 s — the recompute wins
     locally AND carries fewer exchanges."""
-    from ..operators.sketch import _cms_col, bloom_bits_predicate, bloom_bitmap
+    from ..operators.sketch import BloomShape, _cms_col, bloom_bits_predicate, bloom_bitmap
 
     d = spread_scan(load_table(spark, sf_dir, "documents"))
     words = F.split("text", " ")
@@ -555,13 +555,13 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = shingled.filter(F.col("doc_id") % 100 == 0).select("shingle").distinct()
     corpus = shingled.filter(F.col("doc_id") % 100 != 0)
     # positions are the oracle's hash60(j || ':' || shingle) % m
-    shape = {"n_hashes": _BLOOM_K, "m": _BLOOM_M}
-    bitmap = bloom_bitmap(bench, "shingle", _cms_col, **shape)
+    shape = BloomShape(_BLOOM_M, _BLOOM_K, _cms_col)
+    bitmap = bloom_bitmap(bench, "shingle", shape)
     flagged = (
         corpus.crossJoin(F.broadcast(bitmap))
         .withColumn(
             "in_filter",
-            bloom_bits_predicate("shingle", F.col("words"), _cms_col, **shape),
+            bloom_bits_predicate("shingle", F.col("words"), shape),
         )
         .join(
             F.broadcast(bench.withColumn("is_true", F.lit(1))), "shingle", "left"

@@ -81,8 +81,8 @@ def spread_scan(df: DataFrame) -> DataFrame:
     The guard keeps this a no-op at cluster scale, where a real input
     already has enough splits — the shuffle is only paid when the scan is
     provably under-parallel, and it moves each doc row once, which the
-    map-side work it unlocks more than repays.  Same auto-detect contract
-    as ``operators.dedup.word_shingles(spread=None)``."""
+    map-side work it unlocks more than repays.  The one copy of this
+    rule: ``operators.dedup.word_shingles`` and ``span_tokens`` call it."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, par // 2):
         return df.repartition(par)

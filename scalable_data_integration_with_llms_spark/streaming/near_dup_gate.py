@@ -9,15 +9,15 @@ already admitted" — the gate a 100 TB training-data feed runs continuously.
 Two stages, both bounded:
 
 1. **Map-only MinHash banding** (:func:`stream_minhash_bands`): word
-   3-gram shingles, the 12 salted 60-bit md5 hashes, and per-permutation
-   minima all computed as ARRAY expressions on each row — no groupBy, so
-   the only stateful shuffle in the whole stream is the gate itself.  The
-   minima feed the batch operator's own band-signature builder
-   (``dedup._band_signatures``, pinned by a parity test), so stream and
-   batch stages of one pipeline agree on what a bucket is.  (The batch
-   operator keeps its groupBy formulation of the minima: at rest the
-   shuffle carries |docs| x n_perm minima either way, but a *stream* must
-   not re-shuffle per micro-batch.)
+   ``SHINGLE_N``-gram shingles, the ``N_PERM`` salted 60-bit md5 hashes,
+   and per-permutation minima all computed as ARRAY expressions on each
+   row — no groupBy, so the only stateful shuffle in the whole stream is
+   the gate itself.  Shape, salted hash and band-signature builder are the
+   batch operator's own (``operators/dedup``, pinned by a parity test), so
+   stream and batch stages of one pipeline agree on what a bucket is.
+   (The batch operator keeps its groupBy formulation of the minima,
+   ``dedup.minhash_minima``: at rest the shuffle carries |docs| x N_PERM
+   minima either way, but a *stream* must not re-shuffle per micro-batch.)
 
 2. **Per-bucket first-wins gate** (:func:`near_dup_gate`): state per
    (band, signature) bucket is ONE bigint — the smallest doc id seen.  A
@@ -62,20 +62,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.determinism import hash60
-from ..functions.text import ngram_strings
-from ..operators.dedup import _band_signatures
-
-N_PERM = 12
-N_BANDS = 4
+from ..functions.text import ngram_strings, word_tokens
+from ..operators.dedup import (
+    N_PERM,
+    SHINGLE_N,
+    _band_signatures,
+    _perm_hash,
+    require_documents,
+)
 
 GATE_OUT_SCHEMA = "doc bigint, band int, is_dup boolean"
 _GATE_STATE_SCHEMA = "min_doc bigint"
 
 
-def stream_minhash_bands(
-    docs: DataFrame, n_perm: int = N_PERM, n_bands: int = N_BANDS
-) -> DataFrame:
+def stream_minhash_bands(docs: DataFrame) -> DataFrame:
     """(doc, band, signature) MinHash-LSH rows via map-only array
     expressions — streaming-safe (no pre-gate aggregation) and byte-equal
     to the batch ``minhash_signatures`` output.
@@ -85,28 +85,26 @@ def stream_minhash_bands(
     a two-parameter lambda with a default would silently hash with the
     index instead of the salt.
     """
-    ws = F.split("text", " ", -1)
-
     def perm_min(p: int):
-        return F.array_min(
-            F.transform(F.col("grams"), lambda s: hash60(F.concat_ws(":", F.lit(p), s)))
-        )
+        return F.array_min(F.transform(F.col("grams"), lambda s: _perm_hash(p, s)))
 
     # Build the gram array ONCE in its own projection: inlining it into the
-    # n_perm hash expressions re-ran the gram construction once per
+    # N_PERM hash expressions re-ran the gram construction once per
     # permutation (CollapseProject keeps the projection because "grams" is
-    # referenced n_perm times and is not a cheap expression).  array_distinct
+    # referenced N_PERM times and is not a cheap expression).  array_distinct
     # is free correctness headroom: min over a multiset equals min over its
     # support, and the batch twin's shingle frame is distinct per doc
     # already, so hashing each gram once per permutation matches the batch
     # operator's work exactly.
     mins = (
-        docs.select(F.col("doc_id").alias("doc"), ws.alias("ws"))
-        .filter(F.size("ws") >= 3)  # < 3 tokens -> no shingles (oracle drops them too)
-        .select("doc", F.array_distinct(ngram_strings(F.col("ws"), 3)).alias("grams"))
-        .select("doc", *[perm_min(p).alias(f"m{p}") for p in range(n_perm)])
+        require_documents(docs)
+        .select(F.col("doc_id").alias("doc"), word_tokens("text").alias("ws"))
+        # too few tokens -> no shingles (oracle drops them too)
+        .filter(F.size("ws") >= SHINGLE_N)
+        .select("doc", F.array_distinct(ngram_strings(F.col("ws"), SHINGLE_N)).alias("grams"))
+        .select("doc", *[perm_min(p).alias(f"m{p}") for p in range(N_PERM)])
     )
-    return _band_signatures(mins, n_perm, n_bands)
+    return _band_signatures(mins)
 
 
 def _gate_step(

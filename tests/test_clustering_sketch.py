@@ -16,6 +16,7 @@ SF_DIR = os.environ.get("SDI_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 def test_bloom_no_false_negatives(spark):
     from scalable_data_integration_with_llms_spark.operators.sketch import (
+        BloomShape,
         _cms_col,
         bloom_bitmap,
         bloom_bits_predicate,
@@ -25,11 +26,12 @@ def test_bloom_no_false_negatives(spark):
     probe = spark.createDataFrame(
         [(f"key{i}",) for i in range(0, 100)], "k string"  # first 50 are members
     )
+    shape = BloomShape(4096, 3, _cms_col)
     flagged = (
         probe.select(F.col("k").alias("key"))
         .distinct()
-        .crossJoin(F.broadcast(bloom_bitmap(build, "k", _cms_col)))
-        .select("key", bloom_bits_predicate("key", F.col("words"), _cms_col).alias("in_filter"))
+        .crossJoin(F.broadcast(bloom_bitmap(build, "k", shape)))
+        .select("key", bloom_bits_predicate("key", F.col("words"), shape).alias("in_filter"))
     )
     got = {r["key"]: r["in_filter"] for r in flagged.collect()}
     assert all(got[f"key{i}"] for i in range(50))  # Bloom guarantee
@@ -39,13 +41,14 @@ def test_bloom_no_false_negatives(spark):
 
 def test_bloom_rejects_partial_word_sizes(spark):
     """m must be a positive multiple of 64 (the bitmap holds m/64 whole
-    words) and n_hashes >= 1 — checked when the plan is built, before any
-    job runs, for both the broadcast-column and the collected-literal
-    probe."""
+    words) no larger than BLOOM_M_MAX (the pushdown ships m/64 words as a
+    plan literal), and n_hashes >= 1 — checked when the shape is built,
+    before any job runs, for both the md5 and the xxhash64 positions."""
     from scalable_data_integration_with_llms_spark.operators.sketch import (
+        BLOOM_M_MAX,
+        BloomShape,
         _cms_col,
         bloom_bitmap,
-        bloom_bits_predicate,
     )
     from scalable_data_integration_with_llms_spark.queries.analytics import _xxhash_position
 
@@ -53,12 +56,13 @@ def test_bloom_rejects_partial_word_sizes(spark):
     group = "bloom-contract"
     spark.sparkContext.setJobGroup(group, group)
     try:
-        for position, words in ((_cms_col, F.col("words")), (_xxhash_position, F.lit([0]))):
-            for kw in ({"m": 100}, {"m": 0}, {"m": 32}, {"n_hashes": 0}):
+        for position in (_cms_col, _xxhash_position):
+            for m, n_hashes in (
+                (100, 3), (0, 3), (32, 3), (4096, 0), (BLOOM_M_MAX + 64, 3), (BLOOM_M_MAX * 2, 3)
+            ):
                 with pytest.raises(ValueError):
-                    bloom_bitmap(build, "k", position, **kw).first()
-                with pytest.raises(ValueError):
-                    bloom_bits_predicate("k", words, position, **kw)
+                    bloom_bitmap(build, "k", BloomShape(m, n_hashes, position)).first()
+            BloomShape(BLOOM_M_MAX, 3, position)  # the ceiling itself is a valid shape
     finally:
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
     assert spark.sparkContext.statusTracker().getJobIdsForGroup(group) == []
@@ -129,15 +133,16 @@ def test_new_oracles_parity(spark, duck):
 
 
 def test_simhash_banding_no_false_negatives(spark):
-    """Pigeonhole: every pair within Hamming <= 3 of 16-bit fingerprints
-    must share one of the 4 bands — banded candidates == brute force."""
+    """Pigeonhole: every pair within Hamming <= 3 of 32-bit fingerprints
+    must share one of the 4 bands of 8 bits — banded candidates == brute
+    force."""
     from scalable_data_integration_with_llms_spark.operators.dedup import simhash, simhash_near_dup
 
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(200)
-    sigs = simhash(d, "doc_id", "text", bits=16)
+    sigs = simhash(d, bits=32)
     banded = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in simhash_near_dup(sigs, n_bands=4, band_bits=4, max_hamming=3).collect()
+        for r in simhash_near_dup(sigs).collect()
     }
     fps = {r["doc"]: r["simhash"] for r in sigs.collect()}
     ids = sorted(fps)

@@ -40,7 +40,7 @@ def test_registry_contract():
 
 
 def test_skew_guard_bounds_shingle_join(spark, tmp_path):
-    """Boilerplate skew: one viral text repeated 300x.  Without max_df the
+    """Boilerplate skew: one viral text repeated 300x.  Without MAX_DF the
     self-join materializes ~45k co-shingle pairs from the clones alone;
     with the guard the viral shingles are dropped before the join and the
     pair frame stays bounded by the organic near-dups."""
@@ -55,8 +55,14 @@ def test_skew_guard_bounds_shingle_join(spark, tmp_path):
     rows = [(i, f"unique document body number {i} with distinct words {i * 7}") for i in range(50)]
     rows += [(1000 + i, viral) for i in range(300)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = word_shingles(df, "doc_id", "text", n=3, spread=False)
-    guarded = jaccard_pairs(sh, threshold=0.5, max_df=64).count()
-    unguarded = jaccard_pairs(sh, threshold=0.5).count()
+    sh = word_shingles(df)
+    guarded = jaccard_pairs(sh).count()
+    # the unguarded self-join: every doc pair sharing any shingle
+    a = sh.select(F.col("doc").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc").alias("doc_b"), "shingle")
+    unguarded = (
+        a.join(b, "shingle").filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b").distinct().count()
+    )
     assert unguarded >= 300 * 299 / 2  # the clone clique alone
     assert guarded == 0  # viral shingles dropped -> no pair survives

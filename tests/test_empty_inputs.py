@@ -18,11 +18,11 @@ def test_dedup_on_empty(spark):
     )
 
     d = _empty_docs(spark)
-    assert exact_dedup_groups(d, "doc_id", "text").count() == 0
-    sh = word_shingles(d, "doc_id", "text")
+    assert exact_dedup_groups(d).count() == 0
+    sh = word_shingles(d)
     assert jaccard_pairs(sh).count() == 0
     assert minhash_signatures(sh).count() == 0
-    assert simhash(d, "doc_id", "text").count() == 0
+    assert simhash(d).count() == 0
 
 
 def test_metrics_on_empty(spark):

@@ -67,7 +67,7 @@ def dup_docs(spark):
 def test_exact_dedup_groups(spark, dup_docs):
     from scalable_data_integration_with_llms_spark.operators.dedup import exact_dedup_groups
 
-    groups = {r.canonical_id: r.n_copies for r in exact_dedup_groups(dup_docs, "doc_id", "text").collect()}
+    groups = {r.canonical_id: r.n_copies for r in exact_dedup_groups(dup_docs).collect()}
     assert groups[1] == 2  # docs 1,2 identical
     assert groups[3] == 1 and groups[4] == 1
 
@@ -75,8 +75,8 @@ def test_exact_dedup_groups(spark, dup_docs):
 def test_jaccard_finds_near_dups(spark, dup_docs):
     from scalable_data_integration_with_llms_spark.operators.dedup import jaccard_pairs, word_shingles
 
-    sh = word_shingles(dup_docs, "doc_id", "text", n=3)
-    pairs = {(r.doc_a, r.doc_b): r.jaccard for r in jaccard_pairs(sh, threshold=0.5).collect()}
+    sh = word_shingles(dup_docs)
+    pairs = {(r.doc_a, r.doc_b): r.jaccard for r in jaccard_pairs(sh).collect()}
     assert pairs[(1, 2)] == 1.0
     assert 0.5 <= pairs[(1, 3)] < 1.0
     assert not any(4 in p for p in pairs)
@@ -89,8 +89,8 @@ def test_lsh_candidates_cover_exact_dups(spark, dup_docs):
         word_shingles,
     )
 
-    sh = word_shingles(dup_docs, "doc_id", "text", n=3)
-    sigs = minhash_signatures(sh, n_perm=12, n_bands=4)
+    sh = word_shingles(dup_docs)
+    sigs = minhash_signatures(sh)
     cands = {(r.doc_a, r.doc_b): r.n_shared_bands for r in lsh_candidate_pairs(sigs).collect()}
     assert cands[(1, 2)] == 4  # identical docs share every band
     assert not any(4 in p for p in cands)
@@ -134,7 +134,7 @@ def test_lsh_hot_bucket_streams_as_rows(spark):
 def test_simhash_close_for_near_dups(spark, dup_docs):
     from scalable_data_integration_with_llms_spark.operators.dedup import simhash
 
-    fps = {r.doc: r.simhash for r in simhash(dup_docs, "doc_id", "text", bits=16).collect()}
+    fps = {r.doc: r.simhash for r in simhash(dup_docs, bits=16).collect()}
     assert fps[1] == fps[2]
     hamming_13 = bin(fps[1] ^ fps[3]).count("1")
     hamming_14 = bin(fps[1] ^ fps[4]).count("1")

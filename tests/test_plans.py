@@ -158,7 +158,7 @@ def test_word_shingles_no_shingle_shuffle(spark):
     from scalable_data_integration_with_llms_spark.sources.readers import load_table
 
     d = load_table(spark, "/root/testdata/sf0.01", "documents")
-    plan = word_shingles(d, "doc_id", "text", n=3)._jdf.queryExecution().executedPlan().toString()
+    plan = word_shingles(d)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
 
 

@@ -41,7 +41,7 @@ def test_duplicate_spans_merges_adjacent_windows(spark):
     )
     rows = {
         r["doc"]: r
-        for r in duplicate_spans(docs, "doc_id", "text", w=4).collect()
+        for r in duplicate_spans(docs, w=4).collect()
     }
     assert set(rows) == {1, 2}
     # doc 1: shared run occupies positions 3..8 -> windows at 3,4,5
@@ -61,7 +61,7 @@ def test_duplicate_spans_ignores_within_doc_repeats(spark):
         [(1, "a b c d a b c d"), (2, "e f g h i j k l")],
         "doc_id long, text string",
     )
-    assert duplicate_spans(docs, "doc_id", "text", w=4).count() == 0
+    assert duplicate_spans(docs, w=4).count() == 0
 
 
 def test_bm25_more_matching_terms_scores_higher(spark, duck):
@@ -217,7 +217,7 @@ def test_duplicate_spans_matches_brute_force(spark, docs):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r["doc"], r["span_start"], r["span_end"], r["n_windows"])
-        for r in duplicate_spans(df, "doc_id", "text", w=w).collect()
+        for r in duplicate_spans(df, w=w).collect()
     }
     assert got == _brute_spans(docs, w)
 

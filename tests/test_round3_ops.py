@@ -202,19 +202,13 @@ def _pushdown_bloom():
         bloom_bitmap,
         bloom_bits_predicate,
     )
-    from scalable_data_integration_with_llms_spark.queries.analytics import (
-        _BLOOM_JOIN_K,
-        _BLOOM_JOIN_M,
-        _xxhash_position,
-    )
-
-    shape = {"n_hashes": _BLOOM_JOIN_K, "m": _BLOOM_JOIN_M}
+    from scalable_data_integration_with_llms_spark.queries.analytics import _BLOOM_JOIN
 
     def build(df, key):
-        return bloom_bitmap(df, key, _xxhash_position, **shape).first()["words"]
+        return bloom_bitmap(df, key, _BLOOM_JOIN).first()["words"]
 
     def probe(words, key):
-        return bloom_bits_predicate(key, F.lit(words), _xxhash_position, **shape)
+        return bloom_bits_predicate(key, F.lit(words), _BLOOM_JOIN)
 
     return build, probe
 

@@ -258,6 +258,40 @@ def test_xlsx_roundtrip_hostile_values(spark, tmp_path):
     assert _xlsx_rows(path) == rows
 
 
+def test_sink_query_dirs_removed_at_exit(tmp_path):
+    """q_sink_roundtrip's outputs and q_dataset_loaders' fixtures live in
+    temp dirs that stay readable for the whole process (the returned frames
+    are lazy over them) and are removed when the interpreter exits."""
+    import inspect
+    import subprocess
+    import sys
+
+    from scalable_data_integration_with_llms_spark.queries import sinks_q
+
+    # both queries take their dir from the one helper
+    assert inspect.getsource(sinks_q).count("mkdtemp(") == 1
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    code = (
+        "import os\n"
+        "from scalable_data_integration_with_llms_spark.queries import sinks_q\n"
+        "base = sinks_q._loader_base()\n"
+        "assert os.path.isfile(os.path.join(base, 'gdc', 'gdc_b', 'cases.csv'))\n"
+        "print(sorted(p[:8] for p in os.listdir(os.path.dirname(base))))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert "sdi_load" in out.stdout
+    assert list(tmp.iterdir()) == []
+
+
 def test_event_reads_leave_session_conf_unchanged(spark):
     """The nanos-as-long parquet setting belongs to the session factory: no
     events reader may change session-wide config while a query runs."""

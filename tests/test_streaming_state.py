@@ -58,9 +58,7 @@ def test_stream_minhash_bands_byte_equal_to_batch(spark):
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
     got = sorted(map(tuple, stream_minhash_bands(d).collect()))
-    want = sorted(
-        map(tuple, minhash_signatures(word_shingles(d, "doc_id", "text", n=3)).collect())
-    )
+    want = sorted(map(tuple, minhash_signatures(word_shingles(d)).collect()))
     assert got == want and len(got) > 0
 
 
