@@ -34,39 +34,28 @@ from . import sinks_q  # noqa: F401, E402
 from . import llm_q  # noqa: F401, E402
 
 # Verification-window priority (regenerated by ``tools/rotate_window.py``
-# AFTER the changes landed): (a) the 24 queries whose code path changed —
-# every shingle, MinHash, SimHash, span and exact-dedup query now runs
-# through the one stage definitions and input contract of operators/dedup
-# (plus the streaming gate and ingest, which share its band builder and
-# content key, and the two other connected-components callers); the two
-# Bloom queries through one BloomShape; and the two sinks_q queries through
-# the exit-removed temp dir; (b) the stalest rows — the r10-latest then the
-# r11-latest block.
+# AFTER the changes landed): (a) the 14 queries whose code path changed —
+# every stream query now drains through the one lifecycle in
+# streaming/events.py (a throwaway checkpoint per drain, the drain's conf
+# held only through start), the rollups share one hourly_rollup and one
+# watermark, the sessionizers and their batch twins one gap constant, and
+# the two contamination queries one 4-gram shingle stage; (b) the stalest
+# rows — the r10-latest then the r11-latest block.
 _VERIFY_FIRST = [
-    "q_dedup_exact",  # changed/new
-    "q_dedup_ngram_jaccard",  # changed/new
-    "q_minhash_signatures",  # changed/new
-    "q_simhash",  # changed/new
-    "q_simhash_near_dup",  # changed/new
-    "q_lsh_verified_pairs",  # changed/new
-    "q_dedup_clusters",  # changed/new
-    "q_dedup_containment",  # changed/new
-    "q_dedup_keepers",  # changed/new
-    "q_minhash_est_jaccard",  # changed/new
-    "q_cross_source_dup_matrix",  # changed/new
-    "q_ppjoin_near_dup",  # changed/new
-    "q_duplicate_spans",  # changed/new
-    "q_strip_duplicate_spans",  # changed/new
-    "q_incremental_dedup",  # changed/new
-    "q_corpus_pipeline_e2e",  # changed/new
+    "q_stream_hourly",  # changed/new
+    "q_stream_enriched",  # changed/new
+    "q_stream_dedup",  # changed/new
+    "q_stream_stream_join",  # changed/new
+    "q_sessionization",  # changed/new
+    "q_sessionization_stream",  # changed/new
+    "q_session_window_native",  # changed/new
     "q_stream_corpus_ingest",  # changed/new
+    "q_stream_cdc_apply",  # changed/new
+    "q_stream_topk_types",  # changed/new
     "q_stream_near_dup_gate",  # changed/new
-    "q_er_entities",  # changed/new
-    "q_embedding_dup_clusters",  # changed/new
+    "q_stream_kmv_distinct",  # changed/new
+    "q_contamination",  # changed/new
     "q_bloom_contamination",  # changed/new
-    "q_bloom_join_pushdown",  # changed/new
-    "q_sink_roundtrip",  # changed/new
-    "q_dataset_loaders",  # changed/new
     "q_kmv_distinct",  # r10-latest
     "q_kmv_set_ops",  # r10-latest
     "q_llm_boundary_http",  # r10-latest
@@ -79,7 +68,6 @@ _VERIFY_FIRST = [
     "q_repr_n2one_prompts",  # r10-latest
     "q_repr_prompt_tokens",  # r10-latest
     "q_rrf_fusion",  # r10-latest
-    "q_stream_kmv_distinct",  # r10-latest
     "q12_priority_by_status",  # r11-latest
     "q_alignment_prf1",  # r11-latest
     "q_ann_ivf",  # r11-latest
@@ -91,8 +79,19 @@ _VERIFY_FIRST = [
     "q_constraint_audit",  # r11-latest
     "q_corr_qty_price",  # r11-latest
     "q_coverage",  # r11-latest
+    "q_dedup_exact",  # r11-latest
+    "q_dedup_ngram_jaccard",  # r11-latest
     "q_ehr_gold_parity",  # r11-latest
     "q_ehr_matching_f1",  # r11-latest
+    "q_ehr_round1_matches",  # r11-latest
+    "q_events_hourly",  # r11-latest
+    "q_events_rollup_multires",  # r11-latest
+    "q_example_selection",  # r11-latest
+    "q_example_selection_scalable",  # r11-latest
+    "q_filtered_preferences",  # r11-latest
+    "q_majority_vote",  # r11-latest
+    "q_match_candidates",  # r11-latest
+    "q_mixture_schedule",  # r11-latest
 ]
 _VERIFY_FIRST = [n for n in _VERIFY_FIRST if n in QUERIES or not n.endswith("_tws")]
 

@@ -1,8 +1,9 @@
 """Streaming surface: the hourly rollup executed as a real Structured
 Streaming query (availableNow → memory sink) checked against the batch SQL
 oracle, plus batch sessionization (the lag-gap formulation whose streaming
-twin is applyInPandasWithState — tests/test_streaming.py covers the stateful
-variant).
+twin is applyInPandasWithState — tests/test_streaming_state.py covers the
+stateful variant).  Every stream query drains through the one lifecycle in
+streaming/events.py.
 """
 
 from __future__ import annotations
@@ -21,11 +22,16 @@ from ..functions.determinism import TWO_60_INT, hash60_sql
 from ..operators.dedup import content_key
 from ..sources.readers import load_table
 from ..streaming.events import (
+    WATERMARK,
     hourly_rollup,
+    read_document_stream,
     read_event_stream,
+    run_foreach_batch,
     run_to_memory,
     spread_stream,
 )
+from ..streaming.near_dup_gate import gate_verdict, near_dup_gate, stream_minhash_bands
+from ..streaming.sessions import SESSION_GAP_MIN, sessionize_stream
 from .registry import query
 
 _STREAM_HOURLY_ORACLE = """
@@ -42,17 +48,15 @@ GROUP BY 1, 2, 3
 @query("q_stream_hourly", _STREAM_HOURLY_ORACLE)
 def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, sf_dir)
-    rollup = hourly_rollup(stream)
+    rollup = hourly_rollup(stream, "event_type")
     return run_to_memory(spark, rollup, "sdi_stream_hourly")
 
-
-_SESSION_GAP_MIN = 30
 
 _SESSION_ORACLE = f"""
 WITH flagged AS (
   SELECT user_id, ts, event_id,
          CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > INTERVAL {_SESSION_GAP_MIN} MINUTE
+                   > INTERVAL {SESSION_GAP_MIN} MINUTE
               OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
               THEN 1 ELSE 0 END AS new_session
   FROM events
@@ -82,7 +86,7 @@ def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(order_win)
     flagged = e.withColumn(
         "new_session",
-        F.when(gap.isNull() | (gap > _SESSION_GAP_MIN * 60 * 1_000_000), 1).otherwise(0),
+        F.when(gap.isNull() | (gap > SESSION_GAP_MIN * 60 * 1_000_000), 1).otherwise(0),
     )
     sessions = flagged.withColumn(
         "session_id",
@@ -103,7 +107,7 @@ _CLOSED_SESSIONS_ORACLE = f"""
 WITH flagged AS (
   SELECT user_id, ts, event_id,
          CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > INTERVAL {_SESSION_GAP_MIN} MINUTE
+                   > INTERVAL {SESSION_GAP_MIN} MINUTE
               OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
               THEN 1 ELSE 0 END AS new_session
   FROM events
@@ -131,13 +135,9 @@ def q_sessionization_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-sessions oracle: the drain emits exactly the sessions closed by
     a later event (each user's final open session stays in state awaiting
     more data — batch-boundary independent, so fully oracle-checkable)."""
-    from ..streaming.sessions import sessionize_stream
-
     stream = read_event_stream(spark, sf_dir)
-    sessions = sessionize_stream(stream, gap_minutes=_SESSION_GAP_MIN)
-    return run_to_memory(
-        spark, sessions, "sdi_sessions_q", mode="append", use_checkpoint=True
-    )
+    sessions = sessionize_stream(stream)
+    return run_to_memory(spark, sessions, "sdi_sessions_q", mode="append")
 
 
 _ROCKSDB_PROVIDER = (
@@ -171,8 +171,7 @@ def q_stream_near_dup_gate_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful API, RocksDB store) — same banding, same first-wins
     semantics, same batch-twin oracle as q_stream_near_dup_gate; see
     streaming/near_dup_gate.py:make_gate_processor."""
-    from ..streaming.events import read_document_stream, run_to_memory, spread_stream
-    from ..streaming.near_dup_gate import near_dup_gate_tws, stream_minhash_bands
+    from ..streaming.near_dup_gate import near_dup_gate_tws
 
     stream = spread_stream(read_document_stream(spark, sf_dir))
     gated = near_dup_gate_tws(stream_minhash_bands(stream))
@@ -183,14 +182,8 @@ def q_stream_near_dup_gate_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="append",
         partitions=32,
         provider=_ROCKSDB_PROVIDER,
-        use_checkpoint=True,
     )
-    n_dup = F.sum(F.when(F.col("is_dup"), 1).otherwise(0)).cast("int")
-    return (
-        drained.groupBy(F.col("doc").alias("doc_id"))
-        .agg(n_dup.alias("n_dup_bands"))
-        .withColumn("admitted", F.col("n_dup_bands") == 0)
-    )
+    return gate_verdict(drained)
 
 
 def q_sessionization_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,19 +194,12 @@ def q_sessionization_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed by a later event — i.e. every session except each user's last —
     regardless of micro-batch boundaries, because closing is triggered by
     data, not time."""
-    from ..streaming.events import read_event_stream, run_to_memory
     from ..streaming.tws_sessions import sessionize_stream_tws
 
     stream = read_event_stream(spark, sf_dir)
-    sessions = sessionize_stream_tws(stream, gap_minutes=_SESSION_GAP_MIN)
+    sessions = sessionize_stream_tws(stream)
     return run_to_memory(
-        spark,
-        sessions,
-        "sdi_sessions_tws_q",
-        mode="append",
-        partitions=8,
-        provider=_ROCKSDB_PROVIDER,
-        use_checkpoint=True,
+        spark, sessions, "sdi_sessions_tws_q", mode="append", provider=_ROCKSDB_PROVIDER
     )
 
 
@@ -243,36 +229,15 @@ def q_stream_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch — no stream-side shuffle for the join), then a watermarked
     hourly window per market segment.  Oracle = the batch twin, so the
     drained stream is value-checked, not just row-counted."""
-    from ..streaming.events import read_event_stream, run_to_memory
-
     stream = read_event_stream(spark, sf_dir)
     dim = F.broadcast(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
     enriched = stream.join(dim, stream.user_id == dim.c_custkey)
-    # wall-time (NTZ) windows — session-TZ-independent bucket alignment,
-    # same rationale as streaming/events.hourly_rollup (watermark stays on
-    # the LTZ ts; complete-mode drain allows windowing the wall column)
-    rolled = (
-        enriched.withWatermark("ts", "2 hours")
-        .withColumn("ts_wall", F.col("ts").cast("timestamp_ntz"))
-        .groupBy(F.window("ts_wall", "1 hour").alias("w"), "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 10000, 0).cast("bigint")) / F.lit(10000.0)).alias("sum_value"),
-            # exact distinct via collect_set (bounded: users per segment-hour
-            # is small); at 100 TB swap for approx_count_distinct
-            F.collect_set("user_id").alias("user_set"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp").alias("window_start"),
-            F.col("w.end").cast("timestamp").alias("window_end"),
-            "c_mktsegment",
-            "n_events",
-            "sum_value",
-            F.size("user_set").alias("n_users"),
-        )
-    )
+    # exact distinct via collect_set (bounded: users per segment-hour is
+    # small); at 100 TB swap for approx_count_distinct
+    n_users = F.size(F.collect_set("user_id")).alias("n_users")
+    rolled = hourly_rollup(enriched, "c_mktsegment", n_users)
     return run_to_memory(spark, rolled, "sdi_stream_enriched")
 
 
@@ -290,11 +255,9 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key and bounds state by the watermark (vs unbounded dropDuplicates
     state).  The drained result equals the batch DISTINCT, so the streaming
     operator gets a real value oracle, not a row count."""
-    from ..streaming.events import read_event_stream, run_to_memory
-
     stream = read_event_stream(spark, sf_dir)
     deduped = (
-        stream.withWatermark("ts", "2 hours")
+        stream.withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
@@ -335,8 +298,6 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     workload never amortizes, and the only "win" (4 partitions, −12%,
     under the 20% bar) would cap cluster join parallelism at 4 — local
     tuning, rejected.  Kept: HDFS provider, partitions=8."""
-    from ..streaming.events import read_event_stream, run_to_memory
-
     clicks = (
         read_event_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -345,7 +306,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", "2 hours")
+        .withWatermark("click_ts", WATERMARK)
     )
     views = (
         read_event_stream(spark, sf_dir)
@@ -355,7 +316,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("view_id"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", "2 hours")
+        .withWatermark("view_ts", WATERMARK)
     )
     joined = clicks.join(
         views,
@@ -429,11 +390,10 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user rank of session start to match the oracle's cumulative
     numbering; session_end = max event ts (the native window end extends
     gap past the last event by definition)."""
-    from pyspark.sql import Window as W
-
     e = load_table(spark, sf_dir, "events")
+    gap = f"{SESSION_GAP_MIN} minutes"
     sessions = (
-        e.groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
+        e.groupBy("user_id", F.session_window("ts", gap).alias("sw"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("ts").alias("session_start"),
@@ -481,8 +441,6 @@ def q_stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the join, never shipping text, exactly like the batch twin
     (q_incremental_dedup).  Oracle = the batch equivalent of the drained
     stream."""
-    from ..streaming.events import read_document_stream, run_to_memory
-
     stream = read_document_stream(spark, sf_dir).filter(
         (F.col("doc_id") % 10 == 0)
         & (F.size(F.split("text", " ", -1)) >= 20)
@@ -549,28 +507,9 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         state["snap"] = merged.localCheckpoint()
 
-    for q in spark.streams.active:
-        if q.name == "sdi_stream_cdc":
-            q.stop()
-    # fresh checkpoint per invocation: a reused one would mark the source
-    # files already-processed and the second call would drain ZERO batches;
-    # removed after the drain (the snapshot is a local checkpoint, it does
-    # not read the streaming checkpoint)
-    ckpt = tempfile.mkdtemp(prefix="sdi_ckpt_cdc_")
-    handle = None
-    try:
-        handle = (
-            stream.writeStream.foreachBatch(upsert)
-            .queryName("sdi_stream_cdc")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        handle.awaitTermination()
-    finally:
-        if handle is not None and handle.isActive:
-            handle.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # the snapshot is a local checkpoint: it does not read the streaming
+    # checkpoint the drain removes
+    run_foreach_batch(spark, stream, "sdi_stream_cdc", upsert)
     snap = state["snap"]
     return snap.filter(F.col("last.event_type") != "error").select(
         "user_id",
@@ -677,9 +616,6 @@ def q_stream_near_dup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle) exactly; on a live feed the identical code is first-arrival-
     wins, the semantics a production gate wants.  See
     streaming/near_dup_gate.py for the scale story."""
-    from ..streaming.events import read_document_stream, run_to_memory
-    from ..streaming.near_dup_gate import near_dup_gate, stream_minhash_bands
-
     # The file stream source yields ONE input partition per file, so a
     # single-file feed would run the whole 12-permutation md5 banding on one
     # core (measured 5.4s of the 8.5s wall at sf0.1; spread_stream note).
@@ -691,12 +627,7 @@ def q_stream_near_dup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained = run_to_memory(
         spark, gated, "sdi_near_dup_gate", mode="append", partitions=32
     )
-    n_dup = F.sum(F.when(F.col("is_dup"), 1).otherwise(0)).cast("int")
-    return (
-        drained.groupBy(F.col("doc").alias("doc_id"))
-        .agg(n_dup.alias("n_dup_bands"))
-        .withColumn("admitted", F.col("n_dup_bands") == 0)
-    )
+    return gate_verdict(drained)
 
 
 # -- streaming KMV distinct gate (applyInPandasWithState per hash shard) ------
@@ -742,7 +673,6 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     This dedups per group by hash (a 60-bit collision would collapse two
     users); the batch q_kmv_distinct keys by user instead — both sides of
     each oracle pair use one convention consistently."""
-    from ..streaming.events import read_event_stream, run_to_memory
     from ..operators.sketch import kmv_hash
     from ..streaming.kmv_gate import N_KMV_SHARDS, kmv_distinct_gate
 
@@ -753,11 +683,7 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shard", (F.col("h") % N_KMV_SHARDS).cast("int")
     )
     drained = run_to_memory(
-        spark,
-        kmv_distinct_gate(hashed),
-        "sdi_stream_kmv",
-        mode="update",
-        partitions=8,
+        spark, kmv_distinct_gate(hashed), "sdi_stream_kmv", mode="update"
     )
     merged = (
         drained.select("event_type", F.explode("mins").alias("h"))

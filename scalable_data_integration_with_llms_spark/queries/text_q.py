@@ -16,6 +16,7 @@ from ..functions.text import (
     ngram_structs,
     quality_features,
     token_count,
+    word_tokens,
 )
 from ..caching import scoped_persist
 from ..functions.determinism import hash60_sql
@@ -443,6 +444,18 @@ GROUP BY s.doc_id
 """
 
 
+def _contamination_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shingle): each document's distinct word 4-grams, the
+    shingle stage both contamination queries match on (docs with fewer than
+    4 tokens have none, as in the oracles)."""
+    words = word_tokens("text")
+    return (
+        spread_scan(load_table(spark, sf_dir, "documents"))
+        .filter(F.size(words) >= 4)
+        .select("doc_id", F.explode(F.array_distinct(ngram_strings(words, 4))).alias("shingle"))
+    )
+
+
 @query("q_contamination", _CONTAMINATION_ORACLE)
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination detection: training docs sharing any 4-gram
@@ -451,13 +464,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle set is small and broadcasts into a semi-join-shaped equi-join;
     the per-doc distinct count is a second, already-reduced shuffle.  The
     same max_df guard as the Jaccard pipeline applies at corpus scale."""
-    d = spread_scan(load_table(spark, sf_dir, "documents"))
-    words = F.split("text", " ")
-    shingles4 = ngram_strings(words, 4)
-    shingled = (
-        d.filter(F.size(words) >= 4)
-        .select("doc_id", F.explode(F.array_distinct(shingles4)).alias("shingle"))
-    )
+    shingled = _contamination_shingles(spark, sf_dir)
     bench = (
         shingled.filter(F.col("doc_id") % 100 == 0).select("shingle").distinct()
     )
@@ -537,21 +544,15 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     locally AND carries fewer exchanges."""
     from ..operators.sketch import BloomShape, _cms_col, bloom_bits_predicate, bloom_bitmap
 
-    d = spread_scan(load_table(spark, sf_dir, "documents"))
-    words = F.split("text", " ")
-    shingles4 = ngram_strings(words, 4)
     # persist EAGERLY: five plan branches reference the shingled frame
     # (filter bits, probe, per-doc rollup, truth join) and a lazy persist
     # does not dedup under AQE's concurrent materialization — profiled as
     # five concurrent single-task scan+explode stages (~1.9 s each).  The
     # r14-start A/B kept this lazy because the materialization itself ran
-    # on one task (single-file scan); with the pre-explode spread above the
-    # eager count is a ~0.2 s 32-way stage and the branches all hit cache.
-    shingled = scoped_persist(
-        d.filter(F.size(words) >= 4)
-        .select("doc_id", F.explode(F.array_distinct(shingles4)).alias("shingle")),
-        eager=True,
-    )
+    # on one task (single-file scan); with the pre-explode spread in
+    # _contamination_shingles the eager count is a ~0.2 s 32-way stage and
+    # the branches all hit cache.
+    shingled = scoped_persist(_contamination_shingles(spark, sf_dir), eager=True)
     bench = shingled.filter(F.col("doc_id") % 100 == 0).select("shingle").distinct()
     corpus = shingled.filter(F.col("doc_id") % 100 != 0)
     # positions are the oracle's hash60(j || ':' || shingle) % m

@@ -3,12 +3,14 @@ is batch-only, so correctness parity is defined against the batch twin of
 each streaming aggregation).
 
 Design: ``readStream`` over the events parquet directory → watermark →
-windowed aggregation → sink.  Tests and the driver contract run with the
-``availableNow`` trigger and a memory sink in complete mode, which drains the
-source and yields the same result as the batch query — giving streaming a
-real DuckDB-oracle check.  ``foreachBatch`` would feed the same DataFrames
-into the batch matching operators for incremental matching (SURVEY §7
-step 11).
+windowed aggregation → sink.  Every stream query in the package runs through
+one lifecycle, :func:`_drain`: an ``availableNow`` trigger into a throwaway
+checkpoint, removed once the query stops.  :func:`run_to_memory` drains into
+a memory sink (in complete mode this yields the same result as the batch
+query — giving streaming a real DuckDB-oracle check);
+:func:`run_foreach_batch` hands each micro-batch to a function instead,
+which feeds it to batch operators (the CDC upsert,
+queries/streaming_q.q_stream_cdc_apply).
 
 At scale: the hourly rollup is a streaming shuffle keyed by (window,
 event_type); the watermark bounds state; ``applyInPandasWithState``
@@ -17,12 +19,21 @@ sessionization keys state by user_id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import shutil
+import tempfile
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.determinism import cents
 from ..sources.readers import _read_parquet
+
+# How late an event may arrive and still count: the one watermark delay of
+# every watermarked stream in the package.
+WATERMARK = "2 hours"
 
 # events parquet has shipped with ts as TIMESTAMP(NANOS) (read as long via
 # nanosAsLong, set in session.get_spark, then converted) and as
@@ -78,9 +89,10 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Tumbling 1-hour windows per event type; watermark bounds state for
-    late data.
+def hourly_rollup(events: DataFrame, key: str, *extra: Column) -> DataFrame:
+    """Tumbling 1-hour windows per ``key``: event count, exact cents sum of
+    ``value`` and any ``extra`` aggregates, in that column order; the
+    watermark bounds state for late data.
 
     Windows run over the WALL time (``ts`` cast to TIMESTAMP_NTZ): NTZ
     windows align to the wall-clock epoch, which is the oracle's
@@ -101,21 +113,20 @@ def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     the rollup drains in complete mode, where windowing a non-watermark
     column is legal — in append mode the window would have to move back to
     the watermarked column."""
-    return (
-        events.withWatermark("ts", watermark)
+    rolled = (
+        events.withWatermark("ts", WATERMARK)
         .withColumn("ts_wall", F.col("ts").cast("timestamp_ntz"))
-        .groupBy(F.window("ts_wall", "1 hour").alias("w"), "event_type")
+        .groupBy(F.window("ts_wall", "1 hour").alias("w"), key)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             (F.sum(cents("value", 10000)) / F.lit(10000.0)).alias("sum_value"),
+            *extra,
         )
-        .select(
-            F.col("w.start").cast("timestamp").alias("window_start"),
-            F.col("w.end").cast("timestamp").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+    )
+    return rolled.select(
+        F.col("w.start").cast("timestamp").alias("window_start"),
+        F.col("w.end").cast("timestamp").alias("window_end"),
+        *rolled.columns[1:],
     )
 
 
@@ -135,6 +146,52 @@ def spread_stream(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+
+
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, name: str, conf: dict[str, str]
+) -> None:
+    """The one stream-query lifecycle: stop an active query named ``name``,
+    start ``writer`` (sink and output mode already set) as that query with
+    the availableNow trigger and a fresh checkpoint, wait for it to drain
+    the source, then stop it and remove the checkpoint.
+
+    ``conf`` is set on the session only while ``start()`` runs: the query
+    copies its session's conf when it starts (the shuffle partition count
+    and the state-store provider become part of its checkpoint), so the
+    caller's values are back before the query drains.  The checkpoint is
+    new per call — a reused one would mark the source files already
+    processed and drain zero batches."""
+    for q in spark.streams.active:
+        if q.name == name:
+            q.stop()
+    ckpt = tempfile.mkdtemp(prefix=f"sdi_ckpt_{name}_")
+    query = None
+    try:
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            query = (
+                writer.queryName(name)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        query.awaitTermination()
+    finally:
+        if query is not None and query.isActive:
+            query.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_to_memory(
     spark: SparkSession,
     df: DataFrame,
@@ -142,10 +199,9 @@ def run_to_memory(
     mode: str = "complete",
     partitions: int = 8,
     provider: str | None = None,
-    use_checkpoint: bool = False,
 ) -> DataFrame:
-    """Drain a streaming DataFrame with the availableNow trigger into a
-    memory sink; return the result table as a batch DataFrame.
+    """Drain a streaming DataFrame through :func:`_drain` into a memory
+    sink; return the result table as a batch DataFrame.
 
     Streaming shuffles get fewer partitions than batch: each stateful
     partition owns an HDFS-backed state store, so 32 partitions means 32
@@ -154,51 +210,29 @@ def run_to_memory(
     default 8).  Queries with MANY tiny groups (the near-dup gate's ~4
     buckets per document) are bounded by the Python state pass instead and
     pass a higher ``partitions`` (measured at sf0.1: 9.0s → 6.7s from
-    8 → 32).  The count is pinned at query start (it becomes part of the
-    checkpoint), so this is a per-query setting, not a session-wide one.
-
-    ``provider`` swaps the state-store provider class for this drain
-    (restored after) — the transformWithState queries require RocksDB.
-    ``use_checkpoint`` drains through a throwaway checkpoint dir, removed
-    once the query terminates (TWS refuses the in-memory default).
+    8 → 32).  ``provider`` swaps the state-store provider class for this
+    drain — the transformWithState queries require RocksDB.  Both are
+    pinned when the query starts, so they are set on the session only for
+    the span of ``start()`` and the caller's conf is back before the drain
+    runs.  The start-only provider window is tested on a RocksDB drain of
+    an aggregation (tests/test_streaming_state.py), but has not been run
+    with the transformWithState twins, which this package registers only
+    where the TWS runtime is present.
     """
-    import shutil
-    import tempfile
-
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    conf = {"spark.sql.shuffle.partitions": str(partitions)}
     if provider is not None:
-        spark.conf.set(_PROVIDER_KEY, provider)
-    ckpt = tempfile.mkdtemp(prefix=f"sdi_{name}_ckpt_") if use_checkpoint else None
-    query = None
-    try:
-        writer = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-        )
-        if ckpt is not None:
-            writer = writer.option("checkpointLocation", ckpt)
-        query = writer.start()
-        query.awaitTermination()
-    finally:
-        if query is not None and query.isActive:
-            query.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if provider is not None:
-            spark.conf.set(_PROVIDER_KEY, prev_provider)
-        if ckpt is not None:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        conf[_PROVIDER_KEY] = provider
+    _drain(spark, df.writeStream.format("memory").outputMode(mode), name, conf)
     return spark.table(name)
+
+
+def run_foreach_batch(
+    spark: SparkSession, df: DataFrame, name: str, fn: Callable[[DataFrame, int], None]
+) -> None:
+    """Drain a streaming DataFrame through :func:`_drain`, handing each
+    micro-batch and its id to ``fn``.  No conf is set, so the batch plans
+    ``fn`` builds keep the session's shuffle partition count."""
+    _drain(spark, df.writeStream.foreachBatch(fn), name, {})
 
 
 def read_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

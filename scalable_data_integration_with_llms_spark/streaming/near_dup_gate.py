@@ -134,6 +134,17 @@ def _gate(
     yield flags
 
 
+def gate_verdict(flags: DataFrame) -> DataFrame:
+    """Roll drained gate flags up to one ``(doc_id, n_dup_bands, admitted)``
+    row per document: admitted iff no bucket held a smaller doc id."""
+    n_dup = F.sum(F.when(F.col("is_dup"), 1).otherwise(0)).cast("int")
+    return (
+        flags.groupBy(F.col("doc").alias("doc_id"))
+        .agg(n_dup.alias("n_dup_bands"))
+        .withColumn("admitted", F.col("n_dup_bands") == 0)
+    )
+
+
 def near_dup_gate(banded: DataFrame) -> DataFrame:
     """Apply the per-bucket first-wins gate to a (doc, band, signature)
     stream; one shuffle on the bucket key, one bigint of state per bucket."""

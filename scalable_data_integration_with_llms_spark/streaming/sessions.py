@@ -2,9 +2,9 @@
 ``applyInPandasWithState`` keyed by user).
 
 Semantics match the batch gap formulation in queries/streaming_q.py
-(q_sessionization): a session closes after ``gap`` of inactivity; emitted
-rows are (user_id, session_id, n_events, session_start, session_end) with
-session ids numbered in event-time order per user.
+(q_sessionization): a session closes after ``SESSION_GAP_MIN`` minutes of
+inactivity; emitted rows are (user_id, session_id, n_events, session_start,
+session_end) with session ids numbered in event-time order per user.
 
 State per user: the running session's id, bounds, and count.  A session is
 emitted when a later event arrives past the gap; each user's final session
@@ -37,9 +37,14 @@ STATE_SCHEMA = "session_id bigint, n_events bigint, start_us bigint, end_us bigi
 
 _US = 1_000_000
 
+# The inactivity gap that closes a session, shared by the stateful
+# sessionizers and the batch twins and oracles in queries/streaming_q.py.
+SESSION_GAP_MIN = 30
+_GAP_US = SESSION_GAP_MIN * 60 * _US
+
 
 def _session_step(
-    user_id, pdfs: Iterator[pd.DataFrame], session: tuple | None, gap_us: int
+    user_id, pdfs: Iterator[pd.DataFrame], session: tuple | None
 ) -> tuple[tuple, pd.DataFrame]:
     """Fold one user's batch of (event_id, ts) rows into its open
     ``session`` (``STATE_SCHEMA`` tuple, or None for a new user): returns
@@ -52,7 +57,7 @@ def _session_step(
     for t in ts_us:
         if start_us is None:
             sid, n, start_us, end_us = sid + 1, 1, t, t
-        elif t - end_us > gap_us:
+        elif t - end_us > _GAP_US:
             out.append((user_id, sid, n, start_us, end_us))
             sid, n, start_us, end_us = sid + 1, 1, t, t
         else:
@@ -69,28 +74,22 @@ def _session_step(
 
 
 def _sessionize(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState, gap_minutes: int = 30
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    session, closed = _session_step(
-        key[0], pdfs, state.get if state.exists else None, gap_minutes * 60 * _US
-    )
+    session, closed = _session_step(key[0], pdfs, state.get if state.exists else None)
     state.update(session)
     yield closed
 
 
-def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """Streaming sessionization over an events stream with (event_id, ts,
     user_id, ...) columns; bounded-drain contract (NoTimeout): each user's
     final open session stays in state."""
-
-    def fn(key, pdfs, state):
-        return _sessionize(key, pdfs, state, gap_minutes)
-
     return (
         events.select("user_id", "event_id", "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
-            fn,
+            _sessionize,
             outputStructType=OUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",

@@ -19,14 +19,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-from .sessions import _US, OUT_SCHEMA, STATE_SCHEMA, _session_step
+from .sessions import OUT_SCHEMA, STATE_SCHEMA, _session_step
 
 
 class SessionProcessor(StatefulProcessor):
     """Per-user gap sessionizer: value state holds the open session."""
-
-    def __init__(self, gap_minutes: int = 30) -> None:
-        self._gap_us = gap_minutes * 60 * _US
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._session = handle.getValueState("session", STATE_SCHEMA)
@@ -35,7 +32,7 @@ class SessionProcessor(StatefulProcessor):
         self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
         prev = self._session.get() if self._session.exists() else None
-        session, closed = _session_step(key[0], rows, prev, self._gap_us)
+        session, closed = _session_step(key[0], rows, prev)
         self._session.update(session)
         yield closed
 
@@ -43,14 +40,14 @@ class SessionProcessor(StatefulProcessor):
         pass
 
 
-def sessionize_stream_tws(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize_stream_tws(events: DataFrame) -> DataFrame:
     """Streaming sessionization via transformWithStateInPandas (timeMode
     none: bounded-drain contract, open sessions stay in state)."""
     return (
         events.select("user_id", "event_id", "ts")
         .groupBy("user_id")
         .transformWithStateInPandas(
-            statefulProcessor=SessionProcessor(gap_minutes),
+            statefulProcessor=SessionProcessor(),
             outputStructType=OUT_SCHEMA,
             outputMode="append",
             timeMode="none",

@@ -15,7 +15,7 @@ def test_streaming_sessionization_matches_batch(spark, tmp_path):
     }
 
     stream = read_event_stream(spark, sf_dir)
-    sessions = sessionize_stream(stream, gap_minutes=30)
+    sessions = sessionize_stream(stream)
     q = (
         sessions.writeStream.format("memory")
         .queryName("sdi_sessions_test")
@@ -229,3 +229,89 @@ def test_tws_gate_registration_matches_runtime(spark):
     except ModuleNotFoundError:
         has = False
     assert ("q_stream_near_dup_gate_tws" in QUERIES) == has
+
+
+def _event_counts(spark):
+    from conftest import SF_DIR
+
+    return read_event_stream(spark, SF_DIR).groupBy("event_type").count()
+
+
+def test_drain_holds_its_conf_only_through_start(spark, monkeypatch):
+    """The drain's shuffle partition count and state-store provider are
+    pinned when the query starts; the caller's values are back before the
+    query drains, and the finished query still ran its state store on the
+    drain's partitions and provider."""
+    import io
+    from contextlib import redirect_stdout
+
+    from pyspark.sql.streaming import StreamingQuery
+
+    from scalable_data_integration_with_llms_spark.streaming.events import (
+        _PROVIDER_KEY,
+        run_to_memory,
+    )
+
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(key)
+    caller_provider = spark.conf.get(_PROVIDER_KEY, None)
+    assert caller_provider != rocksdb
+    spark.conf.set(key, "5")
+    seen, queries = [], []
+    wait = StreamingQuery.awaitTermination
+
+    def recording_wait(self, *args, **kwargs):
+        seen.append((spark.conf.get(key), spark.conf.get(_PROVIDER_KEY, None)))
+        queries.append(self)
+        return wait(self, *args, **kwargs)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", recording_wait)
+    try:
+        rows = run_to_memory(
+            spark, _event_counts(spark), "sdi_conf_window", provider=rocksdb
+        ).collect()
+        assert seen == [("5", caller_provider)]
+        assert spark.conf.get(key) == "5"
+        assert spark.conf.get(_PROVIDER_KEY, None) == caller_provider
+    finally:
+        spark.conf.set(key, caller)
+    assert rows
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        queries[0].explain(True)
+    assert "numPartitions = 8" in buf.getvalue()
+    # only the RocksDB store reports rocksdb* custom metrics
+    ops = queries[0].lastProgress["stateOperators"]
+    assert ops and any(m.startswith("rocksdb") for m in ops[0]["customMetrics"])
+
+
+def test_dump_plans_compares_stream_side_plans(spark, tmp_path, monkeypatch):
+    """tools/dump_plans.py dumps a drained query's streaming plan: two dumps
+    of one drain compare equal, and the same drain on another state
+    partition count reports a diff."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    import dump_plans
+
+    from scalable_data_integration_with_llms_spark.streaming.events import run_to_memory
+
+    monkeypatch.setattr(dump_plans, "_round_dir", lambda rnd: str(tmp_path))
+
+    def dump(name, tag, partitions):
+        plan = dump_plans.dump_plan(
+            lambda: run_to_memory(
+                spark, _event_counts(spark), "sdi_plan_dump", partitions=partitions
+            )
+        )
+        (tmp_path / f"{name}_{tag}.txt").write_text(f"== {name} ({tag}) ==\n{plan}")
+        return plan
+
+    assert "numPartitions = 8" in dump("same", "before", 8)
+    dump("same", "after", 8)
+    dump("other", "before", 8)
+    dump("other", "after", 4)
+    assert dump_plans.compare_round(0, ["same"]) == 0
+    assert dump_plans.compare_round(0, ["other"]) == 1

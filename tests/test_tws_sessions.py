@@ -57,7 +57,7 @@ def test_session_processor_semantics():
         def getValueState(self, name, schema, ttlDurationMs=None):
             return self.state
 
-    proc = SessionProcessor(gap_minutes=30)
+    proc = SessionProcessor()
     handle = FakeHandle()
     proc.init(handle)
 

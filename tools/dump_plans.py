@@ -12,13 +12,15 @@ evidence for an optimization round:
     python tools/dump_plans.py --round 16 after  q_pmi_collocations ...
 
 It writes plans/r<N>/<query>_<tag>.txt, reading tables from
-``SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data).  Queries that drain a
-stream through a memory sink have no single batch plan; for those the
-batch-side plan of the returned frame is dumped.
+``SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data).  After the plan of
+the returned frame, the dump holds ``explain(extended=True)`` of every
+streaming query the query function started (its last micro-batch: logical
+plans and the stateful physical operators with their partition counts).
 
 Compare mode diffs each before/after pair with run-to-run noise masked
-(expression ids, plan ids, lambda variable names, file paths, RDD ids),
-prints the queries whose plans differ and exits 1 if any do:
+(expression ids, plan ids, lambda variable names, file paths, RDD ids,
+streaming UUIDs, object hashes, state-operator batch timestamps), prints the
+queries whose plans differ and exits 1 if any do:
 
     python tools/dump_plans.py --round 16 compare [QUERY...]
 
@@ -350,8 +352,37 @@ def _round_dir(rnd: int) -> str:
     )
 
 
+def dump_plan(run) -> str:
+    """The formatted plan of the frame ``run()`` returns, followed by
+    ``explain(extended=True)`` of each streaming query started while it
+    ran, in start order."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        query = start(self, *args, **kwargs)
+        started.append(query)
+        return query
+
+    DataStreamWriter.start = recording_start
+    try:
+        df = run()
+    finally:
+        DataStreamWriter.start = start
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+        for query in started:
+            print(f"== streaming query {query.name} ==")
+            query.explain(extended=True)
+    return buf.getvalue()
+
+
 def dump_round(rnd: int, tag: str, names: list[str]) -> None:
-    """Write each query's formatted plan to plans/r<rnd>/<query>_<tag>.txt."""
+    """Write each query's plans (:func:`dump_plan`) to
+    plans/r<rnd>/<query>_<tag>.txt."""
     if tag not in ("before", "after"):
         raise SystemExit(f"tag must be 'before' or 'after', got {tag!r}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -369,29 +400,32 @@ def dump_round(rnd: int, tag: str, names: list[str]) -> None:
     os.makedirs(out_dir, exist_ok=True)
 
     for name in names:
-        df = QUERIES[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
+        plan = dump_plan(lambda: QUERIES[name](spark, sf_dir))
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(f"== {name} ({tag}, sf_dir={sf_dir}) ==\n")
-            fh.write(buf.getvalue())
+            fh.write(plan)
         release_scoped()
         print(f"wrote {path}")
     clear_all_memos()
     spark.stop()
 
 
-# Run-to-run noise in a formatted plan: expression ids, plan ids, lambda
-# variable names, file paths (the sink queries write to fresh temp dirs) and
-# RDD ids (scans of a localCheckpoint).
+# Run-to-run noise in a dumped plan: expression ids, plan ids, lambda
+# variable names, file paths (the sink queries and every stream drain write
+# to fresh temp dirs), RDD ids (scans of a localCheckpoint), the UUIDs a
+# streaming query draws per start (its id, run id and watermark node ids),
+# the identity hashes of sink writer objects and the wall-clock batch
+# timestamp of a Python state operator.
 _PLAN_NOISE = [
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"\b([xyz])_\d+\b"), r"\1_"),
     (re.compile(r"(?:file:)?/[^\s,\]]+"), "<path>"),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"\b[0-9a-f]{8}-(?:[0-9a-f]{4}-){3}[0-9a-f]{12}\b"), "<uuid>"),
+    (re.compile(r"@[0-9a-f]{4,}\b"), "@<hash>"),
+    (re.compile(r"Timeout, \d+"), "Timeout, <batch ms>"),
 ]
 
 
@@ -494,7 +528,7 @@ def main() -> None:
     )
 
     ev = read_event_stream(spark, sf_dir)
-    rolled = hourly_rollup(ev)
+    rolled = hourly_rollup(ev, "event_type")
     splan = rolled._jdf.queryExecution().analyzed().toString()
     print("\n## hourly_rollup (wall-time NTZ window, r9)\n")
     print(
