@@ -7,8 +7,9 @@ Two cache lifetimes exist in the engine, and they need different plumbing:
   tables).  The query function returns a LAZY DataFrame, so the function
   itself can never unpersist: the consuming action hasn't run yet, and an
   eager unpersist would defeat the cache.  ``scoped_persist`` registers the
-  frame in a process-wide ledger; harnesses (bench.py, the correctness
-  checker, tests) call ``release_scoped`` after the consuming action.
+  frame in the calling thread's ledger; harnesses (bench.py, the correctness
+  checker, tests) call ``release_scoped`` from the thread that ran the
+  query, after the consuming action.
   Without this, a long-lived session running the 195-query harness
   accumulates cached partitions until storage memory evicts them (r3
   verdict items 3; advice item on ``_drop_heavy_shingles``).
@@ -18,7 +19,8 @@ Two cache lifetimes exist in the engine, and they need different plumbing:
   keys entries by the live SparkSession OBJECT (a strong reference: CPython
   ids are unique among live objects, so unlike ``id(...)``-keyed dicts a
   new session can never collide with a dead one's key) and evicts entries
-  whose SparkContext has stopped, unpersisting live leftovers.
+  whose SparkContext has stopped, unpersisting live leftovers.  Each memo
+  builds at most once per session, also when several threads miss at once.
 
 At cluster scale the same discipline matters more, not less: executor
 storage memory is shared with shuffle/execution memory, and leaked cache
@@ -27,25 +29,30 @@ blocks on a 1000-executor job silently steal space from the joins.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Process-global, deliberately unsynchronized: the ledger assumes ONE
-# driver thread executes queries at a time (the engine's harnesses — bench,
-# the correctness checker, pytest — are all single-threaded drivers).  With
-# concurrent driver threads, one thread's release_scoped() would unpersist
-# frames another thread's in-flight query still reads; a concurrent harness
-# must either serialize query execution or scope its own ledger.
-_SCOPED: list[DataFrame] = []
+
+class _Ledger(threading.local):
+    """One ledger per driver thread, so release_scoped() never unpersists
+    another thread's in-flight frames (no pool thread in the package calls
+    scoped_persist; harnesses release from the query's thread)."""
+
+    def __init__(self) -> None:
+        self.frames: list[DataFrame] = []
+
+
+_SCOPED = _Ledger()
 
 
 def scoped_persist(df: DataFrame, eager: bool = False) -> DataFrame:
     """Persist ``df`` and register it for later ``release_scoped()``.
 
     Use for intra-query frames that multiple plan branches read.  The
-    registration is process-wide, not per-session: a harness that drives
+    registration is per thread, not per session: a harness that drives
     many queries through one session calls ``release_scoped()`` between
     queries and the ledger stays empty.  Library callers invoking query
     functions directly (outside the shipped harnesses) should wrap the
@@ -66,7 +73,7 @@ def scoped_persist(df: DataFrame, eager: bool = False) -> DataFrame:
     df.persist()
     if eager:
         df.count()
-    _SCOPED.append(df)
+    _SCOPED.frames.append(df)
     return df
 
 
@@ -78,41 +85,42 @@ def scoped_caches() -> Iterator[None]:
             rows = QUERIES["q_dedup_ngram_jaccard"](spark, sf_dir).collect()
 
     Only frames registered INSIDE the block are released (earlier
-    registrations stay owned by whoever made them), so nesting is safe as
-    long as execution stays single-threaded (see the ledger note above).
+    registrations stay owned by whoever made them), so nesting is safe.
     """
-    mark = len(_SCOPED)
+    mark = len(_SCOPED.frames)
     try:
         yield
     finally:
-        while len(_SCOPED) > mark:
-            df = _SCOPED.pop()
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — the cache died with it
+        _release_after(mark)
 
 
-def release_scoped() -> int:
-    """Unpersist every query-scoped frame registered since the last call.
-
-    Returns the number of frames released.  Safe to call when the owning
-    session has already stopped (entries are dropped either way).
-    """
-    n = 0
-    while _SCOPED:
-        df = _SCOPED.pop()
+def _release_after(mark: int) -> int:
+    """Unpersist the calling thread's frames registered after the first
+    ``mark``; returns how many were unpersisted."""
+    frames, n = _SCOPED.frames, 0
+    while len(frames) > mark:
         try:
-            df.unpersist()
+            frames.pop().unpersist()
             n += 1
         except Exception:
             pass  # session already stopped — the cache died with it
     return n
 
 
+def release_scoped() -> int:
+    """Unpersist every query-scoped frame the calling thread registered
+    since its last call.
+
+    Returns the number of frames released.  Safe to call when the owning
+    session has already stopped (entries are dropped either way).
+    """
+    return _release_after(0)
+
+
 def scoped_count() -> int:
-    """Number of currently-registered query-scoped frames (audit hook)."""
-    return len(_SCOPED)
+    """Number of the calling thread's registered query-scoped frames
+    (audit hook)."""
+    return len(_SCOPED.frames)
 
 
 def _is_stopped(spark: SparkSession) -> bool:
@@ -146,6 +154,7 @@ class SessionMemo:
 
     def __init__(self) -> None:
         self._entries: dict[SparkSession, DataFrame] = {}
+        self._lock = threading.Lock()  # held through a build
         _ALL_MEMOS.append(self)
 
     def _evict_stopped(self) -> None:
@@ -155,30 +164,32 @@ class SessionMemo:
     def get_or_build(
         self, spark: SparkSession, build: Callable[[], DataFrame]
     ) -> DataFrame:
-        self._evict_stopped()
-        if spark not in self._entries:
-            df = build().persist()
-            # Eager materialization (same reasoning as scoped_persist
-            # eager=True): every memoized frame here is an expensive
-            # multi-consumer pipeline (mapInPandas scorer / run matrix),
-            # and a LAZY persist does not dedup under AQE's concurrent
-            # stage materialization — a cold consumer with two plan
-            # branches runs the whole scorer once per branch before the
-            # cache populates (profiled on q_ehr_effort_report: two
-            # concurrent full scorer stages).  One count job pins the
-            # cache before any consumer fans out.
-            df.count()
-            self._entries[spark] = df
-        return self._entries[spark]
+        with self._lock:
+            self._evict_stopped()
+            if spark not in self._entries:
+                df = build().persist()
+                # Eager materialization (same reasoning as scoped_persist
+                # eager=True): every memoized frame here is an expensive
+                # multi-consumer pipeline (mapInPandas scorer / run matrix),
+                # and a LAZY persist does not dedup under AQE's concurrent
+                # stage materialization — a cold consumer with two plan
+                # branches runs the whole scorer once per branch before the
+                # cache populates (profiled on q_ehr_effort_report: two
+                # concurrent full scorer stages).  One count job pins the
+                # cache before any consumer fans out.
+                df.count()
+                self._entries[spark] = df
+            return self._entries[spark]
 
     def clear(self) -> int:
         """Unpersist and drop every live entry; returns the count dropped."""
-        n = len(self._entries)
-        for sess, df in list(self._entries.items()):
-            if not _is_stopped(sess):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        self._entries.clear()
-        return n
+        with self._lock:
+            n = len(self._entries)
+            for sess, df in list(self._entries.items()):
+                if not _is_stopped(sess):
+                    try:
+                        df.unpersist()
+                    except Exception:
+                        pass
+            self._entries.clear()
+            return n

@@ -2,7 +2,8 @@
 
 Reproduces the reference's twin-namespace evaluation on Spark SQL:
 
-* source tables live as ``source_{t}`` temp views (S8 ATTACH analogue);
+* source tables live as ``source_{t}`` temp views (S8 ATTACH analogue; each
+  run's views carry its private prefix and are dropped when it returns);
 * gold SQL populates ``gold_{t}`` views, predicted SQL ``pred_{t}``;
 * ``INSERT INTO t SELECT ...`` (illegal on Spark views) is rewritten to an
   accumulated ``CREATE OR REPLACE TEMP VIEW ns_t AS prior UNION ALL SELECT``
@@ -17,7 +18,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.overlap import OverlapCounts, table_overlap
+from ..operators.overlap import OverlapCounts, table_overlap, timed_table_overlap
 from ..plans.sql_ast import qualify_sql
 from ..plans.sql_rewrite import (
     Statement,
@@ -27,6 +28,7 @@ from ..plans.sql_rewrite import (
     rewrite_map_pk,
 )
 from ..plans.timeout import DEFAULT_TIMEOUT_S, OK, run_with_timeout
+from ..scratch import private_name
 
 
 @dataclass
@@ -40,16 +42,6 @@ class MappingScenario:
     gold_sql: str
     meaningful_cols: dict[str, list[str]]
     join_overlap_sql: str | None = None  # multi-table rules (J6)
-    # Temp-view namespace prefix.  Spark temp views are session-global, so
-    # CONCURRENT engine runs (an experiment run matrix driven from a thread
-    # pool — Spark schedules jobs from pinned Python threads independently)
-    # must not share view names: give each run a distinct prefix and every
-    # source_/gold_/pred_ view is isolated.  The ``__mappk_*`` dimensions
-    # stay unprefixed: they are derived deterministically from the
-    # scenario's own source DataFrames, so concurrent re-registration is
-    # idempotent — unless two concurrent scenarios bind the SAME source
-    # table name to DIFFERENT data and both call map_pk on it (don't).
-    view_ns: str = ""
 
 
 @dataclass
@@ -62,18 +54,20 @@ class MappingEngine:
     def __init__(self, spark: SparkSession, scenario: MappingScenario):
         self.spark = spark
         self.sc = scenario
+        self._acc: dict[tuple[str, str], DataFrame] = {}
 
-    def _register_sources(self) -> None:
-        vp = self.sc.view_ns
-        for name, df in self.sc.source_tables.items():
-            df.createOrReplaceTempView(f"{vp}source_{name}")
+    def _register(self, df: DataFrame, name: str) -> None:
+        """Register ``df`` as ``name`` under this run's private prefix: temp
+        views are session-wide, so ``evaluate`` drops them all on return."""
+        view = f"{self._vp}{name}"
+        df.createOrReplaceTempView(view)
+        self._views.add(view)
 
     def _reset_targets(self, ns: str) -> None:
         """Empty every target table (the reference's reset+reimport,
         DatabaseManager.py:133-143 — free here because plans are lazy).
         Accumulation goes through DataFrame lineage, not view
         self-reference (Spark rejects recursive temp views)."""
-        self._acc = getattr(self, "_acc", {})
         for t, ddl in self.sc.target_tables.items():
             cols = ", ".join(
                 f"CAST(NULL AS {c.strip().rsplit(' ', 1)[1]}) AS {c.strip().rsplit(' ', 1)[0]}"
@@ -81,7 +75,7 @@ class MappingEngine:
             )
             empty = self.spark.sql(f"SELECT {cols} WHERE 1=0")
             self._acc[(ns, t)] = empty
-            empty.createOrReplaceTempView(f"{self.sc.view_ns}{ns}_{t}")
+            self._register(empty, f"{ns}_{t}")
 
     def _apply_insert(self, ns: str, table: str, select_sql: str) -> None:
         """Accumulate an INSERT into the namespace table: positional INSERT
@@ -98,15 +92,13 @@ class MappingEngine:
             aligned = aligned.withColumn(c, aligned[c].cast(dt))
         updated = prior.unionByName(aligned)
         self._acc[(ns, table)] = updated
-        updated.createOrReplaceTempView(f"{self.sc.view_ns}{ns}_{table}")
+        self._register(updated, f"{ns}_{table}")
 
     def _run_script(self, sql_script: str, ns: str, timeout_s: float) -> list[Statement]:
         """Admission → qualification → execution of one script into ``ns``."""
-        src_names = set(self.sc.source_tables)
-        tgt_names = set(self.sc.target_tables)
-        vp = self.sc.view_ns
+        vp = self._vp
         stmts = prepare_response(
-            sql_script, src_names, tgt_names,
+            sql_script, set(self.sc.source_tables), set(self.sc.target_tables),
             source_ns=f"{vp}source", target_ns=f"{vp}{ns}",
         )
         for s in stmts:
@@ -117,6 +109,9 @@ class MappingEngine:
             s.sql, pk_refs = rewrite_map_pk(s.sql)
             for tbl, attr in pk_refs:
                 self._register_map_pk_dim(tbl, attr)
+            s.sql = qualify_sql(
+                s.sql, {f"__mappk_{t}_{a}": f"{vp}__mappk_{t}_{a}" for t, a in pk_refs}
+            )
             if s.kind == "INSERT" and s.target_table:
                 bare = s.target_table.split(".")[-1].removeprefix(f"{vp}{ns}_")
                 select_sql = insert_query(s.sql)
@@ -134,7 +129,7 @@ class MappingEngine:
         return stmts
 
     def _register_map_pk_dim(self, tbl: str, attr: str) -> None:
-        """Register ``__mappk_{tbl}_{attr}`` = (pk_val, pk_id): dense
+        """Register this run's ``__mappk_{tbl}_{attr}`` = (pk_val, pk_id): dense
         rank-by-value over the source table's distinct attr values — the
         engine's declared map_pk contract (operators/surrogate.py)."""
         from pyspark.sql import functions as F
@@ -146,7 +141,22 @@ class MappingEngine:
         dim = map_pk_dim(self.sc.source_tables[tbl], attr).select(
             F.col(attr).alias("pk_val"), "pk_id"
         )
-        dim.createOrReplaceTempView(f"__mappk_{tbl}_{attr}")
+        self._register(dim, f"__mappk_{tbl}_{attr}")
+
+    def _overlap(
+        self,
+        gold: DataFrame,
+        pred: DataFrame,
+        cols: list[str],
+        table: str,
+        timeouts: dict[str, float] | float | None,
+    ) -> OverlapCounts:
+        """J5 overlap of one table (``"__join__"``: the join overlap) under
+        its timeout sentinel, if ``timeouts`` sets one for it."""
+        t = timeouts.get(table) if isinstance(timeouts, dict) else timeouts
+        if t is None:
+            return table_overlap(gold, pred, cols, table)
+        return timed_table_overlap(self.spark, gold, pred, cols, table, timeout_s=t)
 
     def evaluate(
         self,
@@ -161,82 +171,65 @@ class MappingEngine:
         ``overlap_timeout_s``: apply the reference's overlap-level timeout
         sentinel (``Evaluator.py:141-151``: FN = |gold|, FP = ∞) — a float
         for every table (the reference's single 30 s knob) or a per-table
-        dict so a test scenario's runaway table doesn't tax the healthy
-        tables' wall time.  ``reference_skips`` additionally mirrors
+        dict (the join overlap keyed ``"__join__"``) so a test scenario's
+        runaway table doesn't tax the healthy tables' wall time.
+        ``reference_skips`` additionally mirrors
         ``Evaluator.py:199-216``: tables with no meaningful columns are
         never evaluated, and tables where gold and predicted are both
         empty (tp+fp+fn == 0) drop out of the report."""
-        self._register_sources()
-        self._reset_targets("gold")
-        self._reset_targets("pred")
-        log = []
-        log += self._run_script(self.sc.gold_sql, "gold", timeout_s)
-        log += self._run_script(predicted_sql, "pred", timeout_s)
-        # tables the join overlap reads are evaluated TWICE (their own
-        # table overlap + the join) — persist exactly those, both
-        # namespaces, so the insert lineage runs once per namespace (the
-        # reference materializes targets eagerly into the DB; this is the
-        # lazy engine's equivalent for the re-read case only)
-        persisted = []
-        if self.sc.join_overlap_sql:
-            for t in referenced_tables(self.sc.join_overlap_sql, self.sc.target_tables):
-                for ns in ("gold", "pred"):
-                    df = self._acc[(ns, t)].persist()
-                    self._acc[(ns, t)] = df
-                    df.createOrReplaceTempView(f"{self.sc.view_ns}{ns}_{t}")
-                    persisted.append(df)
-        counts = []
-        for t in sorted(self.sc.target_tables):
-            cols = self.sc.meaningful_cols[t]
-            if reference_skips and not cols:
-                continue
-            gold_df = self.spark.table(f"{self.sc.view_ns}gold_{t}")
-            pred_df = self.spark.table(f"{self.sc.view_ns}pred_{t}")
-            if isinstance(overlap_timeout_s, dict):
-                t_timeout = overlap_timeout_s.get(t)
-            else:
-                t_timeout = overlap_timeout_s
-            if t_timeout is not None:
-                from ..operators.overlap import timed_table_overlap
-
-                c = timed_table_overlap(
-                    self.spark, gold_df, pred_df, cols, t, timeout_s=t_timeout
+        self._vp, self._views = private_name("sdi_map") + "_", set()
+        try:
+            for name, df in self.sc.source_tables.items():
+                self._register(df, f"source_{name}")
+            self._reset_targets("gold")
+            self._reset_targets("pred")
+            log = []
+            log += self._run_script(self.sc.gold_sql, "gold", timeout_s)
+            log += self._run_script(predicted_sql, "pred", timeout_s)
+            # tables the join overlap reads are evaluated TWICE (their own
+            # table overlap + the join) — persist exactly those, both
+            # namespaces, so the insert lineage runs once per namespace (the
+            # reference materializes targets eagerly into the DB; this is the
+            # lazy engine's equivalent for the re-read case only)
+            persisted = []
+            if self.sc.join_overlap_sql:
+                for t in referenced_tables(self.sc.join_overlap_sql, self.sc.target_tables):
+                    for ns in ("gold", "pred"):
+                        df = self._acc[(ns, t)].persist()
+                        self._acc[(ns, t)] = df
+                        self._register(df, f"{ns}_{t}")
+                        persisted.append(df)
+            counts = []
+            for t in sorted(self.sc.target_tables):
+                cols = self.sc.meaningful_cols[t]
+                if reference_skips and not cols:
+                    continue
+                c = self._overlap(
+                    self.spark.table(f"{self._vp}gold_{t}"),
+                    self.spark.table(f"{self._vp}pred_{t}"),
+                    cols, t, overlap_timeout_s,
                 )
-            else:
-                c = table_overlap(gold_df, pred_df, cols, t)
-            if reference_skips and c.tp + c.fp + c.fn == 0:
-                continue
-            counts.append(c)
-        if self.sc.join_overlap_sql:
-            gold_join, pred_join = (
-                self.spark.sql(
-                    qualify_sql(
-                        self.sc.join_overlap_sql,
-                        {t: f"{self.sc.view_ns}{ns}_{t}" for t in self.sc.target_tables},
+                if reference_skips and c.tp + c.fp + c.fn == 0:
+                    continue
+                counts.append(c)
+            if self.sc.join_overlap_sql:
+                gold_join, pred_join = (
+                    self.spark.sql(
+                        qualify_sql(
+                            self.sc.join_overlap_sql,
+                            {t: f"{self._vp}{ns}_{t}" for t in self.sc.target_tables},
+                        )
+                    )
+                    for ns in ("gold", "pred")
+                )
+                counts.append(
+                    self._overlap(
+                        gold_join, pred_join, gold_join.columns, "__join__", overlap_timeout_s
                     )
                 )
-                for ns in ("gold", "pred")
-            )
-            # the join overlap honors the same timeout contract as the
-            # per-table overlaps (keyed "__join__" in a dict) — the
-            # reference's single knob covers every overlap query
-            if isinstance(overlap_timeout_s, dict):
-                j_timeout = overlap_timeout_s.get("__join__")
-            else:
-                j_timeout = overlap_timeout_s
-            if j_timeout is not None:
-                from ..operators.overlap import timed_table_overlap
-
-                counts.append(
-                    timed_table_overlap(
-                        self.spark, gold_join, pred_join, gold_join.columns,
-                        "__join__", timeout_s=j_timeout,
-                    )
-                )
-            else:
-                counts.append(
-                    table_overlap(gold_join, pred_join, gold_join.columns, "__join__")
-                )
-        for df in persisted:
-            df.unpersist()
-        return MappingResult(counts=counts, statement_log=log)
+            for df in persisted:
+                df.unpersist()
+            return MappingResult(counts=counts, statement_log=log)
+        finally:
+            for view in self._views:
+                self.spark.catalog.dropTempView(view)

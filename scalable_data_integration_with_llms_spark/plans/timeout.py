@@ -53,7 +53,14 @@ def run_with_timeout(
     one-shot cancel fired while the driver is still planning (or between
     the jobs of a multi-job action) would let the next job run to
     completion unbounded — exactly the runaway case the timeout exists
-    for."""
+    for.
+
+    A cancel bounds the caller, not the tasks: a whole-stage-codegen loop
+    never checks its interrupt flag.  ``q_mapping_e2e``'s timed-out overlap
+    (a hash aggregate over a ``BroadcastNestedLoopJoin``) keeps one task
+    running in ``hashAgg_doConsume`` after TIMEOUT, so later queries in the
+    session get one core fewer and ``spark.stop()`` waits out
+    ``spark.rpc.askTimeout`` on that task's broadcast."""
     group = f"sdi-timeout-{uuid.uuid4().hex[:12]}"
     sc = spark.sparkContext
     timed_out = threading.Event()

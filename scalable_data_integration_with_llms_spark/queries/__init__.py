@@ -34,28 +34,35 @@ from . import sinks_q  # noqa: F401, E402
 from . import llm_q  # noqa: F401, E402
 
 # Verification-window priority (regenerated by ``tools/rotate_window.py``
-# AFTER the changes landed): (a) the 14 queries whose code path changed —
-# every stream query now drains through the one lifecycle in
-# streaming/events.py (a throwaway checkpoint per drain, the drain's conf
-# held only through start), the rollups share one hourly_rollup and one
-# watermark, the sessionizers and their batch twins one gap constant, and
-# the two contamination queries one 4-gram shingle stage; (b) the stalest
-# rows — the r10-latest then the r11-latest block.
+# AFTER the changes landed): (a) the 22 queries whose code path changed —
+# the four that queried fixed-name temp views now pass their tables to
+# spark.sql as DataFrame parameters, the four mapping-engine queries name
+# and drop their own views, every stream drain runs under a private query
+# name, and the sink queries write under the per-process scratch root;
+# (b) the stalest rows — the r10-latest then the r11-latest block.
 _VERIFY_FIRST = [
+    "q_above_avg_orders",  # changed/new
+    "q_notin_null_semantics",  # changed/new
+    "q_events_rollup_multires",  # changed/new
+    "q_udtf_tokens",  # changed/new
+    "q_mapping_overlap",  # changed/new
+    "q_mapping_map_pk",  # changed/new
+    "q_mapping_e2e",  # changed/new
+    "q_mapping_pass_rate",  # changed/new
     "q_stream_hourly",  # changed/new
     "q_stream_enriched",  # changed/new
     "q_stream_dedup",  # changed/new
     "q_stream_stream_join",  # changed/new
-    "q_sessionization",  # changed/new
     "q_sessionization_stream",  # changed/new
-    "q_session_window_native",  # changed/new
     "q_stream_corpus_ingest",  # changed/new
     "q_stream_cdc_apply",  # changed/new
     "q_stream_topk_types",  # changed/new
     "q_stream_near_dup_gate",  # changed/new
     "q_stream_kmv_distinct",  # changed/new
-    "q_contamination",  # changed/new
-    "q_bloom_contamination",  # changed/new
+    "q_exactly_once_sink",  # changed/new
+    "q_sink_compaction",  # changed/new
+    "q_sink_roundtrip",  # changed/new
+    "q_dataset_loaders",  # changed/new
     "q_kmv_distinct",  # r10-latest
     "q_kmv_set_ops",  # r10-latest
     "q_llm_boundary_http",  # r10-latest
@@ -84,14 +91,6 @@ _VERIFY_FIRST = [
     "q_ehr_gold_parity",  # r11-latest
     "q_ehr_matching_f1",  # r11-latest
     "q_ehr_round1_matches",  # r11-latest
-    "q_events_hourly",  # r11-latest
-    "q_events_rollup_multires",  # r11-latest
-    "q_example_selection",  # r11-latest
-    "q_example_selection_scalable",  # r11-latest
-    "q_filtered_preferences",  # r11-latest
-    "q_majority_vote",  # r11-latest
-    "q_match_candidates",  # r11-latest
-    "q_mixture_schedule",  # r11-latest
 ]
 _VERIFY_FIRST = [n for n in _VERIFY_FIRST if n in QUERIES or not n.endswith("_tws")]
 

@@ -498,7 +498,6 @@ def q_events_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes both resolutions from a single shuffle with partial aggs).
     GROUPING() filters ride in a subquery: Spark cannot resolve GROUPING()
     inside HAVING over the pre-aggregate column."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("v_events_mr")
     return spark.sql(
         """
         SELECT day, hour, is_day_total, n_events, sum_value FROM (
@@ -509,10 +508,11 @@ def q_events_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
                  GROUPING(date_trunc('day', ts)) AS g_day,
                  COUNT(*) AS n_events,
                  CAST(SUM(CAST(round(value * 10000, 0) AS BIGINT)) AS DOUBLE) / 10000.0 AS sum_value
-          FROM v_events_mr
+          FROM {events}
           GROUP BY ROLLUP (date_trunc('day', ts), date_trunc('hour', ts))
         ) WHERE g_day = 0
-        """
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -1254,21 +1254,21 @@ SELECT
 
 @query("q_notin_null_semantics", _NOTIN_ORACLE)
 def q_notin_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql(
         """
         SELECT
-          (SELECT COUNT(*) FROM v_customer
+          (SELECT COUNT(*) FROM {customer}
            WHERE c_custkey NOT IN (SELECT CASE WHEN o_orderstatus = 'P' THEN NULL
                                                ELSE o_custkey END
-                                   FROM v_orders WHERE o_totalprice > 150000)) AS notin_count,
-          (SELECT COUNT(*) FROM v_customer c
-           WHERE NOT EXISTS (SELECT 1 FROM v_orders o
+                                   FROM {orders} WHERE o_totalprice > 150000)) AS notin_count,
+          (SELECT COUNT(*) FROM {customer} c
+           WHERE NOT EXISTS (SELECT 1 FROM {orders} o
                              WHERE o_totalprice > 150000
                                AND (CASE WHEN o_orderstatus = 'P' THEN NULL
                                     ELSE o_custkey END) = c.c_custkey)) AS notexists_count
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -595,11 +595,10 @@ def q_mapping_pass_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     def run_cell(cell):
-        # concurrent cells: each gets its own temp-view namespace
-        # (scenario.view_ns) so the 4 engine runs submit their overlap
-        # jobs in parallel from pinned threads — the run matrix is
-        # embarrassingly parallel and must not serialize on per-job
-        # driver latency
+        # concurrent cells (each engine run names its own views): the 4
+        # engine runs submit their overlap jobs in parallel from pinned
+        # threads — the run matrix is embarrassingly parallel and must not
+        # serialize on per-job driver latency
         (config, seed), (th, natpred) = cell
         scenario = MappingScenario(
             source_tables={
@@ -615,7 +614,6 @@ def q_mapping_pass_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "t_seg": ["c_name", "c_mktsegment"],
                 "t_nat": ["n_name"],
             },
-            view_ns=f"pr_{config}_{seed}_",
         )
         engine = MappingEngine(spark, scenario)
         result = engine.evaluate(

@@ -8,10 +8,7 @@ streaming/events.py.
 
 from __future__ import annotations
 
-import atexit
-import os
 import shutil
-import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -20,6 +17,7 @@ from pyspark.sql import functions as F
 from ..caching import scoped_persist
 from ..functions.determinism import TWO_60_INT, hash60_sql
 from ..operators.dedup import content_key
+from ..scratch import new_dir
 from ..sources.readers import load_table
 from ..streaming.events import (
     WATERMARK,
@@ -742,31 +740,20 @@ FROM ranked WHERE rn = 1
 """
 
 
-# The newest sink table per (process, prefix).  The frame a sink query
-# returns reads its table lazily, so the table must outlive the query (and
-# the caller's release_scoped()); it is removed when the next call with the
-# same prefix starts, so repeated runs keep one table per prefix, and the
-# last one goes at interpreter exit.
+# The newest sink table per (calling thread, prefix).  The frame a sink
+# query returns reads its table lazily, so the table outlives the query (and
+# release_scoped()) until the same thread's next call with that prefix; two
+# threads never remove each other's.  The last go with the scratch root.
 _SINK_TABLES: dict[tuple[int, str], str] = {}
-_SINK_TABLES_LOCK = threading.Lock()
-
-
-def _drop_sink_tables(prefix: str | None = None) -> None:
-    """Remove this process's tables for ``prefix`` (all prefixes if None)."""
-    pid = os.getpid()
-    for key in [k for k in _SINK_TABLES if k[0] == pid and prefix in (None, k[1])]:
-        shutil.rmtree(_SINK_TABLES.pop(key), ignore_errors=True)
-
-
-atexit.register(_drop_sink_tables)
 
 
 def _sink_table_dir(prefix: str) -> str:
-    """A new empty table directory for ``prefix``; the previous one this
-    process made for ``prefix`` is removed first."""
-    with _SINK_TABLES_LOCK:
-        _drop_sink_tables(prefix)
-        path = _SINK_TABLES[(os.getpid(), prefix)] = tempfile.mkdtemp(prefix=prefix)
+    """A new empty table directory for ``prefix``; the previous one the
+    calling thread made for ``prefix`` is removed first."""
+    key = (threading.get_ident(), prefix)
+    if key in _SINK_TABLES:
+        shutil.rmtree(_SINK_TABLES.pop(key), ignore_errors=True)
+    path = _SINK_TABLES[key] = new_dir(prefix)
     return path
 
 

@@ -774,14 +774,14 @@ def q_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, t, i
 
     spark.udtf.register("sdi_tokenize", TokenizeDocs)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("v_docs_udtf")
     return spark.sql(
         """
         SELECT d.source, COUNT(*) AS n_tokens, COUNT(DISTINCT t.token) AS n_distinct,
                SUM(t.pos) AS sum_pos
-        FROM v_docs_udtf d, LATERAL sdi_tokenize(d.doc_id, d.text) t
+        FROM {docs} d, LATERAL sdi_tokenize(d.doc_id, d.text) t
         GROUP BY d.source
-        """
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -203,14 +203,14 @@ WHERE o_totalprice > (SELECT (SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) 
 def q_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-subquery predicate via Spark SQL (exact-cents average so the
     threshold is engine-identical)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_custkey, o_totalprice
-        FROM v_orders o
+        FROM {orders} o
         WHERE o_totalprice > (SELECT (SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) / 100.0)
-                                     / COUNT(*) * 1.5 FROM v_orders)
-        """
+                                     / COUNT(*) * 1.5 FROM {orders})
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -13,9 +13,6 @@ Both paths are provided:
 * ``read_instance_csv`` — the reference's untyped-CSV semantics: all-string
   read, rename drift columns, drop surrogate ``row_id``, add missing schema
   columns as NULL, realign to schema order (S3).
-* ``register_views`` — one temp view per table, the Spark analogue of the
-  reference's ATTACHed SQLite namespaces
-  (``Schema Mapping/DatabaseUtils/DatabaseManager.py:97-116``, S8).
 """
 
 from __future__ import annotations
@@ -204,21 +201,6 @@ def load_events_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, namespace: str = "", names: Iterable[str] = TABLES) -> dict[str, DataFrame]:
-    """Create ``{namespace}_{table}`` (or bare-named) temp views — the engine's
-    replacement for SQLite ATTACH namespaces (S8).  Re-registration is the
-    "reset" operation: views are lazy over immutable parquet, so re-attaching
-    is free (the reference re-imports data between evaluations,
-    ``DatabaseManager.py:133-143``)."""
-    out = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        view = f"{namespace}_{name}" if namespace else name
-        df.createOrReplaceTempView(view)
-        out[view] = df
-    return out
 
 
 def read_instance_csv(

@@ -20,8 +20,9 @@ sessionization keys state by user_id.
 from __future__ import annotations
 
 import shutil
-import tempfile
-from collections.abc import Callable
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +30,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.determinism import cents
+from ..scratch import new_dir, private_name
 from ..sources.readers import _read_parquet
 
 # How late an event may arrive and still count: the one watermark delay of
@@ -147,49 +149,56 @@ def spread_stream(df: DataFrame) -> DataFrame:
 
 
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+_START_LOCK = threading.Lock()
 
 
+@contextmanager
 def _drain(
     spark: SparkSession, writer: DataStreamWriter, name: str, conf: dict[str, str]
-) -> None:
-    """The one stream-query lifecycle: stop an active query named ``name``,
-    start ``writer`` (sink and output mode already set) as that query with
-    the availableNow trigger and a fresh checkpoint, wait for it to drain
-    the source, then stop it and remove the checkpoint.
+) -> Iterator[str]:
+    """The one stream-query lifecycle: start ``writer`` (sink and output
+    mode already set) as a query with a private name (scratch.private_name
+    of ``name``, so concurrent drains never share one), the availableNow
+    trigger and a fresh checkpoint; wait for it to drain the source and
+    yield its name; then stop it, remove the checkpoint and drop the name's
+    temp view (a memory sink's table).
 
-    ``conf`` is set on the session only while ``start()`` runs: the query
-    copies its session's conf when it starts (the shuffle partition count
-    and the state-store provider become part of its checkpoint), so the
-    caller's values are back before the query drains.  The checkpoint is
-    new per call — a reused one would mark the source files already
-    processed and drain zero batches."""
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    ckpt = tempfile.mkdtemp(prefix=f"sdi_ckpt_{name}_")
+    ``conf`` is set on the session only while ``start()`` runs, under one
+    lock that concurrent drains share: the query copies its session's conf
+    when it starts (the shuffle partition count and the state-store
+    provider become part of its checkpoint), so the caller's values are
+    back before the query drains; a batch query planned on another thread
+    meanwhile still sees them.  The checkpoint is new per call — a reused
+    one would mark the source files already processed and drain zero
+    batches."""
+    ckpt = new_dir(f"sdi_ckpt_{name}_")
+    name = private_name(name)
     query = None
     try:
-        prev = {k: spark.conf.get(k, None) for k in conf}
-        try:
-            for k, v in conf.items():
-                spark.conf.set(k, v)
-            query = (
-                writer.queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        finally:
-            for k, v in prev.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
+        with _START_LOCK:
+            prev = {k: spark.conf.get(k, None) for k in conf}
+            try:
+                for k, v in conf.items():
                     spark.conf.set(k, v)
+                query = (
+                    writer.queryName(name)
+                    .trigger(availableNow=True)
+                    .option("checkpointLocation", ckpt)
+                    .start()
+                )
+            finally:
+                for k, v in prev.items():
+                    if v is None:
+                        spark.conf.unset(k)
+                    else:
+                        spark.conf.set(k, v)
         query.awaitTermination()
+        yield name
     finally:
         if query is not None and query.isActive:
             query.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
+        spark.catalog.dropTempView(name)
 
 
 def run_to_memory(
@@ -201,7 +210,8 @@ def run_to_memory(
     provider: str | None = None,
 ) -> DataFrame:
     """Drain a streaming DataFrame through :func:`_drain` into a memory
-    sink; return the result table as a batch DataFrame.
+    sink; return the result table as a batch DataFrame (it holds the sink,
+    so it reads every row after the drain drops the table's view).
 
     Streaming shuffles get fewer partitions than batch: each stateful
     partition owns an HDFS-backed state store, so 32 partitions means 32
@@ -222,8 +232,8 @@ def run_to_memory(
     conf = {"spark.sql.shuffle.partitions": str(partitions)}
     if provider is not None:
         conf[_PROVIDER_KEY] = provider
-    _drain(spark, df.writeStream.format("memory").outputMode(mode), name, conf)
-    return spark.table(name)
+    with _drain(spark, df.writeStream.format("memory").outputMode(mode), name, conf) as table:
+        return spark.table(table)
 
 
 def run_foreach_batch(
@@ -232,7 +242,8 @@ def run_foreach_batch(
     """Drain a streaming DataFrame through :func:`_drain`, handing each
     micro-batch and its id to ``fn``.  No conf is set, so the batch plans
     ``fn`` builds keep the session's shuffle partition count."""
-    _drain(spark, df.writeStream.foreachBatch(fn), name, {})
+    with _drain(spark, df.writeStream.foreachBatch(fn), name, {}):
+        pass
 
 
 def read_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

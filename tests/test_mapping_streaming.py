@@ -279,7 +279,6 @@ def test_insert_with_comment_before_select_runs(spark):
         target_tables={"t_out": "v string"},
         gold_sql="INSERT INTO t_out SELECT v FROM t_src;",
         meaningful_cols={"t_out": ["v"]},
-        view_ns="comment_head_",
     )
     result = MappingEngine(spark, scenario).evaluate(
         "INSERT INTO t_out -- all rows\nSELECT v FROM t_src WHERE v <> '0'"
@@ -530,8 +529,8 @@ def test_table_overlap_null_safe(spark):
     assert (c.tp, c.fp, c.fn) == (2, 1.0, 1)
 
 
-def test_concurrent_engines_view_ns_isolation(spark):
-    """view_ns contract under the WORST case: two engines running
+def test_concurrent_engines_name_their_own_views(spark):
+    """Private view names under the WORST case: two engines running
     CONCURRENTLY with the same source/target table names bound to
     DIFFERENT data — each run's overlap must see only its own views."""
     from concurrent.futures import ThreadPoolExecutor
@@ -545,7 +544,6 @@ def test_concurrent_engines_view_ns_isolation(spark):
             target_tables={"t_out": "v string"},
             gold_sql="INSERT INTO t_out SELECT v FROM t_src;",
             meaningful_cols={"t_out": ["v"]},
-            view_ns=f"iso_{tag}_",
         )
         engine = MappingEngine(spark, scenario)
         result = engine.evaluate(

@@ -275,12 +275,12 @@ def test_stream_cdc_matches_batch(spark):
     merge."""
     import glob
     import os
-    import tempfile
 
+    from scalable_data_integration_with_llms_spark import scratch
     from scalable_data_integration_with_llms_spark.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
-    ckpts = os.path.join(tempfile.gettempdir(), "sdi_ckpt_sdi_stream_cdc_*")
+    ckpts = os.path.join(scratch.root(), "sdi_ckpt_sdi_stream_cdc_*")
     before = set(glob.glob(ckpts))
     batch = sorted(map(str, QUERIES["q_cdc_apply"](spark, sf).collect()))
     stream = sorted(map(str, QUERIES["q_stream_cdc_apply"](spark, sf).collect()))

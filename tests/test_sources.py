@@ -266,10 +266,13 @@ def test_sink_query_dirs_removed_at_exit(tmp_path):
     import subprocess
     import sys
 
+    from scalable_data_integration_with_llms_spark import scratch
     from scalable_data_integration_with_llms_spark.queries import sinks_q
 
     # both queries take their dir from the one helper
-    assert inspect.getsource(sinks_q).count("mkdtemp(") == 1
+    assert "mkdtemp(" not in inspect.getsource(sinks_q)
+    assert inspect.getsource(sinks_q).count("new_dir(") == 2
+    assert inspect.getsource(scratch).count("mkdtemp(") == 2
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     code = (

@@ -315,3 +315,43 @@ def test_dump_plans_compares_stream_side_plans(spark, tmp_path, monkeypatch):
     dump("other", "after", 4)
     assert dump_plans.compare_round(0, ["same"]) == 0
     assert dump_plans.compare_round(0, ["other"]) == 1
+
+
+def test_concurrent_drains_start_with_their_own_conf(spark, monkeypatch):
+    """Two drains started at once, at 8 and 32 shuffle partitions, each
+    start with their own value: the drain holds one lock from setting its
+    conf to restoring the caller's.  ``start()`` is slowed so that, without
+    the lock, each drain would set its value inside the other's window."""
+    import io
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+    from contextlib import redirect_stdout
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from scalable_data_integration_with_llms_spark.streaming.events import run_to_memory
+
+    started = {}
+    start = DataStreamWriter.start
+
+    def slow_start(self, *args, **kwargs):
+        time.sleep(1.0)
+        query = start(self, *args, **kwargs)
+        started[query.name] = query
+        return query
+
+    monkeypatch.setattr(DataStreamWriter, "start", slow_start)
+
+    def drain(partitions: int) -> int:
+        return run_to_memory(
+            spark, _event_counts(spark), f"sdi_conf_{partitions}", partitions=partitions
+        ).count()
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        assert all(n > 0 for n in pool.map(drain, (8, 32), timeout=600))
+    assert len(started) == 2
+    for name, query in started.items():
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            query.explain(True)
+        assert f"numPartitions = {name.split('_')[2]}" in buf.getvalue(), name

@@ -141,19 +141,33 @@ def test_foreach_batch_integration(spark, tmp_path):
 
 
 def test_sink_queries_keep_one_table_per_prefix(spark):
-    """Each run of a sink query removes the table its previous run left, so
-    repeated runs keep at most one ``sdi_txn_sink_*`` directory; the frame
-    the last run returned still reads its table."""
+    """Each run of a sink query removes the table its thread's previous run
+    left, so repeated runs keep at most one ``sdi_txn_sink_*`` directory per
+    thread; the frame each thread's last run returned still reads its
+    table, also when another thread runs the query at the same time."""
     import glob
-    import tempfile
+    from concurrent.futures import ThreadPoolExecutor
 
+    from scalable_data_integration_with_llms_spark import scratch
     from scalable_data_integration_with_llms_spark.caching import release_scoped
     from scalable_data_integration_with_llms_spark.queries import QUERIES
 
-    pattern = os.path.join(tempfile.gettempdir(), "sdi_txn_sink_*")
+    pattern = os.path.join(scratch.root(), "sdi_txn_sink_*")
     before = set(glob.glob(pattern))
     for _ in range(2):
         df = QUERIES["q_exactly_once_sink"](spark, "/root/testdata/sf0.001")
         release_scoped()
     assert len(set(glob.glob(pattern)) - before) <= 1
     assert df.count() > 0
+
+    def twice() -> int:
+        for _ in range(2):
+            mine = QUERIES["q_exactly_once_sink"](spark, "/root/testdata/sf0.001")
+            release_scoped()
+        return mine.count()
+
+    before = set(glob.glob(pattern))
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        counts = [f.result(timeout=600) for f in [pool.submit(twice) for _ in range(2)]]
+    assert counts == [df.count()] * 2
+    assert len(set(glob.glob(pattern)) - before) <= 2

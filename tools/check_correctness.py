@@ -289,12 +289,19 @@ def main() -> int:
     clear_all_memos()
     cache_empty = bool(spark._jsparkSession.sharedState().cacheManager().isEmpty())
     report["__cache_audit__"] = {"empty_after_release": cache_empty}
+    # Catalog audit: every run names its own temp views and drops them
+    # before it returns, so the session must hold none after the sweep.
+    views = sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+    report["__catalog_audit__"] = {"temp_views": views}
     print(
         f"\n{n_green} green, {n_dtype} dtype-artifact, {n_red} RED, "
         f"{n_rowsonly} rows-only, {n_err} ERROR / {len(names)} checked; "
-        f"cache audit: {'empty' if cache_empty else 'LEAKED PERSISTS'}"
+        f"cache audit: {'empty' if cache_empty else 'LEAKED PERSISTS'}; "
+        f"catalog audit: {f'{len(views)} LEFTOVER TEMP VIEWS' if views else 'empty'}"
     )
     if not cache_empty:
+        n_err += 1
+    if views:
         n_err += 1
     if args.out:
         with open(args.out, "w") as f:

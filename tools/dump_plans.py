@@ -426,6 +426,8 @@ _PLAN_NOISE = [
     (re.compile(r"\b[0-9a-f]{8}-(?:[0-9a-f]{4}-){3}[0-9a-f]{12}\b"), "<uuid>"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@<hash>"),
     (re.compile(r"Timeout, \d+"), "Timeout, <batch ms>"),
+    # per-run names: scratch.private_name and spark.sql's DataFrame views
+    (re.compile(r"_[0-9a-f]{32}(?![0-9a-f])"), "_<private>"),
 ]
 
 
