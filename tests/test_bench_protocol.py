@@ -76,6 +76,27 @@ def test_rotate_window_parses_two_digit_rounds(tmp_path):
     latest = newest_green_rounds(root=str(tmp_path))
     assert latest == {"q_x": 10}
 
+    # the verification ledger: a default-axis sf0.01 row newer than every
+    # driver file moves q_x out of the stale block; other axes and scales
+    # do not count
+    from rotate_window import propose_window
+
+    (tmp_path / "CORRECTNESS_r11.json").write_text(json.dumps({"q_y": green["q_x"]}))
+    latest = newest_green_rounds(root=str(tmp_path))
+    assert propose_window(latest, ["q_x", "q_y"], [], 1) == ["q_x"]
+
+    def row(rnd, axis=(), sf_dir="/root/testdata/sf0.01"):
+        return {"axis": list(axis), "sf_dir": sf_dir, "round": rnd, "commit": "c0ffee0",
+                "rows_sha256": "0" * 64}
+
+    (tmp_path / "VERIFIED.json").write_text(json.dumps({
+        "q_x": [row(16), row(20, ["SDI_ANSI=1"]), row(21, sf_dir="/root/testdata/sf0.001")],
+        "q_y": [row(30, ["SDI_ANSI=1"])],
+    }))
+    latest = newest_green_rounds(root=str(tmp_path))
+    assert latest == {"q_x": 16, "q_y": 11}
+    assert propose_window(latest, ["q_x", "q_y"], [], 1) == ["q_y"]
+
 
 def test_parse_extra_conf():
     """SDI_EXTRA_CONF sweep hook: k=v;k=v with trimming, empty segments

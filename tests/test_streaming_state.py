@@ -286,35 +286,61 @@ def test_drain_holds_its_conf_only_through_start(spark, monkeypatch):
     assert ops and any(m.startswith("rocksdb") for m in ops[0]["customMetrics"])
 
 
-def test_dump_plans_compares_stream_side_plans(spark, tmp_path, monkeypatch):
-    """tools/dump_plans.py dumps a drained query's streaming plan: two dumps
-    of one drain compare equal, and the same drain on another state
-    partition count reports a diff."""
+def test_dump_plans_compares_stream_side_plans(spark, tmp_path, monkeypatch, capsys):
+    """tools/dump_plans.py pins a drained query's streaming plan and a batch
+    join in ledger entries: an identical rebuild matches, and the drain on
+    another state partition count, or the join on another strategy, moves
+    its entry with that change named in the shape diff."""
     import os
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
     import dump_plans
+    from pyspark.sql import functions as F
 
     from scalable_data_integration_with_llms_spark.streaming.events import run_to_memory
 
-    monkeypatch.setattr(dump_plans, "_round_dir", lambda rnd: str(tmp_path))
+    monkeypatch.setattr(dump_plans, "TEXT_DIR", str(tmp_path))
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    caller = spark.conf.get(threshold)
 
-    def dump(name, tag, partitions):
-        plan = dump_plans.dump_plan(
-            lambda: run_to_memory(
-                spark, _event_counts(spark), "sdi_plan_dump", partitions=partitions
-            )
+    def drain(partitions):
+        return lambda: run_to_memory(
+            spark, _event_counts(spark), "sdi_plan_dump", partitions=partitions
         )
-        (tmp_path / f"{name}_{tag}.txt").write_text(f"== {name} ({tag}) ==\n{plan}")
-        return plan
 
-    assert "numPartitions = 8" in dump("same", "before", 8)
-    dump("same", "after", 8)
-    dump("other", "before", 8)
-    dump("other", "after", 4)
-    assert dump_plans.compare_round(0, ["same"]) == 0
-    assert dump_plans.compare_round(0, ["other"]) == 1
+    def join(broadcast):
+        def run():
+            left, right = spark.range(100), spark.range(10)
+            spark.conf.set(threshold, caller if broadcast else "-1")
+            return left.join(F.broadcast(right) if broadcast else right, "id")
+        return run
+
+    def build(**runs):
+        entries, plans = {}, []
+        try:
+            for name, run in runs.items():
+                plans.append(dump_plans.dump_plan(spark, run))
+                entries[name] = dump_plans.ledger_entry(plans[-1])
+        finally:
+            spark.conf.set(threshold, caller)
+        return entries, plans
+
+    pinned, plans = build(drain=drain(8), join=join(True))
+    assert "numPartitions = 8" in plans[0]
+    assert pinned["drain"]["shape"]["stream"]["stateful"]["StateStoreSave numPartitions=8"] == 1
+    assert pinned["join"]["shape"]["batch"]["joins"] == {"BroadcastHashJoin": 1}
+
+    assert dump_plans.compare(pinned, build(drain=drain(8), join=join(True))[0]) == 0
+    capsys.readouterr()
+    assert dump_plans.compare(pinned, build(drain=drain(4))[0]) == 1
+    out = capsys.readouterr().out
+    assert "stream.stateful.StateStoreSave numPartitions=4: 0 -> 1" in out
+    assert "numPartitions = 4" in out  # the masked text diff
+    assert dump_plans.compare(pinned, build(join=join(False))[0]) == 1
+    out = capsys.readouterr().out
+    assert "batch.joins.BroadcastHashJoin: 1 -> 0" in out
+    assert "batch.joins.SortMergeJoin: 0 -> 1" in out
 
 
 def test_concurrent_drains_start_with_their_own_conf(spark, monkeypatch):

@@ -12,16 +12,22 @@ exactly the "values equal, hash differs" artifacts seen in round 1.
     python tools/check_correctness.py                       # all queries, sf0.01
     python tools/check_correctness.py --only 'q_dedup'      # regex subset
     python tools/check_correctness.py --first 50            # driver window
+
+Every run merges its green queries into the committed ``VERIFIED.json``:
+per query, the newest entry per axis (the ``SDI_*``/``SPARK_GRAFT_*``
+variables set, and the sf dir) with its round, commit and row digest.
 """
 
 from __future__ import annotations
 
 import argparse
 import datetime as _dt
+import hashlib
 import json
 import math
 import os
 import re
+import subprocess
 import sys
 import time
 from decimal import Decimal
@@ -29,7 +35,9 @@ from decimal import Decimal
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+VERIFIED = os.path.join(ROOT, "VERIFIED.json")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -101,6 +109,33 @@ def values_equal_ignoring_kind(a, b) -> bool:
     return sorted((_strip_row(r) for r in a), key=repr) == sorted(
         (_strip_row(r) for r in b), key=repr
     )
+
+
+def record_verified(digests: dict[str, str], sf_dir: str, names) -> None:
+    """Merge green queries' row digests into the verification ledger,
+    replacing each one's entry of the same axis and sf dir; queries no
+    longer in ``names`` are dropped."""
+    from bench import _infer_round
+
+    env = sorted(f"{k}={v}" for k, v in os.environ.items() if k.startswith(("SDI_", "SPARK_GRAFT_")))
+    git = ["git", "-C", ROOT, "rev-parse", "--short", "HEAD"]
+    row = dict(
+        axis=env,
+        sf_dir=sf_dir,
+        round=_infer_round(),
+        commit=subprocess.run(git, capture_output=True, text=True).stdout.strip(),
+    )
+    ledger = {}
+    if os.path.exists(VERIFIED):
+        with open(VERIFIED) as f:
+            ledger = json.load(f)
+    for name, digest in digests.items():
+        kept = [e for e in ledger.get(name, []) if (e["axis"], e["sf_dir"]) != (env, sf_dir)]
+        kept.append(dict(row, rows_sha256=digest))
+        ledger[name] = sorted(kept, key=lambda e: (e["axis"], e["sf_dir"]))
+    with open(VERIFIED, "w") as f:
+        json.dump({q: ledger[q] for q in names if q in ledger}, f, indent=1, sort_keys=True)
+        f.write("\n")
 
 
 def main() -> int:
@@ -184,6 +219,7 @@ def main() -> int:
             t.join()
 
     report: dict[str, dict] = {}
+    verified: dict[str, str] = {}
     n_green = n_dtype = n_red = n_rowsonly = n_err = 0
     for name in names:
         t0 = time.time()
@@ -222,6 +258,7 @@ def main() -> int:
                 if hash_match:
                     entry["status"] = "green"
                     n_green += 1
+                    verified[name] = hashlib.sha256(repr(srows).encode()).hexdigest()
                 elif (
                     rows_match
                     and schema_match
@@ -306,6 +343,7 @@ def main() -> int:
     if args.out:
         with open(args.out, "w") as f:
             json.dump(report, f, indent=1)
+    record_verified(verified, args.sf_dir, QUERIES)
     spark.stop()
     return 1 if (n_red or n_err) else 0
 

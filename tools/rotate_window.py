@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Compute the next round's driver-verification window (VERDICT rotation
-discipline): for every registry query, find the NEWEST driver round whose
-CORRECTNESS_r0N.json row is green, then propose a 50-query `_VERIFY_FIRST`
+discipline): for every registry query, find the NEWEST round in which it was
+green, from the driver's CORRECTNESS_r0N.json rows and the default-axis sf0.01
+entries of the verification ledger VERIFIED.json
+(tools/check_correctness.py), then propose a 50-query `_VERIFY_FIRST`
 as (changed/new queries first) + (stalest block oldest-round-first,
 alphabetical within a round) until the window is full.
 
@@ -29,7 +31,8 @@ sys.path.insert(0, ROOT)
 
 
 def newest_green_rounds(root: str = ROOT) -> dict[str, int]:
-    """query -> newest driver round with a green row (0 = never)."""
+    """query -> newest round with a green driver row or default-axis sf0.01
+    ledger entry (0 = never)."""
     latest: dict[str, int] = {}
     for f in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(f))
@@ -47,7 +50,21 @@ def newest_green_rounds(root: str = ROOT) -> dict[str, int]:
                 latest[q] = max(latest.get(q, 0), rnd)
             else:
                 latest.setdefault(q, 0)
+    ledger = os.path.join(root, "VERIFIED.json")
+    if os.path.exists(ledger):
+        for q, entries in json.load(open(ledger)).items():
+            for e in entries:
+                if not e["axis"] and os.path.basename(e["sf_dir"].rstrip("/")) == "sf0.01":
+                    latest[q] = max(latest.get(q, 0), e["round"])
     return latest
+
+
+def propose_window(latest: dict[str, int], names, changed, size: int) -> list[str]:
+    """The changed/new queries, then the stalest (oldest round first,
+    alphabetical within a round) until ``size`` queries."""
+    pinned = list(dict.fromkeys(changed))
+    stale = sorted((q for q in names if q not in set(pinned)), key=lambda q: (latest.get(q, 0), q))
+    return (pinned + stale)[:size]
 
 
 def main() -> int:
@@ -63,7 +80,7 @@ def main() -> int:
     for q in QUERIES:
         latest.setdefault(q, 0)
     hist = Counter(latest[q] for q in QUERIES)
-    print("newest driver-green round -> query count:",
+    print("newest green round -> query count:",
           dict(sorted(hist.items())))
 
     unknown = [q for q in args.changed if q not in QUERIES]
@@ -72,11 +89,7 @@ def main() -> int:
         return 1
 
     pinned = list(dict.fromkeys(args.changed))
-    stale = sorted(
-        (q for q in QUERIES if q not in set(pinned)),
-        key=lambda q: (latest[q], q),
-    )
-    window = (pinned + stale)[: args.window]
+    window = propose_window(latest, QUERIES, pinned, args.window)
     n_changed = len(pinned)
     n_stale = len(window) - n_changed
     oldest_after = min(
